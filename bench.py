@@ -19,10 +19,11 @@ and box contention):
   residue from iterative operators) are dropped and a JVM GC is
   requested, so no query's storage pressure leaks into the next.
 - ``detail`` records per-query: every timed run's seconds (spread =
-  contention visibility), and job/stage/task counts from the final
-  timed run (a structural fingerprint — if the task count jumps
-  between rounds, the PLAN changed; if seconds jump while tasks hold,
-  the BOX changed).
+  contention visibility), and the final timed run's job-group metrics
+  from ``perfbench.sparkstats.StatusReader`` (jobs, stages, tasks,
+  executor task seconds, input/shuffle/spill MB). Task seconds divide
+  out the box contention that swings wall seconds; a jump in jobs or
+  stages means the PLAN changed.
 """
 
 from __future__ import annotations
@@ -37,6 +38,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from ironman_medallion_lakehouse_spark import suite  # noqa: E402
 from ironman_medallion_lakehouse_spark.session import get_spark  # noqa: E402
+from perfbench.sparkstats import StatusReader  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 RUNS = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3"))  # r6: box spikes of 1.4-2.4x observed; min-of-3 recovers the intrinsic figure
@@ -110,57 +112,6 @@ BATTERY_ARMS = {
     "q145_sequential_charts": "_q145_arm_frames",
 }
 
-# Iterative operators that run with AQE ON re-plan per iteration at
-# runtime, so their TASK count wobbles with AQE's partition coalescing
-# (r10: q106 jobs/stages pinned 61/94 while tasks read 118 → 99 on an
-# identical plan). For these entries the structural fingerprint is
-# jobs+stages ONLY — a box-noise adjudication must not treat a task
-# drift as a plan change (VERDICT r10 directive 6). Recorded per-entry
-# in the detail sidecar as ``fp_compare``.
-#
-# r12 (VERDICT r11 directive 6): q153 joins the set — the curation
-# composite runs behind localCheckpoint barriers like q106, so AQE
-# re-plans each post-barrier stage group at runtime and the task
-# count wobbles with coalescing (driver r11 read 717 tasks vs the
-# quiet-box 751 at the IDENTICAL 45/65 jobs+stages fingerprint). A
-# task drift at unchanged jobs+stages is box/AQE noise, not a plan
-# change; jobs/stages moving still re-opens the audit.
-#
-# r13 (ADVICE r12): dropping tasks from the comparison entirely left a
-# blind spot — a real partitioning regression that manifests only as a
-# task-count change would be adjudicated as AQE noise. Each entry now
-# carries an ADVISORY quiet-box task band (generous: observed readings
-# ± ~30%); a reading outside the band sets ``task_band_warn`` in the
-# detail sidecar (warn-not-fail — AQE wobble stays non-blocking, but
-# the next round's audit sees the flag and re-reads the plan).
-# Observed quiet-box readings: q106 99–118 tasks (r10), q153 717–751
-# (r11/r12) at stable jobs+stages.
-AQE_ITERATIVE = {
-    "q106_pagerank": (70, 155),
-    "q153_curation_pipeline": (500, 980),
-}
-
-# r13: q107's STAGE count is AQE-variable too — measured bistable on
-# byte-identical code (consecutive standalone runs read 24/272 and
-# 25/273 stages/tasks; the in-suite r12→r13 readings span 23/138 →
-# 24/171), because its token-stream exchange is sometimes reused and
-# sometimes re-materialized under AQE's runtime stats. Jobs are pinned
-# (11) — that is the hard fingerprint; stages+tasks get an advisory
-# band like the iterative entries (same warn-not-fail contract).
-#
-# r14 (ADVICE r13): one lax 100–350 task band made a real partitioning
-# regression warn-invisible across most of the range. The wobble is
-# BIMODAL, not uniform — exchange REUSED (in-suite readings 138–171)
-# vs RE-MATERIALIZED (standalone 272–273) — so the acceptance is now
-# two tight sub-bands around the measured modes (~±20%); a reading
-# BETWEEN the modes (e.g. 220) or outside both is exactly the
-# can't-be-AQE-noise signal the audit wants flagged.
-AQE_VARIABLE = {
-    # name -> ((stage_lo, stage_hi), [(task_lo, task_hi), ...] — any)
-    "q107_dsir_importance": ((22, 27), [(115, 205), (230, 320)]),
-}
-
-
 def _run(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
@@ -178,57 +129,10 @@ def _drop_persistent_blocks(spark) -> None:
     spark._jvm.System.gc()
 
 
-def _group_counts(spark, group: str) -> dict:
-    """Job/stage/task counts for one job group via the status tracker,
-    plus (r15, VERDICT r14 item 5) the BOX-INSENSITIVE metrics: summed
-    executor task time and shuffle bytes from the app status store.
-    Wall seconds swing ±20-25 % with box state (adjudicated twice, r13
-    and r14); sum-of-task-time divides that out for round-over-round
-    comparison. Sidecar-only — the timed protocol and the stdout JSON
-    line are unchanged."""
-    st = spark.sparkContext.statusTracker()
-    jobs = st.getJobIdsForGroup(group)
-    stage_ids = set()
-    for j in jobs:
-        info = st.getJobInfo(j)
-        if info:
-            stage_ids.update(info.stageIds)
-    tasks = 0
-    for s in stage_ids:
-        si = st.getStageInfo(s)
-        if si:
-            tasks += si.numTasks
-    out = {"jobs": len(jobs), "stages": len(stage_ids), "tasks": tasks}
-    try:
-        sc = spark.sparkContext
-        store = sc._jsc.sc().statusStore()
-        empty = sc._jvm.java.util.ArrayList()
-        darr = sc._gateway.new_array(sc._gateway.jvm.double, 0)
-        run_ms = sr_b = sw_b = in_b = 0
-        for s in stage_ids:
-            it = store.stageData(s, False, empty, False, darr).iterator()
-            while it.hasNext():
-                sd = it.next()
-                run_ms += sd.executorRunTime()
-                sr_b += sd.shuffleReadBytes()
-                sw_b += sd.shuffleWriteBytes()
-                in_b += sd.inputBytes()
-        out.update(
-            {
-                "task_time_ms": run_ms,
-                "shuffle_read_b": sr_b,
-                "shuffle_write_b": sw_b,
-                "input_b": in_b,
-            }
-        )
-    except Exception:  # noqa: BLE001 — metrics must never fail the bench
-        pass
-    return out
-
-
 def main() -> None:
     spark = get_spark(app_name="bench")
     spark.sparkContext.setLogLevel("ERROR")
+    stats = StatusReader(spark)
     qdict = suite.queries()
     names = [n for n in HEADLINE if n in qdict]
     if len(sys.argv) > 1:
@@ -257,47 +161,8 @@ def main() -> None:
             spark.sparkContext.setJobGroup("", "")
             _drop_persistent_blocks(spark)
         timings[name] = min(runs)
-        counts = _group_counts(spark, group)
-        detail[name] = {
-            "runs": runs,
-            **counts,
-            "fp_compare": (
-                "jobs+stages"
-                if name in AQE_ITERATIVE
-                else ("jobs" if name in AQE_VARIABLE else "jobs+stages+tasks")
-            ),
-        }
-        if name in AQE_ITERATIVE:
-            lo, hi = AQE_ITERATIVE[name]
-            detail[name]["task_band"] = [lo, hi]
-            if not (lo <= counts["tasks"] <= hi):
-                # advisory only (ADVICE r12): flag for the round audit,
-                # never fail the bench
-                detail[name]["task_band_warn"] = True
-                print(
-                    f"bench.py: {name} tasks={counts['tasks']} outside "
-                    f"advisory quiet-box band [{lo}, {hi}] — re-read the "
-                    "plan before adjudicating box noise",
-                    file=sys.stderr,
-                )
-        elif name in AQE_VARIABLE:
-            (slo, shi), tbands = AQE_VARIABLE[name]
-            detail[name]["stage_band"] = [slo, shi]
-            detail[name]["task_bands"] = [list(b) for b in tbands]
-            # separate warn keys (ADVICE r13: a stage violation under
-            # the old shared 'task_band_warn' name misled the sidecar)
-            if not (slo <= counts["stages"] <= shi):
-                detail[name]["stage_band_warn"] = True
-            if not any(tlo <= counts["tasks"] <= thi for tlo, thi in tbands):
-                detail[name]["task_band_warn"] = True
-            if "stage_band_warn" in detail[name] or "task_band_warn" in detail[name]:
-                print(
-                    f"bench.py: {name} stages={counts['stages']}/"
-                    f"tasks={counts['tasks']} outside advisory bands "
-                    f"[{slo},{shi}]/{tbands} — re-read the plan "
-                    "before adjudicating box noise",
-                    file=sys.stderr,
-                )
+        stats.settle()
+        detail[name] = {"runs": runs, **stats.group(group)}
         if name in BATTERY_ARMS:
             import importlib
 

@@ -180,7 +180,7 @@ def minhash_signatures(
     # values bit-identical; r14's reading on a slower box state was a
     # wash at 0.82/0.82). Equality of the two forms is pinned by
     # tests/test_neardup.py::test_minhash_fold_kernel_matches_per_permutation_form.
-    _FOLD_INIT_MAX = 1 << 62  # > p², above any (a·h+b) % p
+    _FOLD_INIT_MAX = 1 << 62  # > p, so it exceeds any (a·h+b) mod p
 
     def sigs(hashes: Column) -> Column:
         init = F.transform(

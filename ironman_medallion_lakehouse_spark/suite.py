@@ -685,329 +685,17 @@ def q19_static_mapping_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 # public accessors consumed by __spark_entry__.py
 # ---------------------------------------------------------------------------
 
-def _latest_correctness_rows(root=None) -> dict | None:
-    """The parsed row dict of the highest-numbered
-    ``CORRECTNESS_r*.json`` at the repo root; ``None`` when no such
-    file exists (round 1 / fresh checkout) or it is unreadable."""
-    import json
-    import re
-    from pathlib import Path
-
-    if root is None:
-        root = Path(__file__).resolve().parent.parent
-    best, best_n = None, -1
-    for p in Path(root).glob("CORRECTNESS_r*.json"):
-        m = re.search(r"r(\d+)", p.name)
-        if m and int(m.group(1)) > best_n:
-            best_n, best = int(m.group(1)), p
-    if best is None:
-        return None
-    try:
-        data = json.loads(best.read_text())
-    except (OSError, ValueError):
-        return None
-    return data if isinstance(data, dict) else None
-
-
-def _latest_correctness_names(root=None) -> set[str] | None:
-    """Names with an **all-green** (rows+schema+hash) driver row in the
-    most recent round. ``None`` when no CORRECTNESS file exists.
-
-    A row that is present but FAILED counts as *unchecked*: the r5
-    verdict showed that treating any-row-present as "checked" rotates a
-    red entry to the tail, shipping its fix with no driver row (the
-    q75/q127 failure mode). Only a fully green row earns tail position.
-    """
-    data = _latest_correctness_rows(root)
-    if data is None:
-        return None
-    return {
-        name
-        for name, row in data.items()
-        if isinstance(row, dict)
-        and row.get("rows_match")
-        and row.get("schema_match")
-        and row.get("hash_match")
-    }
-
-
-_ENGINE_PKG_PREFIXES = tuple(
-    f"ironman_medallion_lakehouse_spark.{sub}"
-    for sub in ("operators", "functions", "plans", "sources", "streaming", "session")
-)
-_PKG_PREFIX = "ironman_medallion_lakehouse_spark"
-_MODULE_FILE_HASHES: dict[str, str] = {}
-
-
-def _module_file_hash(mod) -> str | None:
-    """sha256 of a module's source file bytes (memoized per path)."""
-    import hashlib
-    from pathlib import Path
-
-    f = getattr(mod, "__file__", None)
-    if not f:
-        return None
-    h = _MODULE_FILE_HASHES.get(f)
-    if h is None:
-        try:
-            h = hashlib.sha256(Path(f).read_bytes()).hexdigest()
-        except OSError:
-            h = "unreadable"
-        _MODULE_FILE_HASHES[f] = h
-    return h
-
-
-def _transitive_source_parts(fn, depth: int = 3, seen: set | None = None) -> list[str]:
-    """Hash inputs for everything an entry function *reaches*:
-
-    - any referenced ENGINE module (operators/functions/plans/sources/
-      streaming/session — directly, via a module alias like ``dedup as
-      D``, or via a function imported from one) contributes its whole
-      source-file hash, so an operator-body edit mechanically stales
-      every entry that calls it (VERDICT r6 item 6 / ADVICE r6);
-    - any referenced package-local helper OUTSIDE the engine packages
-      (suite-module helpers, shared ``dsum``/``load_tables``-style
-      utilities) contributes its own function source, recursing so a
-      wrapper -> suite-helper -> operator chain is still covered.
-      Function-level (not file-level) hashing here keeps unrelated edits
-      to the large suite modules from staling every entry they contain.
-
-    Name collection walks the function's code object AND every nested
-    code object reachable through ``co_consts`` (lambdas, comprehensions,
-    nested ``def``s), so a helper referenced only inside e.g.
-    ``sorted(xs, key=lambda r: helper(r))`` still stales the entry
-    (ADVICE r7 item 3 — the r6 blind spot stayed partially open for
-    lambda-only references).
-    """
-    import inspect
-    import sys
-    import types
-
-    if seen is None:
-        seen = set()
-    parts: list[str] = []
-    code = getattr(fn, "__code__", None)
-    glb = getattr(fn, "__globals__", {})
-    if code is None:
-        return parts
-
-    def _all_names(c, acc):
-        acc.update(c.co_names)
-        for const in c.co_consts:
-            if isinstance(const, types.CodeType):
-                _all_names(const, acc)
-        return acc
-
-    for nm in sorted(_all_names(code, set())):
-        if nm.startswith(_PKG_PREFIX):
-            # function-level `from pkg.mod import f` / `import pkg.mod`
-            # compiles the dotted module path itself into co_names
-            mod, modname = sys.modules.get(nm), nm
-            if mod is None:
-                try:
-                    import importlib
-
-                    mod = importlib.import_module(nm)
-                except ImportError:
-                    continue
-            obj = mod
-        else:
-            obj = glb.get(nm)
-            if obj is None:
-                continue
-            if isinstance(obj, types.ModuleType):
-                mod, modname = obj, getattr(obj, "__name__", "")
-            else:
-                modname = getattr(obj, "__module__", None) or ""
-                mod = sys.modules.get(modname)
-        if not modname.startswith(_PKG_PREFIX):
-            continue
-        if modname.startswith(_ENGINE_PKG_PREFIXES):
-            if mod is not None:
-                h = _module_file_hash(mod)
-                if h and h not in seen:
-                    seen.add(h)
-                    parts.append(f"{modname}={h}")
-        elif callable(obj) and not isinstance(obj, types.ModuleType):
-            key = f"{modname}.{getattr(obj, '__qualname__', nm)}"
-            if key in seen:
-                continue
-            seen.add(key)
-            try:
-                parts.append(key + ":" + inspect.getsource(obj))
-            except (OSError, TypeError):
-                parts.append(key + ":<nosource>")
-            if depth > 0:
-                parts.extend(_transitive_source_parts(obj, depth - 1, seen))
-    return parts
-
-
-def _entry_hash(name: str) -> str:
-    """Stable content hash of a suite entry: the registered function's
-    source text, its oracle SQL, and — transitively — the source of the
-    engine modules / package-local helpers the function references
-    (``_transitive_source_parts``). An edit to the entry, its oracle,
-    or an operator body it calls changes the hash, and the rotation
-    re-verifies the entry the same round. This closes the r6 blind spot
-    where an operator-module edit left the thin wrapper's hash
-    unchanged and relied on a manual docstring-bump convention."""
-    import hashlib
-    import inspect
-
-    q = QUERIES[name]
-    try:
-        src = inspect.getsource(q.fn)
-    except (OSError, TypeError):
-        src = repr(q.fn)
-    parts = sorted(_transitive_source_parts(q.fn))
-    payload = src + "\x00" + (q.oracle or "") + "\x00" + "\x00".join(parts)
-    return hashlib.sha256(payload.encode("utf-8")).hexdigest()
-
-
-def _stale_names(root=None) -> set[str]:
-    """Entries whose current source hash DIFFERS from the hash recorded
-    at their last all-green driver row (``SUITE_STATE.json``, written by
-    ``tools/update_suite_state.py`` at round start). A touched entry is
-    stale and sorts to the urgent head of the driver window even if its
-    last row was green, so a changed operator never ships unverified
-    (VERDICT r5 item 6). Entries with NO record are not stale — they are
-    either new (urgent via never-checked) or pre-state-file backlog;
-    conflating them with touched entries would flood the urgent set past
-    the 50-row window."""
-    import json
-    from pathlib import Path
-
-    if root is None:
-        root = Path(__file__).resolve().parent.parent
-    state_path = Path(root) / "SUITE_STATE.json"
-    try:
-        recorded = json.loads(state_path.read_text()).get("entries", {})
-    except (OSError, ValueError):
-        recorded = {}
-    stale = set()
-    for name in QUERIES:
-        rec = recorded.get(name)
-        if isinstance(rec, dict) and rec.get("hash") != _entry_hash(name):
-            stale.add(name)
-    return stale
-
-
-def _ever_checked_names(root=None) -> set[str]:
-    """Union of names across EVERY CORRECTNESS_r*.json — entries that
-    have had a driver row in some round (pass or fail)."""
-    import json
-    from pathlib import Path
-
-    if root is None:
-        root = Path(__file__).resolve().parent.parent
-    seen: set[str] = set()
-    for p in Path(root).glob("CORRECTNESS_r*.json"):
-        try:
-            data = json.loads(p.read_text())
-        except (OSError, ValueError):
-            continue
-        if isinstance(data, dict):
-            seen.update(data)
-    return seen
-
-
-def _ordered_names(root=None) -> list[str]:
-    """Deterministic rotation keeps the driver's bounded correctness
-    window (50 rows, first-50-in-dict-order) covering the whole suite.
-    The unattested head is itself priority-ordered, because in a heavy
-    round it can exceed the window and the MUST-verify entries cannot
-    be the ones that slip:
-
-    1. *urgent* — FAILED last round (red row: its fix ships this round
-       and needs a driver row), source-changed since the last green row
-       (stale hash), or never driver-checked in any round (newly
-       registered);
-    2. *backlog* — no row in the latest round but green before and
-       untouched (normal rotation), ordered OLDEST-green-round first
-       (from SUITE_STATE.json) so that when the backlog itself exceeds
-       the window the most-stale attestations cannot slip again
-       (VERDICT r6 item 2: the 15 r4-green entries head the r7 window);
-    3. *tail* — all-green last round and untouched.
-
-    Base order still front-loads the 10 dashboard-view shapes (q20-q28,
-    the reference's most user-visible surface), then registration
-    order."""
-    _load_all()
-    views_first = [n for n in sorted(QUERIES) if n.startswith(("q2",))]
-    rest = [n for n in QUERIES if n not in set(views_first)]
-    base = views_first + rest
-    green = _latest_correctness_names(root)
-    if green is None:
-        return base
-    stale = _stale_names(root)
-    ever = _ever_checked_names(root)
-    latest_any = set(_latest_correctness_rows(root) or {})
-    red = latest_any - green  # present last round but not all-green
-    urgent = [n for n in base if n in stale or n not in ever or n in red]
-    taken = set(urgent)
-    backlog = [n for n in base if n not in taken and n not in green]
-    rounds = _recorded_green_rounds(root)
-    backlog.sort(key=lambda n: rounds.get(n, -1))  # stable: base order within a round
-    taken.update(backlog)
-    tail = [n for n in base if n not in taken]
-    return urgent + backlog + tail
-
-
-def _recorded_green_rounds(root=None) -> dict[str, int]:
-    """name -> green_round from SUITE_STATE.json (empty when absent)."""
-    import json
-    from pathlib import Path
-
-    if root is None:
-        root = Path(__file__).resolve().parent.parent
-    try:
-        entries = json.loads((Path(root) / "SUITE_STATE.json").read_text()).get(
-            "entries", {}
-        )
-    except (OSError, ValueError):
-        return {}
-    return {
-        n: rec["green_round"]
-        for n, rec in entries.items()
-        if isinstance(rec, dict) and isinstance(rec.get("green_round"), int)
-    }
-
-
-def _suite_state_gap(root=None) -> int | None:
-    """How many rounds SUITE_STATE.json lags the newest CORRECTNESS
-    file. ``0`` = the round-start ritual ran for the latest round;
-    ``1`` = the driver wrote a newer CORRECTNESS after the builder's
-    window closed (the normal round-boundary state — NOT an error);
-    ``>= 2`` = the ritual was actually forgotten for a full round.
-    ``None`` = no CORRECTNESS file exists (fresh checkout)."""
-    import re
-    from pathlib import Path
-
-    if root is None:
-        root = Path(__file__).resolve().parent.parent
-    latest = -1
-    for p in Path(root).glob("CORRECTNESS_r*.json"):
-        m = re.search(r"r(\d+)", p.name)
-        if m:
-            latest = max(latest, int(m.group(1)))
-    if latest < 0:
-        return None
-    rounds = _recorded_green_rounds(root)
-    if not rounds:
-        return latest  # never stamped: the full history is untracked
-    return latest - max(rounds.values())
-
-
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return {name: QUERIES[name].fn for name in _ordered_names()}
+    """Every registered entry, in registration order."""
+    _load_all()
+    return {name: q.fn for name, q in QUERIES.items()}
 
 
 def oracle_sql() -> dict[str, str]:
-    return {
-        name: QUERIES[name].oracle
-        for name in _ordered_names()
-        if QUERIES[name].oracle is not None
-    }
+    """The DuckDB oracle of every entry that has one, in registration
+    order."""
+    _load_all()
+    return {name: q.oracle for name, q in QUERIES.items() if q.oracle is not None}
 
 
 def _load_all() -> None:

@@ -144,26 +144,6 @@ FIXTURE_FILES = {
 }
 
 
-def pytest_collection_modifyitems(config, items):
-    """Apply the `slow` marker from the measured manifest
-    (tests/slow_tests.txt — call time >= 4s on a full --durations=0
-    run). pytest.ini deselects `slow` by default so the driver's
-    verify window fits; `pytest -m ""` runs everything."""
-    manifest = os.path.join(os.path.dirname(__file__), "slow_tests.txt")
-    try:
-        with open(manifest) as fh:
-            slow_ids = {
-                line.strip() for line in fh
-                if line.strip() and not line.startswith("#")
-            }
-    except OSError:
-        return
-    for item in items:
-        # nodeid is rootdir-relative (tests/test_x.py::test_y)
-        if item.nodeid.split("[")[0] in slow_ids or item.nodeid in slow_ids:
-            item.add_marker(pytest.mark.slow)
-
-
 @pytest.fixture(scope="session")
 def spark():
     s = get_spark(app_name="tests", master="local[4]", shuffle_partitions=4)

@@ -187,6 +187,79 @@ def test_commit_is_put_if_absent(spark, tmp_path):
     )
     with pytest.raises(ConcurrentCommitError):
         st._commit("db.t", clash)
+    # the loser re-reads the table and retries its write on top of it
+    fresh = st._latest_manifest("db.t")
+    files = st._write_files(spark.createDataFrame([Row(k="b", v=2)]), "db.t", [])
+    st._commit(
+        "db.t",
+        Manifest(
+            version=fresh.version + 1,
+            schema_json=fresh.schema_json,
+            partition_by=[],
+            files=fresh.files + files,
+        ),
+        prev=fresh,
+    )
+    assert st._log_versions("db.t")[-1] == m.version + 1
+    assert sorted((r.k, r.v) for r in st.read("db.t").collect()) == [("a", 1), ("b", 2)]
+
+
+def test_crash_mid_commit_leaves_previous_version_and_vacuum_reclaims(
+    spark, tmp_path, monkeypatch
+):
+    """A writer that dies after writing its data files but before its
+    log entry lands leaves the table at the previous version; the
+    files it wrote are orphans that vacuum removes, and vacuum touches
+    no file any retained manifest references."""
+    import pytest
+
+    st = _store(spark, tmp_path)
+    v1_rows = [Row(k="a", y=1, v=1), Row(k="b", y=2, v=2)]
+    st.save_overwrite(spark.createDataFrame(v1_rows), "db.t", partition_by=["y"])
+    st.save_overwrite(
+        spark.createDataFrame(v1_rows + [Row(k="c", y=2, v=3)]),
+        "db.t",
+        partition_by=["y"],
+    )
+    before = st._latest_manifest("db.t")
+    v1_before = sorted(st.read("db.t", version=1).collect())
+    rows_before = sorted(st.read("db.t").collect())
+
+    written: list[str] = []
+    real_write = st._write_files
+
+    def write_and_record(*args, **kwargs):
+        paths = real_write(*args, **kwargs)
+        written.extend(paths)
+        return paths
+
+    def crash(*_args, **_kwargs):
+        raise RuntimeError("writer died before its commit")
+
+    monkeypatch.setattr(st, "_write_files", write_and_record)
+    monkeypatch.setattr(st, "_commit", crash)
+    with pytest.raises(RuntimeError, match="writer died"):
+        st.merge_insert_only(
+            spark.createDataFrame([Row(k="d", y=1, v=4), Row(k="e", y=3, v=5)]),
+            "db.t",
+            keys=["k", "y"],
+        )
+    monkeypatch.undo()
+
+    data_dir = st._data_dir("db.t")
+    assert written and all(os.path.exists(os.path.join(data_dir, f)) for f in written)
+    assert st._latest_manifest("db.t").version == before.version
+    assert sorted(st.read("db.t").collect()) == rows_before
+
+    referenced = set()
+    for v in st._log_versions("db.t"):
+        referenced.update(st._manifest_at("db.t", v).files)
+    assert not referenced & set(written)
+    removed = st.vacuum("db.t", retain_versions=len(st._log_versions("db.t")))
+    assert removed == len(written)
+    assert not any(os.path.exists(os.path.join(data_dir, f)) for f in written)
+    assert all(os.path.exists(os.path.join(data_dir, f)) for f in referenced)
+    assert sorted(st.read("db.t", version=1).collect()) == v1_before
 
 
 def test_scd1_null_key_not_duplicated(spark, tmp_path):

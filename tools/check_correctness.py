@@ -9,11 +9,16 @@ differently from Spark's int64 even when values match — VERDICT r1),
 so dtype divergence is a hard FAIL here, making this checker
 stricter-or-equal to the driver's hash.
 
-Usage: python tools/check_correctness.py [query_name ...]
+Usage: python tools/check_correctness.py [--sf SF_DIR] [query_name ...]
+
+The run ends with one JSON line: ``sf_dir``, ``passed``, ``failed``,
+the ``failing`` entry names and the ``engine_tree`` (git tree id of the
+engine package the run checked).
 """
 
 from __future__ import annotations
 
+import json
 import math
 import os
 import sys
@@ -22,10 +27,13 @@ import time
 import duckdb
 import pandas as pd
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+ENGINE_DIR = os.path.join(ROOT, "ironman_medallion_lakehouse_spark")
+sys.path.insert(0, ROOT)
 
 from ironman_medallion_lakehouse_spark import suite  # noqa: E402
 from ironman_medallion_lakehouse_spark.session import get_spark  # noqa: E402
+from perfbench.sparkstats import git_tree_hash  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_CHECK_SF_DIR", "/root/testdata/sf0.01")
 TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
@@ -131,7 +139,8 @@ def main() -> int:
             con.sql(f"CREATE OR REPLACE VIEW {t} AS SELECT * FROM read_parquet('{path}')")
 
     qdict, odict = suite.queries(), suite.oracle_sql()
-    n_pass = n_fail = n_rows_only = 0
+    n_pass = n_rows_only = 0
+    failing: list[str] = []
     for name, fn in qdict.items():
         if only and name not in only:
             continue
@@ -141,7 +150,7 @@ def main() -> int:
             spark_pdf = sdf.toPandas()
         except Exception as e:  # noqa: BLE001
             print(f"FAIL {name}: spark error: {e}")
-            n_fail += 1
+            failing.append(name)
             continue
         if name not in odict:
             print(f"ROWS-ONLY {name}: {len(spark_pdf)} rows ({time.time()-t0:.1f}s)")
@@ -151,19 +160,30 @@ def main() -> int:
             duck_pdf = con.sql(odict[name]).df()
         except Exception as e:  # noqa: BLE001
             print(f"FAIL {name}: duckdb error: {e}")
-            n_fail += 1
+            failing.append(name)
             continue
         problems = compare(name, spark_pdf, duck_pdf)
         if problems:
-            n_fail += 1
+            failing.append(name)
             print(f"FAIL {name} ({time.time()-t0:.1f}s)")
             for p in problems:
                 print(f"     {p}")
         else:
             n_pass += 1
             print(f"PASS {name}: {len(spark_pdf)} rows ({time.time()-t0:.1f}s)")
-    print(f"\n{n_pass} pass, {n_fail} fail, {n_rows_only} rows-only")
-    return 1 if n_fail else 0
+    print(f"\n{n_pass} pass, {len(failing)} fail, {n_rows_only} rows-only")
+    print(
+        json.dumps(
+            {
+                "sf_dir": SF_DIR,
+                "passed": n_pass,
+                "failed": len(failing),
+                "failing": failing,
+                "engine_tree": git_tree_hash(ENGINE_DIR),
+            }
+        )
+    )
+    return 1 if failing else 0
 
 
 if __name__ == "__main__":
