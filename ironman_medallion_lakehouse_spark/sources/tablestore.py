@@ -22,13 +22,28 @@ Layout per table::
 - Commits are atomic put-if-absent (os.link; on an object store this
   would be a conditional PUT, exactly as Delta does) — concurrent
   writers cannot silently lose a commit.
-- **Insert-only merge appends files**: new rows are anti-joined against
-  the target (scanning only the partitions the source touches) and
-  written as new files; the new manifest = old files + new files. No
-  existing byte is rewritten — O(new data), not O(table), which is what
-  makes the operation viable at 100 TB.
-- **SCD-1 merge rewrites only affected partitions** (all files, for an
-  unpartitioned table — dims here are small by design).
+- Every data-writing verb is one pass through three shared steps:
+  **one scan** (``_read_file_subset``: recorded schema, ``basePath``),
+  **one file planner** (``_plan_files``) returning (touched, untouched)
+  files, and **one rewrite-and-commit** (``_rewrite``): write the
+  verb's new rows, carry untouched files and their stats forward
+  byte-identical, commit version prev + 1. The planner runs up to
+  three phases, each narrowing the touched set:
+    1. *partition prune* — keep files whose hive partition values are
+       wanted: the merges (``merge_insert_only``, ``merge_scd1``,
+       ``merge_scd2``) when partition ⊆ keys, with the source's
+       distinct partition values; ``read_partitions``;
+    2. *stats prune* — keep files whose footer [min, max] for a column
+       intersects [lo, hi]: ``read_where``, ``skipped_file_count``, and
+       ``delete_where``/``update_where`` given a ``prune_column`` hint;
+    3. *discovery scan* — keep files holding a row that satisfies a
+       predicate (one ``input_file_name()`` job): ``delete_where``,
+       ``update_where``.
+  Insert-only merge appends: every existing file is carried forward, so
+  it is O(new data), not O(table). SCD-1/SCD-2 merges rewrite the
+  touched partitions (all files, for an unpartitioned table); the
+  predicate DML rewrites only files with a matching row;
+  ``save_overwrite`` and ``optimize`` carry nothing forward.
 - Old versions remain readable (time travel) until `vacuum()`.
 
 Reference behaviors reproduced: 02_bronze.ipynb:300-318 (insert-only),
@@ -44,6 +59,7 @@ import re
 import shutil
 import uuid
 from dataclasses import dataclass, field
+from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -55,6 +71,9 @@ _CKPT_RE = re.compile(r"^(\d{8})\.checkpoint\.json$")
 # Every Nth commit also writes a full-snapshot checkpoint; readers
 # replay at most N-1 delta entries on top of the nearest checkpoint.
 CHECKPOINT_EVERY = 10
+
+# rendered form of a NULL partition value (never a real path value)
+_NULL = "\0null"
 
 # sentinel: "caller didn't supply the previous manifest — replay the log"
 _DERIVE_PREV: "Manifest | None" = object()  # type: ignore[assignment]
@@ -105,10 +124,6 @@ def manifest_at(log_dir: str, version: int) -> "Manifest | None":
             d = json.loads(fh.read())
         schema_json = d["schema"]
         partition_by = d["partition_by"]
-        if "files" in d:  # legacy full-snapshot entry
-            files = list(d["files"])
-            stats = dict(d.get("stats", {}))
-            continue
         removed = set(d.get("remove", []))
         files = [f for f in files if f not in removed] + d.get("add", [])
         for f in removed:
@@ -123,20 +138,20 @@ def manifest_at(log_dir: str, version: int) -> "Manifest | None":
     )
 
 
-def parse_partition_segment(seg: str) -> tuple[str, str | None] | None:
-    """Decode one hive-style path segment ``col=raw`` → (col, value),
-    undoing Spark's percent-escaping and mapping
-    __HIVE_DEFAULT_PARTITION__ to None. Returns None for non-partition
-    segments. Single shared decoder for the batch reader
-    (read_partitions) and the change-feed streaming source."""
-    col, eq, raw = seg.partition("=")
-    if not eq:
-        return None
-    if raw == "__HIVE_DEFAULT_PARTITION__":
-        return col, None
-    from urllib.parse import unquote
-
-    return col, unquote(raw)
+def partition_values(
+    rel_path: str, partition_by: list[str]
+) -> list[tuple[str, str | None]]:
+    """(column, value) for each of ``partition_by``, decoded from the
+    hive-style directory segments (``col=raw/``) of a data file's
+    relative path: Spark's percent-escaping is undone and
+    __HIVE_DEFAULT_PARTITION__ maps to None. The one path decoder,
+    shared by the file planner and the change-feed streaming source."""
+    values: dict[str, str | None] = {}
+    for seg in rel_path.split(os.sep)[:-1]:
+        col, eq, raw = seg.partition("=")
+        if eq and col in partition_by:
+            values[col] = None if raw == "__HIVE_DEFAULT_PARTITION__" else unquote(raw)
+    return [(c, values.get(c)) for c in partition_by]
 
 
 def _java_style_float_str(a: float, digits: str | None = None) -> str:
@@ -177,7 +192,7 @@ def _render_partition_value(v, dtype=None) -> str:
     when the caller has the schema) disambiguates decimal scale and
     float-vs-double digit rendering."""
     if v is None:
-        return "\0null"
+        return _NULL
     if isinstance(v, bool):
         return "true" if v else "false"
     import datetime as _dt
@@ -225,43 +240,16 @@ def version_changes(
     full manifest_at replay per version (r2 ADVICE: a stream catching
     up over a large commit range paid O(backlog × replay) metadata
     reads). Delta entries carry partition_by and the added-file list
-    directly; a legacy full-snapshot entry falls back to a running
-    file-set diff, whose base manifest is materialized at most once."""
+    directly."""
     out: list[tuple[int, list[str], list[str]]] = []
-    running: set[str] | None = None
     for v in range(start + 1, end + 1):
         path = os.path.join(log_dir, f"{v:08d}.json")
         if not os.path.exists(path):
             continue
         with open(path) as fh:
             d = json.loads(fh.read())
-        if "files" in d:  # legacy full-snapshot entry
-            if running is None:
-                prev = manifest_at(log_dir, v - 1)
-                running = set(prev.files) if prev else set()
-            added = [f for f in d["files"] if f not in running]
-            running = set(d["files"])
-        else:
-            added = list(d.get("add", []))
-            if running is not None:
-                running.difference_update(d.get("remove", []))
-                running.update(added)
-        out.append((v, d.get("partition_by", []), added))
+        out.append((v, d.get("partition_by", []), list(d.get("add", []))))
     return out
-
-
-def added_files_in(log_dir: str, version: int) -> list[str]:
-    """Files ADDED by exactly this commit (the change-feed grain).
-    Delta entries record it directly; legacy full-snapshot entries fall
-    back to a set diff against the previous version."""
-    path = os.path.join(log_dir, f"{version:08d}.json")
-    with open(path) as fh:
-        d = json.loads(fh.read())
-    if "add" in d:
-        return list(d["add"])
-    prev = manifest_at(log_dir, version - 1)
-    prev_files = set(prev.files) if prev else set()
-    return [f for f in d.get("files", []) if f not in prev_files]
 
 
 @dataclass
@@ -273,6 +261,10 @@ class Manifest:
     # per-file column stats for data skipping: path → {col: [min, max]}
     # (numeric/string primitives only; absent = no stats = never skipped)
     stats: dict[str, dict[str, list]] = field(default_factory=dict)
+
+    @property
+    def schema(self) -> StructType:
+        return StructType.fromJson(json.loads(self.schema_json))
 
     def to_json(self) -> str:
         return json.dumps(
@@ -492,36 +484,31 @@ class TableStore:
         return self._latest_manifest(name) is not None
 
     def read(self, name: str, version: int | None = None) -> DataFrame:
+        manifest = self._require(name, version)
+        return self._read_file_subset(name, manifest, manifest.files)
+
+    def _require(self, name: str, version: int | None = None) -> Manifest:
+        """The manifest at ``version`` (latest by default); raises
+        FileNotFoundError when the table or version does not exist."""
         manifest = (
             self._manifest_at(name, version) if version is not None else self._latest_manifest(name)
         )
         if manifest is None:
             raise FileNotFoundError(f"table {name} does not exist in {self.root}")
-        schema = StructType.fromJson(json.loads(manifest.schema_json))
-        data_dir = self._data_dir(name)
-        if not manifest.files:
-            return self.spark.createDataFrame([], schema)
-        paths = [os.path.join(data_dir, f) for f in manifest.files]
-        reader = self.spark.read.schema(schema)
-        if manifest.partition_by:
-            reader = reader.option("basePath", data_dir)
-        # The RECORDED schema is supplied explicitly (never inferred
-        # from footers): files written before a column existed read it
-        # as NULL — schema evolution without mergeSchema's
-        # every-footer scan — and column order / partition-col types
-        # follow the manifest.
-        return reader.parquet(*paths).select(
-            *[F.col(f.name).cast(f.dataType) for f in schema.fields]
-        )
+        return manifest
 
     def _read_file_subset(
         self, name: str, manifest: Manifest, files: list[str]
     ) -> DataFrame:
-        """Scan exactly ``files`` (rel paths) under ``name``'s recorded
-        schema — the shared reader behind read / read_partitions and the
-        partition-scoped merges. An empty subset is an empty DataFrame,
-        not an empty scan."""
-        schema = StructType.fromJson(json.loads(manifest.schema_json))
+        """Scan exactly ``files`` (rel paths) under ``name`` — the one
+        scan behind every read and every write verb. An empty subset is
+        an empty DataFrame, not an empty scan.
+
+        The RECORDED schema is supplied explicitly (never inferred from
+        footers): files written before a column existed read it as NULL
+        — schema evolution without mergeSchema's every-footer scan — and
+        column order / partition-col types follow the manifest."""
+        schema = manifest.schema
         if not files:
             return self.spark.createDataFrame([], schema)
         data_dir = self._data_dir(name)
@@ -532,39 +519,78 @@ class TableStore:
             *[F.col(f.name).cast(f.dataType) for f in schema.fields]
         )
 
-    @staticmethod
-    def _split_files_by_partitions(
-        manifest: Manifest, pvals: list[tuple]
+    def _plan_files(
+        self,
+        name: str,
+        manifest: Manifest,
+        partitions: tuple[list[str], list[tuple]] | None = None,
+        prune_column: str | None = None,
+        lo=None,
+        hi=None,
+        cond=None,
     ) -> tuple[list[str], list[str]]:
-        """Split the manifest's files into (touched, untouched) by
-        whether their hive partition-value tuple is in ``pvals`` (tuples
-        ordered as manifest.partition_by). Matching parses the path
-        segments and renders wanted values type-aware, exactly like
-        read_partitions — manifest-level pruning, no scan."""
-        schema = StructType.fromJson(json.loads(manifest.schema_json))
-        dtypes = {f.name: f.dataType for f in schema.fields}
-        wanted = {
-            tuple(
-                _render_partition_value(v, dtypes.get(c))
-                for c, v in zip(manifest.partition_by, pv)
+        """(touched, untouched) relative file paths, both in manifest
+        order — the one file planner behind every read and write verb,
+        Delta's MERGE/UPDATE/DELETE file planning. Each phase that is
+        asked for narrows the touched set; a phase not asked for keeps
+        every file:
+
+        1. *Partition prune* (``partitions`` = (columns, wanted value
+           tuples)): keep files whose hive partition values are wanted.
+           Matching parses the path segments and renders the wanted
+           values type-aware, so escaped, NULL, float, date, timestamp
+           and decimal keys match Spark's path form. Manifest-only.
+        2. *Stats prune* (``prune_column``/``lo``/``hi``, either bound
+           may be None): drop files whose recorded footer [min, max]
+           cannot intersect the range; files without stats are kept.
+           Manifest-only — at 100 TB a time-scoped predicate on an
+           ingest-clustered table eliminates almost every file here.
+        3. *Discovery scan* (``cond``): read the surviving candidates
+           projecting ONLY ``input_file_name()`` after the predicate and
+           collect the distinct files holding a matching row (bounded by
+           the file count, not the row count). A candidate with no
+           matching row is untouched — its bytes are never rewritten
+           and it never appears in the change feed.
+        """
+        files = manifest.files
+        if partitions is not None:
+            cols, values = partitions
+            dtypes = {f.name: f.dataType for f in manifest.schema.fields}
+            wanted = {
+                tuple(_render_partition_value(v, dtypes.get(c)) for c, v in zip(cols, pv))
+                for pv in values
+            }
+            files = [
+                f
+                for f in files
+                if tuple(_NULL if v is None else v for _c, v in partition_values(f, cols))
+                in wanted
+            ]
+        if prune_column is not None:
+
+            def overlaps(rel: str) -> bool:
+                st = manifest.stats.get(rel, {}).get(prune_column)
+                return st is None or not (
+                    (lo is not None and st[1] < lo) or (hi is not None and st[0] > hi)
+                )
+
+            files = [f for f in files if overlaps(f)]
+        if cond is not None and files:
+            hit_uris = (
+                self._read_file_subset(name, manifest, files)
+                .filter(cond)
+                .select(F.input_file_name())
+                .distinct()
+                .collect()
             )
-            for pv in pvals
-        }
-
-        def file_tuple(rel: str) -> tuple:
-            seen: dict[str, str] = {}
-            for seg in rel.split(os.sep)[:-1]:
-                parsed = parse_partition_segment(seg)
-                if parsed and parsed[0] in manifest.partition_by:
-                    seen[parsed[0]] = (
-                        "\0null" if parsed[1] is None else parsed[1]
-                    )
-            return tuple(seen.get(c) for c in manifest.partition_by)
-
-        touched, untouched = [], []
-        for f in manifest.files:
-            (touched if file_tuple(f) in wanted else untouched).append(f)
-        return touched, untouched
+            data_dir = os.path.realpath(self._data_dir(name))
+            hit = {
+                os.path.relpath(os.path.realpath(unquote(urlparse(r[0]).path)), data_dir)
+                for r in hit_uris
+            }
+            files = [f for f in files if f in hit]
+        touched = set(files)
+        return files, [f for f in manifest.files if f not in touched]
 
     def read_where(
         self, name: str, column: str, lo=None, hi=None
@@ -580,40 +606,14 @@ class TableStore:
         before Spark ever plans the query. Files without recorded
         stats are conservatively kept.
         """
-        manifest = self._latest_manifest(name)
-        if manifest is None:
-            raise FileNotFoundError(f"table {name} does not exist in {self.root}")
-        schema = StructType.fromJson(json.loads(manifest.schema_json))
-
-        def overlaps(rel: str) -> bool:
-            st = manifest.stats.get(rel, {}).get(column)
-            if st is None:
-                return True
-            fmin, fmax = st
-            if lo is not None and fmax < lo:
-                return False
-            if hi is not None and fmin > hi:
-                return False
-            return True
-
-        kept = [f for f in manifest.files if overlaps(f)]
-        predicate = None
+        manifest = self._require(name)
+        kept, _ = self._plan_files(name, manifest, prune_column=column, lo=lo, hi=hi)
+        df = self._read_file_subset(name, manifest, kept)
         if lo is not None:
-            predicate = F.col(column) >= F.lit(lo)
+            df = df.filter(F.col(column) >= F.lit(lo))
         if hi is not None:
-            p2 = F.col(column) <= F.lit(hi)
-            predicate = p2 if predicate is None else (predicate & p2)
-        if not kept:
-            empty = self.spark.createDataFrame([], schema)
-            return empty if predicate is None else empty.filter(predicate)
-        data_dir = self._data_dir(name)
-        reader = self.spark.read
-        if manifest.partition_by:
-            reader = reader.option("basePath", data_dir)
-        df = reader.parquet(*[os.path.join(data_dir, f) for f in kept]).select(
-            *[F.col(f.name).cast(f.dataType) for f in schema.fields]
-        )
-        return df if predicate is None else df.filter(predicate)
+            df = df.filter(F.col(column) <= F.lit(hi))
+        return df
 
     def read_partitions(self, name: str, column: str, values: list) -> DataFrame:
         """Manifest-level partition pruning: read ONLY the files that
@@ -622,53 +622,18 @@ class TableStore:
         the non-matching files never even enter the scan's file index —
         at 100 TB a 2-of-64-cell IVF probe plans a 1/32-of-corpus read
         before Spark sees a single path."""
-        manifest = self._latest_manifest(name)
-        if manifest is None:
-            raise FileNotFoundError(f"table {name} does not exist in {self.root}")
+        manifest = self._require(name)
         if column not in manifest.partition_by:
             raise ValueError(f"{column} is not a partition column of {name}")
-        # Match by PARSING the dir segments rather than formatting the
-        # wanted values: Spark percent-escapes special characters in
-        # partition paths ('a b' → 'a%20b') and writes NULL as
-        # __HIVE_DEFAULT_PARTITION__, so naive f"{col}={v}" string
-        # equality silently misses those partitions. The renderer is
-        # type-aware (column dtype from the manifest schema) so float /
-        # date / timestamp / decimal keys match Spark's path form too.
-        schema = StructType.fromJson(json.loads(manifest.schema_json))
-        dtype = next((f.dataType for f in schema.fields if f.name == column), None)
-        wanted = {_render_partition_value(v, dtype) for v in values}
-
-        def seg_value(seg: str) -> str | None:
-            parsed = parse_partition_segment(seg)
-            if parsed is None or parsed[0] != column:
-                return None
-            return "\0null" if parsed[1] is None else parsed[1]
-
-        kept = [
-            f
-            for f in manifest.files
-            if any((sv := seg_value(seg)) is not None and sv in wanted
-                   for seg in f.split(os.sep))
-        ]
+        kept, _ = self._plan_files(name, manifest, partitions=([column], [(v,) for v in values]))
         return self._read_file_subset(name, manifest, kept)
 
     def skipped_file_count(self, name: str, column: str, lo=None, hi=None) -> tuple[int, int]:
         """(files_kept, files_total) for a prospective read_where —
         observability hook for tests and planning."""
-        manifest = self._latest_manifest(name)
-        if manifest is None:
-            raise FileNotFoundError(f"table {name} does not exist in {self.root}")
-        kept = 0
-        for f in manifest.files:
-            st = manifest.stats.get(f, {}).get(column)
-            if st is None:
-                kept += 1
-                continue
-            fmin, fmax = st
-            if (lo is not None and fmax < lo) or (hi is not None and fmin > hi):
-                continue
-            kept += 1
-        return kept, len(manifest.files)
+        manifest = self._require(name)
+        kept, _ = self._plan_files(name, manifest, prune_column=column, lo=lo, hi=hi)
+        return len(kept), len(manifest.files)
 
     # --------------------------------------------------------------- analyze
     #
@@ -684,13 +649,10 @@ class TableStore:
         """Compute and persist table statistics for the CURRENT version;
         returns the stats dict. ``columns`` defaults to every primitive
         (atomic-typed) column."""
-        manifest = self._latest_manifest(name)
-        if manifest is None:
-            raise FileNotFoundError(f"table {name} does not exist in {self.root}")
-        schema = StructType.fromJson(json.loads(manifest.schema_json))
+        manifest = self._require(name)
         atomic = [
             f.name
-            for f in schema.fields
+            for f in manifest.schema.fields
             if f.dataType.typeName()
             not in ("array", "map", "struct", "binary")
         ]
@@ -828,19 +790,107 @@ class TableStore:
                 else df.repartitionByRange(*cluster_by)
             ).sortWithinPartitions(*cluster_by)
             distribute = False
-        prev = self._latest_manifest(name)
-        files = self._write_files(df, name, partition_by, distribute=distribute)
+        self._rewrite(
+            name, self._latest_manifest(name), df, [], df.schema,
+            partition_by=partition_by, distribute=distribute,
+        )
+
+    def _rewrite(
+        self,
+        name: str,
+        prev: Manifest | None,
+        new_rows: DataFrame,
+        untouched: list[str],
+        schema: StructType,
+        partition_by: list[str] | None = None,
+        distribute: bool = True,
+    ) -> int:
+        """The one rewrite-and-commit path of every data-writing verb:
+        write ``new_rows`` as new files, carry prev's ``untouched``
+        files and their stats forward byte-identical, and commit
+        ``untouched + new files`` under ``schema`` as version prev + 1
+        (1 when ``prev`` is None: a new table). ``partition_by``
+        defaults to prev's layout; ``distribute`` goes to
+        ``_write_files``. Returns the committed version."""
+        if partition_by is None:
+            partition_by = prev.partition_by
+        files = self._write_files(new_rows, name, partition_by, distribute=distribute)
+        stats = {f: prev.stats[f] for f in untouched if f in prev.stats}
+        stats.update(self._collect_file_stats(self._data_dir(name), files))
+        version = prev.version + 1 if prev else 1
         self._commit(
             name,
-            Manifest(
-                version=(prev.version + 1 if prev else 1),
-                schema_json=df.schema.json(),
-                partition_by=partition_by,
-                files=files,
-                stats=self._collect_file_stats(self._data_dir(name), files),
-            ),
+            Manifest(version, schema.json(), partition_by, untouched + files, stats),
             prev=prev,
         )
+        return version
+
+    def _merge_prologue(
+        self,
+        source: DataFrame,
+        name: str,
+        keys: list[str],
+        partition_by: list[str] | None,
+        merge_schema: bool | None,
+        verb: str | None = None,
+        init: DataFrame | None = None,
+    ) -> tuple[Manifest, StructType, tuple[list[str], list[tuple]] | None] | None:
+        """Set-up shared by the merges. Creates the table from ``init``
+        (default ``source``) through ``save_overwrite`` when it does
+        not exist yet and returns None: nothing is left to merge.
+        Otherwise returns (manifest, merge schema, partition request
+        for ``_plan_files``), after:
+
+        - rejecting a ``partition_by`` that conflicts with the recorded
+          layout (it applies only when the merge creates the table);
+        - widening the schema with source-only columns
+          (``merge_schema=True``) or rejecting them (False); None
+          leaves the column contract to the verb;
+        - collecting the source's distinct partition values when every
+          partition column is a key — only then is partition pruning
+          sound: equal keys imply equal partition values, so a source
+          row can only match inside its own partition;
+        - when ``verb`` is given, raising on duplicate source keys, as
+          Delta MERGE does, instead of silently fanning target rows
+          out. One aggregate job over the (small, incremental) source.
+        """
+        manifest = self._latest_manifest(name)
+        if manifest is None:
+            self.save_overwrite(
+                source if init is None else init, name, partition_by=partition_by
+            )
+            return None
+        if partition_by is not None and partition_by != manifest.partition_by:
+            raise ValueError(
+                f"{name} is partitioned by {manifest.partition_by}; "
+                f"cannot merge with partition_by={partition_by}"
+            )
+        schema = manifest.schema
+        if merge_schema:
+            schema = self._evolved_schema(schema, source.schema)
+        elif merge_schema is not None:
+            self._reject_extra_columns(source, schema, name)
+        partitions = None
+        if manifest.partition_by and set(manifest.partition_by) <= set(keys):
+            pvals = source.select(*manifest.partition_by).distinct().collect()
+            partitions = (manifest.partition_by, [tuple(r) for r in pvals])
+        if verb is not None and (
+            source.groupBy(*keys).count().filter(F.col("count") > 1).limit(1).count()
+        ):
+            raise ValueError(
+                f"{verb} source has duplicate rows per key {keys}; "
+                "deduplicate upstream (Delta MERGE semantics)"
+            )
+        return manifest, schema, partitions
+
+    @staticmethod
+    def _key_match(keys: list[str]):
+        """Null-safe equality of every key between aliases ``t`` and ``s``."""
+        cond = None
+        for k in keys:
+            e = F.col(f"t.{k}").eqNullSafe(F.col(f"s.{k}"))
+            cond = e if cond is None else (cond & e)
+        return cond
 
     @staticmethod
     def _evolved_schema(base: StructType, incoming: StructType) -> StructType:
@@ -919,51 +969,20 @@ class TableStore:
         schema mismatch fails analysis — evolution must be opted into,
         exactly as Delta requires.
         """
-        if not self.table_exists(name):
-            self.save_overwrite(source, name, partition_by=partition_by)
+        prep = self._merge_prologue(source, name, keys, partition_by, merge_schema)
+        if prep is None:
             return
-        manifest = self._latest_manifest(name)
-        if partition_by is not None and partition_by != manifest.partition_by:
-            raise ValueError(
-                f"{name} is partitioned by {manifest.partition_by}; "
-                f"cannot merge with partition_by={partition_by}"
-            )
-        schema = StructType.fromJson(json.loads(manifest.schema_json))
-        if merge_schema:
-            schema = self._evolved_schema(schema, source.schema)
-        else:
-            self._reject_extra_columns(source, schema, name)
-        target = self.read(name)
-        # Pruning is sound only when the partition columns are part of
-        # the merge keys: then equal keys imply equal partition values,
-        # so a source row can only match inside its own partition.
-        if manifest.partition_by and set(manifest.partition_by) <= set(keys):
-            pvals = [
-                tuple(r)
-                for r in source.select(*manifest.partition_by).distinct().collect()
-            ]
-            touched, _untouched = self._split_files_by_partitions(manifest, pvals)
-            target = self._read_file_subset(name, manifest, touched)
+        manifest, schema, partitions = prep
+        touched, _ = self._plan_files(name, manifest, partitions)
+        target = self._read_file_subset(name, manifest, touched)
         src = (
             self._project_to(source, schema)
             if merge_schema
             else source.select(*[f.name for f in schema.fields])
         )
         new_rows = src.join(target.select(*keys), on=keys, how="left_anti")
-        files = self._write_files(new_rows, name, manifest.partition_by)
-        stats = dict(manifest.stats)
-        stats.update(self._collect_file_stats(self._data_dir(name), files))
-        self._commit(
-            name,
-            Manifest(
-                version=manifest.version + 1,
-                schema_json=schema.json(),
-                partition_by=manifest.partition_by,
-                files=manifest.files + files,
-                stats=stats,
-            ),
-            prev=manifest,
-        )
+        # append-only: every existing file carries forward
+        self._rewrite(name, manifest, new_rows, manifest.files, schema)
 
     def merge_scd1(
         self,
@@ -1005,30 +1024,14 @@ class TableStore:
         of being clobbered to NULL, Delta's UPDATE SET * + autoMerge
         semantics.
         """
-        if not self.table_exists(name):
-            self.save_overwrite(source, name, partition_by=partition_by)
+        prep = self._merge_prologue(
+            source, name, keys, partition_by, merge_schema, verb="merge_scd1"
+        )
+        if prep is None:
             return
-        manifest = self._latest_manifest(name)
-        if partition_by is not None and partition_by != manifest.partition_by:
-            raise ValueError(
-                f"{name} is partitioned by {manifest.partition_by}; "
-                f"cannot merge with partition_by={partition_by}"
-            )
-        schema = StructType.fromJson(json.loads(manifest.schema_json))
-        if merge_schema:
-            schema = self._evolved_schema(schema, source.schema)
-        else:
-            self._reject_extra_columns(source, schema, name)
-        untouched: list[str] = []
-        if manifest.partition_by and set(manifest.partition_by) <= set(keys):
-            pvals = [
-                tuple(r)
-                for r in source.select(*manifest.partition_by).distinct().collect()
-            ]
-            touched, untouched = self._split_files_by_partitions(manifest, pvals)
-            target = self._read_file_subset(name, manifest, touched)
-        else:
-            target = self.read(name)
+        manifest, schema, partitions = prep
+        touched, untouched = self._plan_files(name, manifest, partitions)
+        target = self._read_file_subset(name, manifest, touched)
         if merge_schema:
             target = self._project_to(target, schema)
         cols = [f.name for f in schema.fields]
@@ -1036,18 +1039,6 @@ class TableStore:
         if merge_schema:
             # UPDATE SET assigns only source-carried columns
             update_cols = [c for c in update_cols if c in set(source.columns)]
-
-        # Delta MERGE raises on duplicate source matches; reproduce that
-        # contract instead of silently fanning target rows out. One
-        # aggregate job over the (small, incremental) source slice.
-        dup_keys = (
-            source.groupBy(*keys).count().filter(F.col("count") > 1).limit(1).count()
-        )
-        if dup_keys:
-            raise ValueError(
-                f"merge_scd1 source has duplicate rows per key {keys}; "
-                "deduplicate upstream (Delta MERGE semantics)"
-            )
 
         # Explicit match indicator: keys[0] IS NOT NULL misreads a
         # NULL-keyed source row that eqNullSafe-matched a NULL-keyed
@@ -1057,10 +1048,7 @@ class TableStore:
         )
         src = src_proj.withColumn("_src_matched", F.lit(True)).alias("s")
         tgt = target.alias("t")
-        match_cond = None
-        for k in keys:
-            e = F.col(f"t.{k}").eqNullSafe(F.col(f"s.{k}"))
-            match_cond = e if match_cond is None else (match_cond & e)
+        match_cond = self._key_match(keys)
 
         merged_existing = tgt.join(src, match_cond, "left").select(
             *[
@@ -1078,23 +1066,11 @@ class TableStore:
         inserts = anti_src.join(tgt.select(*keys).alias("t"), match_cond, "left_anti").select(
             *[F.col(f"s.{c}").alias(c) for c in cols]
         )
-        result = merged_existing.unionByName(inserts)
-        files = self._write_files(result, name, manifest.partition_by)
-        # carry untouched partitions' files (and their stats) forward
-        # unchanged; only the rewritten partitions' files are "added"
-        # in the delta entry, so CDC stays O(touched)
-        stats = {f: manifest.stats[f] for f in untouched if f in manifest.stats}
-        stats.update(self._collect_file_stats(self._data_dir(name), files))
-        self._commit(
-            name,
-            Manifest(
-                version=manifest.version + 1,
-                schema_json=schema.json(),
-                partition_by=manifest.partition_by,
-                files=untouched + files,
-                stats=stats,
-            ),
-            prev=manifest,
+        # untouched partitions' files carry forward unchanged; only the
+        # rewritten partitions' files are "added" in the delta entry, so
+        # CDC stays O(touched)
+        self._rewrite(
+            name, manifest, merged_existing.unionByName(inserts), untouched, schema
         )
 
     SCD2_COLS = ("valid_from", "valid_to", "is_current")
@@ -1135,29 +1111,21 @@ class TableStore:
         """
         meta = list(self.SCD2_COLS)
         ts = F.lit(effective_ts).cast("timestamp")
-        if not self.table_exists(name):
-            init = source.withColumn("valid_from", ts).withColumn(
-                "valid_to", F.lit(None).cast("timestamp")
-            ).withColumn("is_current", F.lit(True))
-            self.save_overwrite(init, name, partition_by=partition_by)
-            return
-        manifest = self._latest_manifest(name)
-        if partition_by is not None and partition_by != manifest.partition_by:
-            raise ValueError(
-                f"{name} is partitioned by {manifest.partition_by}; "
-                f"cannot merge with partition_by={partition_by}"
+
+        def opened(df: DataFrame) -> DataFrame:
+            return (
+                df.withColumn("valid_from", ts)
+                .withColumn("valid_to", F.lit(None).cast("timestamp"))
+                .withColumn("is_current", F.lit(True))
             )
-        untouched: list[str] = []
-        if manifest.partition_by and set(manifest.partition_by) <= set(keys):
-            pvals = [
-                tuple(r)
-                for r in source.select(*manifest.partition_by).distinct().collect()
-            ]
-            touched, untouched = self._split_files_by_partitions(manifest, pvals)
-            target = self._read_file_subset(name, manifest, touched)
-        else:
-            target = self.read(name)
-        cols = [f.name for f in target.schema.fields]
+
+        prep = self._merge_prologue(
+            source, name, keys, partition_by, None, verb="merge_scd2", init=opened(source)
+        )
+        if prep is None:
+            return
+        manifest, schema, partitions = prep
+        cols = [f.name for f in schema.fields]
         missing = [c for c in meta if c not in cols]
         if missing:
             raise ValueError(
@@ -1172,24 +1140,15 @@ class TableStore:
                 f"merge_scd2 source must carry only natural columns; "
                 f"unexpected {src_extra} (SCD-2 metadata is engine-managed)"
             )
-        dup_keys = (
-            source.groupBy(*keys).count().filter(F.col("count") > 1).limit(1).count()
-        )
-        if dup_keys:
-            raise ValueError(
-                f"merge_scd2 source has duplicate rows per key {keys}; "
-                "deduplicate upstream (Delta MERGE semantics)"
-            )
+        touched, untouched = self._plan_files(name, manifest, partitions)
+        target = self._read_file_subset(name, manifest, touched)
 
         src = source.select(*natural).alias("s")
         # alias AFTER withColumn — withColumn drops a prior alias
         src_m = source.select(*natural).withColumn("_m", F.lit(True)).alias("s")
         cur = target.filter(F.col("is_current")).alias("t")
         hist = target.filter(~F.col("is_current"))
-        match_cond = None
-        for k in keys:
-            e = F.col(f"t.{k}").eqNullSafe(F.col(f"s.{k}"))
-            match_cond = e if match_cond is None else (match_cond & e)
+        match_cond = self._key_match(keys)
         changed = None
         for c in track_cols:
             e = ~F.col(f"t.{c}").eqNullSafe(F.col(f"s.{c}"))
@@ -1212,94 +1171,13 @@ class TableStore:
         new_keys = src.join(cur.select(*keys).alias("t"), match_cond, "left_anti").select(
             *[F.col(f"s.{c}").alias(c) for c in natural]
         )
-        openers = (
-            new_changed.unionByName(new_keys)
-            .withColumn("valid_from", ts)
-            .withColumn("valid_to", F.lit(None).cast("timestamp"))
-            .withColumn("is_current", F.lit(True))
-        )
+        openers = opened(new_changed.unionByName(new_keys))
         result = hist.select(*cols).unionByName(
             kept_current.select(*cols)
         ).unionByName(openers.select(*cols))
-        files = self._write_files(result, name, manifest.partition_by)
-        stats = {f: manifest.stats[f] for f in untouched if f in manifest.stats}
-        stats.update(self._collect_file_stats(self._data_dir(name), files))
-        self._commit(
-            name,
-            Manifest(
-                version=manifest.version + 1,
-                schema_json=manifest.schema_json,
-                partition_by=manifest.partition_by,
-                files=untouched + files,
-                stats=stats,
-            ),
-            prev=manifest,
-        )
+        self._rewrite(name, manifest, result, untouched, schema)
 
     # ------------------------------------------------------- predicate DML
-    def _touched_files_for(
-        self,
-        name: str,
-        manifest: Manifest,
-        cond,
-        prune_column: str | None = None,
-        prune_lo=None,
-        prune_hi=None,
-    ) -> tuple[list[str], list[str]]:
-        """(touched, untouched) relative file paths for a predicate DML.
-
-        Two-phase file discovery, exactly Delta's DELETE/UPDATE planning:
-
-        1. *Stats prune* (optional ``prune_column``/``lo``/``hi`` range
-           hint): drop files whose recorded footer [min, max] cannot
-           intersect the range — zero I/O, manifest-only. At 100 TB a
-           time-scoped delete on an ingest-clustered table eliminates
-           almost every file here.
-        2. *Discovery scan*: read the surviving candidates projecting
-           ONLY the predicate's columns plus ``input_file_name()`` and
-           collect the distinct files holding a matching row (bounded
-           by the file count, not the row count). A candidate file with
-           no matching row is carried forward untouched — its bytes are
-           never rewritten and it never appears in the change feed.
-        """
-        candidates: list[str] = []
-        pruned_out: list[str] = []
-        for f in manifest.files:
-            st = (
-                manifest.stats.get(f, {}).get(prune_column)
-                if prune_column is not None
-                else None
-            )
-            if st is not None and (
-                (prune_lo is not None and st[1] < prune_lo)
-                or (prune_hi is not None and st[0] > prune_hi)
-            ):
-                pruned_out.append(f)
-            else:
-                candidates.append(f)
-        if not candidates:
-            return [], list(manifest.files)
-        from urllib.parse import unquote, urlparse
-
-        scan = self._read_file_subset(name, manifest, candidates)
-        hit_uris = [
-            r[0]
-            for r in scan.filter(cond)
-            .select(F.input_file_name())
-            .distinct()
-            .collect()
-        ]
-        data_dir = os.path.realpath(self._data_dir(name))
-        hit = {
-            os.path.relpath(os.path.realpath(unquote(urlparse(u).path)), data_dir)
-            for u in hit_uris
-        }
-        touched = [f for f in candidates if f in hit]
-        untouched = pruned_out + [f for f in candidates if f not in hit]
-        # preserve manifest order for byte-identical carry-forward checks
-        untouched = [f for f in manifest.files if f in set(untouched)]
-        return touched, untouched
-
     def delete_where(
         self,
         name: str,
@@ -1314,8 +1192,9 @@ class TableStore:
 
         Rows where the condition is TRUE are deleted; FALSE and NULL
         rows are kept (SQL three-valued DELETE). Only files that
-        actually hold a matching row are rewritten (see
-        ``_touched_files_for``); every other file — including files in
+        actually hold a matching row are rewritten (``_plan_files``'
+        discovery scan, after its stats prune when a ``prune_column``
+        range hint is given); every other file — including files in
         the same partition — carries forward byte-identical, so the
         change feed reports O(matched files), not O(table). A delete
         that matches nothing commits nothing and leaves the version
@@ -1324,47 +1203,22 @@ class TableStore:
         Returns metrics ``{"rows_deleted", "files_rewritten",
         "files_total", "version"}`` (numDeletedRows analogue).
         """
-        manifest = self._latest_manifest(name)
-        if manifest is None:
-            raise FileNotFoundError(f"table {name} does not exist in {self.root}")
+        manifest = self._require(name)
         cond = F.expr(condition) if isinstance(condition, str) else condition
-        touched, untouched = self._touched_files_for(
-            name, manifest, cond, prune_column, prune_lo, prune_hi
+        touched, untouched = self._plan_files(
+            name, manifest, prune_column=prune_column, lo=prune_lo, hi=prune_hi, cond=cond
         )
-        if not touched:
-            return {
-                "rows_deleted": 0,
-                "files_rewritten": 0,
-                "files_total": len(manifest.files),
-                "version": manifest.version,
-            }
-        subset = self._read_file_subset(name, manifest, touched)
-        # keep = NOT(cond IS TRUE); one pass counts both sides
-        counts = subset.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.when(cond, 1).otherwise(0)).alias("d"),
-        ).collect()[0]
-        kept = subset.filter(~F.coalesce(cond, F.lit(False)))
-        files = self._write_files(kept, name, manifest.partition_by)
-        stats = {f: manifest.stats[f] for f in untouched if f in manifest.stats}
-        stats.update(self._collect_file_stats(self._data_dir(name), files))
-        self._commit(
-            name,
-            Manifest(
-                version=manifest.version + 1,
-                schema_json=manifest.schema_json,
-                partition_by=manifest.partition_by,
-                files=untouched + files,
-                stats=stats,
-            ),
-            prev=manifest,
-        )
-        return {
-            "rows_deleted": int(counts["d"] or 0),
-            "files_rewritten": len(touched),
-            "files_total": len(manifest.files),
-            "version": manifest.version + 1,
-        }
+        out = {"rows_deleted": 0, "files_rewritten": len(touched),
+               "files_total": len(manifest.files), "version": manifest.version}
+        if touched:
+            subset = self._read_file_subset(name, manifest, touched)
+            out["rows_deleted"] = int(
+                subset.agg(F.sum(F.when(cond, 1).otherwise(0))).collect()[0][0] or 0
+            )
+            # keep = NOT(cond IS TRUE)
+            kept = subset.filter(~F.coalesce(cond, F.lit(False)))
+            out["version"] = self._rewrite(name, manifest, kept, untouched, manifest.schema)
+        return out
 
     def update_where(
         self,
@@ -1388,62 +1242,38 @@ class TableStore:
         Returns ``{"rows_updated", "files_rewritten", "files_total",
         "version"}``.
         """
-        manifest = self._latest_manifest(name)
-        if manifest is None:
-            raise FileNotFoundError(f"table {name} does not exist in {self.root}")
-        schema = StructType.fromJson(json.loads(manifest.schema_json))
+        manifest = self._require(name)
+        schema = manifest.schema
         known = {f.name: f.dataType for f in schema.fields}
         bad = [c for c in set if c not in known]
         if bad:
             raise ValueError(f"UPDATE SET targets unknown columns {bad} on {name}")
         cond = F.expr(condition) if isinstance(condition, str) else condition
-        touched, untouched = self._touched_files_for(
-            name, manifest, cond, prune_column, prune_lo, prune_hi
+        touched, untouched = self._plan_files(
+            name, manifest, prune_column=prune_column, lo=prune_lo, hi=prune_hi, cond=cond
         )
-        if not touched:
-            return {
-                "rows_updated": 0,
-                "files_rewritten": 0,
-                "files_total": len(manifest.files),
-                "version": manifest.version,
+        out = {"rows_updated": 0, "files_rewritten": len(touched),
+               "files_total": len(manifest.files), "version": manifest.version}
+        if touched:
+            subset = self._read_file_subset(name, manifest, touched)
+            out["rows_updated"] = int(
+                subset.agg(F.sum(F.when(cond, 1).otherwise(0))).collect()[0][0] or 0
+            )
+            assigns = {
+                c: (F.expr(e) if isinstance(e, str) else e).cast(known[c])
+                for c, e in set.items()
             }
-        subset = self._read_file_subset(name, manifest, touched)
-        n_updated = int(
-            subset.agg(F.sum(F.when(cond, 1).otherwise(0))).collect()[0][0] or 0
-        )
-        assigns = {
-            c: (F.expr(e) if isinstance(e, str) else e).cast(known[c])
-            for c, e in set.items()
-        }
-        is_hit = F.coalesce(cond, F.lit(False))
-        rewritten = subset.select(
-            *[
-                F.when(is_hit, assigns[f.name]).otherwise(F.col(f.name)).alias(f.name)
-                if f.name in assigns
-                else F.col(f.name)
-                for f in schema.fields
-            ]
-        )
-        files = self._write_files(rewritten, name, manifest.partition_by)
-        stats = {f: manifest.stats[f] for f in untouched if f in manifest.stats}
-        stats.update(self._collect_file_stats(self._data_dir(name), files))
-        self._commit(
-            name,
-            Manifest(
-                version=manifest.version + 1,
-                schema_json=manifest.schema_json,
-                partition_by=manifest.partition_by,
-                files=untouched + files,
-                stats=stats,
-            ),
-            prev=manifest,
-        )
-        return {
-            "rows_updated": n_updated,
-            "files_rewritten": len(touched),
-            "files_total": len(manifest.files),
-            "version": manifest.version + 1,
-        }
+            is_hit = F.coalesce(cond, F.lit(False))
+            rewritten = subset.select(
+                *[
+                    F.when(is_hit, assigns[f.name]).otherwise(F.col(f.name)).alias(f.name)
+                    if f.name in assigns
+                    else F.col(f.name)
+                    for f in schema.fields
+                ]
+            )
+            out["version"] = self._rewrite(name, manifest, rewritten, untouched, schema)
+        return out
 
     def optimize(
         self,
@@ -1513,18 +1343,7 @@ class TableStore:
             df = df.coalesce(1)
         # every branch above arranged its own distribution — don't
         # re-shuffle in the write layer
-        files = self._write_files(df, name, manifest.partition_by, distribute=False)
-        self._commit(
-            name,
-            Manifest(
-                version=manifest.version + 1,
-                schema_json=manifest.schema_json,
-                partition_by=manifest.partition_by,
-                files=files,
-                stats=self._collect_file_stats(self._data_dir(name), files),
-            ),
-            prev=manifest,
-        )
+        self._rewrite(name, manifest, df, [], manifest.schema, distribute=False)
 
     def vacuum(
         self,
@@ -1641,17 +1460,9 @@ class TableStore:
         )
         if m_from is None or m_to is None:
             raise FileNotFoundError(f"version not found for {name}")
-        added = [f for f in m_to.files if f not in set(m_from.files)]
-        schema = StructType.fromJson(json.loads(m_to.schema_json))
-        if not added:
-            return self.spark.createDataFrame([], schema)
-        data_dir = self._data_dir(name)
-        reader = self.spark.read
-        if m_to.partition_by:
-            reader = reader.option("basePath", data_dir)
-        return reader.parquet(*[os.path.join(data_dir, f) for f in added]).select(
-            *[F.col(f.name).cast(f.dataType) for f in schema.fields]
-        )
+        before = set(m_from.files)
+        added = [f for f in m_to.files if f not in before]
+        return self._read_file_subset(name, m_to, added)
 
     def register_views(self, *names: str) -> None:
         """Expose tables as temp views named ``<db>_<table>`` so SQL

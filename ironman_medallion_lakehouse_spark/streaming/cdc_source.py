@@ -31,7 +31,6 @@ keys downstream).
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql.datasource import (
@@ -44,12 +43,11 @@ from pyspark.sql.types import StructType
 from ironman_medallion_lakehouse_spark.sources.tablestore import (
     log_versions,
     manifest_at,
-    parse_partition_segment,
+    partition_values,
     version_changes,
 )
 
 FORMAT_NAME = "tablestore_changes"
-
 
 
 class _AddedFile(InputPartition):
@@ -57,15 +55,6 @@ class _AddedFile(InputPartition):
         self.path = path
         self.version = version
         self.part_values = part_values
-
-
-def _partition_values(rel_path: str, partition_by: list[str]) -> list[tuple[str, str | None]]:
-    values: dict[str, str | None] = {}
-    for seg in rel_path.split(os.sep)[:-1]:
-        parsed = parse_partition_segment(seg)
-        if parsed and parsed[0] in partition_by:
-            values[parsed[0]] = parsed[1]
-    return [(c, values.get(c)) for c in partition_by]
 
 
 class ChangeFeedStreamReader(DataSourceStreamReader):
@@ -139,7 +128,7 @@ class ChangeFeedStreamReader(DataSourceStreamReader):
                     _AddedFile(
                         os.path.join(self._data_dir, rel),
                         v,
-                        _partition_values(rel, partition_by),
+                        partition_values(rel, partition_by),
                     )
                 )
         # Spark requires ≥1 partition per batch; an empty commit range
@@ -211,7 +200,7 @@ class ChangeFeedDataSource(DataSource):
         if not versions:
             raise FileNotFoundError(f"no TableStore log at {log_dir}")
         manifest = manifest_at(log_dir, versions[-1])
-        return StructType.fromJson(json.loads(manifest.schema_json))
+        return manifest.schema
 
     def streamReader(self, schema: StructType) -> ChangeFeedStreamReader:
         max_files = self.options.get("max_files_per_trigger")

@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
@@ -204,23 +205,48 @@ def test_commit_is_put_if_absent(spark, tmp_path):
     assert sorted((r.k, r.v) for r in st.read("db.t").collect()) == [("a", 1), ("b", 2)]
 
 
+_V_ROWS = [Row(k="a", y=1, v=1), Row(k="b", y=2, v=2)]
+_V_MORE = [Row(k="c", y=2, v=3)]
+_V_SOURCE = [Row(k="a", y=1, v=10), Row(k="e", y=3, v=5)]
+
+# every verb that rewrites files through the shared rewrite-and-commit
+# path, applied to the two-version table of _two_versions
+_REWRITE_VERBS = {
+    "merge_insert_only": lambda st, src: st.merge_insert_only(src, "db.t", keys=["k", "y"]),
+    "merge_scd1": lambda st, src: st.merge_scd1(src, "db.t", keys=["k", "y"]),
+    "merge_scd2": lambda st, src: st.merge_scd2(
+        src, "db.t", keys=["k", "y"], effective_ts="2024-03-01"
+    ),
+    "delete_where": lambda st, src: st.delete_where("db.t", "v = 3"),
+    "update_where": lambda st, src: st.update_where("db.t", "k = 'a'", {"v": "v + 100"}),
+    "optimize": lambda st, src: st.optimize("db.t", target_partitions=1),
+}
+
+
+def _two_versions(spark, st, verb):
+    """Versions 1 and 2 of db.t, partitioned by y; built through
+    merge_scd2 when the verb under test needs the SCD-2 columns."""
+    for i, rows in enumerate((_V_ROWS, _V_ROWS + _V_MORE)):
+        df = spark.createDataFrame(rows)
+        if verb == "merge_scd2":
+            st.merge_scd2(
+                df, "db.t", keys=["k", "y"], effective_ts=f"2024-0{i + 1}-01",
+                partition_by=["y"],
+            )
+        else:
+            st.save_overwrite(df, "db.t", partition_by=["y"])
+
+
+@pytest.mark.parametrize("verb", sorted(_REWRITE_VERBS))
 def test_crash_mid_commit_leaves_previous_version_and_vacuum_reclaims(
-    spark, tmp_path, monkeypatch
+    spark, tmp_path, monkeypatch, verb
 ):
     """A writer that dies after writing its data files but before its
     log entry lands leaves the table at the previous version; the
     files it wrote are orphans that vacuum removes, and vacuum touches
     no file any retained manifest references."""
-    import pytest
-
     st = _store(spark, tmp_path)
-    v1_rows = [Row(k="a", y=1, v=1), Row(k="b", y=2, v=2)]
-    st.save_overwrite(spark.createDataFrame(v1_rows), "db.t", partition_by=["y"])
-    st.save_overwrite(
-        spark.createDataFrame(v1_rows + [Row(k="c", y=2, v=3)]),
-        "db.t",
-        partition_by=["y"],
-    )
+    _two_versions(spark, st, verb)
     before = st._latest_manifest("db.t")
     v1_before = sorted(st.read("db.t", version=1).collect())
     rows_before = sorted(st.read("db.t").collect())
@@ -239,11 +265,7 @@ def test_crash_mid_commit_leaves_previous_version_and_vacuum_reclaims(
     monkeypatch.setattr(st, "_write_files", write_and_record)
     monkeypatch.setattr(st, "_commit", crash)
     with pytest.raises(RuntimeError, match="writer died"):
-        st.merge_insert_only(
-            spark.createDataFrame([Row(k="d", y=1, v=4), Row(k="e", y=3, v=5)]),
-            "db.t",
-            keys=["k", "y"],
-        )
+        _REWRITE_VERBS[verb](st, spark.createDataFrame(_V_SOURCE))
     monkeypatch.undo()
 
     data_dir = st._data_dir("db.t")
@@ -260,6 +282,71 @@ def test_crash_mid_commit_leaves_previous_version_and_vacuum_reclaims(
     assert not any(os.path.exists(os.path.join(data_dir, f)) for f in written)
     assert all(os.path.exists(os.path.join(data_dir, f)) for f in referenced)
     assert sorted(st.read("db.t", version=1).collect()) == v1_before
+
+
+@pytest.mark.parametrize("verb", sorted(_REWRITE_VERBS))
+def test_rewrite_commit_invariants(spark, tmp_path, monkeypatch, verb):
+    """Every rewriting verb commits version prev + 1; files it does not
+    rewrite carry forward with their bytes and stats unchanged; every
+    file it adds has footer stats; and its log entry's add/remove lists
+    are exactly the diff between the two manifests. The commit also
+    writes a checkpoint, so the manifest read back is the full snapshot
+    the verb built, not a replay of earlier log entries."""
+    import hashlib
+    import json
+
+    from ironman_medallion_lakehouse_spark.sources import tablestore
+
+    monkeypatch.setattr(tablestore, "CHECKPOINT_EVERY", 1)
+    st = _store(spark, tmp_path)
+    _two_versions(spark, st, verb)
+    prev = st._latest_manifest("db.t")
+    data_dir = st._data_dir("db.t")
+
+    def digest(rel):
+        with open(os.path.join(data_dir, rel), "rb") as fh:
+            return hashlib.sha256(fh.read()).hexdigest()
+
+    digests = {f: digest(f) for f in prev.files}
+    _REWRITE_VERBS[verb](st, spark.createDataFrame(_V_SOURCE))
+    new = st._latest_manifest("db.t")
+    assert new.version == prev.version + 1
+    assert st._checkpoint_versions("db.t")[-1] == new.version
+
+    prev_files, new_files = set(prev.files), set(new.files)
+    carried = [f for f in new.files if f in prev_files]
+    added = [f for f in new.files if f not in prev_files]
+    # optimize rewrites every file; every other verb leaves some alone
+    assert bool(carried) == (verb != "optimize")
+    assert added
+    for f in carried:
+        assert digest(f) == digests[f]
+        assert new.stats.get(f) == prev.stats.get(f)
+    assert all(new.stats.get(f) for f in added)
+
+    with open(os.path.join(st._log_dir("db.t"), f"{new.version:08d}.json")) as fh:
+        entry = json.load(fh)
+    assert entry["add"] == added
+    assert sorted(entry["remove"]) == sorted(prev_files - new_files)
+
+
+def test_read_where_and_table_changes_on_schema_evolved_table(spark, tmp_path):
+    """Scans that keep only files written before merge_schema widened
+    the table read the new column as NULL instead of failing on the
+    older files' footer schema."""
+    st = _store(spark, tmp_path)
+    st.save_overwrite(spark.createDataFrame([Row(k=1)]), "db.e")  # v1
+    st.merge_insert_only(
+        spark.createDataFrame([Row(k=5, extra=10)]), "db.e", keys=["k"], merge_schema=True
+    )  # v2
+    rows = st.read_where("db.e", "k", lo=0, hi=2).collect()
+    assert [(r.k, r.extra) for r in rows] == [(1, None)]
+
+    st.delete_where("db.e", "k = 5")  # v3
+    st.delete_where("db.e", "k = 1")  # v4
+    assert st.restore("db.e", 3) == 5
+    changes = st.table_changes("db.e", 4, 5).collect()
+    assert [(r.k, r.extra) for r in changes] == [(1, None)]
 
 
 def test_scd1_null_key_not_duplicated(spark, tmp_path):
@@ -876,12 +963,10 @@ def test_merge_schema_evolution(spark, tmp_path):
 
 
 def test_version_changes_single_walk_matches_per_version(spark, tmp_path):
-    """The single-pass range walker (r3 ADVICE) must agree with the
-    per-version added_files_in on every committed version."""
-    from ironman_medallion_lakehouse_spark.sources.tablestore import (
-        added_files_in,
-        version_changes,
-    )
+    """The single-pass range walker (r3 ADVICE) must report, for every
+    committed version, exactly the files that version's manifest adds
+    over the previous version's."""
+    from ironman_medallion_lakehouse_spark.sources.tablestore import version_changes
 
     st = _store(spark, tmp_path)
     st.save_overwrite(
@@ -900,7 +985,9 @@ def test_version_changes_single_walk_matches_per_version(spark, tmp_path):
     walked = version_changes(log_dir, 0, 4)
     assert [v for v, _pb, _a in walked] == [1, 2, 3, 4]
     for v, pb, added in walked:
-        assert added == added_files_in(log_dir, v)
+        prev = set(st._manifest_at("db.t", v - 1).files) if v > 1 else set()
+        assert added == [f for f in st._manifest_at("db.t", v).files if f not in prev]
+        assert added
         assert pb == ["y"]
 
 
