@@ -131,13 +131,11 @@ def run(spark: SparkSession, cfg: C.PipelineConfig) -> RunResult:
         store.save_overwrite(dim_divisions, C.DIM_DIVISIONS)
 
     # ---- fact (04d): scoped silver joined to the *merged* dims.
-    # The dims are ANALYZEd right after their write (one cheap fused
-    # aggregate each) and read back through read_hinted, so the fact
-    # build's join strategy comes from recorded statistics — a dim
-    # that outgrows the broadcast threshold falls back to a shuffle
-    # join instead of being force-broadcast (VERDICT r4 item 4).
-    for dim_table in (C.DIM_ATHLETES, C.DIM_DIVISIONS, C.DIM_COUNTRIES):
-        store.analyze(dim_table)
+    # The dims are read back through read_hinted, which sizes each
+    # from its manifest's file sizes (no Spark job), so the fact
+    # build's join strategy follows the dims' real size — a dim that
+    # outgrows the broadcast threshold falls back to a shuffle join
+    # instead of being force-broadcast (VERDICT r4 item 4).
     fact = gold_fact.build_fact(
         silver_scope,
         store.read_hinted(C.DIM_ATHLETES),
@@ -155,9 +153,10 @@ def run(spark: SparkSession, cfg: C.PipelineConfig) -> RunResult:
     store.register_views(*ALL_TABLES)
     result.views_created = views.create_views(spark)
 
-    result.bronze_rows = store.read(C.BRONZE_TABLE).count()
-    result.silver_rows = store.read(C.SILVER_TABLE).count()
-    result.fact_rows = store.read(C.FACT_RESULTS).count()
+    # row counts from the tables' logs: per-file footer counts, no jobs
+    result.bronze_rows = store.row_count(C.BRONZE_TABLE)
+    result.silver_rows = store.row_count(C.SILVER_TABLE)
+    result.fact_rows = store.row_count(C.FACT_RESULTS)
     result.unmatched_fks = gold_fact.fk_audit(store.read(C.FACT_RESULTS))
     result.silver_quality = _silver_quality(store.read(C.SILVER_TABLE))
     return result

@@ -10,7 +10,7 @@ from the public protocol description):
 Layout per table::
 
     <root>/<db>/<table>/
-        _log/00000001.json             # delta: {"version","schema","partition_by","add","remove","stats"}
+        _log/00000001.json             # delta: {"version","schema","partition_by","add","remove","stats","num_records"}
         _log/00000010.checkpoint.json  # full snapshot every CHECKPOINT_EVERY commits
         data/                          # immutable parquet files, shared partition dirs
             year=2023/<writeid>-part-....parquet
@@ -43,7 +43,12 @@ Layout per table::
   it is O(new data), not O(table). SCD-1/SCD-2 merges rewrite the
   touched partitions (all files, for an unpartitioned table); the
   predicate DML rewrites only files with a matching row;
-  ``save_overwrite`` and ``optimize`` carry nothing forward.
+  ``save_overwrite`` and ``optimize`` carry nothing forward. A rewrite
+  that adds no row, carries every file and keeps schema and layout
+  commits nothing.
+- Every added file's footer min/max stats and row count are logged
+  with it, so ``read_where`` prunes and ``row_count`` counts without
+  a Spark job.
 - Old versions remain readable (time travel) until `vacuum()`.
 
 Reference behaviors reproduced: 02_bronze.ipynb:300-318 (insert-only),
@@ -61,7 +66,9 @@ import uuid
 from dataclasses import dataclass, field
 from urllib.parse import unquote, urlparse
 
-from pyspark.sql import DataFrame, SparkSession
+from py4j.protocol import Py4JJavaError
+from pyspark.errors import PySparkException
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
@@ -74,6 +81,10 @@ CHECKPOINT_EVERY = 10
 
 # rendered form of a NULL partition value (never a real path value)
 _NULL = "\0null"
+
+# the duplicate-key failure a merge's write job raises (_unique_keys)
+_DUPLICATE_KEYS = "merge source has duplicate rows per key"
+_MERGE_SEMANTICS = "(Delta MERGE semantics)"
 
 # sentinel: "caller didn't supply the previous manifest — replay the log"
 _DERIVE_PREV: "Manifest | None" = object()  # type: ignore[assignment]
@@ -111,12 +122,14 @@ def manifest_at(log_dir: str, version: int) -> "Manifest | None":
     ckpts = [v for v in checkpoint_versions(log_dir) if v <= version]
     files: list[str] = []
     stats: dict[str, dict[str, list]] = {}
+    num_records: dict[str, int] = {}
     schema_json, partition_by = "", []
     start = 0
     if ckpts:
         with open(os.path.join(log_dir, f"{ckpts[-1]:08d}.checkpoint.json")) as fh:
             snap = Manifest.from_json(fh.read())
         files, stats = list(snap.files), dict(snap.stats)
+        num_records = dict(snap.num_records)
         schema_json, partition_by = snap.schema_json, snap.partition_by
         start = snap.version
     for v in range(start + 1, version + 1):
@@ -128,13 +141,16 @@ def manifest_at(log_dir: str, version: int) -> "Manifest | None":
         files = [f for f in files if f not in removed] + d.get("add", [])
         for f in removed:
             stats.pop(f, None)
+            num_records.pop(f, None)
         stats.update(d.get("stats", {}))
+        num_records.update(d.get("num_records", {}))
     return Manifest(
         version=version,
         schema_json=schema_json,
         partition_by=partition_by,
         files=files,
         stats=stats,
+        num_records=num_records,
     )
 
 
@@ -261,6 +277,9 @@ class Manifest:
     # per-file column stats for data skipping: path → {col: [min, max]}
     # (numeric/string primitives only; absent = no stats = never skipped)
     stats: dict[str, dict[str, list]] = field(default_factory=dict)
+    # per-file footer row count (Delta's numRecords): path → rows; a
+    # file written by an older log has none (see TableStore.row_count)
+    num_records: dict[str, int] = field(default_factory=dict)
 
     @property
     def schema(self) -> StructType:
@@ -274,6 +293,7 @@ class Manifest:
                 "partition_by": self.partition_by,
                 "files": self.files,
                 "stats": self.stats,
+                "num_records": self.num_records,
             },
             indent=None,
         )
@@ -287,6 +307,7 @@ class Manifest:
             partition_by=d["partition_by"],
             files=d["files"],
             stats=d.get("stats", {}),
+            num_records=d.get("num_records", {}),
         )
 
 
@@ -369,6 +390,9 @@ class TableStore:
                 "add": add,
                 "remove": remove,
                 "stats": {f: manifest.stats[f] for f in add if f in manifest.stats},
+                "num_records": {
+                    f: manifest.num_records[f] for f in add if f in manifest.num_records
+                },
             }
         )
         tmp = os.path.join(log_dir, f".tmp-{uuid.uuid4().hex}")
@@ -400,7 +424,9 @@ class TableStore:
 
         Spark writes to a staging dir; files are then renamed into the
         shared partition layout with a unique write-id prefix (renames
-        are metadata-only — no data copy).
+        are metadata-only — no data copy). The staging dir is removed
+        whether or not the write job succeeds: a job that fails (e.g. a
+        merge's duplicate-key check) leaves nothing behind.
 
         ``distribute`` (default on, Delta's optimizeWrite analogue):
         partitioned writes REBALANCE-hint on the partition columns
@@ -420,39 +446,46 @@ class TableStore:
         writer = df.write.mode("overwrite")
         if partition_by:
             writer = writer.partitionBy(*partition_by)
-        writer.parquet(staging)
-
         rel_paths: list[str] = []
-        for dirpath, _dirnames, filenames in os.walk(staging):
-            for fn in filenames:
-                if not fn.endswith(".parquet"):
-                    continue
-                rel_dir = os.path.relpath(dirpath, staging)
-                rel_dir = "" if rel_dir == "." else rel_dir
-                target_dir = os.path.join(data_dir, rel_dir)
-                os.makedirs(target_dir, exist_ok=True)
-                new_name = f"{write_id}-{fn}"
-                os.rename(
-                    os.path.join(dirpath, fn), os.path.join(target_dir, new_name)
-                )
-                rel_paths.append(os.path.join(rel_dir, new_name) if rel_dir else new_name)
-        shutil.rmtree(staging, ignore_errors=True)
+        try:
+            writer.parquet(staging)
+            for dirpath, _dirnames, filenames in os.walk(staging):
+                for fn in filenames:
+                    if not fn.endswith(".parquet"):
+                        continue
+                    rel_dir = os.path.relpath(dirpath, staging)
+                    rel_dir = "" if rel_dir == "." else rel_dir
+                    target_dir = os.path.join(data_dir, rel_dir)
+                    os.makedirs(target_dir, exist_ok=True)
+                    new_name = f"{write_id}-{fn}"
+                    os.rename(
+                        os.path.join(dirpath, fn), os.path.join(target_dir, new_name)
+                    )
+                    rel_paths.append(os.path.join(rel_dir, new_name) if rel_dir else new_name)
+        finally:
+            shutil.rmtree(staging, ignore_errors=True)
         return rel_paths
 
     @staticmethod
-    def _collect_file_stats(data_dir: str, rel_paths: list[str]) -> dict[str, dict[str, list]]:
-        """Read parquet footer statistics per written file (min/max per
-        primitive column) — the same metadata Delta/Iceberg record at
-        commit time to enable file skipping. Footer reads are O(KB) per
-        file, driver-side, no data scan."""
+    def _collect_file_stats(
+        data_dir: str, rel_paths: list[str]
+    ) -> tuple[dict[str, dict[str, list]], dict[str, int]]:
+        """Read parquet footer statistics per written file: (min/max per
+        primitive column, row count) — the same metadata Delta/Iceberg
+        record at commit time to enable file skipping and metadata-only
+        counts (Delta's ``numRecords``). Footer reads are O(KB) per
+        file, driver-side, no data scan. A file whose footer cannot be
+        read gets neither."""
         import pyarrow.parquet as pq
 
         out: dict[str, dict[str, list]] = {}
+        rows: dict[str, int] = {}
         for rel in rel_paths:
             try:
                 md = pq.ParquetFile(os.path.join(data_dir, rel)).metadata
             except Exception:  # noqa: BLE001 — stats are an optimization only
                 continue
+            rows[rel] = md.num_rows
             col_stats: dict[str, list] = {}
             for rg in range(md.num_row_groups):
                 rgm = md.row_group(rg)
@@ -476,7 +509,7 @@ class TableStore:
                         col_stats[name] = [lo, hi]
             if col_stats:
                 out[rel] = col_stats
-        return out
+        return out, rows
 
     # ----------------------------------------------------------------- API
     def table_exists(self, name: str) -> bool:
@@ -665,17 +698,10 @@ class TableStore:
                 F.sum(F.when(F.col(c).isNull(), 1).otherwise(0)).alias(f"_nulls_{c}")
             )
         row = df.agg(*aggs).collect()[0]
-        data_dir = self._data_dir(name)
-        size_bytes = 0
-        for rel in manifest.files:
-            try:
-                size_bytes += os.path.getsize(os.path.join(data_dir, rel))
-            except OSError:
-                pass
         stats = {
             "version": manifest.version,
             "row_count": int(row["_rows"]),
-            "size_bytes": size_bytes,
+            "size_bytes": self._size_bytes(name, manifest),
             "ndv": {c: int(row[f"_ndv_{c}"]) for c in cols},
             "null_count": {c: int(row[f"_nulls_{c}"] or 0) for c in cols},
         }
@@ -705,19 +731,46 @@ class TableStore:
                 return stats
         return None
 
-    def read_hinted(self, name: str, version: int | None = None) -> DataFrame:
-        """``read`` + a broadcast hint when recorded statistics say the
-        table fits under spark.sql.autoBroadcastJoinThreshold.
+    def _size_bytes(self, name: str, manifest: Manifest) -> int:
+        """Data bytes of ``manifest``'s files (stat calls, no scan)."""
+        data_dir = self._data_dir(name)
+        size_bytes = 0
+        for rel in manifest.files:
+            try:
+                size_bytes += os.path.getsize(os.path.join(data_dir, rel))
+            except OSError:
+                pass
+        return size_bytes
 
-        Spark's own size estimate is compressed-file bytes, which
-        under-represents in-memory width on wide compressed tables and
-        is unavailable after non-trivial sub-plans; recorded ANALYZE
-        stats make the decision explicit and version-auditable. With no
-        stats (or a too-big table) this is exactly ``read``."""
-        df = self.read(name, version)
-        stats = self.table_stats(name)
-        if stats is None:
-            return df
+    def row_count(self, name: str, version: int | None = None) -> int:
+        """Rows of ``name`` at ``version`` (latest by default), summed
+        from the per-file counts the log records at commit — no Spark
+        job. A file without a recorded count (one committed by an older
+        log) is counted from its parquet footer."""
+        import pyarrow.parquet as pq
+
+        manifest = self._require(name, version)
+        data_dir = self._data_dir(name)
+        return sum(
+            manifest.num_records[f]
+            if f in manifest.num_records
+            else pq.ParquetFile(os.path.join(data_dir, f)).metadata.num_rows
+            for f in manifest.files
+        )
+
+    def read_hinted(self, name: str, version: int | None = None) -> DataFrame:
+        """``read`` + a broadcast hint when the requested version's data
+        files fit under spark.sql.autoBroadcastJoinThreshold.
+
+        The size is the sum of that version's file sizes, taken from
+        its manifest — the number ``analyze`` records as
+        ``size_bytes`` — so the decision needs no ANALYZE pass, cannot
+        go stale, and follows ``version`` under time travel. Spark's
+        own estimate is unavailable after non-trivial sub-plans, so the
+        hint makes the decision explicit. A too-big table (or disabled
+        broadcasting) reads exactly as ``read``."""
+        manifest = self._require(name, version)
+        df = self._read_file_subset(name, manifest, manifest.files)
         raw = str(
             self.spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760")
         ).strip().lower()
@@ -731,7 +784,7 @@ class TableStore:
             threshold = int(raw) * mult
         except ValueError:
             return df
-        if threshold > 0 and stats["size_bytes"] <= threshold:
+        if threshold > 0 and self._size_bytes(name, manifest) <= threshold:
             return df.hint("broadcast")
         return df
 
@@ -807,20 +860,53 @@ class TableStore:
     ) -> int:
         """The one rewrite-and-commit path of every data-writing verb:
         write ``new_rows`` as new files, carry prev's ``untouched``
-        files and their stats forward byte-identical, and commit
-        ``untouched + new files`` under ``schema`` as version prev + 1
-        (1 when ``prev`` is None: a new table). ``partition_by``
-        defaults to prev's layout; ``distribute`` goes to
-        ``_write_files``. Returns the committed version."""
+        files and their stats and row counts forward byte-identical,
+        and commit ``untouched + new files`` under ``schema`` as
+        version prev + 1 (1 when ``prev`` is None: a new table).
+        ``partition_by`` defaults to prev's layout; ``distribute`` goes
+        to ``_write_files``. Returns the committed version.
+
+        A written file with zero rows is deleted (Spark writes one for
+        an empty unpartitioned write; the recorded schema already says
+        what it would). When that leaves no new file, every previous
+        file is carried forward and schema and layout are unchanged,
+        the commit would change nothing: none is made and prev's
+        version is returned — a re-run insert-only merge leaves the log
+        as it was.
+
+        A write job failed by a merge's duplicate-key check (see
+        ``_unique_keys``) surfaces as ValueError; nothing is committed."""
         if partition_by is None:
             partition_by = prev.partition_by
-        files = self._write_files(new_rows, name, partition_by, distribute=distribute)
+        data_dir = self._data_dir(name)
+        try:
+            written = self._write_files(new_rows, name, partition_by, distribute=distribute)
+        except (Py4JJavaError, PySparkException) as e:  # a failed Spark job
+            at = str(e).find(_DUPLICATE_KEYS)
+            if at < 0:
+                raise
+            raise ValueError(str(e)[at:].split(_MERGE_SEMANTICS)[0] + _MERGE_SEMANTICS) from None
+        new_stats, new_counts = self._collect_file_stats(data_dir, written)
+        empty = {f for f in written if new_counts.get(f) == 0}
+        for f in empty:
+            os.remove(os.path.join(data_dir, f))
+        files = [f for f in written if f not in empty]
+        if (
+            prev is not None
+            and not files
+            and set(untouched) == set(prev.files)
+            and schema.json() == prev.schema_json
+            and partition_by == prev.partition_by
+        ):
+            return prev.version
         stats = {f: prev.stats[f] for f in untouched if f in prev.stats}
-        stats.update(self._collect_file_stats(self._data_dir(name), files))
+        stats.update(new_stats)  # a zero-row file has no column stats
+        counts = {f: prev.num_records[f] for f in untouched if f in prev.num_records}
+        counts.update((f, new_counts[f]) for f in files if f in new_counts)
         version = prev.version + 1 if prev else 1
         self._commit(
             name,
-            Manifest(version, schema.json(), partition_by, untouched + files, stats),
+            Manifest(version, schema.json(), partition_by, untouched + files, stats, counts),
             prev=prev,
         )
         return version
@@ -832,7 +918,6 @@ class TableStore:
         keys: list[str],
         partition_by: list[str] | None,
         merge_schema: bool | None,
-        verb: str | None = None,
         init: DataFrame | None = None,
     ) -> tuple[Manifest, StructType, tuple[list[str], list[tuple]] | None] | None:
         """Set-up shared by the merges. Creates the table from ``init``
@@ -849,10 +934,7 @@ class TableStore:
         - collecting the source's distinct partition values when every
           partition column is a key — only then is partition pruning
           sound: equal keys imply equal partition values, so a source
-          row can only match inside its own partition;
-        - when ``verb`` is given, raising on duplicate source keys, as
-          Delta MERGE does, instead of silently fanning target rows
-          out. One aggregate job over the (small, incremental) source.
+          row can only match inside its own partition.
         """
         manifest = self._latest_manifest(name)
         if manifest is None:
@@ -874,14 +956,24 @@ class TableStore:
         if manifest.partition_by and set(manifest.partition_by) <= set(keys):
             pvals = source.select(*manifest.partition_by).distinct().collect()
             partitions = (manifest.partition_by, [tuple(r) for r in pvals])
-        if verb is not None and (
-            source.groupBy(*keys).count().filter(F.col("count") > 1).limit(1).count()
-        ):
-            raise ValueError(
-                f"{verb} source has duplicate rows per key {keys}; "
-                "deduplicate upstream (Delta MERGE semantics)"
-            )
         return manifest, schema, partitions
+
+    @staticmethod
+    def _unique_keys(source: DataFrame, keys: list[str]) -> DataFrame:
+        """``source`` with Delta MERGE's duplicate-key check built into
+        its plan: each row is counted within its key (NULL keys group
+        together, as in GROUP BY), and a row whose key occurs more than
+        once fails the job through ``raise_error`` instead of silently
+        fanning target rows out. The check runs inside the merge's own
+        write job — no separate aggregate over the source — and
+        ``_rewrite`` turns the failure into ValueError."""
+        n = F.count(F.lit(1)).over(Window.partitionBy(*keys))
+        msg = f"{_DUPLICATE_KEYS} {keys}; deduplicate upstream {_MERGE_SEMANTICS}"
+        return (
+            source.withColumn("_key_rows", n)
+            .filter(F.when(F.col("_key_rows") > 1, F.raise_error(F.lit(msg))).otherwise(True))
+            .drop("_key_rows")
+        )
 
     @staticmethod
     def _key_match(keys: list[str]):
@@ -1016,6 +1108,15 @@ class TableStore:
         any partition, so the whole table is rewritten — correct, but
         O(table); lay out SCD-1 targets with partition ⊆ key.
 
+        **Single pass.** The touched files and the source meet in ONE
+        null-safe full outer join: matched rows take ``update_cols``
+        from the source, target-only rows are kept as they are, and
+        source-only rows are inserted. The duplicate-source-key check
+        is part of the same plan (``_unique_keys``), so the source and
+        the target are each evaluated once, by the write job itself. A
+        duplicate key fails that job and raises ValueError; nothing is
+        committed and no file is left behind.
+
         ``partition_by`` applies only when the merge creates the table
         (same contract as merge_insert_only). ``merge_schema=True``
         widens the table with source-only columns (existing rows read
@@ -1024,9 +1125,7 @@ class TableStore:
         of being clobbered to NULL, Delta's UPDATE SET * + autoMerge
         semantics.
         """
-        prep = self._merge_prologue(
-            source, name, keys, partition_by, merge_schema, verb="merge_scd1"
-        )
+        prep = self._merge_prologue(source, name, keys, partition_by, merge_schema)
         if prep is None:
             return
         manifest, schema, partitions = prep
@@ -1039,39 +1138,27 @@ class TableStore:
         if merge_schema:
             # UPDATE SET assigns only source-carried columns
             update_cols = [c for c in update_cols if c in set(source.columns)]
+        src = self._project_to(source, schema) if merge_schema else source.select(*cols)
 
-        # Explicit match indicator: keys[0] IS NOT NULL misreads a
-        # NULL-keyed source row that eqNullSafe-matched a NULL-keyed
-        # target row as unmatched (r2 ADVICE fix).
-        src_proj = (
-            self._project_to(source, schema) if merge_schema else source.select(*cols)
-        )
-        src = src_proj.withColumn("_src_matched", F.lit(True)).alias("s")
-        tgt = target.alias("t")
-        match_cond = self._key_match(keys)
-
-        merged_existing = tgt.join(src, match_cond, "left").select(
+        # One null-safe full outer join. Explicit side indicators, not
+        # key nullness: a NULL-keyed source row that eqNullSafe-matched
+        # a NULL-keyed target row must read as matched (r2 ADVICE fix).
+        s = self._unique_keys(src, keys).withColumn("_src_row", F.lit(True)).alias("s")
+        t = target.withColumn("_tgt_row", F.lit(True)).alias("t")
+        merged = t.join(s, self._key_match(keys), "full_outer").select(
             *[
-                F.when(
-                    F.col("s._src_matched"), F.col(f"s.{c}")
-                ).otherwise(F.col(f"t.{c}")).alias(c)
+                # matched and source-only rows take the source's value
+                F.when(F.col("s._src_row"), F.col(f"s.{c}")).otherwise(F.col(f"t.{c}")).alias(c)
                 if c in update_cols
-                else F.col(f"t.{c}").alias(c)
+                # matched and target-only rows keep the target's value
+                else F.when(F.col("t._tgt_row"), F.col(f"t.{c}")).otherwise(F.col(f"s.{c}")).alias(c)
                 for c in cols
             ]
-        )
-        # Null-safe anti-join so a NULL-keyed source row that matched a
-        # NULL-keyed target row is not ALSO inserted as new.
-        anti_src = src_proj.alias("s")
-        inserts = anti_src.join(tgt.select(*keys).alias("t"), match_cond, "left_anti").select(
-            *[F.col(f"s.{c}").alias(c) for c in cols]
         )
         # untouched partitions' files carry forward unchanged; only the
         # rewritten partitions' files are "added" in the delta entry, so
         # CDC stays O(touched)
-        self._rewrite(
-            name, manifest, merged_existing.unionByName(inserts), untouched, schema
-        )
+        self._rewrite(name, manifest, merged, untouched, schema)
 
     SCD2_COLS = ("valid_from", "valid_to", "is_current")
 
@@ -1120,7 +1207,7 @@ class TableStore:
             )
 
         prep = self._merge_prologue(
-            source, name, keys, partition_by, None, verb="merge_scd2", init=opened(source)
+            source, name, keys, partition_by, None, init=opened(source)
         )
         if prep is None:
             return
@@ -1143,9 +1230,10 @@ class TableStore:
         touched, untouched = self._plan_files(name, manifest, partitions)
         target = self._read_file_subset(name, manifest, touched)
 
-        src = source.select(*natural).alias("s")
+        checked = self._unique_keys(source.select(*natural), keys)
+        src = checked.alias("s")
         # alias AFTER withColumn — withColumn drops a prior alias
-        src_m = source.select(*natural).withColumn("_m", F.lit(True)).alias("s")
+        src_m = checked.withColumn("_m", F.lit(True)).alias("s")
         cur = target.filter(F.col("is_current")).alias("t")
         hist = target.filter(~F.col("is_current"))
         match_cond = self._key_match(keys)
@@ -1434,6 +1522,7 @@ class TableStore:
                 partition_by=list(target.partition_by),
                 files=list(target.files),
                 stats=dict(target.stats),
+                num_records=dict(target.num_records),
             ),
             prev=latest,
         )

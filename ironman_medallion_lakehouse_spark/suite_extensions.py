@@ -647,8 +647,9 @@ def q86_table_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     approx_count_distinct's default 5% rsd, and deterministic for a
     given dataset (HLL has no RNG). At 100 TB the stats pass is one
     scan with map-side partial HLL merge; readers get explicit,
-    version-auditable size/NDV for broadcast and join-order decisions
-    (read_hinted) instead of compressed-bytes guesses."""
+    version-auditable NDV and null counts for join-order decisions
+    (broadcast sizing, ``read_hinted``, reads the manifest's file
+    sizes and needs no stats pass)."""
     import tempfile as _tempfile
 
     from pyspark.sql.types import (

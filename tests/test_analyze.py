@@ -3,6 +3,8 @@
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
@@ -68,23 +70,64 @@ def test_read_hinted_broadcasts_small_analyzed_table(spark, tmp_path):
     assert joined.count() == 10000
 
 
-def test_read_hinted_without_stats_is_plain_read(spark, tmp_path):
+def _hinted(df) -> bool:
+    # the unanalyzed plan only ever holds UnresolvedHint; analysis turns
+    # a broadcast hint into ResolvedHint
+    return "ResolvedHint" in df._jdf.queryExecution().analyzed().toString()
+
+
+def test_read_hinted_small_table_needs_no_analyze(spark, tmp_path):
+    """The broadcast decision comes from the manifest's file sizes, so a
+    small table is hinted without any analyze call."""
     store = _store(spark, tmp_path)
     store.save_overwrite(spark.createDataFrame([Row(k=1, v="a")]), "db.plain")
     df = store.read_hinted("db.plain")
     assert [r.k for r in df.collect()] == [1]
-    # no analyze sidecar → identical plan to read (no ResolvedHint)
-    assert "ResolvedHint" not in df._jdf.queryExecution().logical().toString()
+    assert store.table_stats("db.plain") is None
+    assert _hinted(df)
+    assert not _hinted(store.read("db.plain"))
+
+
+def test_read_hinted_sized_by_requested_version(spark, tmp_path):
+    """read_hinted(name, version=v) sizes the table by version v's files,
+    not by the latest version's."""
+    store = _store(spark, tmp_path)
+    store.save_overwrite(spark.createDataFrame([Row(k=1)]), "db.grow")  # v1: tiny
+    # v2: incompressible md5 padding, several times v1's bytes
+    store.save_overwrite(
+        spark.range(0, 2000).select(
+            F.col("id").alias("k"), F.md5(F.col("id").cast("string")).alias("pad")
+        ),
+        "db.grow",
+    )
+    data_dir = store._data_dir("db.grow")
+
+    def size(v):
+        return sum(
+            os.path.getsize(os.path.join(data_dir, f))
+            for f in store._manifest_at("db.grow", v).files
+        )
+
+    assert size(1) * 4 < size(2)
+    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    try:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", str((size(1) + size(2)) // 2))
+        assert _hinted(store.read_hinted("db.grow", version=1))
+        assert not _hinted(store.read_hinted("db.grow", version=2))
+        assert not _hinted(store.read_hinted("db.grow"))
+        assert store.read_hinted("db.grow", version=1).count() == 1
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
 
 
 def test_fact_build_broadcast_decision_is_stats_driven(spark, tmp_path):
     """VERDICT r4 item 4 end-to-end: the fact build's join strategy
-    must FLIP with the recorded statistics, not a hard-coded
-    F.broadcast. Same code path, same threshold: a dim whose ANALYZE
-    sidecar fits the broadcast threshold joins as BroadcastHashJoin;
-    after the dim outgrows the threshold and is re-analyzed, the same
-    read_hinted + build_fact(explicit_broadcast=False) path falls back
-    to a shuffle join."""
+    must FLIP with the table's recorded size, not a hard-coded
+    F.broadcast. Same code path, same threshold: a dim whose manifest
+    files fit the broadcast threshold joins as BroadcastHashJoin;
+    after the dim outgrows the threshold, the same read_hinted +
+    build_fact(explicit_broadcast=False) path falls back to a shuffle
+    join. No analyze call is needed for either."""
     from ironman_medallion_lakehouse_spark.plans import gold_fact
 
     store = _store(spark, tmp_path)
@@ -123,7 +166,7 @@ def test_fact_build_broadcast_decision_is_stats_driven(spark, tmp_path):
         F.concat(F.lit("a"), F.col("id"), F.lit("|1990")).alias("athlete_natural_key"),
     )
     # incompressible padding (md5 chains) so the parquet files really
-    # exceed the threshold on disk, not just in the ANALYZE sidecar
+    # exceed the threshold on disk
     big_ath = spark.range(0, 20000).select(
         F.col("id").alias("athlete_key"),
         F.concat(
@@ -139,8 +182,6 @@ def test_fact_build_broadcast_decision_is_stats_driven(spark, tmp_path):
     )
     store.save_overwrite(divisions, "gold.dimdiv")
     store.save_overwrite(countries, "gold.dimctry")
-    store.analyze("gold.dimdiv")
-    store.analyze("gold.dimctry")
 
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try:
@@ -148,7 +189,6 @@ def test_fact_build_broadcast_decision_is_stats_driven(spark, tmp_path):
 
         def fact_plan(ath_df):
             store.save_overwrite(ath_df, "gold.dimath")
-            store.analyze("gold.dimath")
             fact = gold_fact.build_fact(
                 silver,
                 store.read_hinted("gold.dimath"),
@@ -162,7 +202,7 @@ def test_fact_build_broadcast_decision_is_stats_driven(spark, tmp_path):
         assert plan_small.count("BroadcastHashJoin") >= 3
 
         plan_big = fact_plan(big_ath)
-        # the grown athlete dim (recorded bytes > threshold) loses its
+        # the grown athlete dim (manifest bytes > threshold) loses its
         # hint and falls to a shuffle join; the two tiny dims keep
         # broadcasting
         assert "SortMergeJoin" in plan_big or "ShuffledHashJoin" in plan_big
@@ -176,16 +216,16 @@ def test_read_hinted_respects_threshold(spark, tmp_path):
     store.save_overwrite(
         spark.createDataFrame([Row(k=i, pad="x" * 100) for i in range(1000)]), "db.big"
     )
-    store.analyze("db.big")
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try:
-        # threshold below the table's recorded bytes → no hint
+        # threshold above the table's bytes → hint
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10m")
+        assert _hinted(store.read_hinted("db.big"))
+        # threshold below the table's bytes → no hint
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "1024")
-        df = store.read_hinted("db.big")
-        assert "ResolvedHint" not in df._jdf.queryExecution().logical().toString()
+        assert not _hinted(store.read_hinted("db.big"))
         # disabled broadcasting → no hint either
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        df = store.read_hinted("db.big")
-        assert "ResolvedHint" not in df._jdf.queryExecution().logical().toString()
+        assert not _hinted(store.read_hinted("db.big"))
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)

@@ -322,7 +322,9 @@ def test_rewrite_commit_invariants(spark, tmp_path, monkeypatch, verb):
     for f in carried:
         assert digest(f) == digests[f]
         assert new.stats.get(f) == prev.stats.get(f)
+        assert new.num_records[f] == prev.num_records[f]
     assert all(new.stats.get(f) for f in added)
+    assert all(new.num_records[f] > 0 for f in added)
 
     with open(os.path.join(st._log_dir("db.t"), f"{new.version:08d}.json")) as fh:
         entry = json.load(fh)
@@ -365,14 +367,159 @@ def test_scd1_null_key_not_duplicated(spark, tmp_path):
     assert rows == {(None, "new"), ("b", "keep")}
 
 
-def test_scd1_rejects_duplicate_source_keys(spark, tmp_path):
-    import pytest
-
+def test_scd1_null_keys_insert_and_keep(spark, tmp_path):
+    """The full outer join's NULL-key cases on a two-column key: a
+    source row whose key tuple holds a NULL matches only a target row
+    with the same tuple (updated once), else it is inserted once; a
+    target row no source row matches is kept as it is."""
     st = _store(spark, tmp_path)
-    st.save_overwrite(spark.createDataFrame([Row(k="a", attr="x")]), "db.dim")
-    dup_src = spark.createDataFrame([Row(k="a", attr="y"), Row(k="a", attr="z")])
-    with pytest.raises(ValueError, match="duplicate"):
-        st.merge_scd1(dup_src, "db.dim", keys=["k"], update_cols=["attr"])
+    schema = "k1 string, k2 int, attr string"
+    st.save_overwrite(
+        spark.createDataFrame([(None, 1, "t1"), ("a", None, "t2"), ("b", 2, "t3")], schema),
+        "db.dim",
+    )
+    src = spark.createDataFrame(
+        [(None, 1, "s1"), (None, 2, "s2"), ("a", 3, "s3"), (None, None, "s4")], schema
+    )
+    st.merge_scd1(src, "db.dim", keys=["k1", "k2"], update_cols=["attr"])
+    rows = sorted(map(tuple, st.read("db.dim").collect()), key=str)
+    assert rows == sorted(
+        [
+            (None, 1, "s1"),  # matched on (NULL, 1): updated, not duplicated
+            ("a", None, "t2"),  # target-only NULL key: kept
+            ("b", 2, "t3"),  # target-only: kept
+            (None, 2, "s2"),  # source-only NULL key: inserted once
+            ("a", 3, "s3"),  # source-only: inserted
+            (None, None, "s4"),  # all-NULL key, no match: inserted once
+        ],
+        key=str,
+    )
+    assert st.row_count("db.dim") == 6
+
+
+def _data_files(st, name):
+    data_dir = st._data_dir(name)
+    return sorted(
+        os.path.relpath(os.path.join(d, f), data_dir)
+        for d, _dirs, files in os.walk(data_dir)
+        for f in files
+    )
+
+
+@pytest.mark.parametrize("verb", ["merge_scd1", "merge_scd2"])
+def test_merge_rejects_duplicate_source_keys(spark, tmp_path, verb):
+    """Duplicate source keys fail the merge's write job (Delta MERGE
+    semantics) and leave the table as it was: same version, same data
+    files, no staging directory."""
+    st = _store(spark, tmp_path)
+    base = spark.createDataFrame([Row(k="a", attr="x"), Row(k="b", attr="w")])
+    dup_src = spark.createDataFrame(
+        [Row(k="a", attr="y"), Row(k="a", attr="z"), Row(k="c", attr="v")]
+    )
+    if verb == "merge_scd1":
+        st.save_overwrite(base, "db.dim")
+        merge = lambda: st.merge_scd1(dup_src, "db.dim", keys=["k"], update_cols=["attr"])
+    else:
+        st.merge_scd2(base, "db.dim", keys=["k"], effective_ts="2024-01-01")
+        merge = lambda: st.merge_scd2(dup_src, "db.dim", keys=["k"], effective_ts="2024-02-01")
+    version, files = st._latest_manifest("db.dim").version, _data_files(st, "db.dim")
+    with pytest.raises(ValueError, match="duplicate rows per key"):
+        merge()
+    assert st._latest_manifest("db.dim").version == version
+    assert _data_files(st, "db.dim") == files
+    assert not [d for d in os.listdir(st._table_dir("db.dim")) if d.startswith("_staging-")]
+
+
+def test_failed_write_removes_staging_dir(spark, tmp_path):
+    """A write job that raises leaves no _staging-* directory behind
+    (vacuum only ever looks at data/)."""
+    st = _store(spark, tmp_path)
+    st.save_overwrite(spark.createDataFrame([Row(k=1)]), "db.t")
+    failing = spark.range(0, 8, numPartitions=2).select(
+        F.when(F.col("id") == 5, F.raise_error(F.lit("boom"))).otherwise(F.col("id")).alias("k")
+    )
+    with pytest.raises(Exception, match="boom"):
+        st._write_files(failing, "db.t", [])
+    assert not [d for d in os.listdir(st._table_dir("db.t")) if d.startswith("_staging-")]
+
+
+@pytest.mark.parametrize("partition_by", [["y"], []], ids=["partitioned", "unpartitioned"])
+def test_rerun_insert_only_merge_commits_nothing(spark, tmp_path, partition_by):
+    """Re-running an insert-only merge inserts nothing and commits
+    nothing: the log, the version and the data files stay as they were
+    (no zero-row file, no empty commit)."""
+    st = _store(spark, tmp_path)
+    st.save_overwrite(
+        spark.createDataFrame([Row(k="a", y=1), Row(k="b", y=2)]), "db.t",
+        partition_by=partition_by,
+    )
+    src = spark.createDataFrame([Row(k="b", y=2), Row(k="c", y=2)])
+    st.merge_insert_only(src, "db.t", keys=["k", "y"])
+    log, files = sorted(os.listdir(st._log_dir("db.t"))), _data_files(st, "db.t")
+    st.merge_insert_only(src, "db.t", keys=["k", "y"])
+    assert sorted(os.listdir(st._log_dir("db.t"))) == log
+    assert _data_files(st, "db.t") == files
+    assert st._latest_manifest("db.t").version == 2
+    assert st.row_count("db.t") == 3
+
+
+def test_zero_row_widening_merge_commits_schema(spark, tmp_path):
+    """A merge_schema=True merge that inserts no row still widens the
+    table: the new schema is committed, with every file carried."""
+    st = _store(spark, tmp_path)
+    st.save_overwrite(spark.createDataFrame([Row(k=1)]), "db.w")
+    before = st._latest_manifest("db.w")
+    st.merge_insert_only(
+        spark.createDataFrame([Row(k=1, extra="x")]), "db.w", keys=["k"], merge_schema=True
+    )
+    after = st._latest_manifest("db.w")
+    assert after.version == before.version + 1
+    assert after.files == before.files
+    assert [f.name for f in after.schema.fields] == ["k", "extra"]
+    assert [(r.k, r.extra) for r in st.read("db.w").collect()] == [(1, None)]
+
+
+@pytest.mark.parametrize("verb", sorted(_REWRITE_VERBS))
+def test_row_count_matches_read_count(spark, tmp_path, verb):
+    """row_count, summed from the log's per-file counts, equals a
+    count() of the table after each writing verb and at an older
+    version."""
+    st = _store(spark, tmp_path)
+    _two_versions(spark, st, verb)
+    _REWRITE_VERBS[verb](st, spark.createDataFrame(_V_SOURCE))
+    assert st.row_count("db.t") == st.read("db.t").count()
+    for v in st._log_versions("db.t"):
+        m = st._manifest_at("db.t", v)
+        assert set(m.num_records) == set(m.files)  # every file's count is recorded
+        assert st.row_count("db.t", version=v) == st.read("db.t", version=v).count()
+
+
+def test_row_count_after_restore_and_without_recorded_counts(spark, tmp_path, monkeypatch):
+    """row_count follows a restore, and counts files whose log entry
+    carries no row count (an older log) from their footers."""
+    import json
+
+    from ironman_medallion_lakehouse_spark.sources import tablestore
+
+    monkeypatch.setattr(tablestore, "CHECKPOINT_EVERY", 2)
+    st = _store(spark, tmp_path)
+    st.save_overwrite(spark.createDataFrame(_V_ROWS), "db.t", partition_by=["y"])  # v1
+    st.merge_insert_only(spark.createDataFrame(_V_MORE), "db.t", keys=["k"])  # v2
+    st.delete_where("db.t", "y = 2")  # v3
+    assert st.restore("db.t", 2) == 4
+    assert st.row_count("db.t") == st.read("db.t").count() == 3
+
+    log_dir = st._log_dir("db.t")
+    for fn in os.listdir(log_dir):
+        path = os.path.join(log_dir, fn)
+        with open(path) as fh:
+            entry = json.load(fh)
+        entry.pop("num_records", None)
+        with open(path, "w") as fh:
+            json.dump(entry, fh)
+    for v in st._log_versions("db.t"):
+        assert not st._manifest_at("db.t", v).num_records
+        assert st.row_count("db.t", version=v) == st.read("db.t", version=v).count()
 
 
 def test_scd1_preserves_genuine_null_payload(spark, tmp_path):
