@@ -7,7 +7,8 @@ with the same validated fields and the same semantics:
 - run_mode: "full" (overwrite everything) or "incremental" (one year,
   idempotent merge) — validation raises exactly as 01_config.ipynb:126-128.
 - process_year: the single year an incremental run touches.
-- merge keys per table (default row_key) — 01_config dict contents.
+- MERGE_KEYS: the insert-only merge key of bronze, silver and fact
+  (row_key) — 01_config dict contents.
 """
 
 from __future__ import annotations
@@ -26,6 +27,7 @@ DIM_ATHLETES = "gold.dim_athletes"
 DIM_COUNTRIES = "gold.dim_countries"
 DIM_DIVISIONS = "gold.dim_divisions"
 FACT_RESULTS = "gold.fact_race_results"
+MERGE_KEYS = ["row_key"]
 
 
 @dataclass
@@ -48,9 +50,6 @@ class PipelineConfig:
     run_mode: str = "full"
     process_year: int | None = None
     files: list[FileSpec] = field(default_factory=list)
-    bronze_merge_keys: list[str] = field(default_factory=lambda: ["row_key"])
-    silver_merge_keys: list[str] = field(default_factory=lambda: ["row_key"])
-    fact_merge_keys: list[str] = field(default_factory=lambda: ["row_key"])
 
     def __post_init__(self) -> None:
         if self.run_mode not in VALID_RUN_MODES:
@@ -59,8 +58,6 @@ class PipelineConfig:
             )
         if self.run_mode == "incremental" and self.process_year is None:
             raise ValueError("process_year is required for incremental runs")
-        if not self.bronze_merge_keys:
-            raise ValueError("merge keys must be non-empty")
 
     @property
     def files_to_process(self) -> list[FileSpec]:

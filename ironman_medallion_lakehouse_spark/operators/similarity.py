@@ -1197,7 +1197,7 @@ def feature_hash_vectors(
     sqrt, so components are engine-exact WITHOUT a display round
     (integer sums → one sqrt → one IEEE divide, no decimal absorb
     anywhere upstream — pre-gated bit-exact vs DuckDB at
-    sf0.001/0.01/0.1 by tools/probe_similarity_rounds.py, r13)."""
+    sf0.001/0.01/0.1 by the r13 rounds probe, now in git history)."""
     from ironman_medallion_lakehouse_spark.operators.dedup import (
         token_hash_raw,
         words,

@@ -67,8 +67,8 @@ def word_counts(
 
 def _truncate_counts(counts: DataFrame, top_k_words: int | None) -> DataFrame:
     """Optional top-K word-count truncation in front of a learner —
-    the measured 100 TB scale dial (SCALING.md r12 decision row,
-    tools/probe_bpe_topk.py): the per-round pair-count shuffle volume
+    the measured 100 TB scale dial (SCALING.md r12 decision row; the
+    r12 probe is in git history): the per-round pair-count shuffle volume
     is proportional to the WORD-TABLE rows, and K ≥ ⅓ of the vocab
     costs ≤ 0.5 % corpus-weighted compression at the 8k-merge cut.
     Semantics pinned by the probe: ``counts.orderBy(n desc, word asc)
@@ -361,7 +361,7 @@ def learn_bpe_batched(
       next round.
 
       **Use this mode for production learn-at-scale** (r11 decision,
-      VERDICT r10 directive 5 — measured, tools/probe_bpe_quality.py
+      VERDICT r10 directive 5 — measured by an r11 probe in git history
       on the 48k-word Zipf corpus at 8192 merges): the tokenizer the
       two modes ship is QUALITY-EQUIVALENT — corpus-weighted
       compression agrees to within ±0.06 % at every cut (1k/2k/4k/8k;

@@ -67,23 +67,23 @@ def run(spark: SparkSession, cfg: C.PipelineConfig) -> RunResult:
     bronze_df = bronze_plan.build_bronze(spark, cfg.source_dir, cfg.files_to_process)
     result.duplicate_row_keys = bronze_plan.duplicate_key_count(bronze_df)
     if incremental and store.table_exists(C.BRONZE_TABLE):
-        store.merge_insert_only(bronze_df, C.BRONZE_TABLE, cfg.bronze_merge_keys)
+        store.merge_insert_only(bronze_df, C.BRONZE_TABLE, C.MERGE_KEYS)
     else:
         store.save_overwrite(bronze_df, C.BRONZE_TABLE, partition_by=["year"])
     store.optimize(C.BRONZE_TABLE, min_files=optimize_min_files)  # S10 (02:354)
 
-    # ---- silver (03_silver): full layer recompute over the scoped slice
+    # ---- silver (03_silver): full layer recompute over the scoped slice.
+    # An incremental run that finds no silver table rebuilds it from
+    # every bronze year, not just the processed one.
     bronze_all = store.read(C.BRONZE_TABLE)
-    bronze_scope = (
-        bronze_all.filter(F.col("year") == cfg.process_year) if incremental else bronze_all
+    merge = incremental and store.table_exists(C.SILVER_TABLE)
+    silver_df = silver_plan.build_silver(
+        bronze_all.filter(F.col("year") == cfg.process_year) if merge else bronze_all
     )  # P4 year filter → partition pruning
-    silver_df = silver_plan.build_silver(bronze_scope)
-    if incremental and store.table_exists(C.SILVER_TABLE):
-        store.merge_insert_only(silver_df, C.SILVER_TABLE, cfg.silver_merge_keys)
+    if merge:
+        store.merge_insert_only(silver_df, C.SILVER_TABLE, C.MERGE_KEYS)
     else:
-        store.save_overwrite(
-            silver_plan.build_silver(bronze_all), C.SILVER_TABLE, partition_by=["year"]
-        )
+        store.save_overwrite(silver_df, C.SILVER_TABLE, partition_by=["year"])
     store.optimize(C.SILVER_TABLE, min_files=optimize_min_files)
 
     # ---- gold dims (04a/04b/04c): the reference builds dims from the
@@ -144,7 +144,7 @@ def run(spark: SparkSession, cfg: C.PipelineConfig) -> RunResult:
         explicit_broadcast=False,
     )
     if incremental and store.table_exists(C.FACT_RESULTS):
-        store.merge_insert_only(fact, C.FACT_RESULTS, cfg.fact_merge_keys)
+        store.merge_insert_only(fact, C.FACT_RESULTS, C.MERGE_KEYS)
     else:
         store.save_overwrite(fact, C.FACT_RESULTS, partition_by=["year"])
     store.optimize(C.FACT_RESULTS, min_files=optimize_min_files)
@@ -164,8 +164,10 @@ def run(spark: SparkSession, cfg: C.PipelineConfig) -> RunResult:
 
 def _silver_quality(silver_df) -> dict[str, int]:
     """The reference's silver audits (SURVEY §5.1 null audits, flag
-    counts, 03_silver.ipynb:367-486) as ONE fused quality pass instead
-    of one count() action per check."""
+    counts, 03_silver.ipynb:367-486, and the derived-value
+    reconciliation of :520-528 — finishers whose segment sum differs
+    from finish_time by more than 60 s) as ONE fused quality pass
+    instead of one count() action per check."""
     from ironman_medallion_lakehouse_spark.operators.quality import Expectation, check
 
     finisher = F.col("is_finisher") == True  # noqa: E712
@@ -177,6 +179,11 @@ def _silver_quality(silver_df) -> dict[str, int]:
                 "finisher_has_finish_time", ~finisher | F.col("finish_time_seconds").isNotNull()
             ),
             Expectation.satisfies("flagged_rows", ~F.col("has_data_issue")),
+            Expectation.satisfies(
+                "finish_time_matches_segments",
+                ~finisher
+                | (F.abs(F.col("finish_time_seconds") - F.col("calculated_total_seconds")) <= 60),
+            ),
             Expectation.in_set("source_gender", ["M", "F"]),
             Expectation.non_null("row_key"),
         ],

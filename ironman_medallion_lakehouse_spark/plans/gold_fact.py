@@ -4,12 +4,12 @@ Reference: 04d_gold_fact_race_results.ipynb. The three dim joins (J1-J3)
 are left equi-joins against small dimensions. Broadcast strategy
 (r5, VERDICT r4 item 4): when the caller reads dims through the
 tablestore, it passes frames from ``TableStore.read_hinted`` — the
-broadcast decision then comes from recorded ANALYZE statistics
-(version-auditable, survives a dim outgrowing the threshold) and
-``explicit_broadcast=False`` keeps this module from overriding it.
-The default (``explicit_broadcast=True``) force-broadcasts for
-callers joining ad-hoc frames with no stats sidecar, where Spark's
-compressed-bytes estimate is the only alternative.
+broadcast decision then comes from the size of the dim version's
+files in its manifest (cannot go stale, survives a dim outgrowing
+the threshold) and ``explicit_broadcast=False`` keeps this module
+from overriding it. The default (``explicit_broadcast=True``)
+force-broadcasts for callers joining ad-hoc frames with no manifest,
+where Spark's compressed-bytes estimate is the only alternative.
 """
 
 from __future__ import annotations
@@ -76,7 +76,7 @@ def build_fact(
 
     ``explicit_broadcast=False`` leaves the join strategy to hints the
     dim frames already carry (``TableStore.read_hinted`` attaches one
-    when recorded ANALYZE stats fit the broadcast threshold) — a dim
+    when the dim's manifest size fits the broadcast threshold) — a dim
     that outgrew the threshold then falls back to a shuffle join
     instead of being force-broadcast into executor OOM.
     """

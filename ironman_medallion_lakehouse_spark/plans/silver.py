@@ -131,15 +131,3 @@ def build_silver(bronze_df: DataFrame) -> DataFrame:
     existing = [c for c in FINAL_COLUMNS if c in df.columns]
     return df.select(existing)
 
-
-def time_discrepancy(silver_df: DataFrame) -> DataFrame:
-    """Derived-value reconciliation audit (03_silver.ipynb:520-528):
-    finishers whose segment-sum differs from finish_time by > 60s."""
-    diff = F.when(
-        F.col("finish_time_seconds").isNull()
-        | F.col("calculated_total_seconds").isNull(),
-        F.lit(None),
-    ).otherwise(F.abs(F.col("finish_time_seconds") - F.col("calculated_total_seconds")))
-    return silver_df.withColumn("time_difference", diff).filter(
-        (F.col("is_finisher") == True) & (F.col("time_difference") > 60)  # noqa: E712
-    )

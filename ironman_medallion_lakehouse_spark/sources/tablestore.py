@@ -672,15 +672,16 @@ class TableStore:
     #
     # Table-level statistics (ANALYZE TABLE analogue): row count, total
     # data bytes, and per-column approx-NDV / null counts, computed in
-    # ONE Spark aggregation pass and stored as a version-keyed sidecar
-    # (`_log/<v>.analyze.json`) — not a commit, so the change feed and
-    # time travel see no phantom version, and a reader always knows
-    # which table version the stats describe (staleness is explicit).
-    # At 100 TB: one scan with map-side partial HLL aggregation; bytes
-    # come from file metadata, not data.
+    # ONE Spark aggregation pass and returned to the caller. Nothing is
+    # persisted: the log already records what the engine plans from
+    # (per-file row counts for ``row_count``, file sizes for
+    # ``read_hinted``'s broadcast decision), so stats never go stale
+    # and the table's version and log are untouched. At 100 TB: one
+    # scan with map-side partial HLL aggregation; bytes come from file
+    # metadata, not data.
     def analyze(self, name: str, columns: list[str] | None = None) -> dict:
-        """Compute and persist table statistics for the CURRENT version;
-        returns the stats dict. ``columns`` defaults to every primitive
+        """Compute table statistics for the CURRENT version and return
+        them as a dict. ``columns`` defaults to every primitive
         (atomic-typed) column."""
         manifest = self._require(name)
         atomic = [
@@ -698,38 +699,13 @@ class TableStore:
                 F.sum(F.when(F.col(c).isNull(), 1).otherwise(0)).alias(f"_nulls_{c}")
             )
         row = df.agg(*aggs).collect()[0]
-        stats = {
+        return {
             "version": manifest.version,
             "row_count": int(row["_rows"]),
             "size_bytes": self._size_bytes(name, manifest),
             "ndv": {c: int(row[f"_ndv_{c}"]) for c in cols},
             "null_count": {c: int(row[f"_nulls_{c}"] or 0) for c in cols},
         }
-        path = os.path.join(
-            self._log_dir(name), f"{manifest.version:08d}.analyze.json"
-        )
-        tmp = os.path.join(self._log_dir(name), f".tmp-{uuid.uuid4().hex}")
-        with open(tmp, "w") as fh:
-            fh.write(json.dumps(stats))
-        os.replace(tmp, path)
-        return stats
-
-    def table_stats(self, name: str) -> dict | None:
-        """Latest recorded statistics at or below the current version,
-        with ``stale_versions`` = commits since they were computed (0 =
-        exactly current). None if the table was never analyzed."""
-        versions = self._log_versions(name)
-        if not versions:
-            raise FileNotFoundError(f"table {name} does not exist in {self.root}")
-        log_dir = self._log_dir(name)
-        for v in reversed(versions):
-            path = os.path.join(log_dir, f"{v:08d}.analyze.json")
-            if os.path.exists(path):
-                with open(path) as fh:
-                    stats = json.loads(fh.read())
-                stats["stale_versions"] = versions[-1] - stats["version"]
-                return stats
-        return None
 
     def _size_bytes(self, name: str, manifest: Manifest) -> int:
         """Data bytes of ``manifest``'s files (stat calls, no scan)."""
@@ -763,7 +739,7 @@ class TableStore:
         files fit under spark.sql.autoBroadcastJoinThreshold.
 
         The size is the sum of that version's file sizes, taken from
-        its manifest — the number ``analyze`` records as
+        its manifest — the number ``analyze`` returns as
         ``size_bytes`` — so the decision needs no ANALYZE pass, cannot
         go stale, and follows ``version`` under time travel. Spark's
         own estimate is unavailable after non-trivial sub-plans, so the

@@ -59,23 +59,6 @@ def sessionize(events: DataFrame, gap_seconds: int = 1800) -> DataFrame:
     )
 
 
-def session_stats(events: DataFrame, gap_seconds: int = 1800) -> DataFrame:
-    """Per-session aggregates (session grain rather than user grain)."""
-    by_user = Window.partitionBy("user_id").orderBy(
-        F.col("ts").asc(), F.col("event_id").asc()
-    )
-    ts_sec = F.col("ts").cast("long")
-    prev = F.lag(ts_sec).over(by_user)
-    new_session = F.when(prev.isNull() | ((ts_sec - prev) > gap_seconds), 1).otherwise(0)
-    with_sessions = events.withColumn("session_seq", F.sum(new_session).over(by_user))
-    return with_sessions.groupBy("user_id", "session_seq").agg(
-        F.count(F.lit(1)).alias("n_events"),
-        F.min("ts").alias("session_start"),
-        F.max("ts").alias("session_end"),
-        (F.max(ts_sec) - F.min(ts_sec)).alias("duration_seconds"),
-    )
-
-
 def session_counts_native(events: DataFrame, gap: str = "30 minutes") -> DataFrame:
     """Sessionization via Spark's NATIVE ``session_window`` — the
     engine-managed gap-merge (one aggregate, no explicit lag/sum

@@ -638,18 +638,18 @@ _Q86_COLS = ["doc_id", "text", "lang", "source", "n_chars"]
 def q86_table_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANALYZE TABLE end-to-end (sources/tablestore.analyze): the
     documents table lands in a TableStore, one aggregation pass
-    records row count / per-column approx-NDV / null counts as a
-    version-keyed sidecar, and the suite row replays the recorded
-    stats per column. Exact columns (row_count, null_count) are
+    computes row count / per-column approx-NDV / null counts for the
+    current version, and the suite row reports the returned stats per
+    column. Exact columns (row_count, null_count) are
     hash-matched against DuckDB; the HLL NDV is engine-specific, so it
     uses the q82 tolerance-boolean protocol — compared Spark-side
     against hash-matched exact countDistinct, 15% ≈ 3σ of
     approx_count_distinct's default 5% rsd, and deterministic for a
     given dataset (HLL has no RNG). At 100 TB the stats pass is one
-    scan with map-side partial HLL merge; readers get explicit,
-    version-auditable NDV and null counts for join-order decisions
-    (broadcast sizing, ``read_hinted``, reads the manifest's file
-    sizes and needs no stats pass)."""
+    scan with map-side partial HLL merge; callers get explicit NDV and
+    null counts tagged with the version they describe (broadcast
+    sizing, ``read_hinted``, reads the manifest's file sizes and needs
+    no stats pass)."""
     import tempfile as _tempfile
 
     from pyspark.sql.types import (

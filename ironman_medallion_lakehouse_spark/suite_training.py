@@ -616,7 +616,7 @@ def q94b_incremental_dedup_prepared(spark: SparkSession, sf_dir: str) -> DataFra
     operators/dedup.dedup_incoming), so a daily crawl batch pays only
     its own signature pass plus the O(bucket hits) cross band join.
 
-    Measured attribution (tools/profile_q94.py, sf0.1, min-of-3,
+    Measured attribution (r7 profile in git history, sf0.1, min-of-3,
     staged): the corpus-signature arm is ~9 % of the pipeline either
     way (inline 0.30 s vs parquet-read 0.22 s — hence q94b's modest
     −12 % e2e vs q94, VERDICT r6 item 5 superseding the r5 "bootstrap
@@ -1438,7 +1438,7 @@ def q116_feature_hashing(spark: SparkSession, sf_dir: str) -> DataFrame:
     grouped aggregate of 16 conditional integer sums; exact integer
     norm under one sqrt makes every component engine-exact UNROUNDED
     (integer sums → sqrt → one IEEE divide; pre-gated bit-exact at
-    3 SFs, tools/probe_similarity_rounds.py r13)."""
+    3 SFs by an r13 probe, now in git history)."""
     t = load_tables(spark, sf_dir, "documents")
     return S.feature_hash_vectors(t["documents"], dim=_Q116_DIM)
 

@@ -69,9 +69,8 @@ def curate(
 ) -> CurationResult:
     """Run the full curation pipeline over a documents frame
     (doc_id, text, lang, ...). Returns per-stage counts and the packed
-    chunk table; writes it to ``store``/``table`` when a TableStore is
-    given (full overwrite + ANALYZE, so downstream joins plan from
-    recorded stats).
+    chunk table; writes it to ``store``/``table`` (full overwrite)
+    when a TableStore is given.
 
     ``counts=False`` (r15) skips the six per-stage count/collect
     actions (they become None in the result): the ``chunks`` frame is
@@ -164,7 +163,6 @@ def curate(
 
     if store is not None:
         store.save_overwrite(out, table)
-        store.analyze(table)
     return CurationResult(
         n_input=n_input,
         n_quality_kept=n_quality,

@@ -1,5 +1,5 @@
-"""ANALYZE-style table statistics + stats-driven broadcast hinting
-(sources/tablestore.analyze / table_stats / read_hinted)."""
+"""ANALYZE-style table statistics + size-driven broadcast hinting
+(sources/tablestore.analyze / read_hinted)."""
 
 from __future__ import annotations
 
@@ -30,21 +30,20 @@ def test_analyze_records_counts_ndv_nulls(spark, tmp_path):
     assert stats["null_count"]["k"] == 0
 
 
-def test_table_stats_staleness_is_explicit(spark, tmp_path):
+def test_analyze_leaves_log_and_version_unchanged(spark, tmp_path):
+    """analyze only returns its stats: no file lands in the table's
+    ``_log/`` and no version is committed."""
     store = _store(spark, tmp_path)
     store.save_overwrite(spark.createDataFrame([Row(k=1)]), "db.s")
-    store.analyze("db.s")
-    assert store.table_stats("db.s")["stale_versions"] == 0
-    # two more commits without re-analyzing → stats survive, staleness grows
     store.merge_insert_only(spark.createDataFrame([Row(k=2)]), "db.s", keys=["k"])
-    store.merge_insert_only(spark.createDataFrame([Row(k=3)]), "db.s", keys=["k"])
-    st = store.table_stats("db.s")
-    assert st["row_count"] == 1  # describes version 1
-    assert st["stale_versions"] == 2
-    # re-analyze refreshes to the current version
-    st2 = store.analyze("db.s")
-    assert st2["row_count"] == 3
-    assert store.table_stats("db.s")["stale_versions"] == 0
+    log_dir = store._log_dir("db.s")
+    before = sorted(os.listdir(log_dir))
+    version = store._latest_manifest("db.s").version
+    stats = store.analyze("db.s")
+    assert stats["version"] == version
+    assert stats["row_count"] == 2
+    assert sorted(os.listdir(log_dir)) == before
+    assert store._latest_manifest("db.s").version == version
 
 
 def test_analyze_skips_non_atomic_columns(spark, tmp_path):
@@ -83,7 +82,6 @@ def test_read_hinted_small_table_needs_no_analyze(spark, tmp_path):
     store.save_overwrite(spark.createDataFrame([Row(k=1, v="a")]), "db.plain")
     df = store.read_hinted("db.plain")
     assert [r.k for r in df.collect()] == [1]
-    assert store.table_stats("db.plain") is None
     assert _hinted(df)
     assert not _hinted(store.read("db.plain"))
 

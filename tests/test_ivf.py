@@ -266,8 +266,8 @@ def test_rebuild_restores_pruning_under_drift_with_recall_floor(spark, tmp_path)
     1.0 >= 0.9 documented floor on BOTH sides of the rebuild
     (assignment is the same function for query and corpus, stale or
     fresh). Deterministic end to end (decimal k-means, fixed corpus).
-    The 8x latency/recall twin of this scenario is the scale probe's
-    ivf arm (tools/scale_probe.py, SCALING.md)."""
+    The 8x latency/recall twin of this scenario was the r9 scale
+    probe's ivf arm (in git history; SCALING.md round 9)."""
     emb = _emb(spark).select("vec_id", "embedding")
     store = TableStore(spark, str(tmp_path / "wh"))
     idx = IvfIndex(store, "ann.ivf")

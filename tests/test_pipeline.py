@@ -162,6 +162,54 @@ def test_incremental_idempotent(spark, landing_dir, tmp_path_factory):
     assert ath.count() == 1
 
 
+def test_incremental_rebuilds_missing_silver_from_all_years(
+    spark, landing_dir, tmp_path_factory
+):
+    """An incremental run that finds bronze but no silver table
+    rebuilds silver from every bronze year, not just process_year."""
+    import shutil
+
+    wh = str(tmp_path_factory.mktemp("wh_recover"))
+    specs = [
+        FileSpec(2023, "M", "2023_men.csv"),
+        FileSpec(2023, "F", "2023_women.csv"),
+        FileSpec(2024, "M", "2024_men.csv"),
+        FileSpec(2024, "F", "2024_women.csv"),
+    ]
+    pipeline.run(
+        spark,
+        PipelineConfig(source_dir=landing_dir, warehouse_dir=wh, run_mode="full", files=specs),
+    )
+    store = TableStore(spark, wh)
+    shutil.rmtree(store._table_dir(C.SILVER_TABLE))
+    assert not store.table_exists(C.SILVER_TABLE)
+
+    r = pipeline.run(
+        spark,
+        PipelineConfig(
+            source_dir=landing_dir, warehouse_dir=wh, run_mode="incremental",
+            process_year=2024, files=specs,
+        ),
+    )
+    assert r.silver_rows == 20
+    years = {row.year for row in store.read(C.SILVER_TABLE).select("year").distinct().collect()}
+    assert years == {2023, 2024}
+
+
+def test_silver_quality_reconciles_finish_time(full_run):
+    """The reference's reconciliation audit (03_silver.ipynb:524-528):
+    finishers whose segment sum differs from finish_time by > 60 s,
+    counted in the fused silver quality pass."""
+    result, store = full_run
+    silver = store.read(C.SILVER_TABLE)
+    direct = silver.filter(
+        (F.col("is_finisher") == True)  # noqa: E712
+        & (F.abs(F.col("finish_time_seconds") - F.col("calculated_total_seconds")) > 60)
+    ).count()
+    assert direct >= 1  # the planted discrepancy row
+    assert result.silver_quality["finish_time_matches_segments"] == direct
+
+
 def test_config_validation(landing_dir):
     with pytest.raises(ValueError, match="Invalid run_mode"):
         PipelineConfig(source_dir=landing_dir, warehouse_dir="/tmp/x", run_mode="bogus")

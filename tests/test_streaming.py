@@ -112,57 +112,6 @@ def test_native_session_window_streaming_matches_batch(spark, tmp_path):
     assert streamed == batch
 
 
-def test_kafka_gate_and_value_parse(spark):
-    """Kafka carry item (VERDICT r2-r4): the connector jar is absent
-    in-container, so kafka_stream must fail with the documented
-    guidance — and parse_kafka_value, the real transform, must decode
-    Kafka's exact wire schema on a synthetic frame."""
-    import json
-
-    import pytest as _pytest
-    from pyspark.sql import Row
-    from pyspark.sql import functions as F
-    from pyspark.sql.types import (
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
-    from ironman_medallion_lakehouse_spark.streaming.kafka import (
-        kafka_stream,
-        parse_kafka_value,
-    )
-
-    with _pytest.raises(NotImplementedError, match="spark-sql-kafka"):
-        kafka_stream(spark, "broker:9092", "docs")
-
-    schema = StructType(
-        [StructField("doc_id", LongType()), StructField("text", StringType())]
-    )
-    wire = spark.createDataFrame(
-        [
-            Row(
-                key=b"k1",
-                value=json.dumps({"doc_id": 7, "text": "hello kafka"}).encode(),
-                topic="docs",
-                partition=0,
-                offset=42,
-                timestamp="2024-01-01 00:00:00",
-                timestampType=0,
-            )
-        ]
-    ).withColumn("timestamp", F.col("timestamp").cast("timestamp"))
-    out = parse_kafka_value(wire, schema).collect()
-    assert len(out) == 1
-    r = out[0]
-    assert r.doc_id == 7 and r.text == "hello kafka"
-    assert r.topic == "docs" and r.offset == 42  # lineage kept
-
-    with _pytest.raises(NotImplementedError, match="Avro"):
-        parse_kafka_value(wire, schema, value_format="avro")
-
-
 def test_stream_stream_interval_join_matches_batch_range_join(spark, tmp_path):
     """Stream-stream inner join with two-sided interval condition:
     must emit exactly the pairs the batch binned range join (q75's

@@ -56,8 +56,7 @@ def test_curate_end_to_end(spark, tmp_path):
     # pack coordinates are consistent: offsets within budget, packs contiguous
     assert out.filter(F.col("start_offset") >= 2048).count() == 0
     assert out.filter(F.col("end_pack") < F.col("start_pack")).count() == 0
-    # stats recorded at write time (broadcast decisions downstream)
-    assert store.table_stats("gold.training_chunks") is not None
+    assert store.row_count("gold.training_chunks") == res.n_chunks
 
 
 def test_curate_sample_rates_apply(spark):

@@ -535,7 +535,8 @@ def test_top_k_words_truncation_semantics(spark):
     """top_k_words=K learns from exactly the K most frequent words
     (ties word-asc) — the artifact equals learning on a manually
     truncated count table, and None is the identity (SCALING.md r12
-    decision row; semantics pinned by tools/probe_bpe_topk.py)."""
+    decision row; semantics first pinned by the r12 top-K probe, now
+    in git history)."""
     from pyspark.sql import functions as F
 
     from ironman_medallion_lakehouse_spark.operators.vocab import (
