@@ -10,7 +10,7 @@ from the public protocol description):
 Layout per table::
 
     <root>/<db>/<table>/
-        _log/00000001.json             # delta: {"version","schema","partition_by","add","remove","stats","num_records"}
+        _log/00000001.json             # delta: {"version","schema","partition_by","add","remove","stats","num_records"[,"txn"]}
         _log/00000010.checkpoint.json  # full snapshot every CHECKPOINT_EVERY commits
         data/                          # immutable parquet files, shared partition dirs
             year=2023/<writeid>-part-....parquet
@@ -44,11 +44,16 @@ Layout per table::
   touched partitions (all files, for an unpartitioned table); the
   predicate DML rewrites only files with a matching row;
   ``save_overwrite`` and ``optimize`` carry nothing forward. A rewrite
-  that adds no row, carries every file and keeps schema and layout
-  commits nothing.
+  that adds no row, carries every file and keeps schema, layout and
+  txns commits nothing.
 - Every added file's footer min/max stats and row count are logged
   with it, so ``read_where`` prunes and ``row_count`` counts without
   a Spark job.
+- A writer may record what it consumed in the same atomic commit as
+  its data: ``txn=(app_id, value)`` on the write verbs, Delta's
+  ``SetTransaction``. Every later commit carries the table's txns
+  forward, and ``last_txn`` reads them back from the log without a
+  Spark job, so a rerun can tell that its input was already written.
 - Old versions remain readable (time travel) until `vacuum()`.
 
 Reference behaviors reproduced: 02_bronze.ipynb:300-318 (insert-only),
@@ -123,13 +128,14 @@ def manifest_at(log_dir: str, version: int) -> "Manifest | None":
     files: list[str] = []
     stats: dict[str, dict[str, list]] = {}
     num_records: dict[str, int] = {}
+    txns: dict[str, object] = {}
     schema_json, partition_by = "", []
     start = 0
     if ckpts:
         with open(os.path.join(log_dir, f"{ckpts[-1]:08d}.checkpoint.json")) as fh:
             snap = Manifest.from_json(fh.read())
         files, stats = list(snap.files), dict(snap.stats)
-        num_records = dict(snap.num_records)
+        num_records, txns = dict(snap.num_records), dict(snap.txns)
         schema_json, partition_by = snap.schema_json, snap.partition_by
         start = snap.version
     for v in range(start + 1, version + 1):
@@ -144,6 +150,7 @@ def manifest_at(log_dir: str, version: int) -> "Manifest | None":
             num_records.pop(f, None)
         stats.update(d.get("stats", {}))
         num_records.update(d.get("num_records", {}))
+        txns = d.get("txn", txns)
     return Manifest(
         version=version,
         schema_json=schema_json,
@@ -151,6 +158,7 @@ def manifest_at(log_dir: str, version: int) -> "Manifest | None":
         files=files,
         stats=stats,
         num_records=num_records,
+        txns=txns,
     )
 
 
@@ -280,6 +288,9 @@ class Manifest:
     # per-file footer row count (Delta's numRecords): path → rows; a
     # file written by an older log has none (see TableStore.row_count)
     num_records: dict[str, int] = field(default_factory=dict)
+    # app_id → the JSON value its writer last committed (Delta's
+    # SetTransaction); see TableStore.last_txn
+    txns: dict[str, object] = field(default_factory=dict)
 
     @property
     def schema(self) -> StructType:
@@ -294,6 +305,7 @@ class Manifest:
                 "files": self.files,
                 "stats": self.stats,
                 "num_records": self.num_records,
+                "txns": self.txns,
             },
             indent=None,
         )
@@ -308,6 +320,7 @@ class Manifest:
             files=d["files"],
             stats=d.get("stats", {}),
             num_records=d.get("num_records", {}),
+            txns=d.get("txns", {}),
         )
 
 
@@ -369,7 +382,10 @@ class TableStore:
         None for a new table) so the commit doesn't replay the log a
         second time — at one commit per streaming micro-batch the
         duplicate checkpoint+delta reads are the dominant metadata
-        cost."""
+        cost.
+
+        The entry holds the table's whole txn map under ``"txn"`` when
+        it differs from prev's; replay takes the latest map it meets."""
         log_dir = self._log_dir(name)
         os.makedirs(log_dir, exist_ok=True)
         if prev is _DERIVE_PREV:
@@ -382,22 +398,22 @@ class TableStore:
         new_files = set(manifest.files)
         add = [f for f in manifest.files if f not in prev_files]
         remove = sorted(prev_files - new_files)
-        entry = json.dumps(
-            {
-                "version": manifest.version,
-                "schema": manifest.schema_json,
-                "partition_by": manifest.partition_by,
-                "add": add,
-                "remove": remove,
-                "stats": {f: manifest.stats[f] for f in add if f in manifest.stats},
-                "num_records": {
-                    f: manifest.num_records[f] for f in add if f in manifest.num_records
-                },
-            }
-        )
+        entry = {
+            "version": manifest.version,
+            "schema": manifest.schema_json,
+            "partition_by": manifest.partition_by,
+            "add": add,
+            "remove": remove,
+            "stats": {f: manifest.stats[f] for f in add if f in manifest.stats},
+            "num_records": {
+                f: manifest.num_records[f] for f in add if f in manifest.num_records
+            },
+        }
+        if manifest.txns != (prev.txns if prev else {}):
+            entry["txn"] = manifest.txns
         tmp = os.path.join(log_dir, f".tmp-{uuid.uuid4().hex}")
         with open(tmp, "w") as fh:
-            fh.write(entry)
+            fh.write(json.dumps(entry))
         final = os.path.join(log_dir, f"{manifest.version:08d}.json")
         try:
             os.link(tmp, final)
@@ -516,6 +532,19 @@ class TableStore:
         """Reference: spark.catalog.tableExists gate (02_bronze.ipynb:279)."""
         return self._latest_manifest(name) is not None
 
+    def last_txn(self, name: str, app_id: str):
+        """The value ``app_id`` last committed to ``name`` through a
+        write verb's ``txn`` (Delta's SetTransaction lookup), or None
+        when the table or the app_id has none. Reads the latest
+        manifest only: no Spark job."""
+        manifest = self._latest_manifest(name)
+        return manifest.txns.get(app_id) if manifest is not None else None
+
+    def version(self, name: str) -> int:
+        """The latest committed version of ``name``; raises
+        FileNotFoundError when the table does not exist."""
+        return self._require(name).version
+
     def read(self, name: str, version: int | None = None) -> DataFrame:
         manifest = self._require(name, version)
         return self._read_file_subset(name, manifest, manifest.files)
@@ -540,7 +569,10 @@ class TableStore:
         The RECORDED schema is supplied explicitly (never inferred from
         footers): files written before a column existed read it as NULL
         — schema evolution without mergeSchema's every-footer scan — and
-        column order / partition-col types follow the manifest."""
+        partition columns take their recorded types. The scan puts
+        partition columns last; one projection by name restores the
+        recorded column order (a per-column ``cast`` would add three
+        driver→JVM calls per column to every read)."""
         schema = manifest.schema
         if not files:
             return self.spark.createDataFrame([], schema)
@@ -548,8 +580,8 @@ class TableStore:
         reader = self.spark.read.schema(schema)
         if manifest.partition_by:
             reader = reader.option("basePath", data_dir)
-        return reader.parquet(*[os.path.join(data_dir, f) for f in files]).select(
-            *[F.col(f.name).cast(f.dataType) for f in schema.fields]
+        return reader.parquet(*[os.path.join(data_dir, f) for f in files]).selectExpr(
+            *["`" + f.name.replace("`", "``") + "`" for f in schema.fields]
         )
 
     def _plan_files(
@@ -773,6 +805,7 @@ class TableStore:
         cluster_files: int | None = None,
         zorder_by: list[str] | None = None,
         optimize_write: bool = True,
+        txn: tuple[str, object] | None = None,
     ) -> None:
         """Full load: format("delta").mode("overwrite")
         .option("overwriteSchema","true") equivalent (02_bronze.ipynb:301-310).
@@ -796,7 +829,10 @@ class TableStore:
         ``optimize_write`` (default on): see ``_write_files`` — the
         rebalance-hint write distribution shared by every write path;
         clustering supplies its own distribution, so the two are
-        mutually exclusive here."""
+        mutually exclusive here.
+
+        ``txn=(app_id, value)`` records what the write consumed in the
+        same commit (see ``_rewrite``)."""
         partition_by = partition_by or []
         distribute = bool(optimize_write)
         if cluster_by and zorder_by:
@@ -821,7 +857,7 @@ class TableStore:
             distribute = False
         self._rewrite(
             name, self._latest_manifest(name), df, [], df.schema,
-            partition_by=partition_by, distribute=distribute,
+            partition_by=partition_by, distribute=distribute, txn=txn,
         )
 
     def _rewrite(
@@ -833,6 +869,7 @@ class TableStore:
         schema: StructType,
         partition_by: list[str] | None = None,
         distribute: bool = True,
+        txn: tuple[str, object] | None = None,
     ) -> int:
         """The one rewrite-and-commit path of every data-writing verb:
         write ``new_rows`` as new files, carry prev's ``untouched``
@@ -842,13 +879,18 @@ class TableStore:
         ``partition_by`` defaults to prev's layout; ``distribute`` goes
         to ``_write_files``. Returns the committed version.
 
+        prev's txns carry forward; ``txn=(app_id, value)`` sets one
+        (the value is stored as its JSON form, which ``last_txn``
+        returns).
+
         A written file with zero rows is deleted (Spark writes one for
         an empty unpartitioned write; the recorded schema already says
         what it would). When that leaves no new file, every previous
         file is carried forward and schema and layout are unchanged,
         the commit would change nothing: none is made and prev's
         version is returned — a re-run insert-only merge leaves the log
-        as it was.
+        as it was. A new ``txn`` value is a change: it is committed
+        alone, with no file added or removed.
 
         A write job failed by a merge's duplicate-key check (see
         ``_unique_keys``) surfaces as ValueError; nothing is committed."""
@@ -867,12 +909,17 @@ class TableStore:
         for f in empty:
             os.remove(os.path.join(data_dir, f))
         files = [f for f in written if f not in empty]
+        txns = dict(prev.txns) if prev else {}
+        if txn is not None:
+            app_id, value = txn
+            txns[app_id] = json.loads(json.dumps(value))
         if (
             prev is not None
             and not files
             and set(untouched) == set(prev.files)
             and schema.json() == prev.schema_json
             and partition_by == prev.partition_by
+            and txns == prev.txns
         ):
             return prev.version
         stats = {f: prev.stats[f] for f in untouched if f in prev.stats}
@@ -882,7 +929,9 @@ class TableStore:
         version = prev.version + 1 if prev else 1
         self._commit(
             name,
-            Manifest(version, schema.json(), partition_by, untouched + files, stats, counts),
+            Manifest(
+                version, schema.json(), partition_by, untouched + files, stats, counts, txns
+            ),
             prev=prev,
         )
         return version
@@ -895,10 +944,12 @@ class TableStore:
         partition_by: list[str] | None,
         merge_schema: bool | None,
         init: DataFrame | None = None,
+        txn: tuple[str, object] | None = None,
     ) -> tuple[Manifest, StructType, tuple[list[str], list[tuple]] | None] | None:
         """Set-up shared by the merges. Creates the table from ``init``
-        (default ``source``) through ``save_overwrite`` when it does
-        not exist yet and returns None: nothing is left to merge.
+        (default ``source``) through ``save_overwrite``, with ``txn``,
+        when it does not exist yet and returns None: nothing is left to
+        merge.
         Otherwise returns (manifest, merge schema, partition request
         for ``_plan_files``), after:
 
@@ -915,7 +966,7 @@ class TableStore:
         manifest = self._latest_manifest(name)
         if manifest is None:
             self.save_overwrite(
-                source if init is None else init, name, partition_by=partition_by
+                source if init is None else init, name, partition_by=partition_by, txn=txn
             )
             return None
         if partition_by is not None and partition_by != manifest.partition_by:
@@ -1011,6 +1062,7 @@ class TableStore:
         keys: list[str],
         partition_by: list[str] | None = None,
         merge_schema: bool = False,
+        txn: tuple[str, object] | None = None,
     ) -> None:
         """whenNotMatchedInsertAll() merge (02_bronze.ipynb:311-318).
 
@@ -1036,8 +1088,11 @@ class TableStore:
         the schema that version actually had. Without the flag, a
         schema mismatch fails analysis — evolution must be opted into,
         exactly as Delta requires.
+
+        ``txn=(app_id, value)`` is committed with the merge, even one
+        that inserts nothing (see ``_rewrite``).
         """
-        prep = self._merge_prologue(source, name, keys, partition_by, merge_schema)
+        prep = self._merge_prologue(source, name, keys, partition_by, merge_schema, txn=txn)
         if prep is None:
             return
         manifest, schema, partitions = prep
@@ -1050,7 +1105,7 @@ class TableStore:
         )
         new_rows = src.join(target.select(*keys), on=keys, how="left_anti")
         # append-only: every existing file carries forward
-        self._rewrite(name, manifest, new_rows, manifest.files, schema)
+        self._rewrite(name, manifest, new_rows, manifest.files, schema, txn=txn)
 
     def merge_scd1(
         self,
@@ -1060,6 +1115,7 @@ class TableStore:
         update_cols: list[str] | None = None,
         partition_by: list[str] | None = None,
         merge_schema: bool = False,
+        txn: tuple[str, object] | None = None,
     ) -> None:
         """whenMatchedUpdate(set=update_cols).whenNotMatchedInsertAll()
         (04a_gold_dim_athletes.ipynb:311-328).
@@ -1099,9 +1155,9 @@ class TableStore:
         them as NULL); matched-row updates then assign only columns the
         SOURCE carries — a target-only column keeps its value instead
         of being clobbered to NULL, Delta's UPDATE SET * + autoMerge
-        semantics.
+        semantics. ``txn`` as in ``merge_insert_only``.
         """
-        prep = self._merge_prologue(source, name, keys, partition_by, merge_schema)
+        prep = self._merge_prologue(source, name, keys, partition_by, merge_schema, txn=txn)
         if prep is None:
             return
         manifest, schema, partitions = prep
@@ -1134,7 +1190,7 @@ class TableStore:
         # untouched partitions' files carry forward unchanged; only the
         # rewritten partitions' files are "added" in the delta entry, so
         # CDC stays O(touched)
-        self._rewrite(name, manifest, merged, untouched, schema)
+        self._rewrite(name, manifest, merged, untouched, schema, txn=txn)
 
     SCD2_COLS = ("valid_from", "valid_to", "is_current")
 
@@ -1464,7 +1520,7 @@ class TableStore:
         """Delta ``RESTORE TABLE ... TO VERSION AS OF`` analogue: make
         the CURRENT state equal the state at ``version`` by committing
         a NEW version whose manifest (files, schema, partitioning,
-        stats) is the target's. No data is copied — the old files are
+        stats, txns) is the target's. No data is copied — the old files are
         simply referenced again — and history is preserved: the restore
         is itself a commit, so time travel to the pre-restore state
         still works and the change feed sees the restore as adds of
@@ -1499,6 +1555,7 @@ class TableStore:
                 files=list(target.files),
                 stats=dict(target.stats),
                 num_records=dict(target.num_records),
+                txns=dict(target.txns),
             ),
             prev=latest,
         )
@@ -1529,9 +1586,11 @@ class TableStore:
         added = [f for f in m_to.files if f not in before]
         return self._read_file_subset(name, m_to, added)
 
-    def register_views(self, *names: str) -> None:
+    def register_views(self, *names: str) -> dict[str, DataFrame]:
         """Expose tables as temp views named ``<db>_<table>`` so SQL
-        (the 13 dashboard views) can reference them."""
-        for name in names:
-            view = name.replace(".", "_")
-            self.read(name).createOrReplaceTempView(view)
+        (the 13 dashboard views) can reference them. Returns each
+        table's registered DataFrame, by table name."""
+        frames = {name: self.read(name) for name in names}
+        for name, df in frames.items():
+            df.createOrReplaceTempView(name.replace(".", "_"))
+        return frames

@@ -3,6 +3,9 @@ full run, incremental idempotency, layer semantics, and the 15 views."""
 
 from __future__ import annotations
 
+import os
+import shutil
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -128,38 +131,148 @@ def test_views(full_run, spark):
     assert yoy[2024].athletes_change == 5 - 15
 
 
+SPECS = [
+    FileSpec(2023, "M", "2023_men.csv"),
+    FileSpec(2023, "F", "2023_women.csv"),
+    FileSpec(2024, "M", "2024_men.csv"),
+    FileSpec(2024, "F", "2024_women.csv"),
+]
+
+
+def _incremental_2024(source_dir: str, wh: str) -> PipelineConfig:
+    return PipelineConfig(
+        source_dir=source_dir, warehouse_dir=wh, run_mode="incremental",
+        process_year=2024, files=SPECS,
+    )
+
+
 def test_incremental_idempotent(spark, landing_dir, tmp_path_factory):
     wh = str(tmp_path_factory.mktemp("wh_incr"))
-    specs = [
-        FileSpec(2023, "M", "2023_men.csv"),
-        FileSpec(2023, "F", "2023_women.csv"),
-        FileSpec(2024, "M", "2024_men.csv"),
-        FileSpec(2024, "F", "2024_women.csv"),
-    ]
+    landing = str(tmp_path_factory.mktemp("landing_incr") / "landing")
+    shutil.copytree(landing_dir, landing)
     base = PipelineConfig(
-        source_dir=landing_dir, warehouse_dir=wh, run_mode="full",
-        files=[s for s in specs if s.year == 2023],
+        source_dir=landing, warehouse_dir=wh, run_mode="full",
+        files=[s for s in SPECS if s.year == 2023],
     )
     r1 = pipeline.run(spark, base)
-    assert r1.fact_rows == 15
+    assert r1.fact_rows == 15 and r1.skipped == []
 
-    incr = PipelineConfig(
-        source_dir=landing_dir, warehouse_dir=wh, run_mode="incremental",
-        process_year=2024, files=specs,
-    )
+    incr = _incremental_2024(landing, wh)
     r2 = pipeline.run(spark, incr)
     assert r2.bronze_rows == 20 and r2.fact_rows == 20
+    assert r2.skipped == []
 
-    # Readme.md:7: re-running the same incremental year must be a no-op
+    # Readme.md:7: re-running the same incremental year must be a no-op;
+    # every table already records this run's input, so none is touched
+    store = TableStore(spark, wh)
+    versions = {t: store.version(t) for t in pipeline.ALL_TABLES}
     r3 = pipeline.run(spark, incr)
     assert r3.bronze_rows == 20 and r3.silver_rows == 20 and r3.fact_rows == 20
+    assert r3.skipped == pipeline.ALL_TABLES
+    assert r3.duplicate_row_keys == r2.duplicate_row_keys
+    assert {t: store.version(t) for t in pipeline.ALL_TABLES} == versions
 
     # SCD-1: Laidlow's dim row reflects the latest year, still one row
-    store = TableStore(spark, wh)
     ath = store.read(C.DIM_ATHLETES).filter(
         F.col("athlete_natural_key") == "samlaidlow_fr"
     )
     assert ath.count() == 1
+
+    # an edited landing file (new mtime) is ingested again
+    path = SPECS[2].path(landing)
+    st = os.stat(path)
+    os.utime(path, ns=(st.st_atime_ns, st.st_mtime_ns + 10**9))
+    r4 = pipeline.run(spark, incr)
+    assert C.BRONZE_TABLE not in r4.skipped
+    assert r4.bronze_rows == 20 and r4.silver_rows == 20 and r4.fact_rows == 20
+
+
+def _digests(spark, wh: str) -> dict[str, list]:
+    """Sorted rows of silver and gold, without the load and merge
+    timestamps a rerun legitimately changes."""
+    volatile = {"load_timestamp", "load_date", "created_at", "updated_at"}
+    store = TableStore(spark, wh)
+    out = {}
+    for t in pipeline.ALL_TABLES[1:]:
+        df = store.read(t)
+        out[t] = sorted(map(tuple, df.select(*[c for c in df.columns if c not in volatile])
+                            .collect()), key=repr)
+    return out
+
+
+@pytest.fixture(scope="module")
+def snapshot_2023(spark, landing_dir, tmp_path_factory):
+    """A warehouse holding a full load of 2023, and the silver and gold
+    an uninterrupted incremental append of 2024 gives it."""
+    wh = str(tmp_path_factory.mktemp("wh_snapshot") / "wh")
+    pipeline.run(spark, PipelineConfig(
+        source_dir=landing_dir, warehouse_dir=wh, run_mode="full",
+        files=[s for s in SPECS if s.year == 2023],
+    ))
+    appended = str(tmp_path_factory.mktemp("wh_appended") / "wh")
+    shutil.copytree(wh, appended)
+    store = TableStore(spark, appended)
+    before = {t: store.version(t) for t in pipeline.ALL_TABLES}
+    pipeline.run(spark, _incremental_2024(landing_dir, appended))
+    # the append commits each table exactly once, in ALL_TABLES order
+    assert {t: store.version(t) - before[t] for t in pipeline.ALL_TABLES} == dict.fromkeys(
+        pipeline.ALL_TABLES, 1)
+    return wh, _digests(spark, appended)
+
+
+@pytest.mark.parametrize("k", range(1, len(pipeline.ALL_TABLES) + 1))
+def test_run_killed_after_kth_commit_resumes_at_next_table(
+    spark, landing_dir, tmp_path_factory, monkeypatch, snapshot_2023, k
+):
+    """A run that dies right after its k-th commit leaves the first k
+    tables recording their input; the rerun skips exactly those and
+    ends with the silver and gold of an uninterrupted append."""
+    snapshot, want = snapshot_2023
+    wh = str(tmp_path_factory.mktemp("wh_crash") / "wh")
+    shutil.copytree(snapshot, wh)
+    commit, commits = TableStore._commit, []
+
+    def commit_then_crash(self, name, *args, **kwargs):
+        commit(self, name, *args, **kwargs)
+        commits.append(name)
+        if len(commits) == k:
+            raise RuntimeError("killed after commit")
+
+    monkeypatch.setattr(TableStore, "_commit", commit_then_crash)
+    with pytest.raises(RuntimeError, match="killed after commit"):
+        pipeline.run(spark, _incremental_2024(landing_dir, wh))
+    monkeypatch.undo()
+    assert commits == pipeline.ALL_TABLES[:k]
+
+    rerun = pipeline.run(spark, _incremental_2024(landing_dir, wh))
+    assert rerun.skipped == pipeline.ALL_TABLES[:k]
+    assert rerun.bronze_rows == rerun.silver_rows == rerun.fact_rows == 20
+    assert _digests(spark, wh) == want
+
+
+def test_noop_rerun_runs_no_spark_job(spark, landing_dir, tmp_path_factory, monkeypatch,
+                                      snapshot_2023):
+    """With the trailing audit stubbed out, rerunning an appended year
+    runs no Spark job at all — none in the layers and none between
+    them."""
+    from ironman_medallion_lakehouse_spark.plans import gold_fact
+
+    snapshot, _ = snapshot_2023
+    wh = str(tmp_path_factory.mktemp("wh_noop") / "wh")
+    shutil.copytree(snapshot, wh)
+    pipeline.run(spark, _incremental_2024(landing_dir, wh))
+    monkeypatch.setattr(gold_fact, "fk_audit", lambda fact: {})
+    monkeypatch.setattr(pipeline, "_silver_quality", lambda silver: {})
+    sc = spark.sparkContext
+    group = "pipeline-noop-rerun"
+    sc.setJobGroup(group, "no-op incremental rerun")
+    try:
+        rerun = pipeline.run(spark, _incremental_2024(landing_dir, wh))
+    finally:
+        sc.setJobGroup(None, None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert rerun.skipped == pipeline.ALL_TABLES
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
 
 
 def test_incremental_rebuilds_missing_silver_from_all_years(

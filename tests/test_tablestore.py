@@ -1233,3 +1233,89 @@ def test_update_where(spark, tmp_path):
 
     with pytest.raises(ValueError):
         st.update_where("db.u", "k = 1", {"nope": "1"})
+
+
+# ------------------------------------------------------------- txn (watermarks)
+def _log_entry(st, name, version) -> dict:
+    import json as _json
+
+    with open(os.path.join(st._log_dir(name), f"{version:08d}.json")) as fh:
+        return _json.load(fh)
+
+
+def test_txns_survive_checkpoint(spark, tmp_path):
+    """A txn set at version 1 is carried through 11 later commits and a
+    checkpoint; each version replays the txns it committed."""
+    import json as _json
+
+    from ironman_medallion_lakehouse_spark.sources.tablestore import CHECKPOINT_EVERY
+
+    st = _store(spark, tmp_path)
+    rows = spark.createDataFrame([Row(k="a", v=1)])
+    st.save_overwrite(rows, "db.t", txn=("loader", {"files": ["a.csv"], "size": 3}))
+    for i in range(2, CHECKPOINT_EVERY + 3):
+        # inserts nothing: every later version is a txn-only commit
+        st.merge_insert_only(rows, "db.t", keys=["k"], txn=("merger", i))
+    assert st._checkpoint_versions("db.t") == [CHECKPOINT_EVERY]
+    assert st.version("db.t") == CHECKPOINT_EVERY + 2
+    with open(os.path.join(st._log_dir("db.t"), f"{CHECKPOINT_EVERY:08d}.checkpoint.json")) as fh:
+        assert _json.load(fh)["txns"] == {
+            "loader": {"files": ["a.csv"], "size": 3}, "merger": CHECKPOINT_EVERY,
+        }
+    assert st.last_txn("db.t", "loader") == {"files": ["a.csv"], "size": 3}
+    assert st.last_txn("db.t", "merger") == CHECKPOINT_EVERY + 2
+    assert st.last_txn("db.t", "nobody") is None
+    assert st.last_txn("db.missing", "loader") is None
+    for v in (1, 5, CHECKPOINT_EVERY + 1):
+        assert st._manifest_at("db.t", v).txns.get("merger") == (v if v > 1 else None)
+    assert st.row_count("db.t") == 1
+
+
+def test_optimize_carries_txns_forward(spark, tmp_path):
+    st = _store(spark, tmp_path)
+    st.save_overwrite(
+        spark.createDataFrame([Row(k="a", y=1)]), "db.t", partition_by=["y"], txn=("app", 1)
+    )
+    st.merge_insert_only(
+        spark.createDataFrame([Row(k="b", y=1)]), "db.t", keys=["k"], txn=("app", 2)
+    )
+    before = st._latest_manifest("db.t")
+    assert len(before.files) == 2
+    st.optimize("db.t", min_files=2)
+    after = st._latest_manifest("db.t")
+    assert after.version == before.version + 1 and len(after.files) == 1
+    assert after.txns == {"app": 2}
+    assert "txn" not in _log_entry(st, "db.t", after.version)  # unchanged: not re-logged
+
+
+@pytest.mark.parametrize("partition_by", [["y"], []], ids=["partitioned", "unpartitioned"])
+def test_txn_only_merge_commits_metadata_once(spark, tmp_path, partition_by):
+    """A merge that inserts nothing but carries a new txn value makes
+    exactly one commit, adding and removing no file; the same txn
+    again makes none."""
+    st = _store(spark, tmp_path)
+    src = spark.createDataFrame([Row(k="a", y=1), Row(k="b", y=2)])
+    st.save_overwrite(src, "db.t", partition_by=partition_by)
+    files = _data_files(st, "db.t")
+    st.merge_insert_only(src, "db.t", keys=["k", "y"], txn=("app", [2024, "x"]))
+    assert st.version("db.t") == 2
+    entry = _log_entry(st, "db.t", 2)
+    assert (entry["add"], entry["remove"], entry["txn"]) == ([], [], {"app": [2024, "x"]})
+    assert _data_files(st, "db.t") == files
+    st.merge_insert_only(src, "db.t", keys=["k", "y"], txn=("app", (2024, "x")))
+    assert st.version("db.t") == 2  # a tuple is the same JSON value
+    assert st.last_txn("db.t", "app") == [2024, "x"]
+    assert st.row_count("db.t") == 2
+
+
+def test_restore_returns_the_versions_txns(spark, tmp_path):
+    st = _store(spark, tmp_path)
+    st.save_overwrite(spark.createDataFrame([Row(k=1)]), "db.t")  # v1: no txn
+    st.merge_insert_only(spark.createDataFrame([Row(k=2)]), "db.t", keys=["k"], txn=("app", 2))
+    st.merge_scd1(spark.createDataFrame([Row(k=3)]), "db.t", keys=["k"], txn=("app", 3))
+    assert st.last_txn("db.t", "app") == 3
+    st.restore("db.t", 2)
+    assert st.last_txn("db.t", "app") == 2
+    st.restore("db.t", 1)  # the work recorded after v1 is undone with its txn
+    assert st.last_txn("db.t", "app") is None
+    assert _log_entry(st, "db.t", st.version("db.t"))["txn"] == {}
