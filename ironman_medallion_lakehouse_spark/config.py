@@ -14,6 +14,7 @@ with the same validated fields and the same semantics:
 from __future__ import annotations
 
 import os
+from collections import Counter
 from dataclasses import dataclass, field
 
 VALID_RUN_MODES = ("full", "incremental")
@@ -69,11 +70,13 @@ class PipelineConfig:
 
     def validate_sources(self) -> None:
         """Source-file existence probe — raise on missing landing files
-        (01_config.ipynb:432-444)."""
-        missing = [
-            f.path(self.source_dir)
-            for f in self.files_to_process
-            if not os.path.exists(f.path(self.source_dir))
-        ]
+        (01_config.ipynb:432-444) — and ValueError on a landing file
+        listed more than once, which bronze would ingest twice."""
+        paths = [f.path(self.source_dir) for f in self.files_to_process]
+        missing = [p for p in paths if not os.path.exists(p)]
         if missing:
             raise FileNotFoundError(f"Missing source files: {missing}")
+        times = Counter(os.path.abspath(p) for p in paths)
+        repeated = sorted({p for p in paths if times[os.path.abspath(p)] > 1})
+        if repeated:
+            raise ValueError(f"Source files listed more than once: {repeated}")

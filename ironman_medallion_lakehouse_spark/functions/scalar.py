@@ -96,6 +96,30 @@ def surrogate_key(*cols: Column | str) -> Column:
     return F.abs(F.hash(joined))
 
 
+def _sql_string(s: str) -> str:
+    """``s`` as a Spark SQL string literal (the default backslash escapes)."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def literal_lookup(key: Column, table: dict[str, dict[str, str | int]]) -> Column:
+    """``table[key]`` as a struct of the entry's fields, NULL for a key
+    the table lacks. ``table`` becomes one map literal parsed from a
+    single SQL ``map(...)`` expression: one driver→JVM call however
+    many entries, where a map built from per-value ``F.lit`` Columns
+    costs a call per value."""
+
+    def sql(v: str | int) -> str:
+        return _sql_string(v) if isinstance(v, str) else str(int(v))
+
+    entries = ", ".join(
+        f"{_sql_string(k)}, named_struct("
+        + ", ".join(f"{_sql_string(f)}, {sql(v)}" for f, v in fields.items())
+        + ")"
+        for k, fields in table.items()
+    )
+    return F.expr(f"map({entries})")[key]
+
+
 def parse_division(division: Column | str) -> dict[str, Column]:
     """Decompose a division code like ``M18-24`` / ``FPRO`` into attributes.
 

@@ -11,7 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ironman_medallion_lakehouse_spark.functions.scalar import surrogate_key
+from ironman_medallion_lakehouse_spark.functions.scalar import literal_lookup, surrogate_key
 from ironman_medallion_lakehouse_spark.plans.country_mapping import COUNTRY_MAPPING
 
 
@@ -35,72 +35,71 @@ def build_dim_athletes(silver_df: DataFrame) -> DataFrame:
     computed from the *raw* name while the natural key strips
     punctuation, a latent reference collision reproduced as-is
     (SURVEY §7 risk 4)."""
-    with_key = silver_df.withColumn("athlete_natural_key", _natural_key())
+    # the window partitions by the key COLUMN: its output is then
+    # partitioned as the SCD-1 merge on that key needs, with no shuffle
     w = Window.partitionBy("athlete_natural_key").orderBy(
         F.col("year").desc(), F.col("load_timestamp").desc_nulls_last()
     )
-    athletes = (
-        with_key.withColumn("rn", F.row_number().over(w))
+    latest = (
+        silver_df.select(
+            _natural_key().alias("athlete_natural_key"),
+            "athlete_name",
+            "first_name",
+            "last_name",
+            "country",
+            "year",
+            "load_timestamp",
+        )
+        .withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") == 1)
-        .select("athlete_natural_key", "athlete_name", "first_name", "last_name", "country")
     )
-    athletes = athletes.withColumn(
-        "athlete_key", surrogate_key(F.concat_ws("_", F.col("athlete_name"), F.col("country")))
-    )
-    athletes = athletes.withColumn("created_at", F.current_timestamp()).withColumn(
-        "updated_at", F.current_timestamp()
-    )
-    return athletes.select(
-        "athlete_key",
+    return latest.select(
+        surrogate_key(F.concat_ws("_", F.col("athlete_name"), F.col("country"))).alias(
+            "athlete_key"
+        ),
         "athlete_natural_key",
         "athlete_name",
         "first_name",
         "last_name",
         "country",
-        "created_at",
-        "updated_at",
+        F.current_timestamp().alias("created_at"),
+        F.current_timestamp().alias("updated_at"),
     )
 
 
 def build_dim_countries(spark: SparkSession, silver_df: DataFrame) -> DataFrame:
     """04b_gold_dim_countries.ipynb: distinct non-null countries (A4,
-    :130-140) LEFT JOIN the static 92-row code map (J4, :255-266,
-    broadcast), fallbacks name=code / continent='Unknown' (:310-322),
+    :130-140) enriched from the static 92-row code map (J4, :255-266),
+    fallbacks name=code / continent='Unknown' (:310-322),
     athlete_count = countDistinct(athlete_name) per country (A3/J5,
-    :340-374), country_key = abs(hash(country)) (:324)."""
-    countries = (
-        silver_df.select("country").filter(F.col("country").isNotNull()).distinct()
+    :340-374), country_key = abs(hash(country)) (:324).
+
+    The reference LEFT JOINs the map as a broadcast table; here it is
+    one map literal looked up per country (``literal_lookup``), which
+    gives the same rows — a code missing from the map looks up NULL —
+    without a broadcast job or a join to plan. The reference also joins
+    the distinct countries to their athlete counts; the count's own
+    group-by yields every distinct country (0 for a country whose
+    athlete names are all NULL, the reference's coalesced value), so
+    one aggregation over silver gives the same rows. ``spark`` is
+    unused and kept for callers."""
+    mapped = literal_lookup(
+        F.col("country"),
+        {code: {"name": name, "continent": continent} for code, name, continent in COUNTRY_MAPPING},
     )
-    mapping = spark.createDataFrame(
-        COUNTRY_MAPPING, ["country_code", "country_name", "continent"]
-    )
-    enriched = (
-        countries.alias("c")
-        .join(F.broadcast(mapping).alias("m"), F.col("c.country") == F.col("m.country_code"), "left")
-        .select(F.col("c.country"), F.col("m.country_name"), F.col("m.continent"))
-        .withColumn("country_name", F.coalesce(F.col("country_name"), F.col("country")))
-        .withColumn("continent", F.coalesce(F.col("continent"), F.lit("Unknown")))
-        .withColumn("country_key", surrogate_key("country"))
-    )
-    athlete_counts = (
+    counts = (
         silver_df.filter(F.col("country").isNotNull())
         .groupBy("country")
         .agg(F.countDistinct("athlete_name").alias("athlete_count"))
     )
-    out = (
-        enriched.join(athlete_counts, on="country", how="left")
-        .withColumn("athlete_count", F.coalesce(F.col("athlete_count"), F.lit(0)))
-        .withColumn("created_at", F.current_timestamp())
-        .withColumn("updated_at", F.current_timestamp())
-    )
-    return out.select(
-        "country_key",
+    return counts.select(
+        surrogate_key("country").alias("country_key"),
         "country",
-        "country_name",
-        "continent",
+        F.coalesce(mapped["name"], F.col("country")).alias("country_name"),
+        F.coalesce(mapped["continent"], F.lit("Unknown")).alias("continent"),
         "athlete_count",
-        "created_at",
-        "updated_at",
+        F.current_timestamp().alias("created_at"),
+        F.current_timestamp().alias("updated_at"),
     )
 
 
@@ -110,37 +109,26 @@ def build_dim_divisions(silver_df: DataFrame) -> DataFrame:
     'PRO' (:153-156); age bounds via regexp_extract r"(\\d+\\-\\d+)"
     then split-cast (:178-205); human description (:222-243);
     division_key = abs(hash(division)) (:260-270)."""
-    d = silver_df.select("division").filter(F.col("division").isNotNull()).distinct()
-    d = d.withColumn(
-        "gender",
-        F.when(F.col("division").startswith("M"), "M")
-        .when(F.col("division").startswith("F"), "F")
-        .otherwise("UNKNOWN"),
-    ).withColumn(
-        "is_professional",
-        F.when(F.col("division").contains("PRO"), True).otherwise(False),
-    )
-    d = d.withColumn("age_range", F.regexp_extract(F.col("division"), r"(\d+\-\d+)", 1))
+    division = F.col("division")
+    age_range = F.regexp_extract(division, r"(\d+\-\d+)", 1)
     d = (
-        d.withColumn(
-            "age_group_start",
-            F.when(
-                F.col("age_range") != "",
-                F.split(F.col("age_range"), "-").getItem(0).cast("integer"),
-            ).otherwise(None),
-        )
-        .withColumn(
-            "age_group_end",
-            F.when(
-                F.col("age_range") != "",
-                F.split(F.col("age_range"), "-").getItem(1).cast("integer"),
-            ).otherwise(None),
-        )
-        .drop("age_range")
+        silver_df.select("division").filter(division.isNotNull()).distinct()
+    ).select(
+        "division",
+        F.when(division.startswith("M"), "M")
+        .when(division.startswith("F"), "F")
+        .otherwise("UNKNOWN")
+        .alias("gender"),
+        F.when(division.contains("PRO"), True).otherwise(False).alias("is_professional"),
+        F.when(age_range != "", F.split(age_range, "-").getItem(0).cast("integer"))
+        .otherwise(None)
+        .alias("age_group_start"),
+        F.when(age_range != "", F.split(age_range, "-").getItem(1).cast("integer"))
+        .otherwise(None)
+        .alias("age_group_end"),
     )
     gender_word = F.when(F.col("gender") == "M", F.lit("Male")).otherwise(F.lit("Female"))
-    d = d.withColumn(
-        "division_description",
+    description = (
         F.when(
             F.col("is_professional") == True,  # noqa: E712
             F.concat(gender_word, F.lit(" Professional")),
@@ -155,21 +143,16 @@ def build_dim_divisions(silver_df: DataFrame) -> DataFrame:
                 F.col("age_group_end"),
             ),
         )
-        .otherwise(F.col("division")),
-    )
-    d = (
-        d.withColumn("division_key", surrogate_key("division"))
-        .withColumn("created_at", F.current_timestamp())
-        .withColumn("updated_at", F.current_timestamp())
+        .otherwise(division)
     )
     return d.select(
-        "division_key",
+        surrogate_key("division").alias("division_key"),
         "division",
-        "division_description",
+        description.alias("division_description"),
         "gender",
         "is_professional",
         "age_group_start",
         "age_group_end",
-        "created_at",
-        "updated_at",
+        F.current_timestamp().alias("created_at"),
+        F.current_timestamp().alias("updated_at"),
     )

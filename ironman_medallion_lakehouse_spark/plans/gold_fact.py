@@ -122,6 +122,9 @@ def fk_audit(fact: DataFrame) -> dict[str, int]:
     audit BEFORE the 34-column projection drops those attributes; on
     the stored fact the null-FK count is the observable signal (a
     null-attribute row shows up here as an expected unmatched FK).
+    ``pipeline.run`` reads the same counts from the fact's log
+    (``TableStore.null_count``) and scans with this only when a file's
+    footer records no null count.
     """
     agg = fact.agg(
         F.sum(F.when(F.col("athlete_key").isNull(), 1).otherwise(0)).alias("athletes"),

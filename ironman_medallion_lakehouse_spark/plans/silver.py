@@ -74,43 +74,39 @@ def build_silver(bronze_df: DataFrame) -> DataFrame:
       not deletion);
     - 45-column contract with defensive subset select (:615).
     """
-    df = bronze_df
-    for c in INTEGER_COLUMNS:
-        if c in df.columns:
-            df = df.withColumn(c, F.col(c).cast(IntegerType()))
-
-    for src, dst in TIME_COLUMNS:
-        if src in df.columns:
-            df = df.withColumn(dst, parse_time_to_seconds(F.col(src)))
-
-    df = (
-        df.withColumn("country", F.upper(F.trim(F.col("country"))))
-        .withColumn("athlete_name", F.trim(F.col("athlete_name")))
-        .withColumn("designation", F.upper(F.trim(F.col("designation"))))
-        .withColumn("division", F.upper(F.trim(F.col("division"))))
+    cols = set(bronze_df.columns)
+    # three projections, as each stage reads columns the one before it
+    # derives: typed and trimmed → flags, segment sum and name parts →
+    # has_data_issue
+    df = bronze_df.withColumns(
+        {
+            **{c: F.col(c).cast(IntegerType()) for c in INTEGER_COLUMNS if c in cols},
+            **{dst: parse_time_to_seconds(F.col(src)) for src, dst in TIME_COLUMNS if src in cols},
+            "country": F.upper(F.trim(F.col("country"))),
+            "athlete_name": F.trim(F.col("athlete_name")),
+            "designation": F.upper(F.trim(F.col("designation"))),
+            "division": F.upper(F.trim(F.col("division"))),
+        }
     )
 
     d = F.upper(F.col("designation"))
-    df = (
-        df.withColumn("is_finisher", F.when(d == "FINISHER", True).otherwise(False))
-        .withColumn("is_dnf", F.when(d == "DNF", True).otherwise(False))
-        .withColumn("is_dns", F.when(d == "DNS", True).otherwise(False))
-        .withColumn("is_dq", F.when(d == "DQ", True).otherwise(False))
-    )
-
-    df = df.withColumn(
-        "calculated_total_seconds",
-        F.col("swim_time_seconds")
-        + F.col("transition_1_seconds")
-        + F.col("bike_time_seconds")
-        + F.col("transition_2_seconds")
-        + F.col("run_time_seconds"),
-    )
-
     name_parts = F.split(F.col("athlete_name"), " ")
-    df = df.withColumn("first_name", name_parts.getItem(0)).withColumn(
-        "last_name",
-        F.when(F.size(name_parts) > 1, F.element_at(name_parts, -1)).otherwise(None),
+    df = df.withColumns(
+        {
+            "is_finisher": F.when(d == "FINISHER", True).otherwise(False),
+            "is_dnf": F.when(d == "DNF", True).otherwise(False),
+            "is_dns": F.when(d == "DNS", True).otherwise(False),
+            "is_dq": F.when(d == "DQ", True).otherwise(False),
+            "calculated_total_seconds": F.col("swim_time_seconds")
+            + F.col("transition_1_seconds")
+            + F.col("bike_time_seconds")
+            + F.col("transition_2_seconds")
+            + F.col("run_time_seconds"),
+            "first_name": name_parts.getItem(0),
+            "last_name": F.when(F.size(name_parts) > 1, F.element_at(name_parts, -1)).otherwise(
+                None
+            ),
+        }
     )
 
     df = df.withColumn(

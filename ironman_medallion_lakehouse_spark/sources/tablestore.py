@@ -10,7 +10,7 @@ from the public protocol description):
 Layout per table::
 
     <root>/<db>/<table>/
-        _log/00000001.json             # delta: {"version","schema","partition_by","add","remove","stats","num_records"[,"txn"]}
+        _log/00000001.json             # delta: {"version","schema","partition_by","add","remove","stats","num_records","null_counts"[,"txn"]}
         _log/00000010.checkpoint.json  # full snapshot every CHECKPOINT_EVERY commits
         data/                          # immutable parquet files, shared partition dirs
             year=2023/<writeid>-part-....parquet
@@ -46,9 +46,9 @@ Layout per table::
   ``save_overwrite`` and ``optimize`` carry nothing forward. A rewrite
   that adds no row, carries every file and keeps schema, layout and
   txns commits nothing.
-- Every added file's footer min/max stats and row count are logged
-  with it, so ``read_where`` prunes and ``row_count`` counts without
-  a Spark job.
+- Every added file's footer min/max stats, row count and per-column
+  null counts are logged with it, so ``read_where`` prunes and
+  ``row_count`` and ``null_count`` count without a Spark job.
 - A writer may record what it consumed in the same atomic commit as
   its data: ``txn=(app_id, value)`` on the write verbs, Delta's
   ``SetTransaction``. Every later commit carries the table's txns
@@ -128,6 +128,7 @@ def manifest_at(log_dir: str, version: int) -> "Manifest | None":
     files: list[str] = []
     stats: dict[str, dict[str, list]] = {}
     num_records: dict[str, int] = {}
+    null_counts: dict[str, dict[str, int]] = {}
     txns: dict[str, object] = {}
     schema_json, partition_by = "", []
     start = 0
@@ -135,7 +136,8 @@ def manifest_at(log_dir: str, version: int) -> "Manifest | None":
         with open(os.path.join(log_dir, f"{ckpts[-1]:08d}.checkpoint.json")) as fh:
             snap = Manifest.from_json(fh.read())
         files, stats = list(snap.files), dict(snap.stats)
-        num_records, txns = dict(snap.num_records), dict(snap.txns)
+        num_records, null_counts = dict(snap.num_records), dict(snap.null_counts)
+        txns = dict(snap.txns)
         schema_json, partition_by = snap.schema_json, snap.partition_by
         start = snap.version
     for v in range(start + 1, version + 1):
@@ -148,8 +150,10 @@ def manifest_at(log_dir: str, version: int) -> "Manifest | None":
         for f in removed:
             stats.pop(f, None)
             num_records.pop(f, None)
+            null_counts.pop(f, None)
         stats.update(d.get("stats", {}))
         num_records.update(d.get("num_records", {}))
+        null_counts.update(d.get("null_counts", {}))
         txns = d.get("txn", txns)
     return Manifest(
         version=version,
@@ -158,6 +162,7 @@ def manifest_at(log_dir: str, version: int) -> "Manifest | None":
         files=files,
         stats=stats,
         num_records=num_records,
+        null_counts=null_counts,
         txns=txns,
     )
 
@@ -276,6 +281,29 @@ def version_changes(
     return out
 
 
+def _footer_null_counts(md) -> dict[str, int]:
+    """Null count of each top-level primitive column of a parquet
+    file, summed over its row groups from ``md`` (its footer
+    metadata). A column with a row group that records no null count is
+    left out; so are nested columns, whose leaves do not count their
+    parent's nulls."""
+    out: dict[str, int] = {}
+    unknown: set[str] = set()
+    for rg in range(md.num_row_groups):
+        rgm = md.row_group(rg)
+        for ci in range(rgm.num_columns):
+            col = rgm.column(ci)
+            name = col.path_in_schema
+            if "." in name:
+                continue
+            st = col.statistics
+            if st is None or not st.has_null_count:
+                unknown.add(name)
+            else:
+                out[name] = out.get(name, 0) + st.null_count
+    return {c: n for c, n in out.items() if c not in unknown}
+
+
 @dataclass
 class Manifest:
     version: int
@@ -288,6 +316,10 @@ class Manifest:
     # per-file footer row count (Delta's numRecords): path → rows; a
     # file written by an older log has none (see TableStore.row_count)
     num_records: dict[str, int] = field(default_factory=dict)
+    # per-file footer null count of each top-level column (Delta's
+    # stats.nullCount): path → {col: nulls}; a file or column without
+    # one is counted from the footer (see TableStore.null_count)
+    null_counts: dict[str, dict[str, int]] = field(default_factory=dict)
     # app_id → the JSON value its writer last committed (Delta's
     # SetTransaction); see TableStore.last_txn
     txns: dict[str, object] = field(default_factory=dict)
@@ -305,6 +337,7 @@ class Manifest:
                 "files": self.files,
                 "stats": self.stats,
                 "num_records": self.num_records,
+                "null_counts": self.null_counts,
                 "txns": self.txns,
             },
             indent=None,
@@ -320,6 +353,7 @@ class Manifest:
             files=d["files"],
             stats=d.get("stats", {}),
             num_records=d.get("num_records", {}),
+            null_counts=d.get("null_counts", {}),
             txns=d.get("txns", {}),
         )
 
@@ -408,6 +442,9 @@ class TableStore:
             "num_records": {
                 f: manifest.num_records[f] for f in add if f in manifest.num_records
             },
+            "null_counts": {
+                f: manifest.null_counts[f] for f in add if f in manifest.null_counts
+            },
         }
         if manifest.txns != (prev.txns if prev else {}):
             entry["txn"] = manifest.txns
@@ -485,23 +522,26 @@ class TableStore:
     @staticmethod
     def _collect_file_stats(
         data_dir: str, rel_paths: list[str]
-    ) -> tuple[dict[str, dict[str, list]], dict[str, int]]:
+    ) -> tuple[dict[str, dict[str, list]], dict[str, int], dict[str, dict[str, int]]]:
         """Read parquet footer statistics per written file: (min/max per
-        primitive column, row count) — the same metadata Delta/Iceberg
-        record at commit time to enable file skipping and metadata-only
-        counts (Delta's ``numRecords``). Footer reads are O(KB) per
-        file, driver-side, no data scan. A file whose footer cannot be
-        read gets neither."""
+        primitive column, row count, null count per top-level column) —
+        the same metadata Delta/Iceberg record at commit time to enable
+        file skipping and metadata-only counts (Delta's ``numRecords``
+        and ``nullCount``). Footer reads are O(KB) per file,
+        driver-side, no data scan. A file whose footer cannot be read
+        gets none."""
         import pyarrow.parquet as pq
 
         out: dict[str, dict[str, list]] = {}
         rows: dict[str, int] = {}
+        nulls: dict[str, dict[str, int]] = {}
         for rel in rel_paths:
             try:
                 md = pq.ParquetFile(os.path.join(data_dir, rel)).metadata
             except Exception:  # noqa: BLE001 — stats are an optimization only
                 continue
             rows[rel] = md.num_rows
+            nulls[rel] = _footer_null_counts(md)
             col_stats: dict[str, list] = {}
             for rg in range(md.num_row_groups):
                 rgm = md.row_group(rg)
@@ -525,7 +565,7 @@ class TableStore:
                         col_stats[name] = [lo, hi]
             if col_stats:
                 out[rel] = col_stats
-        return out, rows
+        return out, rows, nulls
 
     # ----------------------------------------------------------------- API
     def table_exists(self, name: str) -> bool:
@@ -766,6 +806,50 @@ class TableStore:
             for f in manifest.files
         )
 
+    def null_count(
+        self, name: str, columns: list[str], version: int | None = None
+    ) -> dict[str, int] | None:
+        """NULLs in each of ``columns`` of ``name`` at ``version``
+        (latest by default), summed from the per-file null counts the
+        log records at commit — no Spark job. A file without a recorded
+        count for a column (one committed by an older log) is counted
+        from its parquet footer; a column the file lacks (added by a
+        later schema) is NULL in every row, and a partition column is
+        NULL in every row of a file under its NULL partition. None when
+        a footer records no null count for a column: the caller must
+        then count with a scan. Raises ValueError for a column the
+        table does not have."""
+        import pyarrow.parquet as pq
+
+        manifest = self._require(name, version)
+        missing = [c for c in columns if c not in manifest.schema.fieldNames()]
+        if missing:
+            raise ValueError(f"table {name} has no column(s) {missing}")
+        data_dir = self._data_dir(name)
+        totals = dict.fromkeys(columns, 0)
+        for f in manifest.files:
+            counts = dict(manifest.null_counts.get(f, {}))
+            counts.update(
+                (c, 0) for c, v in partition_values(f, manifest.partition_by) if v is not None
+            )
+            wanted = [c for c in columns if c not in counts]
+            if wanted:
+                md = pq.ParquetFile(os.path.join(data_dir, f)).metadata
+                footer = _footer_null_counts(md)
+                leaves = [md.schema.column(i).path for i in range(md.num_columns)]
+                for c in wanted:
+                    if c in footer:
+                        counts[c] = footer[c]
+                    elif c in manifest.partition_by or not any(
+                        p == c or p.startswith(c + ".") for p in leaves
+                    ):  # a NULL partition, or a column the file lacks
+                        counts[c] = md.num_rows
+                    else:
+                        return None
+            for c in columns:
+                totals[c] += counts[c]
+        return totals
+
     def read_hinted(self, name: str, version: int | None = None) -> DataFrame:
         """``read`` + a broadcast hint when the requested version's data
         files fit under spark.sql.autoBroadcastJoinThreshold.
@@ -873,7 +957,7 @@ class TableStore:
     ) -> int:
         """The one rewrite-and-commit path of every data-writing verb:
         write ``new_rows`` as new files, carry prev's ``untouched``
-        files and their stats and row counts forward byte-identical,
+        files and their stats, row and null counts forward byte-identical,
         and commit ``untouched + new files`` under ``schema`` as
         version prev + 1 (1 when ``prev`` is None: a new table).
         ``partition_by`` defaults to prev's layout; ``distribute`` goes
@@ -904,7 +988,7 @@ class TableStore:
             if at < 0:
                 raise
             raise ValueError(str(e)[at:].split(_MERGE_SEMANTICS)[0] + _MERGE_SEMANTICS) from None
-        new_stats, new_counts = self._collect_file_stats(data_dir, written)
+        new_stats, new_counts, new_nulls = self._collect_file_stats(data_dir, written)
         empty = {f for f in written if new_counts.get(f) == 0}
         for f in empty:
             os.remove(os.path.join(data_dir, f))
@@ -926,11 +1010,14 @@ class TableStore:
         stats.update(new_stats)  # a zero-row file has no column stats
         counts = {f: prev.num_records[f] for f in untouched if f in prev.num_records}
         counts.update((f, new_counts[f]) for f in files if f in new_counts)
+        nulls = {f: prev.null_counts[f] for f in untouched if f in prev.null_counts}
+        nulls.update((f, new_nulls[f]) for f in files if f in new_nulls)
         version = prev.version + 1 if prev else 1
         self._commit(
             name,
             Manifest(
-                version, schema.json(), partition_by, untouched + files, stats, counts, txns
+                version, schema.json(), partition_by, untouched + files, stats, counts,
+                nulls, txns,
             ),
             prev=prev,
         )
@@ -1520,7 +1607,7 @@ class TableStore:
         """Delta ``RESTORE TABLE ... TO VERSION AS OF`` analogue: make
         the CURRENT state equal the state at ``version`` by committing
         a NEW version whose manifest (files, schema, partitioning,
-        stats, txns) is the target's. No data is copied — the old files are
+        stats, row and null counts, txns) is the target's. No data is copied — the old files are
         simply referenced again — and history is preserved: the restore
         is itself a commit, so time travel to the pre-restore state
         still works and the change feed sees the restore as adds of
@@ -1555,6 +1642,7 @@ class TableStore:
                 files=list(target.files),
                 stats=dict(target.stats),
                 num_records=dict(target.num_records),
+                null_counts=dict(target.null_counts),
                 txns=dict(target.txns),
             ),
             prev=latest,

@@ -1,15 +1,18 @@
 """Bronze plan: the driver-side CSV header against Spark's own header
-inference, and the key audit against its group-by definition."""
+inference, the one-scan-per-header read against per-file reads, and the
+key audit against its group-by definition."""
 
 from __future__ import annotations
 
 import csv
 import os
 import tempfile
+from collections import Counter
 
 import pytest
 from hypothesis import example, given, settings
 from hypothesis import strategies as st
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from ironman_medallion_lakehouse_spark.config import FileSpec
@@ -96,3 +99,74 @@ def test_duplicate_key_count_matches_group_by(spark, files):
             specs.append(spec)
         bronze = bronze_plan.build_bronze(spark, root, specs)
         assert bronze_plan.duplicate_key_count(bronze) == _group_by_oracle(bronze)
+
+
+def _per_file_oracle(spark, source_dir, files):
+    """build_bronze as one scan per file: each file read on its own,
+    the frames folded by unionByName, then the W1 window's columns
+    added one at a time and dropped."""
+    dfs = [bronze_plan.read_csv_with_metadata(spark, f.path(source_dir), f.year, f.gender)
+           for f in files]
+    df = dfs[0]
+    for other in dfs[1:]:
+        df = df.unionByName(other, allowMissingColumns=True)
+    df = df.withColumn(
+        "athlete_name_clean",
+        F.lower(F.regexp_replace(F.col("athlete_name"), "[^a-zA-Z0-9]", "")),
+    )
+    w = Window.partitionBy("year", "source_gender", "athlete_name_clean").orderBy(
+        F.col("rank").asc_nulls_last(), F.col("bib").asc_nulls_last()
+    )
+    df = df.withColumn("dup_rank", F.row_number().over(w))
+    df = df.withColumn("row_key", F.concat(
+        F.col("year").cast("string"), F.lit("_"), F.col("source_gender"), F.lit("_"),
+        F.col("athlete_name_clean"), F.lit("_"), F.col("dup_rank").cast("string")))
+    return df.drop("athlete_name_clean", "dup_rank")
+
+
+def _write_csv(path, header, rows):
+    os.makedirs(os.path.dirname(path), exist_ok=True)
+    with open(path, "w", encoding="utf-8", newline="") as fh:
+        csv.writer(fh).writerows([header, *rows])
+
+
+def test_bronze_one_scan_per_header_equals_per_file_reads(spark, tmp_path):
+    """Files sharing a header are read by one scan and looked up by
+    path: the result equals the per-file fold in rows, column order
+    and types, for awkward file names, two header groups listed out of
+    order, "-" and empty cells, and a directory of parts."""
+    root = str(tmp_path / "land ing")
+    full = ["rank", "athlete_name", "bib", "country"]
+    other = ["bib", "athlete_name", "rank"]  # reordered, no country
+    layout = [
+        (FileSpec(2023, "M", "men 2023.csv"), full,
+         [["1", "Ann Lee", "7", "US"], ["2", "Ann Lee", "8", "-"], ["-", "", "9", ""]]),
+        (FileSpec(2023, "F", "wo%20men.csv"), other, [["3", "Zoë Ö", "1"], ["4", "-", "-"]]),
+        (FileSpec(2024, "F", "é-ü.csv"), full, [["5", "Bo", "2", "DE"]]),
+        (FileSpec(2024, "M", "it's.csv"), other, [["6", "Cy", "3"]]),
+    ]
+    for spec, header, rows in layout:
+        _write_csv(spec.path(root), header, rows)
+    parts = FileSpec(2025, "M", "parts")
+    spark.createDataFrame([("5", "Di", "4", "FR"), ("-", "Ed", "", "IT")], ", ".join(
+        f"{c} string" for c in full)).repartition(2).write.option("header", "true") \
+        .csv(parts.path(root))
+    files = [spec for spec, _h, _r in layout] + [parts]
+
+    got = bronze_plan.build_bronze(spark, root, files)
+    want = _per_file_oracle(spark, root, files)
+    assert got.columns == want.columns
+    assert [f.dataType for f in got.schema] == [f.dataType for f in want.schema]
+    drop = ("load_timestamp", "load_date")  # each plan stamps its own clock
+    rows = Counter(tuple(r) for r in got.drop(*drop).collect())
+    assert rows == Counter(tuple(r) for r in want.drop(*drop).collect())
+    assert sum(rows.values()) == 9
+    assert got.filter(F.col("year").isNull() | F.col("source_file").isNull()).count() == 0
+    assert {r.source_file for r in got.select("source_file").distinct().collect()} == {
+        f.path(root) for f in files}
+
+
+def test_bronze_rejects_a_file_listed_twice(spark, landing_dir):
+    spec = FileSpec(2023, "M", "2023_men.csv")
+    with pytest.raises(ValueError, match="more than once"):
+        bronze_plan.build_bronze(spark, landing_dir, [spec, FileSpec(2023, "F", "2023_men.csv")])

@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 from ironman_medallion_lakehouse_spark import config as C
 from ironman_medallion_lakehouse_spark import pipeline
 from ironman_medallion_lakehouse_spark.config import FileSpec, PipelineConfig
+from ironman_medallion_lakehouse_spark.plans import gold_fact
 from ironman_medallion_lakehouse_spark.plans.views import VIEW_SQL
 from ironman_medallion_lakehouse_spark.sources.tablestore import TableStore
 
@@ -107,6 +108,9 @@ def test_fact_fk_resolution(full_run):
     fact = store.read(C.FACT_RESULTS)
     assert fact.filter(F.col("athlete_key").isNull()).count() == 0
     assert result.unmatched_fks["athletes"] == 0
+    # the audit's counts come from the fact's log; the scan agrees
+    assert result.unmatched_fks == gold_fact.fk_audit(fact)
+    assert result.unmatched_fks["countries"] >= 1  # the empty-country row
     assert len(fact.columns) == 34  # 04d 34-column contract
 
 
@@ -252,16 +256,14 @@ def test_run_killed_after_kth_commit_resumes_at_next_table(
 
 def test_noop_rerun_runs_no_spark_job(spark, landing_dir, tmp_path_factory, monkeypatch,
                                       snapshot_2023):
-    """With the trailing audit stubbed out, rerunning an appended year
-    runs no Spark job at all — none in the layers and none between
-    them."""
-    from ironman_medallion_lakehouse_spark.plans import gold_fact
-
+    """With the silver quality scan stubbed out, rerunning an appended
+    year runs no Spark job at all — none in the layers, none between
+    them and none in the rest of the audit: row counts and unmatched
+    FKs come from the tables' logs."""
     snapshot, _ = snapshot_2023
     wh = str(tmp_path_factory.mktemp("wh_noop") / "wh")
     shutil.copytree(snapshot, wh)
-    pipeline.run(spark, _incremental_2024(landing_dir, wh))
-    monkeypatch.setattr(gold_fact, "fk_audit", lambda fact: {})
+    first = pipeline.run(spark, _incremental_2024(landing_dir, wh))
     monkeypatch.setattr(pipeline, "_silver_quality", lambda silver: {})
     sc = spark.sparkContext
     group = "pipeline-noop-rerun"
@@ -272,6 +274,7 @@ def test_noop_rerun_runs_no_spark_job(spark, landing_dir, tmp_path_factory, monk
         sc.setJobGroup(None, None)
     sc._jsc.sc().listenerBus().waitUntilEmpty()
     assert rerun.skipped == pipeline.ALL_TABLES
+    assert rerun.unmatched_fks == first.unmatched_fks
     assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
 
 
@@ -336,6 +339,19 @@ def test_config_validation(landing_dir):
     )
     with pytest.raises(FileNotFoundError):
         cfg.validate_sources()
+
+
+def test_config_rejects_a_file_listed_twice(landing_dir):
+    """A landing file listed twice (under any spelling of its path)
+    would be ingested twice: validation names it."""
+    specs = [FileSpec(2023, "M", "2023_men.csv"), FileSpec(2023, "F", "2023_women.csv"),
+             FileSpec(2023, "F", "../year=2023/2023_men.csv")]
+    cfg = PipelineConfig(source_dir=landing_dir, warehouse_dir="/tmp/x", files=specs)
+    with pytest.raises(ValueError, match="2023_men.csv") as e:
+        cfg.validate_sources()
+    assert "2023_women.csv" not in str(e.value)
+    PipelineConfig(source_dir=landing_dir, warehouse_dir="/tmp/x", files=specs[:2]) \
+        .validate_sources()
 
 
 def test_publish_catalog_qualified_sql(full_run, spark):

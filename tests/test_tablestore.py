@@ -8,6 +8,7 @@ import os
 import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
+from pyspark.sql.types import TimestampType
 
 from ironman_medallion_lakehouse_spark.sources.tablestore import TableStore
 
@@ -287,9 +288,10 @@ def test_crash_mid_commit_leaves_previous_version_and_vacuum_reclaims(
 @pytest.mark.parametrize("verb", sorted(_REWRITE_VERBS))
 def test_rewrite_commit_invariants(spark, tmp_path, monkeypatch, verb):
     """Every rewriting verb commits version prev + 1; files it does not
-    rewrite carry forward with their bytes and stats unchanged; every
-    file it adds has footer stats; and its log entry's add/remove lists
-    are exactly the diff between the two manifests. The commit also
+    rewrite carry forward with their bytes, stats, row and null counts
+    unchanged; every file it adds has footer stats and a null count for
+    each data column; and its log entry's add/remove lists are exactly
+    the diff between the two manifests. The commit also
     writes a checkpoint, so the manifest read back is the full snapshot
     the verb built, not a replay of earlier log entries."""
     import hashlib
@@ -323,8 +325,14 @@ def test_rewrite_commit_invariants(spark, tmp_path, monkeypatch, verb):
         assert digest(f) == digests[f]
         assert new.stats.get(f) == prev.stats.get(f)
         assert new.num_records[f] == prev.num_records[f]
+        assert new.null_counts[f] == prev.null_counts[f]
     assert all(new.stats.get(f) for f in added)
     assert all(new.num_records[f] > 0 for f in added)
+    data_columns = {  # INT96 timestamps have no footer statistics
+        f.name for f in new.schema.fields
+        if f.name not in new.partition_by and f.dataType != TimestampType()
+    }
+    assert all(set(new.null_counts[f]) == data_columns for f in added)
 
     with open(os.path.join(st._log_dir("db.t"), f"{new.version:08d}.json")) as fh:
         entry = json.load(fh)
@@ -520,6 +528,111 @@ def test_row_count_after_restore_and_without_recorded_counts(spark, tmp_path, mo
     for v in st._log_versions("db.t"):
         assert not st._manifest_at("db.t", v).num_records
         assert st.row_count("db.t", version=v) == st.read("db.t", version=v).count()
+
+
+def _scanned_null_counts(df) -> dict[str, int]:
+    """Each column's NULLs, counted by a scan."""
+    row = df.agg(*[F.count(F.when(F.col(c).isNull(), 1)).alias(c) for c in df.columns]).first()
+    return row.asDict()
+
+
+def _assert_null_counts_match_scans(st, name):
+    """null_count equals the scan for every column at every version.
+    Spark writes timestamps as INT96, whose footers record no
+    statistics: null_count answers None for those."""
+    for v in st._log_versions(name):
+        df = st.read(name, version=v)
+        want = _scanned_null_counts(df)
+        for c in df.columns:
+            got = st.null_count(name, [c], version=v)
+            if df.schema[c].dataType == TimestampType():
+                assert got is None, (v, c)
+            else:
+                assert got == {c: want[c]}, (v, c)
+
+
+_NULL_ROWS = "k string, y long, v long"
+
+
+@pytest.mark.parametrize("verb", sorted(_REWRITE_VERBS))
+def test_null_count_matches_scan(spark, tmp_path, verb):
+    """null_count, summed from the log's per-file null counts, equals
+    a scan's count of NULLs in every column at every version: after
+    save_overwrite, after a merge that adds a row with NULL payload and
+    a NULL partition value, and after the verb under test."""
+    st = _store(spark, tmp_path)
+    _two_versions(spark, st, verb)
+    nulls = spark.createDataFrame([("n", None, None), ("m", 2, None)], _NULL_ROWS)
+    if verb == "merge_scd2":
+        st.merge_scd2(nulls, "db.t", keys=["k", "y"], effective_ts="2024-02-15")
+    else:
+        st.merge_insert_only(nulls, "db.t", keys=["k", "y"])
+    _REWRITE_VERBS[verb](st, spark.createDataFrame(_V_SOURCE))
+    m = st._latest_manifest("db.t")
+    assert set(m.null_counts) == set(m.files)  # every file's counts are recorded
+    _assert_null_counts_match_scans(st, "db.t")
+
+
+def test_null_counts_survive_checkpoint_optimize_restore_and_widening(
+    spark, tmp_path, monkeypatch
+):
+    """Every commit is also a checkpoint, so each manifest read back is
+    a snapshot: the null counts survive it, an optimize that rewrites
+    every file, a schema-widening merge (older files lack the new
+    column: NULL in all their rows) and a restore."""
+    from ironman_medallion_lakehouse_spark.sources import tablestore
+
+    monkeypatch.setattr(tablestore, "CHECKPOINT_EVERY", 1)
+    st = _store(spark, tmp_path)
+    rows = [("a", 1, None), ("b", 1, 2), ("c", None, 3)]
+    st.save_overwrite(spark.createDataFrame(rows, _NULL_ROWS), "db.t", partition_by=["y"])  # v1
+    st.merge_insert_only(spark.createDataFrame([("d", 2, None)], _NULL_ROWS), "db.t",
+                         keys=["k"])  # v2
+    st.optimize("db.t", target_partitions=1)  # v3
+    st.merge_insert_only(
+        spark.createDataFrame([("e", 2, 4, "x")], _NULL_ROWS + ", w string"), "db.t",
+        keys=["k"], merge_schema=True,
+    )  # v4
+    assert st.restore("db.t", 2) == 5
+    assert st._checkpoint_versions("db.t") == [1, 2, 3, 4, 5]
+    for v in st._log_versions("db.t"):
+        m = st._manifest_at("db.t", v)
+        assert set(m.null_counts) == set(m.files), v  # logged, not read from footers
+    assert st.null_count("db.t", ["v", "y"]) == {"v": 2, "y": 1}
+    assert st.null_count("db.t", ["w"], version=4) == {"w": 4}
+    _assert_null_counts_match_scans(st, "db.t")
+    with pytest.raises(ValueError, match="no column"):
+        st.null_count("db.t", ["nope"])
+
+
+def test_null_count_without_recorded_counts_reads_footers(spark, tmp_path):
+    """A log whose entries carry no null counts (an older log) is
+    answered from the files' footers; a footer without null counts
+    gives None, the caller's cue to scan."""
+    import json
+
+    import pyarrow.parquet as pq
+
+    st = _store(spark, tmp_path)
+    st.save_overwrite(spark.createDataFrame([("a", 1, None), ("b", None, 2)], _NULL_ROWS),
+                      "db.t", partition_by=["y"])
+    st.merge_insert_only(spark.createDataFrame([("c", 1, None)], _NULL_ROWS), "db.t", keys=["k"])
+    log_dir = st._log_dir("db.t")
+    for fn in os.listdir(log_dir):
+        path = os.path.join(log_dir, fn)
+        with open(path) as fh:
+            entry = json.load(fh)
+        entry.pop("null_counts", None)
+        with open(path, "w") as fh:
+            json.dump(entry, fh)
+    assert not st._latest_manifest("db.t").null_counts
+    _assert_null_counts_match_scans(st, "db.t")
+
+    rel = st._latest_manifest("db.t").files[0]
+    path = os.path.join(st._data_dir("db.t"), rel)
+    pq.write_table(pq.read_table(path), path, write_statistics=False)
+    assert st.null_count("db.t", ["v"]) is None
+    assert st.null_count("db.t", ["y"]) == {"y": 1}  # a partition column needs no stats
 
 
 def test_scd1_preserves_genuine_null_payload(spark, tmp_path):
