@@ -10,7 +10,7 @@ from the public protocol description):
 Layout per table::
 
     <root>/<db>/<table>/
-        _log/00000001.json             # delta: {"version","schema","partition_by","add","remove","stats","num_records","null_counts"[,"txn"]}
+        _log/00000001.json             # delta: {"version","schema","partition_by","add","remove","num_records","null_counts"[,"txn"]}
         _log/00000010.checkpoint.json  # full snapshot every CHECKPOINT_EVERY commits
         data/                          # immutable parquet files, shared partition dirs
             year=2023/<writeid>-part-....parquet
@@ -26,29 +26,25 @@ Layout per table::
   **one scan** (``_read_file_subset``: recorded schema, ``basePath``),
   **one file planner** (``_plan_files``) returning (touched, untouched)
   files, and **one rewrite-and-commit** (``_rewrite``): write the
-  verb's new rows, carry untouched files and their stats forward
+  verb's new rows, carry untouched files and their counts forward
   byte-identical, commit version prev + 1. The planner runs up to
-  three phases, each narrowing the touched set:
+  two phases, each narrowing the touched set:
     1. *partition prune* — keep files whose hive partition values are
        wanted: the merges (``merge_insert_only``, ``merge_scd1``,
        ``merge_scd2``) when partition ⊆ keys, with the source's
        distinct partition values; ``read_partitions``;
-    2. *stats prune* — keep files whose footer [min, max] for a column
-       intersects [lo, hi]: ``read_where``, ``skipped_file_count``, and
-       ``delete_where``/``update_where`` given a ``prune_column`` hint;
-    3. *discovery scan* — keep files holding a row that satisfies a
-       predicate (one ``input_file_name()`` job): ``delete_where``,
-       ``update_where``.
+    2. *discovery scan* — keep files holding a row that satisfies a
+       predicate (one ``input_file_name()`` job): ``delete_where``.
   Insert-only merge appends: every existing file is carried forward, so
   it is O(new data), not O(table). SCD-1/SCD-2 merges rewrite the
-  touched partitions (all files, for an unpartitioned table); the
-  predicate DML rewrites only files with a matching row;
+  touched partitions (all files, for an unpartitioned table);
+  ``delete_where`` rewrites only files with a matching row;
   ``save_overwrite`` and ``optimize`` carry nothing forward. A rewrite
   that adds no row, carries every file and keeps schema, layout and
   txns commits nothing.
-- Every added file's footer min/max stats, row count and per-column
-  null counts are logged with it, so ``read_where`` prunes and
-  ``row_count`` and ``null_count`` count without a Spark job.
+- Every added file's footer row count and per-column null counts are
+  logged with it, so ``row_count`` and ``null_count`` count without a
+  Spark job.
 - A writer may record what it consumed in the same atomic commit as
   its data: ``txn=(app_id, value)`` on the write verbs, Delta's
   ``SetTransaction``. Every later commit carries the table's txns
@@ -91,10 +87,6 @@ _NULL = "\0null"
 _DUPLICATE_KEYS = "merge source has duplicate rows per key"
 _MERGE_SEMANTICS = "(Delta MERGE semantics)"
 
-# sentinel: "caller didn't supply the previous manifest — replay the log"
-_DERIVE_PREV: "Manifest | None" = object()  # type: ignore[assignment]
-
-
 class ConcurrentCommitError(RuntimeError):
     """Another writer committed the same table version first."""
 
@@ -126,7 +118,6 @@ def manifest_at(log_dir: str, version: int) -> "Manifest | None":
         return None
     ckpts = [v for v in checkpoint_versions(log_dir) if v <= version]
     files: list[str] = []
-    stats: dict[str, dict[str, list]] = {}
     num_records: dict[str, int] = {}
     null_counts: dict[str, dict[str, int]] = {}
     txns: dict[str, object] = {}
@@ -135,7 +126,7 @@ def manifest_at(log_dir: str, version: int) -> "Manifest | None":
     if ckpts:
         with open(os.path.join(log_dir, f"{ckpts[-1]:08d}.checkpoint.json")) as fh:
             snap = Manifest.from_json(fh.read())
-        files, stats = list(snap.files), dict(snap.stats)
+        files = list(snap.files)
         num_records, null_counts = dict(snap.num_records), dict(snap.null_counts)
         txns = dict(snap.txns)
         schema_json, partition_by = snap.schema_json, snap.partition_by
@@ -148,10 +139,8 @@ def manifest_at(log_dir: str, version: int) -> "Manifest | None":
         removed = set(d.get("remove", []))
         files = [f for f in files if f not in removed] + d.get("add", [])
         for f in removed:
-            stats.pop(f, None)
             num_records.pop(f, None)
             null_counts.pop(f, None)
-        stats.update(d.get("stats", {}))
         num_records.update(d.get("num_records", {}))
         null_counts.update(d.get("null_counts", {}))
         txns = d.get("txn", txns)
@@ -160,7 +149,6 @@ def manifest_at(log_dir: str, version: int) -> "Manifest | None":
         schema_json=schema_json,
         partition_by=partition_by,
         files=files,
-        stats=stats,
         num_records=num_records,
         null_counts=null_counts,
         txns=txns,
@@ -233,16 +221,10 @@ def _render_partition_value(v, dtype=None) -> str:
             return "NaN"
         if math.isinf(v):
             return "Infinity" if v > 0 else "-Infinity"
-        digits = None
-        try:
-            from pyspark.sql.types import FloatType
+        import numpy as np
+        from pyspark.sql.types import FloatType
 
-            if isinstance(dtype, FloatType):
-                import numpy as np
-
-                digits = repr(np.float32(abs(v)))
-        except ImportError:  # pragma: no cover — numpy is baked in
-            pass
+        digits = repr(np.float32(abs(v))) if isinstance(dtype, FloatType) else None
         s = _java_style_float_str(abs(v), digits)
         return f"-{s}" if math.copysign(1.0, v) < 0 else s
     if isinstance(v, _dt.datetime):  # before date: datetime subclasses date
@@ -310,9 +292,6 @@ class Manifest:
     schema_json: str
     partition_by: list[str]
     files: list[str] = field(default_factory=list)  # paths relative to data/
-    # per-file column stats for data skipping: path → {col: [min, max]}
-    # (numeric/string primitives only; absent = no stats = never skipped)
-    stats: dict[str, dict[str, list]] = field(default_factory=dict)
     # per-file footer row count (Delta's numRecords): path → rows; a
     # file written by an older log has none (see TableStore.row_count)
     num_records: dict[str, int] = field(default_factory=dict)
@@ -335,7 +314,6 @@ class Manifest:
                 "schema": self.schema_json,
                 "partition_by": self.partition_by,
                 "files": self.files,
-                "stats": self.stats,
                 "num_records": self.num_records,
                 "null_counts": self.null_counts,
                 "txns": self.txns,
@@ -351,7 +329,6 @@ class Manifest:
             schema_json=d["schema"],
             partition_by=d["partition_by"],
             files=d["files"],
-            stats=d.get("stats", {}),
             num_records=d.get("num_records", {}),
             null_counts=d.get("null_counts", {}),
             txns=d.get("txns", {}),
@@ -381,7 +358,7 @@ class TableStore:
     #
     # The log is CHUNKED (Delta-protocol style, re-derived from the
     # public description): each commit writes a small delta entry
-    # {add, remove, stats-of-added} — O(changed files), NOT O(table) —
+    # {add, remove, counts-of-added} — O(changed files), NOT O(table) —
     # and every CHECKPOINT_EVERY-th commit also writes a full-snapshot
     # checkpoint so readers replay a bounded suffix. At 100 TB with
     # millions of live files, per-commit cost stays proportional to the
@@ -401,9 +378,7 @@ class TableStore:
     def _manifest_at(self, name: str, version: int) -> Manifest | None:
         return manifest_at(self._log_dir(name), version)
 
-    def _commit(
-        self, name: str, manifest: Manifest, prev: Manifest | None = _DERIVE_PREV
-    ) -> None:
+    def _commit(self, name: str, manifest: Manifest, prev: Manifest | None) -> None:
         """Commit the target state as a DELTA entry (diff vs the
         previous version), put-if-absent: os.link refuses to replace an
         existing entry, so two writers that both read version N cannot
@@ -413,7 +388,7 @@ class TableStore:
         additionally writes a full-snapshot checkpoint.
 
         Callers pass the previous Manifest they already hold (``prev``,
-        None for a new table) so the commit doesn't replay the log a
+        None for a new table), so the commit doesn't replay the log a
         second time — at one commit per streaming micro-batch the
         duplicate checkpoint+delta reads are the dominant metadata
         cost.
@@ -422,12 +397,6 @@ class TableStore:
         it differs from prev's; replay takes the latest map it meets."""
         log_dir = self._log_dir(name)
         os.makedirs(log_dir, exist_ok=True)
-        if prev is _DERIVE_PREV:
-            prev = (
-                self._manifest_at(name, manifest.version - 1)
-                if manifest.version > 1
-                else None
-            )
         prev_files = set(prev.files) if prev else set()
         new_files = set(manifest.files)
         add = [f for f in manifest.files if f not in prev_files]
@@ -438,7 +407,6 @@ class TableStore:
             "partition_by": manifest.partition_by,
             "add": add,
             "remove": remove,
-            "stats": {f: manifest.stats[f] for f in add if f in manifest.stats},
             "num_records": {
                 f: manifest.num_records[f] for f in add if f in manifest.num_records
             },
@@ -487,8 +455,8 @@ class TableStore:
         size needs — without it a T-task upstream writing P partitions
         emits up to T×P small files at cluster scale. Applied HERE so
         every write path (overwrite, both merges, streaming ingest)
-        shares it; callers that have already arranged the distribution
-        (range clustering, explicit compaction) pass False.
+        shares it; ``optimize``, which has already arranged the
+        distribution, passes False.
         """
         data_dir = self._data_dir(name)
         os.makedirs(data_dir, exist_ok=True)
@@ -522,50 +490,23 @@ class TableStore:
     @staticmethod
     def _collect_file_stats(
         data_dir: str, rel_paths: list[str]
-    ) -> tuple[dict[str, dict[str, list]], dict[str, int], dict[str, dict[str, int]]]:
-        """Read parquet footer statistics per written file: (min/max per
-        primitive column, row count, null count per top-level column) —
-        the same metadata Delta/Iceberg record at commit time to enable
-        file skipping and metadata-only counts (Delta's ``numRecords``
-        and ``nullCount``). Footer reads are O(KB) per file,
-        driver-side, no data scan. A file whose footer cannot be read
-        gets none."""
+    ) -> tuple[dict[str, int], dict[str, dict[str, int]]]:
+        """Read each written file's parquet footer once: (row count,
+        null count per top-level column) — the metadata Delta records
+        at commit time as ``numRecords`` and ``nullCount`` for
+        metadata-only counts. Footer reads are O(KB) per file,
+        driver-side, no data scan. A footer that cannot be read raises:
+        the counts drive the empty-commit skip, ``row_count`` and the
+        FK audit, so a file must not be committed without them."""
         import pyarrow.parquet as pq
 
-        out: dict[str, dict[str, list]] = {}
         rows: dict[str, int] = {}
         nulls: dict[str, dict[str, int]] = {}
         for rel in rel_paths:
-            try:
-                md = pq.ParquetFile(os.path.join(data_dir, rel)).metadata
-            except Exception:  # noqa: BLE001 — stats are an optimization only
-                continue
+            md = pq.ParquetFile(os.path.join(data_dir, rel)).metadata
             rows[rel] = md.num_rows
             nulls[rel] = _footer_null_counts(md)
-            col_stats: dict[str, list] = {}
-            for rg in range(md.num_row_groups):
-                rgm = md.row_group(rg)
-                for ci in range(rgm.num_columns):
-                    col = rgm.column(ci)
-                    st = col.statistics
-                    if st is None or not st.has_min_max:
-                        continue
-                    lo, hi = st.min, st.max
-                    if isinstance(lo, bytes):
-                        try:
-                            lo, hi = lo.decode(), hi.decode()
-                        except UnicodeDecodeError:
-                            continue
-                    if not isinstance(lo, (int, float, str)):
-                        continue
-                    name = col.path_in_schema
-                    if name in col_stats:
-                        col_stats[name] = [min(col_stats[name][0], lo), max(col_stats[name][1], hi)]
-                    else:
-                        col_stats[name] = [lo, hi]
-            if col_stats:
-                out[rel] = col_stats
-        return out, rows, nulls
+        return rows, nulls
 
     # ----------------------------------------------------------------- API
     def table_exists(self, name: str) -> bool:
@@ -629,28 +570,20 @@ class TableStore:
         name: str,
         manifest: Manifest,
         partitions: tuple[list[str], list[tuple]] | None = None,
-        prune_column: str | None = None,
-        lo=None,
-        hi=None,
         cond=None,
     ) -> tuple[list[str], list[str]]:
         """(touched, untouched) relative file paths, both in manifest
         order — the one file planner behind every read and write verb,
-        Delta's MERGE/UPDATE/DELETE file planning. Each phase that is
-        asked for narrows the touched set; a phase not asked for keeps
-        every file:
+        Delta's MERGE/DELETE file planning. Each phase that is asked
+        for narrows the touched set; a phase not asked for keeps every
+        file:
 
         1. *Partition prune* (``partitions`` = (columns, wanted value
            tuples)): keep files whose hive partition values are wanted.
            Matching parses the path segments and renders the wanted
            values type-aware, so escaped, NULL, float, date, timestamp
            and decimal keys match Spark's path form. Manifest-only.
-        2. *Stats prune* (``prune_column``/``lo``/``hi``, either bound
-           may be None): drop files whose recorded footer [min, max]
-           cannot intersect the range; files without stats are kept.
-           Manifest-only — at 100 TB a time-scoped predicate on an
-           ingest-clustered table eliminates almost every file here.
-        3. *Discovery scan* (``cond``): read the surviving candidates
+        2. *Discovery scan* (``cond``): read the surviving candidates
            projecting ONLY ``input_file_name()`` after the predicate and
            collect the distinct files holding a matching row (bounded by
            the file count, not the row count). A candidate with no
@@ -671,15 +604,6 @@ class TableStore:
                 if tuple(_NULL if v is None else v for _c, v in partition_values(f, cols))
                 in wanted
             ]
-        if prune_column is not None:
-
-            def overlaps(rel: str) -> bool:
-                st = manifest.stats.get(rel, {}).get(prune_column)
-                return st is None or not (
-                    (lo is not None and st[1] < lo) or (hi is not None and st[0] > hi)
-                )
-
-            files = [f for f in files if overlaps(f)]
         if cond is not None and files:
             hit_uris = (
                 self._read_file_subset(name, manifest, files)
@@ -697,29 +621,6 @@ class TableStore:
         touched = set(files)
         return files, [f for f in manifest.files if f not in touched]
 
-    def read_where(
-        self, name: str, column: str, lo=None, hi=None
-    ) -> DataFrame:
-        """Data-skipping read: scan only files whose footer [min, max]
-        for ``column`` intersects [lo, hi] (either bound may be None),
-        then apply the exact predicate.
-
-        This is manifest-level file pruning — the mechanism behind
-        Delta/Iceberg data skipping: at 100 TB a selective predicate on
-        a write-clustered column (e.g. an event-time ingest) reduces
-        the scan to the handful of files that can contain matches,
-        before Spark ever plans the query. Files without recorded
-        stats are conservatively kept.
-        """
-        manifest = self._require(name)
-        kept, _ = self._plan_files(name, manifest, prune_column=column, lo=lo, hi=hi)
-        df = self._read_file_subset(name, manifest, kept)
-        if lo is not None:
-            df = df.filter(F.col(column) >= F.lit(lo))
-        if hi is not None:
-            df = df.filter(F.col(column) <= F.lit(hi))
-        return df
-
     def read_partitions(self, name: str, column: str, values: list) -> DataFrame:
         """Manifest-level partition pruning: read ONLY the files that
         live under ``column=<value>/`` partition directories for the
@@ -732,13 +633,6 @@ class TableStore:
             raise ValueError(f"{column} is not a partition column of {name}")
         kept, _ = self._plan_files(name, manifest, partitions=([column], [(v,) for v in values]))
         return self._read_file_subset(name, manifest, kept)
-
-    def skipped_file_count(self, name: str, column: str, lo=None, hi=None) -> tuple[int, int]:
-        """(files_kept, files_total) for a prospective read_where —
-        observability hook for tests and planning."""
-        manifest = self._require(name)
-        kept, _ = self._plan_files(name, manifest, prune_column=column, lo=lo, hi=hi)
-        return len(kept), len(manifest.files)
 
     # --------------------------------------------------------------- analyze
     #
@@ -885,63 +779,18 @@ class TableStore:
         df: DataFrame,
         name: str,
         partition_by: list[str] | None = None,
-        cluster_by: list[str] | None = None,
-        cluster_files: int | None = None,
-        zorder_by: list[str] | None = None,
-        optimize_write: bool = True,
         txn: tuple[str, object] | None = None,
     ) -> None:
         """Full load: format("delta").mode("overwrite")
         .option("overwriteSchema","true") equivalent (02_bronze.ipynb:301-310).
 
-        ``cluster_by`` is the Z-order/liquid-clustering analogue for
-        multi-column data skipping (beyond-reference; the reference
-        runs plain OPTIMIZE): rows are range-repartitioned then sorted
-        within files on the given columns, so each file's footer
-        min/max for those columns covers a narrow slice and
-        ``read_where`` prunes most files. Range-clustering gives
-        perfect skipping on the leading column and locality on the
-        rest — the same practical effect Z-ordering targets, using
-        only built-in exchange/sort operators.
-
-        ``zorder_by`` clusters on the interleaved Morton value instead
-        (operators/zorder.py): balanced min/max skipping on EVERY
-        listed column, where ``cluster_by``'s lexicographic sort skips
-        only on the leading one. Use cluster_by for one hot filter
-        column, zorder_by for multi-dimensional probe workloads.
-
-        ``optimize_write`` (default on): see ``_write_files`` — the
-        rebalance-hint write distribution shared by every write path;
-        clustering supplies its own distribution, so the two are
-        mutually exclusive here.
-
+        A partitioned write goes through ``_write_files``' rebalance
+        hint, the write distribution shared by every write path.
         ``txn=(app_id, value)`` records what the write consumed in the
         same commit (see ``_rewrite``)."""
-        partition_by = partition_by or []
-        distribute = bool(optimize_write)
-        if cluster_by and zorder_by:
-            raise ValueError("cluster_by and zorder_by are mutually exclusive")
-        if zorder_by:
-            from ironman_medallion_lakehouse_spark.operators.zorder import zorder_value
-
-            z = zorder_value(df, zorder_by)
-            df = df.withColumn("_zv", z)
-            df = (
-                df.repartitionByRange(cluster_files, "_zv")
-                if cluster_files
-                else df.repartitionByRange("_zv")
-            ).sortWithinPartitions("_zv").drop("_zv")
-            distribute = False
-        elif cluster_by:
-            df = (
-                df.repartitionByRange(cluster_files, *cluster_by)
-                if cluster_files
-                else df.repartitionByRange(*cluster_by)
-            ).sortWithinPartitions(*cluster_by)
-            distribute = False
         self._rewrite(
             name, self._latest_manifest(name), df, [], df.schema,
-            partition_by=partition_by, distribute=distribute, txn=txn,
+            partition_by=partition_by or [], txn=txn,
         )
 
     def _rewrite(
@@ -957,8 +806,8 @@ class TableStore:
     ) -> int:
         """The one rewrite-and-commit path of every data-writing verb:
         write ``new_rows`` as new files, carry prev's ``untouched``
-        files and their stats, row and null counts forward byte-identical,
-        and commit ``untouched + new files`` under ``schema`` as
+        files and their row and null counts forward byte-identical, and
+        commit ``untouched + new files`` under ``schema`` as
         version prev + 1 (1 when ``prev`` is None: a new table).
         ``partition_by`` defaults to prev's layout; ``distribute`` goes
         to ``_write_files``. Returns the committed version.
@@ -977,7 +826,10 @@ class TableStore:
         alone, with no file added or removed.
 
         A write job failed by a merge's duplicate-key check (see
-        ``_unique_keys``) surfaces as ValueError; nothing is committed."""
+        ``_unique_keys``) surfaces as ValueError; nothing is committed.
+        Nor is anything when a written file's footer cannot be read
+        (``_collect_file_stats`` raises): the version is unchanged, and
+        the written files are orphans that ``vacuum`` reclaims."""
         if partition_by is None:
             partition_by = prev.partition_by
         data_dir = self._data_dir(name)
@@ -988,8 +840,8 @@ class TableStore:
             if at < 0:
                 raise
             raise ValueError(str(e)[at:].split(_MERGE_SEMANTICS)[0] + _MERGE_SEMANTICS) from None
-        new_stats, new_counts, new_nulls = self._collect_file_stats(data_dir, written)
-        empty = {f for f in written if new_counts.get(f) == 0}
+        new_counts, new_nulls = self._collect_file_stats(data_dir, written)
+        empty = {f for f in written if new_counts[f] == 0}
         for f in empty:
             os.remove(os.path.join(data_dir, f))
         files = [f for f in written if f not in empty]
@@ -1006,18 +858,15 @@ class TableStore:
             and txns == prev.txns
         ):
             return prev.version
-        stats = {f: prev.stats[f] for f in untouched if f in prev.stats}
-        stats.update(new_stats)  # a zero-row file has no column stats
         counts = {f: prev.num_records[f] for f in untouched if f in prev.num_records}
-        counts.update((f, new_counts[f]) for f in files if f in new_counts)
+        counts.update((f, new_counts[f]) for f in files)
         nulls = {f: prev.null_counts[f] for f in untouched if f in prev.null_counts}
-        nulls.update((f, new_nulls[f]) for f in files if f in new_nulls)
+        nulls.update((f, new_nulls[f]) for f in files)
         version = prev.version + 1 if prev else 1
         self._commit(
             name,
             Manifest(
-                version, schema.json(), partition_by, untouched + files, stats, counts,
-                nulls, txns,
+                version, schema.json(), partition_by, untouched + files, counts, nulls, txns,
             ),
             prev=prev,
         )
@@ -1385,14 +1234,7 @@ class TableStore:
         self._rewrite(name, manifest, result, untouched, schema)
 
     # ------------------------------------------------------- predicate DML
-    def delete_where(
-        self,
-        name: str,
-        condition,
-        prune_column: str | None = None,
-        prune_lo=None,
-        prune_hi=None,
-    ) -> dict:
+    def delete_where(self, name: str, condition) -> dict:
         """``DELETE FROM name WHERE condition`` — Delta-semantics
         copy-on-write delete (the table op the reference's Delta layer
         inherits; delta-io protocol, re-derived).
@@ -1400,11 +1242,10 @@ class TableStore:
         Rows where the condition is TRUE are deleted; FALSE and NULL
         rows are kept (SQL three-valued DELETE). Only files that
         actually hold a matching row are rewritten (``_plan_files``'
-        discovery scan, after its stats prune when a ``prune_column``
-        range hint is given); every other file — including files in
-        the same partition — carries forward byte-identical, so the
-        change feed reports O(matched files), not O(table). A delete
-        that matches nothing commits nothing and leaves the version
+        discovery scan); every other file — including files in the
+        same partition — carries forward byte-identical, so the change
+        feed reports O(matched files), not O(table). A delete that
+        matches nothing commits nothing and leaves the version
         unchanged.
 
         Returns metrics ``{"rows_deleted", "files_rewritten",
@@ -1412,9 +1253,7 @@ class TableStore:
         """
         manifest = self._require(name)
         cond = F.expr(condition) if isinstance(condition, str) else condition
-        touched, untouched = self._plan_files(
-            name, manifest, prune_column=prune_column, lo=prune_lo, hi=prune_hi, cond=cond
-        )
+        touched, untouched = self._plan_files(name, manifest, cond=cond)
         out = {"rows_deleted": 0, "files_rewritten": len(touched),
                "files_total": len(manifest.files), "version": manifest.version}
         if touched:
@@ -1427,69 +1266,7 @@ class TableStore:
             out["version"] = self._rewrite(name, manifest, kept, untouched, manifest.schema)
         return out
 
-    def update_where(
-        self,
-        name: str,
-        condition,
-        set: dict,
-        prune_column: str | None = None,
-        prune_lo=None,
-        prune_hi=None,
-    ) -> dict:
-        """``UPDATE name SET col = expr, ... WHERE condition`` —
-        copy-on-write update with the same touched-file planning as
-        ``delete_where``. Rows where the condition is TRUE get each
-        ``set`` expression (a Column or SQL string, evaluated against
-        the pre-update row, cast to the column's recorded type); FALSE/
-        NULL rows — and every row in an untouched file — are byte-for-
-        byte preserved. Updating a partition column is allowed: rewritten
-        rows move to their new partition directory (Delta allows the
-        same; the untouched-file carry-forward is unaffected).
-
-        Returns ``{"rows_updated", "files_rewritten", "files_total",
-        "version"}``.
-        """
-        manifest = self._require(name)
-        schema = manifest.schema
-        known = {f.name: f.dataType for f in schema.fields}
-        bad = [c for c in set if c not in known]
-        if bad:
-            raise ValueError(f"UPDATE SET targets unknown columns {bad} on {name}")
-        cond = F.expr(condition) if isinstance(condition, str) else condition
-        touched, untouched = self._plan_files(
-            name, manifest, prune_column=prune_column, lo=prune_lo, hi=prune_hi, cond=cond
-        )
-        out = {"rows_updated": 0, "files_rewritten": len(touched),
-               "files_total": len(manifest.files), "version": manifest.version}
-        if touched:
-            subset = self._read_file_subset(name, manifest, touched)
-            out["rows_updated"] = int(
-                subset.agg(F.sum(F.when(cond, 1).otherwise(0))).collect()[0][0] or 0
-            )
-            assigns = {
-                c: (F.expr(e) if isinstance(e, str) else e).cast(known[c])
-                for c, e in set.items()
-            }
-            is_hit = F.coalesce(cond, F.lit(False))
-            rewritten = subset.select(
-                *[
-                    F.when(is_hit, assigns[f.name]).otherwise(F.col(f.name)).alias(f.name)
-                    if f.name in assigns
-                    else F.col(f.name)
-                    for f in schema.fields
-                ]
-            )
-            out["version"] = self._rewrite(name, manifest, rewritten, untouched, schema)
-        return out
-
-    def optimize(
-        self,
-        name: str,
-        target_partitions: int | None = None,
-        min_files: int = 2,
-        cluster_by: list[str] | None = None,
-        zorder_by: list[str] | None = None,
-    ) -> None:
+    def optimize(self, name: str, min_files: int = 2) -> None:
         """OPTIMIZE — bin-pack small files (02_bronze.ipynb:354).
 
         Rewrites the current version's data into fewer, larger files and
@@ -1506,50 +1283,20 @@ class TableStore:
 
         Partitioned tables compact to one file per partition directory
         (repartition on the partition columns); unpartitioned tables
-        coalesce to ``target_partitions`` (default 1).
-
-        ``cluster_by`` reclusters during the rewrite: range-repartition
-        + sort-within-files on the given columns so footer min/max
-        skipping works on the leading column. ``zorder_by`` reclusters
-        on the interleaved Morton value instead (OPTIMIZE … ZORDER BY:
-        balanced skipping on every listed column). Reclustering always
-        rewrites (min_files does not gate it).
+        coalesce to one file.
         """
+        from collections import Counter
+
         manifest = self._latest_manifest(name)
         if manifest is None:
             return
-        if cluster_by and zorder_by:
-            raise ValueError("cluster_by and zorder_by are mutually exclusive")
-        if target_partitions is None and not cluster_by and not zorder_by:
-            from collections import Counter
-
-            per_dir = Counter(os.path.dirname(f) for f in manifest.files)
-            if not per_dir or max(per_dir.values()) < min_files:
-                return
+        per_dir = Counter(os.path.dirname(f) for f in manifest.files)
+        if not per_dir or max(per_dir.values()) < min_files:
+            return
         df = self.read(name)
-        if zorder_by:
-            from ironman_medallion_lakehouse_spark.operators.zorder import zorder_value
-
-            df = df.withColumn("_zv", zorder_value(df, zorder_by))
-            n = target_partitions
-            df = (
-                df.repartitionByRange(n, "_zv") if n else df.repartitionByRange("_zv")
-            ).sortWithinPartitions("_zv").drop("_zv")
-        elif cluster_by:
-            n = target_partitions
-            df = (
-                df.repartitionByRange(n, *cluster_by)
-                if n
-                else df.repartitionByRange(*cluster_by)
-            ).sortWithinPartitions(*cluster_by)
-        elif target_partitions:
-            df = df.repartition(target_partitions, *manifest.partition_by) if manifest.partition_by else df.coalesce(target_partitions)
-        elif manifest.partition_by:
-            df = df.repartition(*manifest.partition_by)
-        else:
-            df = df.coalesce(1)
-        # every branch above arranged its own distribution — don't
-        # re-shuffle in the write layer
+        df = df.repartition(*manifest.partition_by) if manifest.partition_by else df.coalesce(1)
+        # the repartition above is the distribution — don't re-shuffle
+        # in the write layer
         self._rewrite(name, manifest, df, [], manifest.schema, distribute=False)
 
     def vacuum(
@@ -1606,9 +1353,9 @@ class TableStore:
     def restore(self, name: str, version: int) -> int:
         """Delta ``RESTORE TABLE ... TO VERSION AS OF`` analogue: make
         the CURRENT state equal the state at ``version`` by committing
-        a NEW version whose manifest (files, schema, partitioning,
-        stats, row and null counts, txns) is the target's. No data is copied — the old files are
-        simply referenced again — and history is preserved: the restore
+        a NEW version whose manifest (files, schema, partitioning, row
+        and null counts, txns) is the target's. No data is copied — the
+        old files are simply referenced again — and history is preserved: the restore
         is itself a commit, so time travel to the pre-restore state
         still works and the change feed sees the restore as adds of
         the re-referenced files. Returns the new version number.
@@ -1640,7 +1387,6 @@ class TableStore:
                 schema_json=target.schema_json,
                 partition_by=list(target.partition_by),
                 files=list(target.files),
-                stats=dict(target.stats),
                 num_records=dict(target.num_records),
                 null_counts=dict(target.null_counts),
                 txns=dict(target.txns),

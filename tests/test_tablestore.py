@@ -8,7 +8,6 @@ import os
 import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
-from pyspark.sql.types import TimestampType
 
 from ironman_medallion_lakehouse_spark.sources.tablestore import TableStore
 
@@ -111,51 +110,6 @@ def test_table_changes_reads_only_added_files(spark, tmp_path):
     assert st.table_changes("db.t", v2, v2).count() == 0
 
 
-def test_data_skipping_read_where(spark, tmp_path):
-    """Footer min/max stats prune files whose range can't match."""
-    st = _store(spark, tmp_path)
-    # 4 files with disjoint id ranges (repartitionByRange → clustered)
-    df = spark.range(0, 1000).withColumn("v", F.col("id") * 2)
-    st.save_overwrite(df.repartitionByRange(4, "id"), "db.t")
-    m = st._latest_manifest("db.t")
-    assert len(m.files) == 4
-    assert all("id" in m.stats[f] for f in m.files)  # stats recorded
-
-    kept, total = st.skipped_file_count("db.t", "id", lo=100, hi=150)
-    assert total == 4 and kept == 1  # range-clustered → one file survives
-
-    out = st.read_where("db.t", "id", lo=100, hi=150)
-    assert out.count() == 51
-    assert len(out.inputFiles()) == 1  # only the surviving file is scanned
-
-    # unclustered column: stats overlap everywhere → nothing skipped,
-    # results still exact
-    kept_v, _ = st.skipped_file_count("db.t", "v", lo=0, hi=10)
-    out_v = st.read_where("db.t", "v", lo=0, hi=10)
-    assert out_v.count() == 6
-    assert kept_v >= 1
-
-    # fully out-of-range predicate skips every file
-    kept_none, _ = st.skipped_file_count("db.t", "id", lo=5000)
-    assert kept_none == 0
-    assert st.read_where("db.t", "id", lo=5000).count() == 0
-
-
-def test_stats_survive_merge(spark, tmp_path):
-    st = _store(spark, tmp_path)
-    st.save_overwrite(
-        spark.createDataFrame([Row(k="a", y=1, v=5)]), "db.t", partition_by=["y"]
-    )
-    st.merge_insert_only(
-        spark.createDataFrame([Row(k="b", y=2, v=50)]), "db.t", keys=["k"]
-    )
-    m = st._latest_manifest("db.t")
-    # carried-over + newly-written files all have stats
-    assert set(m.stats.keys()) == set(m.files)
-    kept, total = st.skipped_file_count("db.t", "v", lo=40)
-    assert (kept, total) == (1, 2)
-
-
 def test_register_views(spark, tmp_path):
     st = _store(spark, tmp_path)
     st.save_overwrite(spark.createDataFrame([Row(k="a")]), "gold.dim_x")
@@ -188,7 +142,7 @@ def test_commit_is_put_if_absent(spark, tmp_path):
         version=m.version, schema_json=m.schema_json, partition_by=[], files=m.files
     )
     with pytest.raises(ConcurrentCommitError):
-        st._commit("db.t", clash)
+        st._commit("db.t", clash, prev=None)
     # the loser re-reads the table and retries its write on top of it
     fresh = st._latest_manifest("db.t")
     files = st._write_files(spark.createDataFrame([Row(k="b", v=2)]), "db.t", [])
@@ -219,8 +173,7 @@ _REWRITE_VERBS = {
         src, "db.t", keys=["k", "y"], effective_ts="2024-03-01"
     ),
     "delete_where": lambda st, src: st.delete_where("db.t", "v = 3"),
-    "update_where": lambda st, src: st.update_where("db.t", "k = 'a'", {"v": "v + 100"}),
-    "optimize": lambda st, src: st.optimize("db.t", target_partitions=1),
+    "optimize": lambda st, src: st.optimize("db.t", min_files=1),
 }
 
 
@@ -285,11 +238,38 @@ def test_crash_mid_commit_leaves_previous_version_and_vacuum_reclaims(
     assert sorted(st.read("db.t", version=1).collect()) == v1_before
 
 
+def test_unreadable_footer_fails_the_merge_before_its_commit(spark, tmp_path, monkeypatch):
+    """The row and null counts the log records are correctness inputs,
+    so a written file whose footer cannot be read fails the merge
+    before its commit: the version and rows stay as they were, and the
+    written file is an orphan that vacuum reclaims."""
+    import pyarrow.parquet as pq
+
+    st = _store(spark, tmp_path)
+    st.save_overwrite(spark.createDataFrame(_V_ROWS), "db.t", partition_by=["y"])
+    before = st._latest_manifest("db.t")
+    rows_before = sorted(st.read("db.t").collect())
+    src = spark.createDataFrame(_V_SOURCE)
+
+    def unreadable(*_args, **_kwargs):
+        raise OSError("footer unreadable")
+
+    monkeypatch.setattr(pq, "ParquetFile", unreadable)
+    with pytest.raises(OSError, match="footer unreadable"):
+        st.merge_insert_only(src, "db.t", keys=["k", "y"])
+    monkeypatch.undo()
+
+    assert st._latest_manifest("db.t") == before
+    assert sorted(st.read("db.t").collect()) == rows_before
+    assert st.vacuum("db.t") > 0
+    assert _data_files(st, "db.t") == sorted(before.files)
+
+
 @pytest.mark.parametrize("verb", sorted(_REWRITE_VERBS))
 def test_rewrite_commit_invariants(spark, tmp_path, monkeypatch, verb):
     """Every rewriting verb commits version prev + 1; files it does not
-    rewrite carry forward with their bytes, stats, row and null counts
-    unchanged; every file it adds has footer stats and a null count for
+    rewrite carry forward with their bytes, row and null counts
+    unchanged; every file it adds has a row count and a null count for
     each data column; and its log entry's add/remove lists are exactly
     the diff between the two manifests. The commit also
     writes a checkpoint, so the manifest read back is the full snapshot
@@ -323,15 +303,10 @@ def test_rewrite_commit_invariants(spark, tmp_path, monkeypatch, verb):
     assert added
     for f in carried:
         assert digest(f) == digests[f]
-        assert new.stats.get(f) == prev.stats.get(f)
         assert new.num_records[f] == prev.num_records[f]
         assert new.null_counts[f] == prev.null_counts[f]
-    assert all(new.stats.get(f) for f in added)
     assert all(new.num_records[f] > 0 for f in added)
-    data_columns = {  # INT96 timestamps have no footer statistics
-        f.name for f in new.schema.fields
-        if f.name not in new.partition_by and f.dataType != TimestampType()
-    }
+    data_columns = {f.name for f in new.schema.fields if f.name not in new.partition_by}
     assert all(set(new.null_counts[f]) == data_columns for f in added)
 
     with open(os.path.join(st._log_dir("db.t"), f"{new.version:08d}.json")) as fh:
@@ -340,18 +315,15 @@ def test_rewrite_commit_invariants(spark, tmp_path, monkeypatch, verb):
     assert sorted(entry["remove"]) == sorted(prev_files - new_files)
 
 
-def test_read_where_and_table_changes_on_schema_evolved_table(spark, tmp_path):
-    """Scans that keep only files written before merge_schema widened
-    the table read the new column as NULL instead of failing on the
-    older files' footer schema."""
+def test_table_changes_on_schema_evolved_table(spark, tmp_path):
+    """A change feed that reads only files written before merge_schema
+    widened the table reads the new column as NULL instead of failing
+    on the older files' footer schema."""
     st = _store(spark, tmp_path)
     st.save_overwrite(spark.createDataFrame([Row(k=1)]), "db.e")  # v1
     st.merge_insert_only(
         spark.createDataFrame([Row(k=5, extra=10)]), "db.e", keys=["k"], merge_schema=True
     )  # v2
-    rows = st.read_where("db.e", "k", lo=0, hi=2).collect()
-    assert [(r.k, r.extra) for r in rows] == [(1, None)]
-
     st.delete_where("db.e", "k = 5")  # v3
     st.delete_where("db.e", "k = 1")  # v4
     assert st.restore("db.e", 3) == 5
@@ -530,6 +502,41 @@ def test_row_count_after_restore_and_without_recorded_counts(spark, tmp_path, mo
         assert st.row_count("db.t", version=v) == st.read("db.t", version=v).count()
 
 
+def test_log_entries_with_min_max_stats_still_replay(spark, tmp_path, monkeypatch):
+    """Log entries and checkpoints written when the log also recorded
+    per-file min/max ``stats`` replay to the same files, row counts and
+    null counts; the key is ignored."""
+    import json
+
+    from ironman_medallion_lakehouse_spark.sources import tablestore
+
+    monkeypatch.setattr(tablestore, "CHECKPOINT_EVERY", 2)
+    st = _store(spark, tmp_path)
+    st.save_overwrite(spark.createDataFrame(_V_ROWS), "db.t", partition_by=["y"])  # v1
+    st.merge_insert_only(spark.createDataFrame(_V_MORE), "db.t", keys=["k"])  # v2 + checkpoint
+    st.merge_scd1(spark.createDataFrame(_V_SOURCE), "db.t", keys=["k", "y"])  # v3
+    versions = st._log_versions("db.t")
+    want = {v: st._manifest_at("db.t", v) for v in versions}
+
+    log_dir = st._log_dir("db.t")
+    for fn in os.listdir(log_dir):
+        path = os.path.join(log_dir, fn)
+        with open(path) as fh:
+            entry = json.load(fh)
+        files = entry["files"] if "checkpoint" in fn else entry["add"]
+        entry["stats"] = {f: {"k": ["a", "z"], "v": [1, 99]} for f in files}
+        with open(path, "w") as fh:
+            json.dump(entry, fh)
+    assert st._checkpoint_versions("db.t") == [2]
+    for v in versions:
+        got = st._manifest_at("db.t", v)
+        assert (got.files, got.num_records, got.null_counts) == (
+            want[v].files, want[v].num_records, want[v].null_counts
+        ), v
+        assert st.row_count("db.t", version=v) == st.read("db.t", version=v).count()
+    assert st.null_count("db.t", ["k", "v"]) == {"k": 0, "v": 0}
+
+
 def _scanned_null_counts(df) -> dict[str, int]:
     """Each column's NULLs, counted by a scan."""
     row = df.agg(*[F.count(F.when(F.col(c).isNull(), 1)).alias(c) for c in df.columns]).first()
@@ -537,18 +544,12 @@ def _scanned_null_counts(df) -> dict[str, int]:
 
 
 def _assert_null_counts_match_scans(st, name):
-    """null_count equals the scan for every column at every version.
-    Spark writes timestamps as INT96, whose footers record no
-    statistics: null_count answers None for those."""
+    """null_count equals the scan for every column at every version."""
     for v in st._log_versions(name):
         df = st.read(name, version=v)
         want = _scanned_null_counts(df)
         for c in df.columns:
-            got = st.null_count(name, [c], version=v)
-            if df.schema[c].dataType == TimestampType():
-                assert got is None, (v, c)
-            else:
-                assert got == {c: want[c]}, (v, c)
+            assert st.null_count(name, [c], version=v) == {c: want[c]}, (v, c)
 
 
 _NULL_ROWS = "k string, y long, v long"
@@ -588,7 +589,7 @@ def test_null_counts_survive_checkpoint_optimize_restore_and_widening(
     st.save_overwrite(spark.createDataFrame(rows, _NULL_ROWS), "db.t", partition_by=["y"])  # v1
     st.merge_insert_only(spark.createDataFrame([("d", 2, None)], _NULL_ROWS), "db.t",
                          keys=["k"])  # v2
-    st.optimize("db.t", target_partitions=1)  # v3
+    st.optimize("db.t", min_files=1)  # v3
     st.merge_insert_only(
         spark.createDataFrame([("e", 2, 4, "x")], _NULL_ROWS + ", w string"), "db.t",
         keys=["k"], merge_schema=True,
@@ -711,8 +712,8 @@ def test_commit_writes_delta_chunk_not_snapshot(spark, tmp_path):
     assert "files" not in entry  # delta entry, not a snapshot
     assert entry["remove"] == []
     assert 0 < len(entry["add"]) < len(m.files)
-    # stats travel only for the added files
-    assert set(entry["stats"]) <= set(entry["add"])
+    # counts travel only for the added files
+    assert set(entry["num_records"]) == set(entry["null_counts"]) == set(entry["add"])
 
 
 def test_checkpoint_and_replay_time_travel(spark, tmp_path):
@@ -732,44 +733,11 @@ def test_checkpoint_and_replay_time_travel(spark, tmp_path):
     assert st.table_changes("db.t", 9, 11).count() == 2
 
 
-def test_cluster_by_enables_data_skipping(spark, tmp_path):
-    """cluster_by (the Z-order analogue): range-clustered writes make
-    footer min/max stats selective, so read_where prunes most files —
-    the same shuffled write WITHOUT clustering prunes nothing."""
-    st = _store(spark, tmp_path)
-    df = spark.range(0, 1000).withColumn("v", (F.col("id") * 7919) % 1000)
-    # v is scattered: an unclustered 4-file write can't skip on v
-    st.save_overwrite(df.repartition(4), "db.plain")
-    kept_plain, total_plain = st.skipped_file_count("db.plain", "v", lo=100, hi=120)
-    assert (kept_plain, total_plain) == (4, 4)
-    # clustered on v: one file covers the whole probe range
-    st.save_overwrite(
-        df.repartition(4), "db.clustered", cluster_by=["v"], cluster_files=4
-    )
-    kept, total = st.skipped_file_count("db.clustered", "v", lo=100, hi=120)
-    assert total >= 2 and kept == 1
-    out = st.read_where("db.clustered", "v", lo=100, hi=120)
-    assert out.count() == 21
-    assert len(out.inputFiles()) == 1
-
-
-def test_optimize_recluster(spark, tmp_path):
-    """OPTIMIZE ... cluster_by reclusters an existing table in place."""
-    st = _store(spark, tmp_path)
-    df = spark.range(0, 1000).withColumn("v", (F.col("id") * 7919) % 1000)
-    st.save_overwrite(df.repartition(4), "db.t")
-    kept0, _ = st.skipped_file_count("db.t", "v", lo=0, hi=50)
-    assert kept0 == 4  # unclustered: no skipping
-    st.optimize("db.t", target_partitions=4, cluster_by=["v"])
-    kept1, total1 = st.skipped_file_count("db.t", "v", lo=0, hi=50)
-    assert total1 >= 2 and kept1 == 1
-    assert st.read("db.t").count() == 1000
-
-
-def test_optimize_write_bounds_files_per_partition(spark, tmp_path):
-    """optimize_write (the Delta optimizeWrite analogue): a T-task
-    upstream writing P hive partitions must NOT emit T×P files — the
-    rebalance hint routes each partition's rows together first."""
+def test_rebalanced_write_bounds_files_per_partition(spark, tmp_path):
+    """The write layer's rebalance hint (the Delta optimizeWrite
+    analogue): a T-task upstream writing P hive partitions must NOT
+    emit T×P files — the hint routes each partition's rows together
+    first."""
     st = _store(spark, tmp_path)
     df = (
         spark.range(0, 200)
@@ -784,10 +752,8 @@ def test_optimize_write_bounds_files_per_partition(spark, tmp_path):
     assert set(per_dir) == {"year=2023", "year=2024"}
     assert max(per_dir.values()) == 1  # AQE rebalance coalesced each year
 
-    st.save_overwrite(df, "db.raw", partition_by=["year"], optimize_write=False)
-    raw_dirs = Counter(
-        os.path.dirname(f) for f in st._latest_manifest("db.raw").files
-    )
+    raw = st._write_files(df, "db.raw", ["year"], distribute=False)
+    raw_dirs = Counter(os.path.dirname(f) for f in raw)
     assert max(raw_dirs.values()) > 1  # without it: one file per task per year
 
 
@@ -828,55 +794,6 @@ def test_read_partitions_bool_and_date_values(spark, tmp_path):
     assert [r.v for r in got] == [1]
 
 
-def test_zorder_skips_on_every_clustered_column(spark, tmp_path):
-    """Z-order clustering: min/max skipping works on BOTH clustered
-    columns, where lexicographic range clustering only skips on the
-    leading one."""
-    st = _store(spark, tmp_path)
-    df = (
-        spark.range(0, 4096)
-        .withColumn("x", (F.col("id") * 2654435761) % 1024)
-        .withColumn("y", (F.col("id") * 40503) % 1024)
-    )
-    st.save_overwrite(df, "db.z", zorder_by=["x", "y"], cluster_files=16)
-    st.save_overwrite(df, "db.lex", cluster_by=["x", "y"], cluster_files=16)
-
-    zx, ztot = st.skipped_file_count("db.z", "x", lo=0, hi=63)
-    zy, _ = st.skipped_file_count("db.z", "y", lo=0, hi=63)
-    lx, ltot = st.skipped_file_count("db.lex", "x", lo=0, hi=63)
-    ly, _ = st.skipped_file_count("db.lex", "y", lo=0, hi=63)
-    assert ztot >= 8 and ltot >= 8
-    # lexicographic: leading column prunes hard, second column barely
-    assert lx <= 2
-    assert ly >= ltot - 2
-    # z-order: BOTH columns prune, and the secondary column prunes far
-    # better than lexicographic clustering ever can
-    assert zx < ztot / 2
-    assert zy < ztot / 2
-    assert zy < ly
-    # correctness: the clustered rewrite loses no rows
-    assert st.read("db.z").count() == 4096
-    assert st.read_where("db.z", "y", lo=0, hi=63).filter("y <= 63").count() == \
-        df.filter("y <= 63").count()
-
-
-def test_optimize_zorder_reclusters_in_place(spark, tmp_path):
-    st = _store(spark, tmp_path)
-    df = (
-        spark.range(0, 2048)
-        .withColumn("x", (F.col("id") * 2654435761) % 512)
-        .withColumn("y", (F.col("id") * 40503) % 512)
-    )
-    st.save_overwrite(df.repartition(8), "db.zo")
-    # 16 z-range files = 4 interleaved prefix bits = two split levels
-    # per column, so both columns prune below half
-    st.optimize("db.zo", target_partitions=16, zorder_by=["x", "y"])
-    kx, tot = st.skipped_file_count("db.zo", "x", lo=0, hi=31)
-    ky, _ = st.skipped_file_count("db.zo", "y", lo=0, hi=31)
-    assert tot >= 4 and kx < tot / 2 and ky < tot / 2
-    assert st.read("db.zo").count() == 2048
-
-
 def test_scd1_partition_scoped_rewrite(spark, tmp_path):
     """r2 VERDICT #1: SCD-1 on a partitioned target (partition col in
     keys) must rewrite ONLY source-touched partitions — untouched
@@ -915,10 +832,6 @@ def test_scd1_partition_scoped_rewrite(spark, tmp_path):
     # CDC across the merge = touched-partition rows only
     changed = st.table_changes("db.dim", m1.version, m2.version)
     assert {r.y for r in changed.collect()} == {1}
-    # untouched file's stats carried forward too
-    for f in y2_files:
-        if f in m1.stats:
-            assert m2.stats[f] == m1.stats[f]
 
 
 def test_scd1_full_rewrite_when_partition_not_in_keys(spark, tmp_path):
@@ -1240,7 +1153,7 @@ def test_version_changes_single_walk_matches_per_version(spark, tmp_path):
     st.merge_scd1(
         spark.createDataFrame([Row(k="a", y=1, v=10)]), "db.t", keys=["k", "y"]
     )
-    st.optimize("db.t", target_partitions=1)
+    st.optimize("db.t", min_files=1)
     log_dir = st._log_dir("db.t")
     walked = version_changes(log_dir, 0, 4)
     assert [v for v, _pb, _a in walked] == [1, 2, 3, 4]
@@ -1286,66 +1199,6 @@ def test_delete_where_rewrites_only_touched_files(spark, tmp_path):
     again = st.delete_where("db.d", "v > 1000")
     assert again["files_rewritten"] == 0 and again["version"] == 2
     assert st._latest_manifest("db.d").version == 2
-
-
-def test_delete_where_stats_prune_skips_discovery(spark, tmp_path):
-    """The range hint prunes files by manifest min/max before any scan:
-    a file whose [min,max] excludes the range is untouched even though
-    the predicate would require reading it to prove that."""
-    st = _store(spark, tmp_path)
-    st.save_overwrite(
-        spark.createDataFrame([Row(k=i, v=i) for i in range(1, 11)]).repartition(1),
-        "db.p",
-    )
-    st.merge_insert_only(
-        spark.createDataFrame([Row(k=i, v=i) for i in range(100, 111)]).repartition(1),
-        "db.p",
-        keys=["k"],
-    )
-    m = st._latest_manifest("db.p")
-    assert len(m.files) == 2
-    metrics = st.delete_where(
-        "db.p", "v >= 100", prune_column="v", prune_lo=100
-    )
-    assert metrics["files_rewritten"] == 1
-    assert st.read("db.p").count() == 10
-    # the low-range file is path-identical in the new manifest
-    low_file = [f for f in m.files if m.stats[f]["v"][1] <= 10]
-    assert set(low_file) <= set(st._latest_manifest("db.p").files)
-
-
-def test_update_where(spark, tmp_path):
-    """UPDATE ... SET evaluates expressions against the pre-update row,
-    only TRUE-condition rows change, types are preserved, and updating
-    a partition column moves rows to their new partition directory."""
-    st = _store(spark, tmp_path)
-    st.save_overwrite(
-        spark.createDataFrame(
-            [Row(k=1, y=1, v=10), Row(k=2, y=1, v=20), Row(k=3, y=2, v=30)]
-        ),
-        "db.u",
-        partition_by=["y"],
-    )
-    metrics = st.update_where("db.u", "v >= 20", {"v": "v * 2 + k"})
-    assert metrics["rows_updated"] == 2
-    rows = {(r.k, r.v) for r in st.read("db.u").collect()}
-    assert rows == {(1, 10), (2, 42), (3, 63)}
-    # schema unchanged (v stayed its original type)
-    assert dict(st.read("db.u").dtypes)["v"] == "bigint"
-    # partition-column update moves the row's file to the new dir
-    st.update_where("db.u", "k = 3", {"y": F.lit(9)})
-    m = st._latest_manifest("db.u")
-    assert any("y=9" in f for f in m.files)
-    assert {(r.k, r.y) for r in st.read("db.u").collect()} == {
-        (1, 1),
-        (2, 1),
-        (3, 9),
-    }
-    # unknown SET column raises
-    import pytest
-
-    with pytest.raises(ValueError):
-        st.update_where("db.u", "k = 1", {"nope": "1"})
 
 
 # ------------------------------------------------------------- txn (watermarks)
