@@ -146,20 +146,3 @@ def parse_division(division: Column | str) -> dict[str, Column]:
         "age_group_start": age_start,
         "age_group_end": age_end,
     }
-
-
-def status_flags(designation: Column | str) -> dict[str, Column]:
-    """Designation → boolean status flags.
-
-    Reference 03_silver.ipynb:257-260: is_finisher / is_dnf / is_dns /
-    is_dq from the (trimmed, uppercased) designation enum. Note the
-    reference checks only 'DQ' — the scraper's alternate 'DSQ' spelling
-    (ironman_scraper.py:237) falls through all flags; reproduced as-is.
-    """
-    d = F.upper(F.trim(F.col(designation) if isinstance(designation, str) else designation))
-    return {
-        "is_finisher": (d == "FINISHER"),
-        "is_dnf": (d == "DNF"),
-        "is_dns": (d == "DNS"),
-        "is_dq": (d == "DQ"),
-    }

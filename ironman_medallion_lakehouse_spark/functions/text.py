@@ -332,7 +332,7 @@ def winnowing_fingerprints(
 def strip_html(text: Column | str) -> Column:
     """Crawl-pipeline HTML boilerplate strip as a pure Column chain —
     the extraction step between "fetched page" and every text operator
-    in this package (quality gate, dedup shingles, language ID):
+    in this package (quality gate, dedup n-grams, language ID):
     script/style/noscript blocks dropped whole (their CONTENT is never
     prose), comments dropped, remaining tags removed, the five
     ubiquitous entities decoded, whitespace collapsed. Deliberately a

@@ -64,11 +64,10 @@ def positional_ngram_hashes(
     from ironman_medallion_lakehouse_spark.functions.text import _let
 
     def grams(toks: Column) -> Column:
-        # sequence(1, 0) is DESCENDING in Spark, not empty (the
-        # dedup.shingles lesson), and optimizer rewrites can evaluate
-        # this projection even for rows the size filter rejects — so
-        # the start list must be guarded to empty itself, not rely on
-        # the row filter
+        # sequence(1, 0) is DESCENDING in Spark, not empty, and
+        # optimizer rewrites can evaluate this projection even for rows
+        # the size filter rejects — so the start list must be guarded
+        # to empty itself, not rely on the row filter
         starts = F.when(
             F.size(toks) >= n, F.sequence(F.lit(1), F.size(toks) - F.lit(n - 1))
         ).otherwise(F.array().cast("array<int>"))

@@ -9,8 +9,8 @@ is designed for the 100 TB regime:
   path. All-pairs Jaccard is O(n²); MinHash+LSH banding reduces it to
   one explode + k min-aggregations + b equi-joins on band keys. Only
   documents sharing a band bucket are ever paired.
-- **jaccard_pairs**: exact verification on a *blocked* pair set — used
-  to verify LSH candidates, never run all-pairs.
+- **jaccard_refine**: exact token-set Jaccard over the LSH candidate
+  pairs only — never run all-pairs.
 - **simhash64**: vectorized Arrow/pandas UDF (the per-bit majority
   vote has no efficient Column-expression form); Hamming-adjacent
   buckets give another near-dup family.
@@ -36,35 +36,6 @@ def words(text: Column | str, lowercase: bool = True) -> Column:
 
 def word_set(text: Column | str) -> Column:
     return F.array_distinct(words(text))
-
-
-def shingles(text_col: str, n: int = 3) -> Column:
-    """Distinct word n-gram shingles as a pure Column expression (stays
-    inside codegen; no UDF). Documents shorter than ``n`` words yield
-    an EMPTY array — guarded with CASE because Spark's
-    ``sequence(1, 0)`` is a *descending* sequence, not empty, so an
-    unguarded transform would index past the array on short docs."""
-    t = f"split(lower({text_col}), '\\\\s+')"
-    return F.expr(
-        f"CASE WHEN size({t}) < {n} THEN cast(array() as array<string>) "
-        f"ELSE array_distinct(transform(sequence(1, size({t}) - {n} + 1), "
-        f"i -> concat_ws(' ', slice({t}, i, {n})))) END"
-    )
-
-
-def exact_dedup_groups(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """Group-grain view of ``exact_dedup``: (content_hash, n_copies,
-    keeper). One survivor policy, three projections — this and
-    ``exact_dedup_survivors`` are thin views over the fused pass so the
-    min-id tiebreak can never drift between them."""
-    return exact_dedup(docs, text_col, id_col).select(
-        "content_hash", "n_copies", F.col(id_col).alias("keeper")
-    )
-
-
-def exact_dedup_survivors(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """Survivor-rows-only view of ``exact_dedup`` (original columns)."""
-    return exact_dedup(docs, text_col, id_col).drop("content_hash", "n_copies")
 
 
 def exact_dedup(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -132,7 +103,7 @@ def minhash_signatures(
 ) -> DataFrame:
     """k-permutation MinHash over distinct tokens — word tokens by
     default, or any caller-supplied distinct-token array expression via
-    ``tokens`` (e.g. ``shingles(text_col, 3)`` for word-3-gram MinHash:
+    ``tokens`` (e.g. distinct word 3-grams for shingle MinHash:
     shingle Jaccard is order-sensitive, so reordered copies stop
     looking like near-dups — the standard shingle→minhash→band
     pipeline).
@@ -368,37 +339,6 @@ def lsh_candidate_pairs(
     )
 
 
-def jaccard_pairs(
-    docs: DataFrame,
-    block_cols: list[str],
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    threshold: float = 0.5,
-) -> DataFrame:
-    """Exact word-set Jaccard over *blocked* pairs (id_a < id_b within
-    the same block). Blocking keeps the join linear-ish; never call
-    with empty block_cols at scale."""
-    with_sets = docs.select(
-        F.col(id_col), *[F.col(c) for c in block_cols], word_set(text_col).alias("ws")
-    )
-    a, b = with_sets.alias("a"), with_sets.alias("b")
-    cond = F.col(f"a.{id_col}") < F.col(f"b.{id_col}")
-    for c in block_cols:
-        cond = cond & (F.col(f"a.{c}") == F.col(f"b.{c}"))
-    inter = F.size(F.array_intersect(F.col("a.ws"), F.col("b.ws")))
-    union = F.size(F.col("a.ws")) + F.size(F.col("b.ws")) - inter
-    jac = inter.cast("double") / union.cast("double")
-    return (
-        a.join(b, cond)
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-            jac.alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= threshold)
-    )
-
-
 def sig_agreement_filter(
     candidates: DataFrame,
     signatures: DataFrame,
@@ -458,7 +398,7 @@ def jaccard_refine(
     cost is O(candidates), never all-pairs. Emits only pairs at or
     above ``threshold`` with their exact score. ``tokens`` swaps the
     default word set for any distinct-token expression (pass the SAME
-    expression used for the signatures — e.g. ``shingles(text_col, 3)``
+    expression used for the signatures — e.g. distinct word 3-grams
     for the n-gram Jaccard family). For high thresholds put
     ``sig_agreement_filter`` in front so the interpreted set
     intersection only runs on near-certain pairs, and set

@@ -503,7 +503,11 @@ def quantile_treatment_effects(
     long form. Zero joins, no per-p passes; the serial section is the
     distinct-value sort shared with KS/W1 (a caller holding a
     materialized ``per_value_counts`` frame uses
-    ``qte_from_value_counts`` directly)."""
+    ``qte_from_value_counts`` directly).
+
+    Kept with no package caller: it is the one-frame form that
+    tests/test_qte.py checks ``qte_from_value_counts`` (the q143 path)
+    against."""
     pv = per_value_counts(df, value_col, group_col, group_a, group_b)
     return qte_from_value_counts(pv, probs)
 
@@ -608,7 +612,11 @@ def winsorized_welch_t(
     ``winsorized_welch_from_value_counts``), one ordered pass over the
     distinct values for the two cuts, then a broadcast of the one-row
     cut frame into a value-domain-sized moment aggregate. Nothing
-    data-sized after the pre-aggregation."""
+    data-sized after the pre-aggregation.
+
+    Kept with no package caller: it is the one-frame form that
+    tests/test_winsorized.py pins against a numpy replay and plain
+    Welch; q143 runs ``winsorized_welch_from_value_counts``."""
     pv = per_value_counts(df, value_col, group_col, group_a, group_b)
     return winsorized_welch_from_value_counts(pv, lower=lower, upper=upper)
 
@@ -730,7 +738,12 @@ def mann_whitney_u(
     one distinct-value-sized window, scalar output. The pre-aggregation
     is the shared ``per_value_counts`` (r14 — it was an inline
     duplicate of it); a caller holding that frame materialized uses
-    ``mann_whitney_from_value_counts`` directly."""
+    ``mann_whitney_from_value_counts`` directly.
+
+    Kept with no package caller: it is the one-frame form that
+    tests/test_training_ops3.py pins against hand-computed ranks and
+    tests/test_plans_round7.py checks the plan of; q143 runs
+    ``mann_whitney_from_value_counts``."""
     pv = per_value_counts(df, value_col, group_col, group_a, group_b)
     return mann_whitney_from_value_counts(pv)
 
@@ -1141,41 +1154,19 @@ def psi_from_bin_counts(per_bin: DataFrame, nbins: int) -> DataFrame:
     )
 
 
-def js_divergence_binned(
-    df: DataFrame,
-    value_col: str,
-    group_col: str,
-    group_a,
-    group_b,
-    bin_edges: list[float],
-) -> DataFrame:
+def js_from_bin_counts(per_bin: DataFrame, nbins: int) -> DataFrame:
     """Jensen-Shannon divergence between the two binned distributions
-    (Lin 1991) — PSI's bounded, symmetric sibling:
+    of a ``binned_counts`` frame (Lin 1991) — PSI's bounded, symmetric
+    sibling:
 
         JS = ½·KL(P ‖ M) + ½·KL(Q ‖ M),   M = ½(P + Q)
 
-    in nats over the same fixed ``bin_edges`` binning and add-0.5
-    smoothing as ``psi_drift``. Always finite and ≤ ln 2 ≈ 0.6931 even
-    when a bin is empty on one side (where PSI's ln(p/q) term blows
-    up with only smoothing to save it) — the metric of choice when
-    comparing MANY batch pairs on one scale (√JS is a true metric).
-    ONE row (n_a, n_b, js).
-
-    Same exactness + plan as PSI: exact integer bin counts from one
-    map-side-combined aggregate, per-bin fixed double terms rounded
-    into DECIMAL(18,9) before the order-free B-row sum. Same shared
-    pre-aggregation path as PSI: from a ``per_value_counts`` frame use
-    ``binned_counts_from_value_counts`` → ``js_from_bin_counts``."""
-    edges = [float(e) for e in bin_edges]
-    return js_from_bin_counts(
-        binned_counts(df, value_col, group_col, group_a, group_b, edges),
-        len(edges) + 1,
-    )
-
-
-def js_from_bin_counts(per_bin: DataFrame, nbins: int) -> DataFrame:
-    """Binned-JS finisher over a ``binned_counts`` frame (see
-    ``js_divergence_binned`` for semantics)."""
+    in nats over ``nbins`` bins with the same add-0.5 smoothing as
+    ``psi_drift``. Always finite and ≤ ln 2 ≈ 0.6931 even when a bin
+    is empty on one side (where PSI's ln(p/q) term blows up with only
+    smoothing to save it). ONE row (n_a, n_b, js). Per-bin fixed
+    double terms are rounded into DECIMAL(18,9) before the order-free
+    sum, so the result is engine-exact."""
     tot = per_bin.agg(
         F.sum("ca").cast("bigint").alias("n_a"), F.sum("cb").cast("bigint").alias("n_b")
     )

@@ -72,35 +72,6 @@ def funnel_stages(
     return cur
 
 
-def funnel_summary(
-    events: DataFrame,
-    stages: list[str],
-    window_seconds: int = 3600,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    type_col: str = "event_type",
-) -> DataFrame:
-    """(stage_index, stage, n_users): how many users reached each
-    stage — the funnel chart itself. Derived from ``funnel_stages``
-    with one tiny aggregate (output = #stages rows)."""
-    per_user = funnel_stages(
-        events, stages, window_seconds, user_col, ts_col, type_col
-    )
-    counts = per_user.agg(
-        *[F.count(f"t_{s}").cast("bigint").alias(f"n_{i}") for i, s in enumerate(stages)]
-    )
-    pairs = []
-    for i, s in enumerate(stages):
-        pairs.append(
-            F.struct(
-                F.lit(i).cast("bigint").alias("stage_index"),
-                F.lit(s).alias("stage"),
-                F.col(f"n_{i}").alias("n_users"),
-            )
-        )
-    return counts.select(F.explode(F.array(*pairs)).alias("r")).select("r.*")
-
-
 def retention_cohorts(
     events: DataFrame,
     user_col: str = "user_id",

@@ -350,6 +350,10 @@ def dedup_groups_from_pairs(
     The docs side is one broadcast-or-shuffle left join against the
     (small) component labeling; group sizes are a window count over
     the group key.
+
+    Kept with no package caller: it is the un-contracted grouping that
+    tests/test_training_ops.py checks ``dedup.near_dedup_groups``
+    against.
     """
     from pyspark.sql import Window
 

@@ -2,19 +2,18 @@
 
 Beyond-reference extension (BASELINE.json north star). Pattern: media
 (image/audio/video) lives as an opaque ``binary`` column next to typed
-metadata; decode / feature-extract / resize / frame-sample run as
-Arrow-batched ``mapInPandas`` stages so the payload never round-trips
-through Python row-by-row.
+metadata; decode / feature-extract run as Arrow-batched
+``mapInPandas`` stages so the payload never round-trips through
+Python row-by-row.
 
 Decode support: UNCOMPRESSED formats decode for REAL with stdlib +
-numpy — binary PPM (P6) images (``ppm_decode`` / ``ppm_resize``:
-header parse, pixel-stat features, nearest-neighbor resize +
-re-encode, r4) and PCM WAV audio (``wav_decode``: stdlib ``wave`` +
-numpy → duration / RMS / zero-crossing features, r4). Since r14 one
-COMPRESSED codec is also real: PNG (``png_decode`` / ``encode_png``)
-— the container is DEFLATE (stdlib ``zlib``) and the five scanline
-filters are public-spec arithmetic (ISO/IEC 15948 §9 / RFC 2083), so
-no external library is involved. ``image_decode`` dispatches on the
+numpy — binary PPM (P6) images (``ppm_decode``: header parse,
+pixel-stat features, r4) and PCM WAV audio (``wav_decode``: stdlib
+``wave`` + numpy → duration / RMS / zero-crossing features, r4). Since
+r14 one COMPRESSED codec is also real: PNG (``png_decode`` /
+``encode_png``) — the container is DEFLATE (stdlib ``zlib``) and the
+five scanline filters are public-spec arithmetic (ISO/IEC 15948 §9 /
+RFC 2083), so no external library is involved. ``image_decode`` dispatches on the
 payload magic (P6 → PPM, \\x89PNG → PNG). Remaining compressed codecs
 (JPEG/MP3/H.264 …) stay behind ``deterministic_fake_decoder`` /
 NotImplementedError — those decoders genuinely need absent libraries;
@@ -61,50 +60,6 @@ FEATURE_SCHEMA = StructType(
         StructField("feature", ArrayType(FloatType())),
     ]
 )
-
-
-def pil_image_decoder(payload: bytes) -> dict:
-    """Pillow-backed decoder for the formats the in-container codecs
-    do NOT cover (progressive JPEG, WebP, GIF, 16-bit PNG, …) — the
-    documented drop-in for the ``decoder=`` boundary. Baseline JPEG,
-    8-bit PNG, and P6 PPM decode in-container via ``image_decode``
-    with no Pillow involved (r14).
-
-    Usage on a cluster with Pillow installed::
-
-        extract_features(media, decoder=pil_image_decoder)
-
-    The contract every decoder must satisfy (what extract_features'
-    mapInPandas schema relies on): take one payload ``bytes``, return
-    ``{"width": int, "height": int, "feature": list[float]}``; raise
-    ``NotImplementedError`` for formats it cannot parse (the caller
-    decides whether to route those rows to another decoder or drop
-    them). Runs executor-side inside the Arrow batch loop, so the
-    import must succeed on executors — ship Pillow via your cluster
-    image or ``spark.submit.pyFiles``, not the driver env alone."""
-    try:
-        import io
-
-        import numpy as np
-        from PIL import Image  # noqa: F401  (absent in this container)
-    except ImportError as e:  # pragma: no cover - environment-limited
-        raise NotImplementedError(
-            "pil_image_decoder needs Pillow on the executors; in-container "
-            "formats (P6 PPM, 8-bit PNG, PCM WAV) decode via "
-            "image_decode/ppm_decode/png_decode/wav_decode"
-        ) from e
-    img = Image.open(io.BytesIO(payload)).convert("RGB")  # pragma: no cover
-    px = np.asarray(img, dtype=np.float64)  # pragma: no cover
-    return {  # pragma: no cover
-        "width": img.width,
-        "height": img.height,
-        "feature": [
-            *(px[..., c].mean() / 255.0 for c in range(3)),
-            *(px[..., c].std() / 255.0 for c in range(3)),
-            img.width / max(img.height, 1),
-            px.mean() / 255.0,
-        ],
-    }
 
 
 def deterministic_fake_decoder(payload: bytes) -> dict:
@@ -195,29 +150,6 @@ def ppm_decode(payload: bytes) -> dict:
         h, w, 3
     )
     return _rgb_features(px, w, h)
-
-
-def _nn_resize(px, width: int, height: int):
-    """Nearest-neighbor resize of an (h, w, c) matrix via numpy fancy
-    indexing — the shared kernel behind every codec's resize path."""
-    import numpy as np
-
-    h0, w0 = px.shape[0], px.shape[1]
-    yi = (np.arange(height) * h0 // height).clip(0, h0 - 1)
-    xi = (np.arange(width) * w0 // width).clip(0, w0 - 1)
-    return px[yi][:, xi]
-
-
-def ppm_resize(payload: bytes, width: int, height: int) -> bytes:
-    """REAL resize for binary PPM: decode → nearest-neighbor index →
-    re-encode. Pure numpy fancy indexing, no codec library."""
-    import numpy as np
-
-    w0, h0, pixel_off = _ppm_header(payload)
-    px = np.frombuffer(
-        payload, dtype=np.uint8, count=w0 * h0 * 3, offset=pixel_off
-    ).reshape(h0, w0, 3)
-    return encode_ppm(_nn_resize(px, width, height))
 
 
 # --------------------------------------------------------------- PNG
@@ -421,13 +353,6 @@ def png_decode(payload: bytes) -> dict:
     for format support)."""
     px, w, h = _png_pixels(payload)
     return _rgb_features(px, w, h)
-
-
-def png_resize(payload: bytes, width: int, height: int) -> bytes:
-    """REAL resize for PNG: inflate + unfilter → nearest-neighbor →
-    re-encode through the real zlib encoder."""
-    px, _, _ = _png_pixels(payload)
-    return encode_png(_nn_resize(px, width, height))
 
 
 # -------------------------------------------------------------- JPEG
@@ -992,35 +917,7 @@ def image_decode(payload: bytes) -> dict:
     raise NotImplementedError(
         "in-container image codecs are binary PPM (P6), 8-bit PNG, and "
         "baseline JPEG; other formats (WebP/GIF/...) need a codec-backed "
-        "decoder= (e.g. pil_image_decoder on a Pillow-equipped cluster)"
-    )
-
-
-def jpeg_resize(
-    payload: bytes, width: int, height: int, quality: int = 90
-) -> bytes:
-    """REAL resize for JPEG: full decode (Huffman + dequant + IDCT) →
-    nearest-neighbor → re-encode. Re-encoding is lossy by nature —
-    exactly what a real thumbnailing stage does."""
-    return encode_jpeg(
-        _nn_resize(decode_jpeg_pixels(payload), width, height), quality
-    )
-
-
-def image_resize(payload: bytes, width: int, height: int) -> bytes:
-    """Magic-dispatching resize over the real in-container codecs —
-    each format re-encodes in kind (PPM → PPM, PNG → PNG,
-    JPEG → JPEG), so a resized corpus stays decodable by the same
-    pipeline. Plugs straight into ``resize_media(resizer=...)``."""
-    if payload and payload.startswith(b"P6"):
-        return ppm_resize(payload, width, height)
-    if payload and payload.startswith(_PNG_SIG):
-        return png_resize(payload, width, height)
-    if payload and payload.startswith(b"\xff\xd8"):
-        return jpeg_resize(payload, width, height)
-    raise NotImplementedError(
-        "image_resize supports the in-container codecs (PPM, PNG, JPEG); "
-        "other formats need a codec-backed resizer= (PIL/ffmpeg)"
+        "decoder= (e.g. a Pillow-backed one on a cluster that has Pillow)"
     )
 
 
@@ -1241,22 +1138,6 @@ def synthesize_jpeg_payloads(
     )
 
 
-def attach_binary_payload(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """Build a media table from the documents fixture: the encoded text
-    plays the role of an opaque payload (the container has no real
-    media), with typed metadata columns alongside — the exact schema a
-    real ingest would produce."""
-    payload = F.encode(F.col(text_col), "UTF-8")
-    return docs.select(
-        F.col(id_col).alias("media_id"),
-        payload.alias("payload"),
-        F.lit("image/fake").alias("media_type"),
-        F.length(payload).cast("long").alias("n_bytes"),
-    )
-
-
 def extract_features(
     media: DataFrame,
     decoder: Callable[[bytes], dict] = deterministic_fake_decoder,
@@ -1286,80 +1167,3 @@ def extract_features(
             )
 
     return media.mapInPandas(_batches, FEATURE_SCHEMA)
-
-
-RESIZED_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType()),
-        StructField("payload", BinaryType()),
-        StructField("media_type", StringType()),
-        StructField("n_bytes", LongType()),
-        StructField("width", IntegerType()),
-        StructField("height", IntegerType()),
-    ]
-)
-
-
-def deterministic_fake_resizer(payload: bytes, width: int, height: int) -> bytes:
-    """Stand-in for decode→resize→re-encode: emits a deterministic
-    payload whose size scales with the target area (a real resizer
-    returns the re-encoded image bytes; this preserves the contract
-    that output payload size is a function of target dims + content)."""
-    digest = hashlib.md5(payload or b"")
-    digest.update(f"{width}x{height}".encode())
-    seed = digest.digest()
-    out_len = max(16, (width * height) // 64)
-    return (seed * (out_len // len(seed) + 1))[:out_len]
-
-
-def resize_media(
-    media: DataFrame,
-    width: int = 224,
-    height: int = 224,
-    resizer: Callable[[bytes, int, int], bytes] = deterministic_fake_resizer,
-) -> DataFrame:
-    """Batch resize via Arrow-batched mapInPandas — the write-side twin
-    of ``extract_features`` (same batching contract: payloads cross the
-    Spark↔Python boundary once per batch, never per row). Output rows
-    keep MEDIA_SCHEMA plus the target dimensions, so a resized corpus
-    can be written back through the TableStore and re-enter any
-    downstream stage. Swap ``resizer`` for a real codec-backed
-    implementation (PIL/ffmpeg) when available — it would raise
-    NotImplementedError on formats it can't parse."""
-    from ironman_medallion_lakehouse_spark.session import ensure_package_on_executors
-
-    ensure_package_on_executors(media.sparkSession)
-
-    def _batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            resized = [resizer(p, width, height) for p in pdf["payload"]]
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"].values,
-                    "payload": resized,
-                    "media_type": pdf["media_type"].values,
-                    "n_bytes": [len(p) for p in resized],
-                    "width": [width] * len(resized),
-                    "height": [height] * len(resized),
-                }
-            )
-
-    return media.mapInPandas(_batches, RESIZED_SCHEMA)
-
-
-def frame_sample(
-    media: DataFrame, every_n_bytes: int = 1024, max_frames: int = 8
-) -> DataFrame:
-    """Frame-sampling plumbing for video-like payloads: emit one row per
-    sampled offset (posexplode over a computed offset sequence — pure
-    expressions, no UDF). A real implementation would slice the payload
-    at codec keyframes; offsets model that contract."""
-    offsets = F.slice(
-        F.sequence(F.lit(0), F.greatest(F.col("n_bytes") - 1, F.lit(0)), F.lit(every_n_bytes)),
-        1,
-        max_frames,
-    )
-    return media.select(
-        "media_id",
-        F.posexplode(offsets).alias("frame_idx", "byte_offset"),
-    )

@@ -11,8 +11,9 @@ makes those patterns first-class and composable:
   pass — expectations over the same DataFrame are fused into a single
   aggregate job, not one action per check;
 - ``quarantine`` splits pass/fail rows by a predicate (flag-don't-drop
-  generalized to physically routing rows);
-- ``enforce`` raises on violations for pipeline gating.
+  generalized to physically routing rows).
+
+The duplicate-key count is ``plans.bronze.duplicate_key_count``.
 """
 
 from __future__ import annotations
@@ -84,14 +85,6 @@ def check(df: DataFrame, expectations: list[Expectation]) -> QualityReport:
     )
 
 
-def check_unique(df: DataFrame, keys: list[str]) -> int:
-    """Duplicate-key audit (02_bronze.ipynb:254): number of key tuples
-    occurring more than once."""
-    return (
-        df.groupBy(*keys).count().filter(F.col("count") > 1).count()
-    )
-
-
 def quarantine(
     df: DataFrame, expectations: list[Expectation], flag_col: str = "has_data_issue"
 ) -> tuple[DataFrame, DataFrame]:
@@ -107,14 +100,3 @@ def quarantine(
         flagged.filter(~F.col(flag_col)).drop(flag_col),
         flagged.filter(F.col(flag_col)),
     )
-
-
-def enforce(df: DataFrame, expectations: list[Expectation]) -> DataFrame:
-    """Raise ValueError if any expectation is violated (the reference's
-    raise-on-bad-layer gate, 03_silver.ipynb:346); returns df untouched
-    when clean so it chains inside a pipeline."""
-    report = check(df, expectations)
-    if not report.passed:
-        bad = {k: v for k, v in report.violations.items() if v}
-        raise ValueError(f"quality violations: {bad}")
-    return df

@@ -3,7 +3,7 @@
 Beyond-reference extension (BASELINE.json north star). A 100 TB
 pretraining pipeline rarely takes data as-is: it downsamples dominant
 strata (language, source, quality band) and keeps rare ones, by quota.
-Two variants, both deterministic and replayable:
+The stratified samplers are deterministic and replayable:
 
 - ``stratified_sample``: per-stratum RATE sampling by key hash —
   zero shuffles, a map-only filter. The hash is md5-based (not
@@ -12,21 +12,13 @@ Two variants, both deterministic and replayable:
   re-running the pipeline samples the SAME rows (the property that
   makes sampled datasets diffable and the DuckDB oracle possible),
   and downstream incremental runs never flip membership.
-- ``stratified_fixed_n``: exactly-n-per-stratum via a window rank over
-  the same hash order — one shuffle on the stratum key. The hash
-  order makes it a uniform random draw that is still deterministic;
-  rank ties are impossible (the tiebreak includes the unique key).
-
-Skew note: the window variant partitions by stratum, so one giant
-stratum is one window partition — for rate sampling at scale always
-prefer ``stratified_sample`` (no shuffle at all); use fixed-n only
-for small-cardinality strata quotas (its use case), where the
-per-stratum sort is the point.
+- ``temperature_mixture_sample``: the same hash filter with per-stratum
+  rates derived from a temperature-smoothed share of a total budget.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 _DENOM = 1_000_000
@@ -61,25 +53,6 @@ def stratified_sample(
     m = F.create_map(*[F.lit(x) for kv in rates.items() for x in kv])
     rate = F.coalesce(m[F.col(strata_col)], F.lit(float(default_rate)))
     return df.filter(_uhash(F.col(key_col), salt) < (rate * _DENOM).cast("bigint"))
-
-
-def stratified_fixed_n(
-    df: DataFrame,
-    strata_col: str,
-    n: int,
-    key_col: str,
-    salt: str = "strat",
-) -> DataFrame:
-    """Exactly min(n, stratum size) rows per stratum, drawn uniformly
-    by hash order (deterministic tiebreak on the key itself)."""
-    w = Window.partitionBy(strata_col).orderBy(
-        _uhash(F.col(key_col), salt), F.col(key_col)
-    )
-    return (
-        df.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= n)
-        .drop("_rn")
-    )
 
 
 def temperature_mixture_sample(

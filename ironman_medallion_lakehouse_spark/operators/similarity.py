@@ -936,7 +936,10 @@ def sq8_encode(
     interpreted-HOF trap is QUADRATIC folds; linear per-row transforms
     of a 64-wide array are fine and keep the op shuffle-free at any
     scale). The ``greatest(…, 1e-12)`` guard makes the zero vector
-    encode to zeros instead of NaN."""
+    encode to zeros instead of NaN.
+
+    Kept with no package caller: tests/test_training_ops3.py checks its
+    codes beside ``sq8_recon_stats``, the aggregate q108 runs."""
     v = F.transform(F.col(vec_col), lambda x: x.cast("double"))
     scale = F.greatest(
         F.array_max(F.transform(v, lambda x: F.abs(x))), F.lit(1e-12)

@@ -313,14 +313,6 @@ def bloom_sketch(
     )
 
 
-def bloom_rollup(sketch: DataFrame, rollup_cols: list[str]) -> DataFrame:
-    """Coarser-grain bloom by OR-ing word masks — sketch-algebra merge
-    equal to a direct build on the union of the inputs."""
-    return sketch.groupBy(*rollup_cols, "word").agg(
-        F.bit_or("mask").alias("mask")
-    )
-
-
 def bloom_might_contain(
     sketch: DataFrame,
     probes: DataFrame,

@@ -52,7 +52,10 @@ def word_counts(
 ) -> DataFrame:
     """(word, n): the one corpus-sized pass. Whitespace pre-tokenized
     (compose a different pre-tokenizer upstream if needed); empty
-    strings dropped."""
+    strings dropped.
+
+    Kept with no package caller: it feeds ``learn_bpe`` in
+    tests/test_vocab.py."""
     t = F.col(text_col)
     if lowercase:
         t = F.lower(t)
@@ -205,7 +208,12 @@ def learn_bpe(
     ``min_pair_count``. Deterministic: ties broken (count desc, a asc,
     b asc). ``top_k_words`` (opt-in) learns from only the K most
     frequent words — see ``_truncate_counts`` for the measured
-    cost/benefit; default ``None`` keeps the exact artifact."""
+    cost/benefit; default ``None`` keeps the exact artifact.
+
+    Kept with no package caller: it is the corpus-learned BPE that
+    tests/test_vocab.py pins on the Sennrich et al. example; the suite
+    runs fixed merge lists through
+    ``bpe_tokens_expr``/``bpe_tokens_sql``."""
     counts = _truncate_counts(counts, top_k_words)
     words = counts.select(
         _initial_symbols(F.col("word")).alias("syms"), F.col("n")
@@ -712,12 +720,6 @@ def _learn_bpe_batched(
     return merges
 
 
-def bpe_vocab(merges: list[tuple[str, str]]) -> list[str]:
-    """The merged-symbol vocabulary the merge list induces (merge
-    products, in learned order)."""
-    return [a + b for a, b in merges]
-
-
 def apply_bpe(
     docs: DataFrame,
     merges: list[tuple[str, str]],
@@ -733,7 +735,11 @@ def apply_bpe(
     broadcast word → tokens join maps the corpus — corpus-sized cost
     is one word explode + one broadcast hash join regardless of merge
     count. Word order inside each document is preserved
-    (posexplode + sort inside the regroup)."""
+    (posexplode + sort inside the regroup).
+
+    Kept with no package caller: it is the distributed tokenizer that
+    tests/test_vocab.py pins merge order and word order on; the suite
+    tokenizes with ``bpe_tokens_expr``."""
     t = F.col(text_col)
     if lowercase:
         t = F.lower(t)

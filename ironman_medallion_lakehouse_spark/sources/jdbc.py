@@ -104,7 +104,11 @@ def jdbc_land_to_bronze(
     """S12 end-to-end: JDBC extract + the bronze lineage stamp
     (source_file ≡ the JDBC coordinates, load_timestamp/load_date as
     in plans/bronze.read_csv_with_metadata) — the landing contract is
-    transport-independent."""
+    transport-independent.
+
+    Kept with no package caller: it is the only implementation of SURVEY
+    §2.1 S12 (the Airflow DAG's JDBC extract landed as bronze);
+    tests/test_jdbc.py runs it against embedded Derby."""
     df = jdbc_extract(spark, url, table, driver=driver, **extract_kwargs)
     return (
         df.withColumn("source_file", F.lit(f"jdbc:{table}@{url}").cast("string"))

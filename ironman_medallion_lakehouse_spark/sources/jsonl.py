@@ -117,7 +117,11 @@ def read_jsonl(
     """Parse a JSONL path (file, directory, or glob) against an
     explicit ``schema``. Output columns: every schema field, then
     ``_source_file``, ``_malformed``, ``_raw`` (see module docstring
-    for the line-level quarantine contract)."""
+    for the line-level quarantine contract).
+
+    Kept with no package caller: it is the batch reader that
+    tests/test_jsonl_source.py pins the quarantine contract on, and that
+    ``read_jsonl_stream`` must match."""
     _validate_schema(schema)
     lines = spark.read.text(path).select(
         F.col("_metadata.file_path").alias("_source_file"),

@@ -1,12 +1,12 @@
-"""Event-time operators over the events table — batch + streaming.
+"""Event-time operators over the events table.
 
 The reference has no streaming surface (SURVEY §2.9); these are
 beyond-reference extensions. The batch forms (tumbling windows via
-F.window, gap sessionization via lag/sum windows) are the
-oracle-checkable semantics; `streaming_tumbling_counts` runs the same
-tumbling aggregation as a Structured Streaming query with a watermark,
-demonstrating the readStream → window → writeStream path on the same
-schema.
+F.window, gap sessionization via lag/sum windows or the native
+session_window) are the oracle-checkable semantics the suite runs;
+``streaming_interval_join`` is the one Structured Streaming query
+here (a stream-stream join, pinned pair-for-pair to the batch range
+join).
 """
 
 from __future__ import annotations
@@ -83,74 +83,6 @@ def session_counts_native(events: DataFrame, gap: str = "30 minutes") -> DataFra
             "n_events",
         )
     )
-
-
-def streaming_session_counts(
-    spark,
-    source_path: str,
-    schema,
-    gap: str = "30 minutes",
-    watermark: str = "2 hours",
-    sink_name: str = "session_counts_sink",
-):
-    """``session_counts_native`` as a Structured Streaming query:
-    readStream → watermark → session_window aggregate → memory sink,
-    in **append** mode: a session row is emitted exactly once, when the
-    watermark passes its end, and its state is then dropped. That is
-    the production semantics for infinite streams — state is bounded
-    by the watermark horizon, unlike ``complete`` mode, which would
-    retain (and re-emit) every session forever (ADVICE r4)."""
-    stream = spark.readStream.schema(schema).format("parquet").load(source_path)
-    agg = (
-        stream.withWatermark("ts", watermark)
-        .groupBy(F.session_window("ts", gap).alias("w"), F.col("user_id"))
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(
-            "user_id",
-            F.col("w.start").alias("session_start"),
-            F.col("w.end").alias("session_end"),
-            "n_events",
-        )
-    )
-    query = (
-        agg.writeStream.format("memory")
-        .queryName(sink_name)
-        .outputMode("append")
-        .start()
-    )
-    return query, sink_name
-
-
-def streaming_tumbling_counts(
-    spark,
-    source_path: str,
-    schema,
-    duration: str = "1 hour",
-    watermark: str = "2 hours",
-    sink_name: str = "tumbling_counts_sink",
-):
-    """Structured Streaming variant of ``tumbling_counts``: file-source
-    readStream over parquet event data → watermark for late-data
-    bounding → tumbling window agg → memory sink.
-
-    Returns (query, sink_name); caller runs query.processAllAvailable()
-    then reads ``spark.table(sink_name)``. At scale the source would be
-    Kafka and the sink a table; the plan in between is identical.
-    """
-    stream = spark.readStream.schema(schema).format("parquet").load(source_path)
-    agg = (
-        stream.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", duration).alias("w"), F.col("event_type"))
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(F.col("w.start").alias("window_start"), "event_type", "n_events")
-    )
-    query = (
-        agg.writeStream.format("memory")
-        .queryName(sink_name)
-        .outputMode("complete")
-        .start()
-    )
-    return query, sink_name
 
 
 def streaming_interval_join(
@@ -247,38 +179,3 @@ def tumbling_distinct_users(
             ).alias("hll_within_tol"),
         )
     )
-
-
-def streaming_tumbling_distinct(
-    spark,
-    source_path: str,
-    schema,
-    duration: str = "1 hour",
-    watermark: str = "2 hours",
-    lg_k: int = 12,
-    sink_name: str = "tumbling_distinct_sink",
-):
-    """Structured Streaming twin of ``tumbling_distinct_users``'s
-    sketch arm: the HLL sketch aggregate is mergeable, so the windowed
-    estimate under incremental execution equals the batch estimate
-    exactly (asserted batch ≡ stream in tests/test_streaming.py)."""
-    stream = spark.readStream.schema(schema).format("parquet").load(source_path)
-    agg = (
-        stream.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", duration).alias("w"), F.col("event_type"))
-        .agg(
-            F.hll_sketch_estimate(
-                F.hll_sketch_agg(F.col("user_id"), F.lit(lg_k))
-            ).alias("n_users_approx")
-        )
-        .select(
-            F.col("w.start").alias("window_start"), "event_type", "n_users_approx"
-        )
-    )
-    query = (
-        agg.writeStream.format("memory")
-        .queryName(sink_name)
-        .outputMode("complete")
-        .start()
-    )
-    return query, sink_name

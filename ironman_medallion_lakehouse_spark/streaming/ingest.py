@@ -2,10 +2,10 @@
 TableStore merge.
 
 Beyond-reference extension (the reference lands batch files only —
-SURVEY §2.9): the canonical continuous-bronze pattern. A file-source
-stream (Kafka at scale — same plan downstream of the source) feeds
-``foreachBatch``, and each micro-batch MERGEs into a manifest-versioned
-TableStore table:
+SURVEY §2.9): ``streaming_dedup_ingest`` is the crawl-ingest gate. A
+file-source stream (Kafka at scale — same plan downstream of the
+source) feeds ``foreachBatch``, and each micro-batch MERGEs into
+manifest-versioned TableStore tables:
 
 - ``merge_insert_only`` per batch gives **idempotent** ingest: a
   replayed micro-batch (restart between sink write and checkpoint
@@ -15,10 +15,8 @@ TableStore table:
 - Each batch commit is one TableStore version, so the table's CDC feed
   (``table_changes``) doubles as the stream's downstream change log.
 
-``streaming_dedup`` is the in-stream companion: watermark-bounded
-drop-duplicates so late replays of the same event_id never reach the
-sink, with state expiring past the watermark instead of growing
-forever.
+``two_sided_cusum`` is the batch volume-shift chart the q145 battery
+runs.
 """
 
 from __future__ import annotations
@@ -26,57 +24,6 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from ironman_medallion_lakehouse_spark.sources.tablestore import ConcurrentCommitError
-
-
-def streaming_merge_into(
-    spark,
-    store,
-    source_path: str,
-    schema,
-    table: str,
-    keys: list[str],
-    checkpoint_dir: str,
-    commit_retries: int = 5,
-    partition_by: list[str] | None = None,
-):
-    """File-source stream merged continuously into a TableStore table.
-
-    Returns the streaming query; caller drives it (processAllAvailable
-    for tests, awaitTermination in production). The checkpoint dir must
-    be a durable shared path at scale (it holds source offsets — the
-    replay cursor).
-
-    ``partition_by`` sets the layout when the FIRST micro-batch creates
-    the table (r2 ADVICE: without it the target was born unpartitioned
-    and every later batch inherited that); existing tables keep their
-    recorded layout."""
-
-    def _merge_batch(batch_df, batch_id: int) -> None:
-        # foreachBatch may replay a batch after restart; insert-only
-        # merge on the natural key makes the replay a no-op.
-        #
-        # A concurrent writer (another stream, an OPTIMIZE) can win the
-        # put-if-absent commit race; merge_insert_only re-reads the
-        # latest manifest on entry, so losing the race is safely
-        # retryable — without this, the first real conflict would kill
-        # the whole streaming query.
-        for attempt in range(commit_retries + 1):
-            try:
-                store.merge_insert_only(
-                    batch_df, table, keys=keys, partition_by=partition_by
-                )
-                return
-            except ConcurrentCommitError:
-                if attempt == commit_retries:
-                    raise
-
-    stream = spark.readStream.schema(schema).format("parquet").load(source_path)
-    return (
-        stream.writeStream.foreachBatch(_merge_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-        .start()
-    )
 
 
 def streaming_dedup_ingest(
@@ -341,109 +288,6 @@ def streaming_dedup_ingest(
     )
 
 
-def streaming_dedup(
-    spark,
-    source_path: str,
-    schema,
-    keys: list[str],
-    event_time: str = "ts",
-    watermark: str = "2 hours",
-    sink_name: str = "dedup_sink",
-):
-    """Watermarked streaming deduplication: only the first arrival of
-    each key tuple within the watermark horizon is emitted; the
-    key-tracking state is dropped once the watermark passes it, so
-    state size is O(keys per horizon), not O(stream).
-
-    Returns (query, sink_name) over a memory sink (append mode — dedup
-    emits each survivor exactly once)."""
-    stream = spark.readStream.schema(schema).format("parquet").load(source_path)
-    deduped = stream.withWatermark(event_time, watermark).dropDuplicatesWithinWatermark(
-        keys
-    )
-    query = (
-        deduped.writeStream.format("memory")
-        .queryName(sink_name)
-        .outputMode("append")
-        .start()
-    )
-    return query, sink_name
-
-
-def streaming_index_ingest(
-    spark,
-    index,
-    source_path: str,
-    schema,
-    checkpoint_dir: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    drift_reference=None,
-    drift_min_cosine: float = 0.98,
-    drift_log: list | None = None,
-):
-    """Stream embedding batches into a materialized IVF index
-    (operators/similarity.IvfIndex) — the ANN-index twin of
-    ``streaming_dedup_ingest``: each micro-batch is assigned against
-    the FROZEN codebook and insert-only-merged into the
-    cell-partitioned assignment table via ``IvfIndex.add`` (O(touched
-    cells) per batch, key-idempotent on replay — exactly-once table
-    state under foreachBatch's replay semantics). The index must be
-    ``build``-t before the stream starts (the codebook is the static
-    side); ``rebuild`` periodically when probe recall degrades.
-
-    ``drift_reference`` (optional) adds the EMBEDDING-DRIFT arm — the
-    representation-space twin of the document gate's KS/PSI screens:
-    each batch's mean-embedding cosine against a static reference
-    sample (operators/similarity.embedding_mean_drift; the reference
-    side's per-dimension sums are computed once at stream start) must
-    stay ≥ ``drift_min_cosine`` or the WHOLE batch is skipped — a
-    changed upstream encoder or a topical source flip would otherwise
-    pollute the index with vectors the frozen codebook partitions
-    badly (recall silently degrades; this refuses at the door
-    instead). Skips are recorded as (batch_id, n, mean_cosine,
-    norm_ratio) in ``drift_log`` (caller-owned; replay recomputes the
-    same decision — idempotent).
-
-    Returns the streaming query; caller drives it."""
-    from ironman_medallion_lakehouse_spark.operators.similarity import (
-        embedding_mean_drift,
-    )
-
-    ref = (
-        drift_reference.select(vec_col).localCheckpoint(eager=True)
-        if drift_reference is not None
-        else None
-    )
-
-    def _add_batch(batch_df, batch_id: int) -> None:
-        batch = batch_df.dropDuplicates([id_col]).select(id_col, vec_col)
-        if batch.isEmpty():
-            return
-        if ref is not None:
-            rows = embedding_mean_drift(ref, batch, vec_col=vec_col).collect()
-            r = rows[0] if rows else None
-            if (
-                r is not None
-                and r.mean_cosine is not None
-                and r.mean_cosine < drift_min_cosine
-            ):
-                if drift_log is not None:
-                    drift_log.append(
-                        (int(batch_id), int(r.n_cur), r.mean_cosine, r.norm_ratio)
-                    )
-                return  # whole batch refused; index untouched
-        index.add(batch, id_col=id_col, vec_col=vec_col)
-
-    stream = spark.readStream.schema(schema).format("parquet").load(source_path)
-    return (
-        stream.writeStream.foreachBatch(_add_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-        .start()
-    )
-
-
 def two_sided_cusum(
     series,
     t_col: str,
@@ -452,10 +296,8 @@ def two_sided_cusum(
     k_sd: float = 0.5,
     h_sd: float = 4.0,
 ):
-    """TWO-SIDED Page chart over an ordered (t, x) series — the batch
-    kernel ``streaming_volume_monitor`` runs per micro-batch, exposed
-    so the same code path is driver-attestable on a static series
-    (VERDICT r8 directive 6; q142's ``volmon_*`` arms). Upper chart =
+    """TWO-SIDED Page chart over an ordered (t, x) series — a volume
+    monitor's level-shift screen (q145's ``volmon_*`` arms). Upper chart =
     ``experiment.cusum_changepoint`` on the series; lower chart = the
     upper chart on the REFLECTED series (x → −x, baseline parameters
     re-estimated on the reflection — the textbook
@@ -490,174 +332,3 @@ def two_sided_cusum(
         F.col("alarm_t").alias("down_alarm_t"),
     )
     return up.crossJoin(F.broadcast(down))
-
-
-def streaming_volume_monitor(
-    spark,
-    store,
-    source_path: str,
-    schema,
-    checkpoint_dir: str,
-    volume_table: str = "monitor.batch_volumes",
-    alerts_table: str = "monitor.volume_alerts",
-    baseline_n: int = 10,
-    k_sd: float = 0.5,
-    h_sd: float = 4.0,
-    chart: str = "cusum",
-    commit_retries: int = 5,
-):
-    """SEQUENTIAL level-shift monitor over per-batch ingest volume —
-    the control-chart complement of the two-sample drift gates: KS/PSI
-    ask "does THIS batch's distribution match the reference?", this
-    asks "has the batch-volume LEVEL shifted, and at which batch?" —
-    the screen that catches a scraper losing a source (volume drops)
-    or double-fetching (volume jumps) even when each individual
-    batch's content distribution still looks fine.
-
-    Per micro-batch: merge ONE (batch_id, n_docs) row into
-    ``volume_table`` (keyed by batch_id — replay-idempotent), then run
-    the chart over the accumulated series with baseline parameters
-    from its first ``baseline_n`` points (``series_params``). While
-    the baseline is still forming (≤ baseline_n points) no chart runs.
-    ``chart="cusum"`` runs Page's chart TWO-SIDED — the upper chart on
-    the series and the lower chart as the upper chart on the REFLECTED
-    series (x → −x, params re-estimated on the reflection: the
-    textbook S⁻ = max(0, S⁻ + mu − k − x) identity) — so both a
-    volume jump (double-fetch) and a volume drop (lost source) fire;
-    ``chart="ewma"`` is two-sided by construction (|E − mu| limit).
-    When a chart alarms, ONE alert row
-
-        (side, alarm_t, alarm_batch_id, stat, n_points)
-
-    is merged into ``alerts_table`` keyed by (side, alarm_t) with side
-    ∈ {'up', 'down'} (CUSUM) or 'both' (EWMA) — the FIRST crossing
-    index is stable while a shift persists, so a standing alarm
-    re-merges the same row instead of spamming one per batch
-    (replay-idempotent for the same reason), and because the merge is
-    insert-only the row FREEZES the chart state at first crossing:
-    ``stat`` carries s_max (CUSUM, the alarming side's) or ewma_last
-    (EWMA) as of that batch, and ``n_points`` says how long the series
-    was — re-running the chart over the first ``n_points`` recorded
-    batches reproduces ``stat`` exactly.
-
-    This is a MONITOR, not a gate: batches are never refused (a volume
-    shift means "page the operator", not "the data is bad" — refuse
-    content with the drift gates). Cost: the series is ONE ROW PER
-    MICRO-BATCH (horizon-sized by construction — hours of batches, not
-    data), so the chart's ordered pass is bounded regardless of data
-    volume; per-batch overhead is one count + one tiny merge + one
-    chart job over the volume table.
-
-    Returns the streaming query; caller drives it."""
-    from ironman_medallion_lakehouse_spark.operators.experiment import (
-        ewma_control,
-        series_params,
-    )
-
-    if chart not in ("cusum", "ewma"):
-        raise ValueError(f"chart must be 'cusum' or 'ewma', got {chart!r}")
-
-    def _retrying(fn) -> None:
-        for attempt in range(commit_retries + 1):
-            try:
-                fn()
-                return
-            except ConcurrentCommitError:
-                if attempt == commit_retries:
-                    raise
-
-    def _monitor_batch(batch_df, batch_id: int) -> None:
-        n = batch_df.count()
-        row = batch_df.sparkSession.createDataFrame(
-            [(int(batch_id), int(n))], "batch_id long, n_docs long"
-        )
-        _retrying(
-            lambda: store.merge_insert_only(row, volume_table, keys=["batch_id"])
-        )
-        series = store.read(volume_table).select("batch_id", "n_docs")
-        n_series = series.count()
-        if n_series <= int(baseline_n):
-            return  # baseline still forming
-        # the series is horizon-sized (one row per micro-batch) —
-        # materialize once for the param/chart passes below
-        series = series.localCheckpoint(eager=True)
-
-        def _params(s):
-            return series_params(
-                s, "batch_id", "n_docs", baseline_n=baseline_n, k_sd=k_sd, h_sd=h_sd
-            )
-
-        alarms = []  # (side, alarm_t, stat, n_points)
-        if chart == "cusum":
-            # both sides in one attestable kernel (two_sided_cusum —
-            # the lower chart is the upper chart on the reflection)
-            r = next(
-                iter(
-                    two_sided_cusum(
-                        series,
-                        "batch_id",
-                        "n_docs",
-                        baseline_n=baseline_n,
-                        k_sd=k_sd,
-                        h_sd=h_sd,
-                    ).collect()
-                ),
-                None,
-            )
-            if r is not None and r.up_alarm_t is not None:
-                alarms.append(("up", r.up_alarm_t, r.up_smax, r.n_points))
-            if r is not None and r.down_alarm_t is not None:
-                alarms.append(("down", r.down_alarm_t, r.down_smax, r.n_points))
-        else:
-            r = next(
-                iter(
-                    ewma_control(
-                        series,
-                        "batch_id",
-                        "n_docs",
-                        _params(series),
-                        # already counted for the baseline check —
-                        # keeps the chart lazy (no extra per-batch job)
-                        n_points=n_series,
-                    ).collect()
-                ),
-                None,
-            )
-            if r is not None and r.alarm_t is not None:
-                alarms.append(("both", r.alarm_t, r.ewma_last, r.n_points))
-        if not alarms:
-            return
-        # resolve the 1-based alarm indexes to actual batch ids (one
-        # tiny job over the horizon-sized series)
-        from pyspark.sql import Window
-
-        idx = {
-            int(row["_t"]): int(row["batch_id"])
-            for row in series.withColumn(
-                # bounded-serial: one row per micro-batch (horizon-sized series)
-                "_t", F.row_number().over(Window.orderBy("batch_id"))
-            )
-            .filter(F.col("_t").isin([int(t) for _, t, _, _ in alarms]))
-            .collect()
-        }
-        alert = batch_df.sparkSession.createDataFrame(
-            [
-                (side, int(t), idx.get(int(t)), float(stat), int(np))
-                for side, t, stat, np in alarms
-            ],
-            "side string, alarm_t long, alarm_batch_id long,"
-            " stat double, n_points long",
-        )
-        _retrying(
-            lambda: store.merge_insert_only(
-                alert, alerts_table, keys=["side", "alarm_t"]
-            )
-        )
-
-    stream = spark.readStream.schema(schema).format("parquet").load(source_path)
-    return (
-        stream.writeStream.foreachBatch(_monitor_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-        .start()
-    )

@@ -30,7 +30,7 @@ from ironman_medallion_lakehouse_spark.operators import similarity as S
 from ironman_medallion_lakehouse_spark.operators import vocab as VB
 from ironman_medallion_lakehouse_spark.session import load_tables
 from ironman_medallion_lakehouse_spark.streaming import event_windows as EW
-from ironman_medallion_lakehouse_spark.suite import davg, dsum, register
+from ironman_medallion_lakehouse_spark.suite import dsum, register
 
 _WORDS = "list_distinct(string_split_regex(lower(text), '\\s+'))"
 
@@ -1350,33 +1350,6 @@ def q87_session_window_native(spark: SparkSession, sf_dir: str) -> DataFrame:
     return EW.session_counts_native(t["events"], gap="30 minutes")
 
 
-def q53_event_pivot_json(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Conditional-sum pivot over event types (the reference's A2 idiom)
-    + JSON property extraction from the props column
-    (get_json_object ≡ json_extract_string).
-
-    Not registered as a suite entry since round 3: the A2
-    conditional-sum pivot keeps driver rows (q01/q07/q20) and the JSON
-    extraction surface moved into q81_cdc_stream's aggregate; this
-    slot went to the change-feed streaming-source row."""
-    t = load_tables(spark, sf_dir, "events")
-
-    def n(ev):
-        return F.sum(F.when(F.col("event_type") == ev, 1).otherwise(0)).alias(f"n_{ev}")
-
-    return (
-        t["events"]
-        .groupBy((F.col("user_id") % 10).alias("user_bucket"))
-        .agg(
-            n("click"), n("view"), n("purchase"), n("signup"), n("error"),
-            F.sum(
-                F.get_json_object("props", "$.k").cast("bigint")
-            ).alias("sum_k"),
-            davg("value", "avg_value"),
-        )
-    )
-
-
 @register(
     "q69_stateful_streaming",
     oracle="""
@@ -1475,7 +1448,7 @@ def q81_cdc_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     each event_id exactly once, the accumulated micro-batch union must
     equal the whole events table — which is the DuckDB oracle. The
     aggregate also carries the JSON-property surface
-    (get_json_object ≡ json_extract_string, previously q53).
+    (get_json_object ≡ json_extract_string).
 
     Scale shape: each micro-batch is O(that commit's added files) —
     the log walk is one pass per range, files stream as Arrow row

@@ -11,7 +11,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ironman_medallion_lakehouse_spark.operators.asof import as_of_join
-from ironman_medallion_lakehouse_spark.operators.similarity import cosine
 from ironman_medallion_lakehouse_spark.session import load_tables
 from ironman_medallion_lakehouse_spark.sources.tablestore import TableStore
 from ironman_medallion_lakehouse_spark.suite import dsum, register, year_of
@@ -88,35 +87,6 @@ def q56_file_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.lit("json").alias("src_format"), "group_key", "n_rows", "metric")
     )
     return csv_agg.unionByName(json_agg)
-
-
-# ===========================================================================
-# per-group normalization: window form (oracle) ≡ applyInPandas form (pytest)
-# ===========================================================================
-
-def q65_group_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-group normalization (centering), Spark-first: a window
-    aggregate over the group — no Python, one shuffle. The
-    applyInPandas variant of the same semantics lives in
-    tests/test_extensions_more.py and is asserted equal; built-ins win
-    whenever they can express the op (SURVEY §2.10 philosophy).
-
-    Not registered as a suite entry since round 3: the window-over-agg
-    family keeps three driver rows (q10/q23 share-of-group, q68 frame
-    window) and this slot went to the sketch-rollup row (q82); the
-    window ≡ applyInPandas equivalence stays pytest-enforced."""
-    from pyspark.sql import Window
-
-    t = load_tables(spark, sf_dir, "customer")
-    w = Window.partitionBy("c_nationkey")
-    mu = F.sum(F.col("c_acctbal").cast("decimal(18,4)")).over(w).cast("double") / F.count(
-        F.lit(1)
-    ).over(w)
-    return t["customer"].select(
-        "c_custkey",
-        "c_nationkey",
-        F.round((F.col("c_acctbal") - mu) / 1000.0, 6).alias("centered_k"),
-    )
 
 
 # ===========================================================================

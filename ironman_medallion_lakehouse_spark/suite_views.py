@@ -16,7 +16,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ironman_medallion_lakehouse_spark.session import load_tables
-from ironman_medallion_lakehouse_spark.suite import davg, dsum, register, year_of
+from ironman_medallion_lakehouse_spark.suite import davg, register, year_of
 
 
 @register(

@@ -7,6 +7,7 @@ from pyspark.sql import Row
 from pyspark.sql import functions as F
 
 from ironman_medallion_lakehouse_spark.operators.asof import as_of_join
+from tests.plan_text import formatted_plan
 
 
 def _ts(s):
@@ -53,9 +54,7 @@ def test_asof_preserves_left_rowcount(spark):
 def test_asof_single_shuffle(spark):
     left, right = _frames(spark)
     joined = as_of_join(left, right, on=["k"], right_payload=["rid"])
-    plan = joined._sc._jvm.PythonSQLUtils.explainString(
-        joined._jdf.queryExecution(), "formatted"
-    )
+    plan = formatted_plan(joined)
     # union-tag-window: exactly one hash-partitioning shuffle (the
     # window); formatted explain prints each node twice (tree + detail)
     assert plan.count("hashpartitioning") == 1

@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 from ironman_medallion_lakehouse_spark.operators.cumulative import (
     partitioned_running_sum,
 )
+from tests.plan_text import formatted_plan
 
 
 def _naive(df, order_by, value_col, out_col):
@@ -90,9 +91,7 @@ def test_q125_plan_has_no_data_sized_serial_section(spark):
     from ironman_medallion_lakehouse_spark import suite
 
     df = suite.queries()["q125_abc_analysis"](spark, "/root/testdata/sf0.001")
-    plan = df._sc._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "formatted"
-    )
+    plan = formatted_plan(df)
     assert plan.count("SinglePartition") == 1
     assert "rangepartitioning" in plan
     df.collect()

@@ -11,12 +11,12 @@ import random
 
 import pytest
 from pyspark.sql import Row
-from pyspark.sql import functions as F
 
 from ironman_medallion_lakehouse_spark.operators.experiment import (
     bh_adjust,
+    binned_counts_from_value_counts,
     delta_method_ratio_test,
-    js_divergence_binned,
+    js_from_bin_counts,
     normal_p_two_sided,
     normal_p_two_sided_sql,
     per_value_counts,
@@ -96,6 +96,14 @@ def _py_js(xs_a, xs_b, edges):
     return js
 
 
+def _js_divergence(df, value_col, group_col, group_a, group_b, edges):
+    """Binned JS as the q142 battery computes it: per-value counts,
+    binned into exact per-bin counts, then the JS finisher."""
+    pv = per_value_counts(df, value_col, group_col, group_a, group_b)
+    per_bin = binned_counts_from_value_counts(pv, edges)
+    return js_from_bin_counts(per_bin, len(edges) + 1)
+
+
 class TestJsDivergence:
     EDGES = [10.0, 20.0, 40.0]
 
@@ -104,21 +112,21 @@ class TestJsDivergence:
         xs_a = [rng.uniform(0, 60) for _ in range(300)]
         xs_b = [rng.uniform(15, 80) for _ in range(250)]
         df = _two_sample_df(spark, xs_a, xs_b)
-        row = js_divergence_binned(df, "v", "g", "a", "b", self.EDGES).collect()[0]
+        row = _js_divergence(df, "v", "g", "a", "b", self.EDGES).collect()[0]
         assert row["js"] == pytest.approx(_py_js(xs_a, xs_b, self.EDGES), abs=1e-5)
 
     def test_symmetric_and_bounded(self, spark):
         xs_a = [1.0] * 50
         xs_b = [50.0] * 50  # fully separated: JS near its ln 2 ceiling
         df = _two_sample_df(spark, xs_a, xs_b)
-        ab = js_divergence_binned(df, "v", "g", "a", "b", self.EDGES).collect()[0]
-        ba = js_divergence_binned(df, "v", "g", "b", "a", self.EDGES).collect()[0]
+        ab = _js_divergence(df, "v", "g", "a", "b", self.EDGES).collect()[0]
+        ba = _js_divergence(df, "v", "g", "b", "a", self.EDGES).collect()[0]
         assert ab["js"] == ba["js"]
         assert 0.6 < ab["js"] <= math.log(2) + 1e-9
 
     def test_identical_zero(self, spark):
         xs = [5.0, 15.0, 25.0, 45.0]
-        row = js_divergence_binned(
+        row = _js_divergence(
             _two_sample_df(spark, xs, xs), "v", "g", "a", "b", self.EDGES
         ).collect()[0]
         assert row["js"] == 0.0
@@ -126,7 +134,7 @@ class TestJsDivergence:
     def test_empty_bin_stays_finite_where_psi_spikes(self, spark):
         # all of b's mass in one bin: JS stays ≤ ln 2; no inf/NaN
         df = _two_sample_df(spark, [5.0, 15.0, 25.0, 45.0], [45.0] * 40)
-        row = js_divergence_binned(df, "v", "g", "a", "b", self.EDGES).collect()[0]
+        row = _js_divergence(df, "v", "g", "a", "b", self.EDGES).collect()[0]
         assert row["js"] is not None and row["js"] <= math.log(2) + 1e-9
 
 

@@ -6,7 +6,6 @@ from __future__ import annotations
 import pandas as pd
 from hypothesis import given, settings
 from hypothesis import strategies as st
-from pyspark.sql import Row
 from pyspark.sql import functions as F
 
 from ironman_medallion_lakehouse_spark.functions.scalar import parse_time_to_seconds
@@ -14,8 +13,8 @@ from ironman_medallion_lakehouse_spark.functions.scalar import parse_time_to_sec
 
 def test_apply_in_pandas_matches_window_form(spark):
     """The grouped-map (applyInPandas) form of per-group centering must
-    equal the pure-window form used by q65 — documenting that the
-    Python path is an alternative, not the implementation."""
+    equal the pure-window form — documenting that the Python path is
+    an alternative, not the implementation."""
     from ironman_medallion_lakehouse_spark.session import ensure_package_on_executors
 
     ensure_package_on_executors(spark)

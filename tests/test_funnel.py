@@ -64,19 +64,6 @@ def test_funnel_strictly_after(spark):
     assert row.t_click is None
 
 
-def test_funnel_summary_counts(spark):
-    events = spark.createDataFrame(
-        [
-            _ev(1, "view", 0), _ev(1, "click", 1),
-            _ev(2, "view", 0),
-        ]
-    )
-    rows = {r.stage: r.n_users for r in FU.funnel_summary(
-        events, ["view", "click"], 3600
-    ).collect()}
-    assert rows == {"view": 2, "click": 1}
-
-
 def test_retention_hand_computed(spark):
     jan1 = dt.datetime(2024, 1, 1, 12, 0)  # a Monday
     events = spark.createDataFrame(

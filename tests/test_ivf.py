@@ -134,103 +134,6 @@ def test_incremental_add_matches_frozen_codebook_assignment(spark, tmp_path):
     assert got.collect()[0].vec_id == target.vec_id
 
 
-def test_streaming_index_ingest(spark, tmp_path):
-    """Embedding micro-batches stream into the IVF index: assignments
-    match the frozen codebook for every arrival order, replays insert
-    nothing, and a vector from the last batch is probeable."""
-    import os as _os
-
-    from ironman_medallion_lakehouse_spark.streaming.ingest import (
-        streaming_index_ingest,
-    )
-
-    emb = _emb(spark)
-    seed = emb.filter(F.col("vec_id") % 3 == 0)
-    rest = emb.filter(F.col("vec_id") % 3 != 0)
-    store = TableStore(spark, str(tmp_path / "wh"))
-    idx = IvfIndex(store, "ann.ivf")
-    idx.build(seed, n_cells=4, n_iter=2)
-
-    src = str(tmp_path / "emb_src")
-    rest.filter(F.col("vec_id") % 3 == 1).write.mode("append").parquet(src)
-    query = streaming_index_ingest(
-        spark, idx, src, emb.schema, str(tmp_path / "ckpt")
-    )
-    try:
-        query.processAllAvailable()
-        rest.filter(F.col("vec_id") % 3 == 2).write.mode("append").parquet(src)
-        query.processAllAvailable()
-        assert store.read(idx.assign_table).count() == emb.count()
-        target = rest.limit(1).collect()[0]
-        got = idx.probe(list(target.embedding), k=1, nprobe=1).collect()
-        assert got[0].vec_id == target.vec_id
-    finally:
-        query.stop()
-
-
-def test_streaming_index_ingest_embedding_drift_gate(spark, tmp_path):
-    """The embedding-drift arm: a batch from the reference
-    distribution streams into the index; a batch whose mean embedding
-    points elsewhere (encoder/source flip) is refused WHOLE — logged,
-    index untouched — and a later conforming batch is admitted."""
-    from ironman_medallion_lakehouse_spark.streaming.ingest import (
-        streaming_index_ingest,
-    )
-
-    # shift the synthetic (near-zero-mean) embeddings to mimic a real
-    # encoder's non-centered space — the regime the cosine screen
-    # assumes (see embedding_mean_drift's caveat)
-    emb = _emb(spark)
-    dim = len(emb.limit(1).collect()[0].embedding)
-    emb = emb.select(
-        "vec_id",
-        F.transform(F.col("embedding"), lambda x: x + F.lit(2.0)).alias("embedding"),
-    )
-    seed = emb.filter(F.col("vec_id") % 3 == 0)
-    store = TableStore(spark, str(tmp_path / "wh"))
-    idx = IvfIndex(store, "ann.ivf")
-    idx.build(seed, n_cells=4, n_iter=2)
-    n_seeded = store.read(idx.assign_table).count()
-
-    src = str(tmp_path / "emb_src")
-    log: list = []
-    good = emb.filter(F.col("vec_id") % 3 == 1)
-    good.write.mode("append").parquet(src)
-    query = streaming_index_ingest(
-        spark, idx, src, emb.schema, str(tmp_path / "ckpt"),
-        drift_reference=seed, drift_min_cosine=0.98, drift_log=log,
-    )
-    try:
-        query.processAllAvailable()
-        n_good = store.read(idx.assign_table).count()
-        assert n_good == n_seeded + good.count()  # conforming: admitted
-        assert log == []
-
-        # drifted batch: a constant far-off direction (encoder flip).
-        # coalesce(1): the query is live with continuous triggers, and a
-        # multi-file append commits part-files one by one — a trigger can
-        # list a PARTIAL batch, refuse it, and log twice (observed flake).
-        # One file appears atomically, so the whole batch lands in one
-        # micro-batch and the refusal is logged exactly once.
-        bad = spark.createDataFrame(
-            [(900 + i, [100.0] + [(-100.0) ** (j % 2) for j in range(dim - 1)])
-             for i in range(6)],
-            "vec_id long, embedding array<double>",
-        )
-        bad.coalesce(1).write.mode("append").parquet(src)
-        query.processAllAvailable()
-        assert store.read(idx.assign_table).count() == n_good  # untouched
-        assert len(log) == 1 and log[0][1] == 6 and log[0][2] < 0.98
-
-        good2 = emb.filter(F.col("vec_id") % 3 == 2)
-        good2.write.mode("append").parquet(src)
-        query.processAllAvailable()
-        assert store.read(idx.assign_table).count() == n_good + good2.count()
-        assert len(log) == 1
-    finally:
-        query.stop()
-
-
 def test_rebuild_defaults_to_build_geometry(spark, tmp_path):
     """ADVICE r7 item 2: build() persists its geometry (n_cells,
     n_iter, column names) in <name>_meta; a bare rebuild() keeps it

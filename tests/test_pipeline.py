@@ -15,6 +15,7 @@ from ironman_medallion_lakehouse_spark.config import FileSpec, PipelineConfig
 from ironman_medallion_lakehouse_spark.plans import gold_fact
 from ironman_medallion_lakehouse_spark.plans.views import VIEW_SQL
 from ironman_medallion_lakehouse_spark.sources.tablestore import TableStore
+from tests.plan_text import formatted_plan
 
 
 @pytest.fixture(scope="module")
@@ -393,14 +394,9 @@ def test_published_view_plans_keep_broadcast_joins(full_run, spark):
     publish_catalog(spark, store)
     fresh = spark.newSession()
 
-    def plan_of(df) -> str:
-        return df._sc._jvm.PythonSQLUtils.explainString(
-            df._jdf.queryExecution(), "formatted"
-        )
-
     dim_joining = 0
     for vname in VIEW_SQL:
-        plan = plan_of(fresh.sql(f"SELECT * FROM gold.{vname}"))
+        plan = formatted_plan(fresh.sql(f"SELECT * FROM gold.{vname}"))
         assert "SortMergeJoin" not in plan, f"{vname} fell to SortMergeJoin"
         if "dim_" in plan:
             dim_joining += 1

@@ -5,21 +5,14 @@ much as value correctness at 100 TB."""
 
 from __future__ import annotations
 
-import pytest
-
 from ironman_medallion_lakehouse_spark import suite
+from tests.plan_text import formatted_plan
 
 SF = "/root/testdata/sf0.001"
 
 
-def _plan_of(df) -> str:
-    return df._sc._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "formatted"
-    )
-
-
 def _plan(spark, name: str) -> str:
-    return _plan_of(suite.queries()[name](spark, SF))
+    return formatted_plan(suite.queries()[name](spark, SF))
 
 
 def test_filter_and_projection_pushdown(spark):
@@ -43,7 +36,7 @@ def test_dim_joins_are_broadcast(spark):
 def test_lookup_join_broadcast_and_codegen(spark):
     # q03/q13 are unregistered plan fixtures (their operator families are
     # driver-verified through q04/q25/q26/q66) — call the shapes directly
-    plan = _plan_of(suite.q03_dim_lookup_join(spark, SF))
+    plan = formatted_plan(suite.q03_dim_lookup_join(spark, SF))
     assert "BroadcastHashJoin" in plan
     # codegen subtrees only materialize in the AQE final plan — execute,
     # then inspect the executed plan
@@ -57,7 +50,7 @@ def test_lookup_join_broadcast_and_codegen(spark):
 
 
 def test_topk_uses_take_ordered(spark):
-    plan = _plan_of(suite.q13_topk(spark, SF))
+    plan = formatted_plan(suite.q13_topk(spark, SF))
     assert "TakeOrderedAndProject" in plan  # no global sort for top-k
 
 
@@ -89,7 +82,5 @@ def test_year_partitioned_table_prunes(spark, tmp_path):
     store.save_overwrite(df, "db.t", partition_by=["year"])
     scan = store.read("db.t").filter("year = 2024")
     assert scan.count() == 10
-    explain = scan._sc._jvm.PythonSQLUtils.explainString(
-        scan._jdf.queryExecution(), "formatted"
-    )
+    explain = formatted_plan(scan)
     assert "PartitionFilters" in explain and "year" in explain

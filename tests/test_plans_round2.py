@@ -6,18 +6,13 @@ multi-level aggregation) must actually appear in the plan."""
 from __future__ import annotations
 
 from ironman_medallion_lakehouse_spark import suite
+from tests.plan_text import formatted_plan
 
 SF = "/root/testdata/sf0.001"
 
 
-def _plan_of(df) -> str:
-    return df._sc._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "formatted"
-    )
-
-
 def _plan(spark, name: str) -> str:
-    return _plan_of(suite.queries()[name](spark, SF))
+    return formatted_plan(suite.queries()[name](spark, SF))
 
 
 def test_shipping_priority_topk_and_pushdown(spark):
@@ -36,7 +31,7 @@ def test_regional_volume_broadcasts_dims(spark):
     # plan contract stays enforced here.)
     from ironman_medallion_lakehouse_spark.suite_more import q67_regional_volume
 
-    plan = _plan_of(q67_regional_volume(spark, SF))
+    plan = formatted_plan(q67_regional_volume(spark, SF))
     assert plan.count("BroadcastHashJoin") >= 3
     assert plan.count("HashAggregate") >= 2
 
@@ -89,7 +84,7 @@ def test_moving_average_single_window_sort(spark):
     # the plan contract stays enforced here.)
     from ironman_medallion_lakehouse_spark.suite_more import q68_moving_average
 
-    plan = _plan_of(q68_moving_average(spark, SF))
+    plan = formatted_plan(q68_moving_average(spark, SF))
     assert plan.count("Exchange") <= 4
 
 

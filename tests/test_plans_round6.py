@@ -5,22 +5,15 @@ from __future__ import annotations
 
 import re
 
-from pyspark.sql import functions as F
-
 from ironman_medallion_lakehouse_spark import suite
 from ironman_medallion_lakehouse_spark.session import load_tables
+from tests.plan_text import formatted_plan
 
 SF = "/root/testdata/sf0.001"
 
 
-def _plan_of(df) -> str:
-    return df._sc._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "formatted"
-    )
-
-
 def _plan(spark, name: str) -> str:
-    return _plan_of(suite.queries()[name](spark, SF))
+    return formatted_plan(suite.queries()[name](spark, SF))
 
 
 def _n_key_shuffles(plan: str) -> int:
@@ -48,7 +41,7 @@ def test_split_column_itself_adds_no_shuffle(spark):
 
     t = load_tables(spark, SF, "documents")
     df = hash_split(t["documents"], "doc_id", {"a": 0.5, "b": 0.5})
-    plan = _plan_of(df)
+    plan = formatted_plan(df)
     assert _n_key_shuffles(plan) == 0
 
 

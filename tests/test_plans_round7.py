@@ -8,18 +8,13 @@ from __future__ import annotations
 import re
 
 from ironman_medallion_lakehouse_spark import suite
+from tests.plan_text import formatted_plan
 
 SF = "/root/testdata/sf0.001"
 
 
-def _plan_of(df) -> str:
-    return df._sc._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "formatted"
-    )
-
-
 def _plan(spark, name: str) -> str:
-    return _plan_of(suite.queries()[name](spark, SF))
+    return formatted_plan(suite.queries()[name](spark, SF))
 
 
 def test_ks_window_runs_over_distinct_values(spark):
@@ -34,7 +29,7 @@ def test_ks_window_runs_over_distinct_values(spark):
     from ironman_medallion_lakehouse_spark.session import load_tables
 
     ev = load_tables(spark, SF, "events")["events"]
-    plan = _plan_of(ks_two_sample(ev, "value", "event_type", "click", "view"))
+    plan = formatted_plan(ks_two_sample(ev, "value", "event_type", "click", "view"))
     # exactly one Window node in the whole plan
     windows = re.findall(r"\(\d+\) Window\b", plan)
     assert len(windows) == 1, f"expected 1 Window node, plan has {len(windows)}"
@@ -57,7 +52,7 @@ def test_mann_whitney_window_runs_over_distinct_values(spark):
     from ironman_medallion_lakehouse_spark.session import load_tables
 
     ev = load_tables(spark, SF, "events")["events"]
-    plan = _plan_of(mann_whitney_u(ev, "value", "event_type", "click", "view"))
+    plan = formatted_plan(mann_whitney_u(ev, "value", "event_type", "click", "view"))
     windows = re.findall(r"\(\d+\) Window\b", plan)
     assert len(windows) == 1, f"expected 1 Window node, plan has {len(windows)}"
     assert re.search(r"Keys \[1\]: \[v#\d+\]", plan), "groupBy(v) missing"
@@ -85,7 +80,7 @@ def test_poisson_bootstrap_no_data_sized_shuffle(spark):
         "o_totalprice",
         "o_orderkey",
     )
-    plan = _plan_of(
+    plan = formatted_plan(
         poisson_bootstrap_mean_diff(
             ov, "o_totalprice", "g", "a", "b", key_col="o_orderkey", replicates=8
         )

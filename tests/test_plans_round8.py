@@ -7,14 +7,9 @@ from __future__ import annotations
 import re
 
 from ironman_medallion_lakehouse_spark import suite
+from tests.plan_text import formatted_plan
 
 SF = "/root/testdata/sf0.001"
-
-
-def _plan_of(df) -> str:
-    return df._sc._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "formatted"
-    )
 
 
 def test_q143_arms_share_one_materialized_base(spark):
@@ -23,7 +18,7 @@ def test_q143_arms_share_one_materialized_base(spark):
     plan contains ZERO parquet scans — every arm (including the two
     planted-effect rows) reads the materialized RDD."""
     df = suite.queries()["q143_ab_test_battery"](spark, SF)
-    plan = _plan_of(df)
+    plan = formatted_plan(df)
     scans = re.findall(r"\(\d+\) Scan parquet", plan)
     assert len(scans) == 0, f"arms re-scan parquet: {len(scans)} scans"
     assert "ExistingRDD" in plan, "expected the checkpointed base as source"

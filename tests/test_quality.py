@@ -1,19 +1,17 @@
-"""Quality expectations: fused single-pass checks, quarantine routing,
-enforce gating, duplicate-key audit."""
+"""Quality expectations: fused single-pass checks and quarantine
+routing."""
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
 from ironman_medallion_lakehouse_spark.operators.quality import (
     Expectation,
     check,
-    check_unique,
-    enforce,
     quarantine,
 )
+from tests.plan_text import formatted_plan
 
 
 def _df(spark):
@@ -59,9 +57,7 @@ def test_check_is_single_pass(spark):
         F.count(F.lit(1)),
         *[F.sum(F.when(e.violation, 1).otherwise(0)) for e in checks],
     )
-    plan = agg_plan._sc._jvm.PythonSQLUtils.explainString(
-        agg_plan._jdf.queryExecution(), "formatted"
-    )
+    plan = formatted_plan(agg_plan)
     assert plan.count("Location: InMemoryFileIndex") == 1  # one scan, all checks
 
 
@@ -71,15 +67,3 @@ def test_quarantine_routing(spark):
     bad_rows = bad.collect()
     assert len(bad_rows) == 3
     assert all(r.has_data_issue for r in bad_rows)
-
-
-def test_enforce(spark):
-    with pytest.raises(ValueError, match="quality violations"):
-        enforce(_df(spark), _expectations())
-    good = _df(spark).filter(F.col("k") == "a")
-    assert enforce(good, _expectations()).count() == 1
-
-
-def test_check_unique(spark):
-    assert check_unique(_df(spark), ["k"]) == 1  # 'c' appears twice
-    assert check_unique(_df(spark).dropDuplicates(["k"]), ["k"]) == 0

@@ -193,9 +193,8 @@ def _census() -> dict[tuple[str, str], int]:
 #     CUSUM/EWMA (association-order), q143 battery t/z/CI/p (wide
 #     Sx^2 casts + libm), QTE percentile-label constructor (semantic).
 #   suite_extensions.py 0 / 0 — clean after the r13 q146/q151 removal.
-#   suite_more.py      2 SQL / 3 F.round — q125 revenue round-4
-#     (no-op), q132 median round-4 (avg of two 2dp values, no-op),
-#     q65 centered_k (pytest-only entry, no oracle to split). The q77
+#   suite_more.py      2 SQL / 2 F.round — q125 revenue round-4
+#     (no-op), q132 median round-4 (avg of two 2dp values, no-op). The q77
 #     price/total share round was REMOVED r14 on both sides
 #     (pre-gated bit-exact at 3 SFs, tools/probe_similarity_rounds
 #     .py r13).
@@ -218,7 +217,7 @@ SUITE_ROUND_ALLOWED = {
     "suite.py": (3, 3),
     "suite_analytics.py": (31, 5),
     "suite_extensions.py": (0, 0),
-    "suite_more.py": (2, 3),
+    "suite_more.py": (2, 2),
     "suite_training.py": (9, 1),
     "suite_views.py": (7, 7),
     "plans/views.py": (38, 0),

@@ -12,7 +12,11 @@ from ironman_medallion_lakehouse_spark.functions.scalar import (
     parse_division,
     parse_time_to_seconds,
     split_person_name,
-    status_flags,
+)
+from ironman_medallion_lakehouse_spark.plans.silver import (
+    INTEGER_COLUMNS,
+    TIME_COLUMNS,
+    build_silver,
 )
 
 
@@ -69,15 +73,34 @@ def test_parse_division(spark):
 
 
 def test_status_flags(spark):
-    flags = status_flags(F.col("d"))
-    df = spark.createDataFrame(
-        [("Finisher",), ("DNF",), ("DNS",), ("DQ",)], "d string"
-    ).select(*[v.alias(k) for k, v in flags.items()])
-    rows = df.collect()
-    assert rows[0].is_finisher and not rows[0].is_dnf
-    assert rows[1].is_dnf
-    assert rows[2].is_dns
-    assert rows[3].is_dq
+    """Silver's designation flags (03_silver.ipynb:257-260) on the
+    trimmed, uppercased designation. A NULL designation sets every
+    flag False, not NULL, and the scraper's "DSQ" spelling sets none:
+    the reference checks only "DQ"."""
+    cols = [
+        "athlete_name", "country", "designation", "division",
+        *INTEGER_COLUMNS, *[src for src, _ in TIME_COLUMNS],
+    ]
+    designations = ["Finisher", "DNF", " dns ", "DQ", "DSQ", None]
+    bronze = spark.createDataFrame(
+        [
+            (f"a{i}", "FR", d, "M18-24", *[None] * (len(cols) - 4))
+            for i, d in enumerate(designations)
+        ],
+        ", ".join(f"{c} string" for c in cols),
+    )
+    got = {
+        r.athlete_name: (r.is_finisher, r.is_dnf, r.is_dns, r.is_dq)
+        for r in build_silver(bronze).collect()
+    }
+    assert got == {
+        "a0": (True, False, False, False),
+        "a1": (False, True, False, False),
+        "a2": (False, False, True, False),
+        "a3": (False, False, False, True),
+        "a4": (False, False, False, False),
+        "a5": (False, False, False, False),
+    }
 
 
 def test_canonical_url_golden_cases(spark):

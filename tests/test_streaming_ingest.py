@@ -1,96 +1,11 @@
-"""Streaming → TableStore ingest: idempotent micro-batch merges and
-watermarked in-stream deduplication."""
+"""Streaming → TableStore ingest: the crawl-ingest gate's idempotent
+micro-batch merges, decontamination and drift arms."""
 
 from __future__ import annotations
 
 from pyspark.sql import Row
-from pyspark.sql import functions as F
 
 from ironman_medallion_lakehouse_spark.sources.tablestore import TableStore
-from ironman_medallion_lakehouse_spark.streaming.ingest import (
-    streaming_dedup,
-    streaming_merge_into,
-)
-
-
-def _events(spark, ids, hour=0):
-    rows = [
-        Row(event_id=i, ts=f"2024-01-01 {hour:02d}:{i % 60:02d}:00",
-            user_id=i % 3, event_type="click", value=float(i))
-        for i in ids
-    ]
-    return spark.createDataFrame(rows).withColumn("ts", F.col("ts").cast("timestamp"))
-
-
-def test_streaming_merge_into_tablestore(spark, tmp_path):
-    src = str(tmp_path / "src")
-    store = TableStore(spark, str(tmp_path / "wh"))
-    first = _events(spark, range(10))
-    first.coalesce(1).write.mode("append").parquet(src)
-
-    query = streaming_merge_into(
-        spark, store, src, first.schema, "bronze.events_stream",
-        keys=["event_id"], checkpoint_dir=str(tmp_path / "ckpt"),
-    )
-    try:
-        query.processAllAvailable()
-        assert store.read("bronze.events_stream").count() == 10
-        v1 = store._latest_manifest("bronze.events_stream").version
-
-        # second batch overlaps the first on event_id 5-9: insert-only
-        # merge must admit only the 5 genuinely-new keys
-        _events(spark, range(5, 15)).coalesce(1).write.mode("append").parquet(src)
-        query.processAllAvailable()
-        out = store.read("bronze.events_stream")
-        assert out.count() == 15
-        assert out.select("event_id").distinct().count() == 15
-        # each micro-batch committed as its own table version, so the
-        # CDC feed exposes exactly the streamed increment
-        v2 = store._latest_manifest("bronze.events_stream").version
-        assert v2 > v1
-        assert store.table_changes("bronze.events_stream", v1).count() == 5
-    finally:
-        query.stop()
-
-
-def test_streaming_merge_replay_is_idempotent(spark, tmp_path):
-    """A restarted stream with a wiped checkpoint replays every source
-    file — the insert-only merge makes the replay a no-op (exactly-once
-    table state from an at-least-once sink)."""
-    src = str(tmp_path / "src")
-    store = TableStore(spark, str(tmp_path / "wh"))
-    first = _events(spark, range(10))
-    first.coalesce(1).write.mode("append").parquet(src)
-
-    for attempt, ckpt in enumerate(["ckpt_a", "ckpt_b"]):
-        query = streaming_merge_into(
-            spark, store, src, first.schema, "bronze.replayed",
-            keys=["event_id"], checkpoint_dir=str(tmp_path / ckpt),
-        )
-        try:
-            query.processAllAvailable()
-        finally:
-            query.stop()
-        assert store.read("bronze.replayed").count() == 10, f"attempt {attempt}"
-
-
-def test_streaming_dedup_within_watermark(spark, tmp_path):
-    src = str(tmp_path / "src")
-    base = _events(spark, range(8))
-    base.coalesce(1).write.mode("append").parquet(src)
-    # duplicate arrivals of event_id 0-3 inside the watermark horizon
-    _events(spark, range(4)).coalesce(1).write.mode("append").parquet(src)
-
-    query, sink = streaming_dedup(
-        spark, src, base.schema, keys=["event_id"], sink_name="dd_sink"
-    )
-    try:
-        query.processAllAvailable()
-        out = spark.table(sink)
-        assert out.count() == 8
-        assert out.select("event_id").distinct().count() == 8
-    finally:
-        query.stop()
 
 
 def test_streaming_dedup_ingest_gate(spark, tmp_path):

@@ -15,12 +15,7 @@ from ironman_medallion_lakehouse_spark.operators import dedup as D
 from ironman_medallion_lakehouse_spark.operators import ranking as R
 from ironman_medallion_lakehouse_spark.operators import sampling as SA
 from ironman_medallion_lakehouse_spark.operators import similarity as S
-
-
-def _plan_of(df) -> str:
-    return df._sc._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "formatted"
-    )
+from tests.plan_text import formatted_plan
 
 
 # ------------------------------------------------------------------- BM25
@@ -52,7 +47,7 @@ def test_bm25_topk_order_and_plan(spark):
     rows = top.collect()
     assert len(rows) == 5
     assert [r.score for r in rows] == sorted((r.score for r in rows), reverse=True)
-    plan = _plan_of(top)
+    plan = formatted_plan(top)
     # top-k must be heap-based, never a global sort
     assert "TakeOrderedAndProject" in plan
 
@@ -157,21 +152,8 @@ def test_stratified_sample_rates_and_determinism(spark):
 
 def test_stratified_sample_is_map_only(spark):
     df = spark.createDataFrame([Row(k=i, stratum="a") for i in range(10)])
-    plan = _plan_of(SA.stratified_sample(df, "stratum", {"a": 0.5}, "k"))
+    plan = formatted_plan(SA.stratified_sample(df, "stratum", {"a": 0.5}, "k"))
     assert "Exchange" not in plan  # zero shuffles: scan-absorbed filter
-
-
-def test_stratified_fixed_n(spark):
-    df = spark.createDataFrame(
-        [Row(k=i, stratum="a" if i < 100 else "b") for i in range(103)]
-    )
-    got = SA.stratified_fixed_n(df, "stratum", 5, "k")
-    counts = {r.stratum: r.n for r in got.groupBy("stratum").agg(F.count("*").alias("n")).collect()}
-    assert counts == {"a": 5, "b": 3}  # min(n, stratum size)
-    # deterministic draw
-    assert {r.k for r in got.collect()} == {
-        r.k for r in SA.stratified_fixed_n(df, "stratum", 5, "k").collect()
-    }
 
 
 def test_signlsh_ann_finds_duplicate_and_prunes(spark):
