@@ -23,8 +23,6 @@ def remove_frequent_lines(
     text_col: str = "text",
     id_col: str = "doc_id",
     max_count: int = 1,
-    keep_empty_docs: bool = True,
-    materialize: bool = False,
 ) -> DataFrame:
     """Drop every line that occurs (exactly, after trim) more than
     ``max_count`` times ACROSS THE CORPUS, from every document — the
@@ -34,8 +32,7 @@ def remove_frequent_lines(
 
     with the surviving lines rejoined by '\\n' in their original
     order. A document whose every line was boilerplate keeps an empty
-    string (and ``keep_empty_docs=False`` drops it instead — feed the
-    survivors straight into the quality gate either way). Lines
+    string (the quality gate downstream drops it). Lines
     compare TRIMMED (indentation/trailing whitespace doesn't protect
     a cookie banner) but the ORIGINAL line text is what survives into
     the cleaned document.
@@ -61,11 +58,7 @@ def remove_frequent_lines(
     LRU-evictable and clearable (``spark.catalog.clearCache()`` or an
     unpersistRDD sweep, as bench.py does between queries). The blocks
     otherwise live for the session — callers running many corpora
-    through this in one session should either clear between calls or
-    pass ``materialize=True`` (ADVICE r10): the result is then eagerly
-    localCheckpoint'ed and the exploded frame unpersisted BEFORE
-    return, so nothing leaks into the session — at the cost of running
-    the job now and materializing the (document-sized) result. Fully
+    through this in one session should clear between calls. Fully
     deterministic (exact strings, integer positions) — replays
     verbatim in SQL with string_agg(... ORDER BY pos)."""
     from pyspark import StorageLevel
@@ -105,10 +98,4 @@ def remove_frequent_lines(
             ),
         ).alias(text_col),
     )
-    out = rebuilt.select(id_col, text_col, "n_lines", "n_removed")
-    if not keep_empty_docs:
-        out = out.filter(F.col("n_lines") > F.col("n_removed"))
-    if materialize:
-        out = out.localCheckpoint(eager=True)
-        lines.unpersist()
-    return out
+    return rebuilt.select(id_col, text_col, "n_lines", "n_removed")

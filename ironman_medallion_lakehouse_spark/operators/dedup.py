@@ -27,11 +27,9 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructField, StructType
 
 
-def words(text: Column | str, lowercase: bool = True) -> Column:
+def words(text: Column | str) -> Column:
     t = F.col(text) if isinstance(text, str) else text
-    if lowercase:
-        t = F.lower(t)
-    return F.split(t, r"\s+")
+    return F.split(F.lower(t), r"\s+")
 
 
 def word_set(text: Column | str) -> Column:

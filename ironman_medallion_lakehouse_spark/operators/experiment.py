@@ -1034,44 +1034,6 @@ def srm_check(
     )
 
 
-def psi_drift(
-    df: DataFrame,
-    value_col: str,
-    group_col: str,
-    group_a,
-    group_b,
-    bin_edges: list[float],
-) -> DataFrame:
-    """Population Stability Index — the ML-monitoring standard for
-    "has this feature/score distribution shifted between two
-    populations" (reference vs current scoring batch):
-
-        PSI = Σ_bins (p_i − q_i) · ln(p_i / q_i)
-
-    over a FIXED binning (``bin_edges`` literals; two open-ended outer
-    bins), with add-0.5 smoothing so an empty bin contributes a finite
-    term: p_i = (c_i + 0.5)/(n + 0.5·B). Common read: < 0.1 stable,
-    0.1–0.25 moderate shift, > 0.25 major shift. ONE row
-    (n_a, n_b, psi). The binned complement of KS (q142): insensitive
-    to within-bin wiggle, sensitive to mass moving between bins, and
-    — unlike KS — embarrassingly parallel with NO serial section.
-
-    Exactness: bin index = #{edges ≤ v} (the same literal-threshold
-    trick as the bootstrap weights — trivially engine-portable); bin
-    counts are exact integers from one map-side-combined aggregate;
-    each bin's term is a fixed double expression rounded into
-    DECIMAL(18,9) before the B-row sum (order-free). Plan: one grouped
-    count on ≤ B+? keys, one tiny total, scalar output. A caller that
-    already holds a ``per_value_counts`` frame should bin THAT instead
-    (``binned_counts_from_value_counts`` → ``psi_from_bin_counts``) —
-    same exact integers, no second pass over the data."""
-    edges = [float(e) for e in bin_edges]
-    return psi_from_bin_counts(
-        binned_counts(df, value_col, group_col, group_a, group_b, edges),
-        len(edges) + 1,
-    )
-
-
 def _bin_index(v, edges: list[float]):
     """#{edges ≤ v} as a literal-threshold chain — v is a plain column
     reference, so repeating it across branches costs nothing (unlike
@@ -1082,42 +1044,17 @@ def _bin_index(v, edges: list[float]):
     return b
 
 
-def binned_counts(
-    df: DataFrame,
-    value_col: str,
-    group_col: str,
-    group_a,
-    group_b,
-    bin_edges: list[float],
-) -> DataFrame:
-    """Exact per-bin two-group counts ``(bin, ca, cb)`` over a fixed
-    binning — the shared pre-aggregation of the binned drift statistics
-    (PSI, binned JS): one map-side-combined grouped count on ≤ B+1
-    keys."""
-    edges = [float(e) for e in bin_edges]
-    v = F.col(value_col)
-    return (
-        df.filter(F.col(group_col).isin([group_a, group_b]))
-        .filter(v.isNotNull())
-        .select(
-            _bin_index(v, edges).alias("bin"),
-            F.when(F.col(group_col) == group_a, 1).otherwise(0).alias("ia"),
-            F.when(F.col(group_col) == group_b, 1).otherwise(0).alias("ib"),
-        )
-        .groupBy("bin")
-        .agg(F.sum("ia").alias("ca"), F.sum("ib").alias("cb"))
-    )
-
-
 def binned_counts_from_value_counts(
     per_value: DataFrame, bin_edges: list[float]
 ) -> DataFrame:
-    """Per-bin counts derived from a ``per_value_counts`` frame: bin
-    the DISTINCT VALUES and sum their exact integer counts — identical
-    to ``binned_counts`` on the raw rows, but the pass runs over the
-    value domain, so a caller sharing one materialized pre-aggregation
-    across the CDF arms (KS, W1) feeds the binned arms (PSI, JS) from
-    it for free instead of re-scanning the data."""
+    """Exact per-bin two-group counts ``(bin, ca, cb)`` over a fixed
+    binning (``bin_edges`` literals; two open-ended outer bins), derived
+    from a ``per_value_counts`` frame: bin the DISTINCT VALUES and sum
+    their exact integer counts. Bin index = #{edges ≤ v} (a
+    literal-threshold chain, trivially engine-portable). The pass runs
+    over the value domain, so a caller sharing one materialized
+    pre-aggregation across the CDF arms (KS, W1) feeds the binned arms
+    (PSI, JS) from it for free instead of re-scanning the data."""
     edges = [float(e) for e in bin_edges]
     return (
         per_value.select(
@@ -1129,9 +1066,21 @@ def binned_counts_from_value_counts(
 
 
 def psi_from_bin_counts(per_bin: DataFrame, nbins: int) -> DataFrame:
-    """PSI finisher over a ``binned_counts`` frame (see ``psi_drift``
-    for semantics) — split out so a caller computing several binned
-    statistics shares one pre-aggregation."""
+    """Population Stability Index over a per-bin count frame
+    (``binned_counts_from_value_counts``) — the ML-monitoring standard
+    for "has this feature/score distribution shifted between two
+    populations" (reference vs current scoring batch):
+
+        PSI = Σ_bins (p_i − q_i) · ln(p_i / q_i)
+
+    with add-0.5 smoothing so an empty bin contributes a finite term:
+    p_i = (c_i + 0.5)/(n + 0.5·B). Common read: < 0.1 stable,
+    0.1–0.25 moderate shift, > 0.25 major shift. ONE row
+    (n_a, n_b, psi). The binned complement of KS (q142): insensitive
+    to within-bin wiggle, sensitive to mass moving between bins.
+    Each bin's term is a fixed double expression rounded into
+    DECIMAL(18,9) before the order-free B-row sum, so the result is
+    engine-exact."""
     tot = per_bin.agg(
         F.sum("ca").cast("bigint").alias("n_a"), F.sum("cb").cast("bigint").alias("n_b")
     )
@@ -1156,13 +1105,13 @@ def psi_from_bin_counts(per_bin: DataFrame, nbins: int) -> DataFrame:
 
 def js_from_bin_counts(per_bin: DataFrame, nbins: int) -> DataFrame:
     """Jensen-Shannon divergence between the two binned distributions
-    of a ``binned_counts`` frame (Lin 1991) — PSI's bounded, symmetric
+    of a per-bin count frame (Lin 1991) — PSI's bounded, symmetric
     sibling:
 
         JS = ½·KL(P ‖ M) + ½·KL(Q ‖ M),   M = ½(P + Q)
 
     in nats over ``nbins`` bins with the same add-0.5 smoothing as
-    ``psi_drift``. Always finite and ≤ ln 2 ≈ 0.6931 even when a bin
+    ``psi_from_bin_counts``. Always finite and ≤ ln 2 ≈ 0.6931 even when a bin
     is empty on one side (where PSI's ln(p/q) term blows up with only
     smoothing to save it). ONE row (n_a, n_b, js). Per-bin fixed
     double terms are rounded into DECIMAL(18,9) before the order-free
@@ -1253,60 +1202,6 @@ def ks_two_sample_kll(
         )
     )
     return arrays.select(F.round(d, 6).alias("d_kll"))
-
-
-def kll_quantile_grid(
-    df: DataFrame, value_col: str, k: int = 200, grid: int = 100
-) -> DataFrame:
-    """ONE row (q array<double>): a frame's KLL sketch read out at
-    ``grid``+1 evenly spaced quantiles — the materializable HALF of
-    ``ks_two_sample_kll``. A streaming gate builds the REFERENCE
-    side's grid once (or maintains the underlying sketch by merge —
-    it's mergeable) and compares every batch against it via
-    ``ks_kll_from_grids`` without ever touching reference values
-    again; per-batch cost is the batch's own sketch aggregate."""
-    sk = df.filter(F.col(value_col).isNotNull()).agg(
-        F.kll_sketch_agg_double(F.col(value_col).cast("double"), F.lit(int(k))).alias(
-            "kll"
-        )
-    )
-    ps = [i / grid for i in range(grid + 1)]
-    q = F.array(*[F.kll_sketch_get_quantile_double(F.col("kll"), F.lit(p)) for p in ps])
-    return sk.select(q.alias("q")).localCheckpoint(eager=True)
-
-
-def ks_kll_from_grids(grid_a: DataFrame, grid_b: DataFrame) -> DataFrame:
-    """D̂ from two ``kll_quantile_grid`` rows: one cross of two one-row
-    frames, all arithmetic on the two arrays. ONE row (d_kll). NULL
-    when either grid is empty/null (empty input frame).
-
-    Each side's empirical CDF is normalized by ITS OWN grid size, so
-    grids built with different ``grid`` parameters still yield a
-    correct D̂ (ADVICE r7 item 1 — previously both sides divided by
-    |qa|, silently skewing D̂ for mismatched grids; the same-grid
-    contract lived only in the docstring)."""
-    a = grid_a.select(F.col("q").alias("qa"))
-    b = grid_b.select(F.col("q").alias("qb"))
-    row = a.crossJoin(b)
-
-    def _cdf(arr: str, x, n):
-        return F.size(F.filter(F.col(arr), lambda e: e <= x)).cast("double") / n
-
-    na = F.size("qa").cast("double")
-    nb = F.size("qb").cast("double")
-    d = F.array_max(
-        F.transform(
-            F.concat(F.col("qa"), F.col("qb")),
-            lambda x: F.abs(_cdf("qa", x, na) - _cdf("qb", x, nb)),
-        )
-    )
-    ok = (
-        F.col("qa").isNotNull()
-        & F.col("qb").isNotNull()
-        & (F.size("qa") > 0)
-        & (F.size("qb") > 0)
-    )
-    return row.select(F.when(ok, F.round(d, 6)).alias("d_kll"))
 
 
 def welch_t_test(
@@ -1619,7 +1514,6 @@ def ewma_control(
     params: DataFrame,
     lam: float = 0.2,
     limit_sd: float = 3.0,
-    n_points: int | None = None,
 ) -> DataFrame:
     """EWMA control chart over an ordered (t, x) series (Roberts
     1959): E_t = λ·x_t + (1−λ)·E_{t−1}, E_0 = mu, signalling when
@@ -1654,18 +1548,13 @@ def ewma_control(
     closed form is also well-conditioned — prefix terms whose weight
     decays below machine epsilon relative to the running sum drop
     out, which is exactly the EWMA's own forgetting. The length probe
-    is one count() over the horizon-sized series — pass ``n_points``
-    when the caller already knows the horizon (e.g. a streaming
-    monitor invoking the chart per micro-batch) to keep the operator
-    fully lazy (ADVICE r9). ``n_points`` MUST be the exact series
-    length: it is trusted for the overflow-cap branch decision, and an
-    undersized value that wrongly selects the closed form past the cap
-    raises at evaluation time (per-row finite-range guard) instead of
-    silently yielding inf/NaN (ADVICE r10). The 600 cap bounds only T·ln(1/d), which
-    assumes |x| of ordinary magnitude: the closed form's terms carry
-    an extra factor max|x|, so values beyond ~1e100 could still
-    overflow below the cap — series at that magnitude should be
-    rescaled first (the chart is scale-equivariant)."""
+    is one count() over the horizon-sized series. The 600 cap bounds
+    only T·ln(1/d), which assumes |x| of ordinary magnitude: the closed
+    form's terms carry an extra factor max|x|, so values beyond ~1e100
+    could still overflow below the cap — such a series raises at
+    evaluation time (per-row finite-range guard) instead of silently
+    yielding inf/NaN, and should be rescaled first (the chart is
+    scale-equivariant)."""
     import math
 
     from pyspark.sql import Window
@@ -1676,10 +1565,8 @@ def ewma_control(
     ).crossJoin(F.broadcast(params))
     # bounded-serial: one row per time point (time-horizon-sized series)
     w = Window.orderBy("_t").rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    # horizon-sized probe for the overflow cap — skipped when the
-    # caller supplies the length (keeps the operator lazy, ADVICE r9)
-    n_pts = int(n_points) if n_points is not None else series.count()
-    growth = n_pts * math.log(1.0 / (1.0 - lam)) if 0.0 < lam < 1.0 else float("inf")
+    # horizon-sized probe for the overflow cap
+    growth = series.count() * math.log(1.0 / (1.0 - lam)) if 0.0 < lam < 1.0 else float("inf")
     if growth < 600.0:
         # closed form: E_t = d^t·mu + λ·d^t·R_t with one running sum
         idx = s.select(
@@ -1703,19 +1590,16 @@ def ewma_control(
         pre = terms.select("mu", "sd", "_i", F.sum("_term").over(wi).alias("_r"))
         decay = F.pow(F.lit(1.0 - lam), F.col("_i").cast("double"))
         e_raw = decay * F.col("mu") + F.lit(lam) * decay * F.col("_r")
-        # overflow guard (ADVICE r10): ``n_points`` selects this branch
-        # on trust — it MUST be the exact series length. An undersized
-        # value past the cap makes d^(−j) overflow double range; rather
-        # than silently emitting inf/NaN EWMA values, fail loudly
-        # per-row (pure scalar check, no extra job; a well-conditioned
-        # series below the cap never trips it).
+        # overflow guard: an |x| of extreme magnitude can overflow
+        # double range below the cap; rather than silently emitting
+        # inf/NaN EWMA values, fail loudly per-row (pure scalar check,
+        # no extra job; a well-conditioned series never trips it).
         e = F.when(
             F.isnan(e_raw) | (F.abs(e_raw) > F.lit(1.7e308)),
             F.raise_error(
                 F.lit(
                     "ewma_control: closed-form EWMA overflowed double range — "
-                    "n_points was smaller than the true series length (it must "
-                    "be EXACT), or |x| is at extreme magnitude (rescale first)"
+                    "|x| is at extreme magnitude (rescale first)"
                 )
             ).cast("double"),
         ).otherwise(e_raw)

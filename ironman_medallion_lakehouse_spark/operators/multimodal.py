@@ -9,13 +9,15 @@ Python row-by-row.
 Decode support: UNCOMPRESSED formats decode for REAL with stdlib +
 numpy — binary PPM (P6) images (``ppm_decode``: header parse,
 pixel-stat features, r4) and PCM WAV audio (``wav_decode``: stdlib
-``wave`` + numpy → duration / RMS / zero-crossing features, r4). Since
-r14 one COMPRESSED codec is also real: PNG (``png_decode`` /
-``encode_png``) — the container is DEFLATE (stdlib ``zlib``) and the
-five scanline filters are public-spec arithmetic (ISO/IEC 15948 §9 /
-RFC 2083), so no external library is involved. ``image_decode`` dispatches on the
-payload magic (P6 → PPM, \\x89PNG → PNG). Remaining compressed codecs
-(JPEG/MP3/H.264 …) stay behind ``deterministic_fake_decoder`` /
+``wave`` + numpy → duration / RMS / zero-crossing features, r4). Two
+COMPRESSED codecs are also real, with no external library: PNG
+(``png_decode`` / ``encode_png``) — the container is DEFLATE (stdlib
+``zlib``) and the five scanline filters are public-spec arithmetic
+(ISO/IEC 15948 §9 / RFC 2083) — and baseline JPEG (``jpeg_decode`` /
+``encode_jpeg``: DCT, quantization and Huffman coding per ITU T.81).
+``image_decode`` dispatches on the payload magic (P6 → PPM,
+\\x89PNG → PNG, \\xff\\xd8 → JPEG). Remaining codecs (progressive
+JPEG, WebP, MP3/H.264 …) stay behind ``deterministic_fake_decoder`` /
 NotImplementedError — those decoders genuinely need absent libraries;
 a PIL/ffmpeg-backed decoder is a drop-in ``decoder=`` swap. Everything
 Spark-side — schema, partitioning, batch iteration, UDF signatures —
@@ -369,8 +371,8 @@ def png_decode(payload: bytes) -> dict:
 # The decoder builds codes from DHT generally (T.81 Annex C), so it
 # also reads files using the standard Annex-K tables. Supported:
 # baseline/extended-sequential (SOF0/SOF1), 8-bit, 1 or 3 components,
-# no chroma subsampling on decode (the encoder emits 4:4:4);
-# progressive / subsampled / 12-bit raise NotImplementedError.
+# any integer chroma sampling on decode (the encoder emits 4:4:4 or
+# 4:2:0); progressive / 12-bit raise NotImplementedError.
 # Quantization tables below are the widely-published JPEG example
 # tables (T.81 Annex K.1) — but correctness never depends on their
 # exact values, because they too travel in the file (DQT).

@@ -30,9 +30,8 @@ def range_join_within(
     left_ts: str,
     right_ts: str,
     window_seconds: int,
-    how: str = "inner",
 ) -> DataFrame:
-    """Join left×right on equal ``on`` keys where
+    """Inner-join left×right on equal ``on`` keys where
     ``|left_ts - right_ts| <= window_seconds``.
 
     Bin width = window width, so each right row replicates into at
@@ -40,8 +39,6 @@ def range_join_within(
     collapses to 2 distinct bins after floor division). Output keeps
     all left and right columns (right ts column must be distinctly
     named)."""
-    if how != "inner":
-        raise ValueError("range_join_within supports inner joins")
     w = int(window_seconds)
     lsec = F.col(left_ts).cast("long")
     rsec = F.col(right_ts).cast("long")

@@ -143,7 +143,6 @@ def bigram_logprob_scores(
     text_col: str = "text",
     id_col: str = "doc_id",
     alpha: float = 0.4,
-    corpus: DataFrame | None = None,
 ) -> DataFrame:
     """Per-document mean BIGRAM log-probability with stupid backoff —
     the practical upgrade of ``unigram_logprob_scores`` toward how
@@ -164,13 +163,9 @@ def bigram_logprob_scores(
     backoff shortcut; scores are NOT probabilities (they need not sum
     to 1 over w_i), which is the documented trade the method makes.
 
-    (id, n_tokens, mean_logprob) with mean over ALL tokens. ``corpus``
-    trains the counts on a different frame (the reference-corpus form
-    a drift/quality gate wants); default is self-trained like the
-    unigram filter, so no token is OOV by construction — with a
-    separate corpus, an unseen unigram would read ln(0): those tokens
-    score with count 1 (the additive floor), documented rather than
-    hidden.
+    (id, n_tokens, mean_logprob) with mean over ALL tokens. The counts
+    are trained on ``docs`` itself, like the unigram filter, so no
+    token is out of vocabulary.
 
     Plan: counts are VOCABULARY-sized grouped aggregates (unigram +
     bigram tables, map-side combined); the token stream attaches them
@@ -183,11 +178,10 @@ def bigram_logprob_scores(
     the order-free sum (the dsum policy), replaying engine-exact."""
     from ironman_medallion_lakehouse_spark.suite import dsum
 
-    train = corpus if corpus is not None else docs
     # array_remove: split("") yields [""] and whitespace-only text
     # yields ["", ""] — strip the empty tokens so blank docs read as
     # zero-token (matching str.split() semantics in the replay)
-    tr = train.select(F.array_remove(words(text_col), "").alias("ws"))
+    tr = docs.select(F.array_remove(words(text_col), "").alias("ws"))
     uni = (
         tr.select(F.explode("ws").alias("tok"))
         .groupBy("tok")
@@ -237,8 +231,7 @@ def bigram_logprob_scores(
         .join(bi, ["prev", "cur"], "left")
         .crossJoin(F.broadcast(total))
     )
-    c_cur = F.coalesce(F.col("c_tok"), F.lit(1)).cast("double")  # OOV floor
-    p_uni = c_cur / F.col("n_total").cast("double")
+    p_uni = F.col("c_tok").cast("double") / F.col("n_total").cast("double")
     lp = (
         F.when(
             F.col("c_bi").isNotNull(),

@@ -155,38 +155,27 @@ def signlsh_topk(
     k: int = 10,
     n_bits: int = 6,
     dim: int = 64,
-    probe_hamming: int = 1,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
     """LSH-bucketed approximate top-k by cosine — the bucketed ANN
     scale path beside IVF (IvfIndex): hash the corpus once with
     ``signlsh_buckets``, probe the query's bucket plus every neighbor
-    within Hamming distance ``probe_hamming`` of it (multiprobe —
-    recall without extra tables), brute-force cosine only inside the
-    probed buckets. Candidate cost is (#probes)/2^n_bits of the corpus
-    in expectation instead of a full scan; everything stays
-    declarative — the probe set is a broadcast frame of at most
-    1 + n_bits + C(n_bits,2) rows, never a collect. Approximate by
-    construction (a true neighbor outside the probed radius is
-    missed) and fully deterministic, so an oracle replays it exactly.
-    ``probe_hamming`` is the recall dial: each unit sweeps in the next
-    Hamming shell — the classic multiprobe tradeoff; on weakly-
-    clustered corpora (tiny angular gaps) prefer 2, or IVF."""
-    if probe_hamming not in (1, 2):
-        raise ValueError(f"probe_hamming must be 1 or 2, got {probe_hamming}")
+    at Hamming distance 1 of it (multiprobe — recall without extra
+    tables), brute-force cosine only inside the probed buckets.
+    Candidate cost is (1 + n_bits)/2^n_bits of the corpus in
+    expectation instead of a full scan; everything stays declarative —
+    the probe set is a broadcast frame of 1 + n_bits rows, never a
+    collect. Approximate by construction (a true neighbor outside the
+    probed radius is missed; on weakly-clustered corpora with tiny
+    angular gaps use IVF) and fully deterministic, so an oracle
+    replays it exactly."""
     hps = signlsh_hyperplanes(n_bits, dim)
     b = signlsh_buckets(embeddings, hps, id_col, vec_col)
     q = b.filter(F.col(id_col) == query_id).select(
         F.col(vec_col).alias("_qvec"), F.col("bucket").alias("_qb")
     )
     masks = [0] + [1 << i for i in range(n_bits)]
-    if probe_hamming >= 2:
-        masks += [
-            (1 << i) | (1 << j)
-            for i in range(n_bits)
-            for j in range(i + 1, n_bits)
-        ]
     probes = q.select(
         F.explode(
             F.array(*[F.col("_qb").bitwiseXOR(m) for m in masks])
@@ -417,32 +406,29 @@ class IvfIndex:
         ).select(id_col, vec_col, "centroid_id")
         self.store.merge_insert_only(rows, self.assign_table, keys=[id_col])
 
-    def rebuild(
-        self,
-        n_cells: int | None = None,
-        n_iter: int | None = None,
-        id_col: str | None = None,
-        vec_col: str | None = None,
-    ) -> None:
+    def rebuild(self) -> None:
         """Re-cluster from the index's OWN stored vectors (the
         assignment table carries them) — run when enough ``add``
         batches have drifted the corpus away from the frozen codebook
         that probe recall degrades. One read + k-means + two
         overwrites; no external vector source needed.
 
-        Parameters default to the geometry persisted at build time
-        (``<name>_meta``), so a routine recall-maintenance rebuild
-        keeps the index's cell count and column names unless the
-        caller EXPLICITLY overrides them (ADVICE r7 item 2). A
-        pre-meta index (built before the meta table existed) falls
-        back to the historical defaults."""
+        The geometry persisted at build time (``<name>_meta``: cell
+        count, iterations, column names) is reused, so a
+        recall-maintenance rebuild keeps the index's shape. A pre-meta
+        index (built before the meta table existed) falls back to the
+        historical defaults."""
         saved = self.build_params() or {}
-        n_cells = n_cells if n_cells is not None else saved.get("n_cells", 8)
-        n_iter = n_iter if n_iter is not None else saved.get("n_iter", 5)
-        id_col = id_col if id_col is not None else saved.get("id_col", "vec_id")
-        vec_col = vec_col if vec_col is not None else saved.get("vec_col", "embedding")
+        id_col = saved.get("id_col", "vec_id")
+        vec_col = saved.get("vec_col", "embedding")
         vectors = self.store.read(self.assign_table).select(id_col, vec_col)
-        self.build(vectors, n_cells=n_cells, n_iter=n_iter, id_col=id_col, vec_col=vec_col)
+        self.build(
+            vectors,
+            n_cells=saved.get("n_cells", 8),
+            n_iter=saved.get("n_iter", 5),
+            id_col=id_col,
+            vec_col=vec_col,
+        )
 
     def probe_cells(self, query_vec: list[float], nprobe: int = 2) -> list[int]:
         """The nprobe cell ids nearest the query vector — one pass over

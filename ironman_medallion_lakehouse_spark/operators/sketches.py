@@ -383,7 +383,6 @@ def bloom_filtered_join(
     small_key: str,
     bits: int = BLOOM_BITS,
     hashes: int = BLOOM_HASHES,
-    how: str = "inner",
 ) -> DataFrame:
     """Runtime-filter join: build a Bloom filter of the SMALL side's
     join keys, embed its ≤ bits/32 words as a literal array, and
@@ -400,13 +399,8 @@ def bloom_filtered_join(
     words = 1 KB) — a bounded collect of an already-aggregated frame,
     the same order as any broadcast. The membership predicate is pure
     codegen Column math (md5 positions + array index + bitwiseAND).
-    ``how`` supports inner/left_semi (join types where dropping
-    non-matching big rows early is semantics-preserving)."""
-    if how not in ("inner", "left_semi"):
-        raise ValueError(
-            f"bloom pre-filtering preserves semantics only for inner/"
-            f"left_semi joins, got {how!r}"
-        )
+    The join is inner: dropping non-matching big rows early preserves
+    its result."""
     sk = bloom_sketch(small.select(F.col(small_key)), [], small_key, bits, hashes)
     words = {r.word: r.mask for r in sk.collect()}  # ≤ bits/32 rows
     arr = F.array(*[F.lit(int(words.get(w, 0))) for w in range(bits // _BLOOM_WORD)])
@@ -418,7 +412,7 @@ def bloom_filtered_join(
         c = word_val.bitwiseAND(bit) != 0
         pred = c if pred is None else pred & c
     pruned = big.filter(pred)
-    return pruned.join(small, pruned[big_key] == small[small_key], how)
+    return pruned.join(small, pruned[big_key] == small[small_key])
 
 
 def pairwise_overlap(

@@ -12,8 +12,8 @@ a flow.
 explode (map-only — the spine costs nothing against a 100 TB fact),
 left-joins the sparse daily frame, flags synthesized rows, and fills
 level metrics with last-observation-carried-forward via
-``last(ignorenulls)`` over an ordered window — one shuffle on the
-(group, day) sort that Catalyst shares across every filled column.
+``last(ignorenulls)`` over an ordered window — one sort of the
+horizon-sized spine that Catalyst shares across every filled column.
 Rows before the first observation stay NULL (there is nothing to
 carry); flows (counts, sums) are zero-filled instead of carried, which
 is the semantically correct default for additive metrics.
@@ -32,24 +32,18 @@ def daily_spine_locf(
     day_col: str = "day",
     carry_cols: list[str] | None = None,
     zero_cols: list[str] | None = None,
-    group_cols: list[str] | None = None,
 ) -> DataFrame:
     """Dense daily series over [start, end] (inclusive, day-truncated
-    timestamps): one row per day (× group), ``was_missing`` marking
+    timestamps): one row per day, ``was_missing`` marking
     synthesized rows, ``zero_cols`` zero-filled (flows) and
     ``carry_cols`` LOCF-filled (levels; NULL before the first
     observation). ``start``/``end`` are explicit literals — deriving
     them from the data would make the output shape depend on which
-    rows happen to exist, the opposite of a reporting spine.
-
-    With ``group_cols`` the spine is the cross product groups × days
-    (groups taken from the input frame) and the LOCF window partitions
-    by group — one shuffle total."""
+    rows happen to exist, the opposite of a reporting spine."""
     carry_cols = carry_cols or []
     zero_cols = zero_cols or []
-    group_cols = group_cols or []
     spark = daily.sparkSession
-    spine_days = spark.range(1).select(
+    spine = spark.range(1).select(
         F.explode(
             F.sequence(
                 F.lit(start).cast("timestamp"),
@@ -58,20 +52,12 @@ def daily_spine_locf(
             )
         ).alias(day_col)
     )
-    if group_cols:
-        groups = daily.select(*group_cols).distinct()
-        spine = groups.crossJoin(spine_days)
-    else:
-        spine = spine_days
-    joined = spine.join(daily, [*group_cols, day_col], "left")
+    joined = spine.join(daily, [day_col], "left")
     missing = F.col(carry_cols[0]).isNull() if carry_cols else F.lit(False)
     if zero_cols:
         missing = F.col(zero_cols[0]).isNull()
-    w = (
-        Window.partitionBy(*group_cols)
-        .orderBy(day_col)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
+    # bounded-serial: one row per day of the spine
+    w = Window.orderBy(day_col).rowsBetween(Window.unboundedPreceding, Window.currentRow)
     out = joined.withColumn("was_missing", missing)
     for c in zero_cols:
         out = out.withColumn(c, F.coalesce(F.col(c), F.lit(0)))

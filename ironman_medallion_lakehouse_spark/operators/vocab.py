@@ -31,13 +31,14 @@ ACL 2016) is learned here the way it scales:
 100 TB honesty: the per-iteration cost is small, but production
 vocabularies run ~30k merges and 30k driver-coordinated jobs of
 scheduling overhead is the real bottleneck — the same serial structure
-single-node BPE trainers have. The production dials, in order: learn
-on the top-K word-count sample (vocabulary statistics are dominated by
-frequent words; K ~ 1M covers >99.9 % of token mass), batch
-non-interacting merges per round, or pull the (bounded) count table to
-the driver — the graph.py union-find ≤-bound precedent — and run the
-classic in-memory loop. This module implements the exact distributed
-loop; sampling composes in front of it via ``word_counts`` filters.
+single-node BPE trainers have. ``learn_bpe_batched`` takes several
+merges per round while staying exactly serial-equivalent. Beyond it,
+learn on a top-K word-count sample (vocabulary statistics are
+dominated by frequent words; K ~ 1M covers >99.9 % of token mass) or
+pull the (bounded) count table to the driver — the graph.py
+union-find ≤-bound precedent — and run the classic in-memory loop.
+Sampling composes in front of the learners via ``word_counts``
+filters.
 """
 
 from __future__ import annotations
@@ -46,46 +47,25 @@ from pyspark.sql import DataFrame, functions as F
 
 END = "</w>"
 
+# learn_bpe_batched checkpoints the symbol table after this many merge
+# folds (SCALING.md: 4-16 read the same; more than a round's batch
+# pushes unfinished fold chains into the next candidate pull)
+_CHECKPOINT_FOLDS = 8
 
-def word_counts(
-    docs: DataFrame, text_col: str = "text", lowercase: bool = True
-) -> DataFrame:
-    """(word, n): the one corpus-sized pass. Whitespace pre-tokenized
-    (compose a different pre-tokenizer upstream if needed); empty
-    strings dropped.
+
+def word_counts(docs: DataFrame, text_col: str = "text") -> DataFrame:
+    """(word, n): the one corpus-sized pass. Lowercased and whitespace
+    pre-tokenized (compose a different pre-tokenizer upstream if
+    needed); empty strings dropped.
 
     Kept with no package caller: it feeds ``learn_bpe`` in
     tests/test_vocab.py."""
-    t = F.col(text_col)
-    if lowercase:
-        t = F.lower(t)
-    w = F.explode(F.split(t, r"\s+")).alias("word")
+    w = F.explode(F.split(F.lower(F.col(text_col)), r"\s+")).alias("word")
     return (
         docs.select(w)
         .filter(F.col("word") != "")
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("n"))
-    )
-
-
-def _truncate_counts(counts: DataFrame, top_k_words: int | None) -> DataFrame:
-    """Optional top-K word-count truncation in front of a learner —
-    the measured 100 TB scale dial (SCALING.md r12 decision row; the
-    r12 probe is in git history): the per-round pair-count shuffle volume
-    is proportional to the WORD-TABLE rows, and K ≥ ⅓ of the vocab
-    costs ≤ 0.5 % corpus-weighted compression at the 8k-merge cut.
-    Semantics pinned by the probe: ``counts.orderBy(n desc, word asc)
-    .limit(K)`` — a TakeOrderedAndProject (top-K heap per partition +
-    one k-row merge), never a full sort. ``None`` (the default) is
-    the identity: the learned artifact is byte-identical to the
-    untruncated learner's, which is what q144's replay oracle attests.
-    """
-    if top_k_words is None:
-        return counts
-    if int(top_k_words) < 1:
-        raise ValueError(f"top_k_words must be >= 1, got {top_k_words!r}")
-    return counts.orderBy(F.col("n").desc(), F.col("word").asc()).limit(
-        int(top_k_words)
     )
 
 
@@ -112,73 +92,6 @@ def _merge_fold(syms: F.Column, a: str, b: str) -> F.Column:
     )
 
 
-def _merge_fold_batch(syms: F.Column, batch: list[tuple[str, str]]) -> F.Column:
-    """ONE left-to-right greedy pass applying a whole PAIRWISE-NON-
-    INTERACTING merge batch (the ``select="independent"`` contract):
-    at each element, a when-chain over the batch decides whether
-    (accumulator-last, current) is one of the batch pairs. Equivalent
-    to folding the pairs sequentially — non-interaction means no
-    pair's occurrences overlap another's, no pair's operand equals
-    another's product (so a product minted mid-pass can never match a
-    later element's pair test the sequential order wouldn't), and the
-    per-element conditions are mutually exclusive. Cost: one array
-    rebuild per row per ROUND instead of per MERGE — the fold pass is
-    the batched learner's dominant cost at scale. NOT valid for
-    prefix-mode batches: their product-collision rule admits a
-    colliding pair whose product can equal an EARLIER batch member's
-    operand, where simultaneous application diverges from sequential.
-    """
-    las = [F.lit(a) for a, _ in batch]
-    lbs = [F.lit(b) for _, b in batch]
-    labs = [F.lit(a + b) for a, b in batch]
-
-    def step(acc: F.Column, s: F.Column) -> F.Column:
-        merged = None
-        for la, lb, lab in zip(las, lbs, labs):
-            hit = (F.element_at(acc, -1) == la) & (s == lb)
-            branch = F.concat(F.slice(acc, 1, F.size(acc) - 1), F.array(lab))
-            merged = (
-                F.when(hit, branch) if merged is None else merged.when(hit, branch)
-            )
-        return F.when(F.size(acc) > 0, merged.otherwise(F.concat(acc, F.array(s)))).otherwise(
-            F.concat(acc, F.array(s))
-        )
-
-    return F.aggregate(syms, F.array().cast("array<string>"), step)
-
-
-def _noninteracting_prefix_groups(
-    merges: list[tuple[str, str]],
-) -> list[list[tuple[str, str]]]:
-    """Partition an ordered merge list into CONSECUTIVE groups whose
-    members are pairwise non-interacting (the ``_merge_fold_batch``
-    contract: no adjacent-form sharing, no operand/product string
-    equality). Applying each group as one combined pass, groups in
-    list order, is exactly the sequential application of the full
-    list — the combined pass equals its members in any order, and
-    group boundaries preserve the list's order. Used by ``apply_bpe``
-    to cut fold passes over the distinct-word table; real learned
-    vocabularies chain (es → est → est</w>), so typical groups are
-    small but ≥ 1 pass is always saved wherever merges touch
-    different symbols."""
-    groups: list[list[tuple[str, str]]] = []
-    cur: list[tuple[str, str]] = []
-    for a, b in merges:
-        prod = a + b
-        interacts = any(
-            b == ta or a == tb or a == tp or b == tp or prod in (ta, tb, tp)
-            for ta, tb, tp in ((ta, tb, ta + tb) for ta, tb in cur)
-        )
-        if interacts:
-            groups.append(cur)
-            cur = [(a, b)]
-        else:
-            cur.append((a, b))
-    if cur:
-        groups.append(cur)
-    return groups
-
-
 def _pair_counts(words: DataFrame) -> DataFrame:
     """(a, b, total) weighted adjacent-pair counts over the vocab-sized
     symbol table — arrays_zip of the two offset slices, exploded, then
@@ -200,21 +113,17 @@ def learn_bpe(
     num_merges: int,
     min_pair_count: int = 2,
     checkpoint_every: int = 1,
-    top_k_words: int | None = None,
 ) -> list[tuple[str, str]]:
     """Learn ``num_merges`` BPE merges from a (word, n) count table.
     Returns the ordered merge list — the vocabulary artifact a
     tokenizer ships. Stops early when no pair reaches
     ``min_pair_count``. Deterministic: ties broken (count desc, a asc,
-    b asc). ``top_k_words`` (opt-in) learns from only the K most
-    frequent words — see ``_truncate_counts`` for the measured
-    cost/benefit; default ``None`` keeps the exact artifact.
+    b asc).
 
     Kept with no package caller: it is the corpus-learned BPE that
     tests/test_vocab.py pins on the Sennrich et al. example; the suite
     runs fixed merge lists through
     ``bpe_tokens_expr``/``bpe_tokens_sql``."""
-    counts = _truncate_counts(counts, top_k_words)
     words = counts.select(
         _initial_symbols(F.col("word")).alias("syms"), F.col("n")
     ).localCheckpoint(eager=True)
@@ -242,16 +151,11 @@ def learn_bpe_batched(
     min_pair_count: int = 2,
     max_batch: int = 8,
     stats: dict | None = None,
-    refine_conflicts: bool = False,
-    select: str = "prefix",
-    checkpoint_folds: int = 8,
-    top_k_words: int | None = None,
 ) -> list[tuple[str, str]]:
-    """``learn_bpe`` with the documented scale dial IMPLEMENTED
-    (VERDICT r7 item 2): batch several merges per driver round while
-    staying EXACTLY equivalent to the serial loop, so jobs/merge drops
-    below 1 instead of the 30k driver-coordinated jobs a production
-    vocabulary costs serially.
+    """``learn_bpe`` with several merges per driver round, staying
+    EXACTLY equivalent to the serial loop, so jobs/merge drops below 1
+    instead of the 30k driver-coordinated jobs a production vocabulary
+    costs serially.
 
     Per round, ONE distributed pass computes the weighted pair counts
     AND, for the top-``max_batch`` candidates, the max weighted
@@ -265,34 +169,15 @@ def learn_bpe_batched(
       pair counted above a taken pair must itself be taken (else the
       serial loop could pick the skipped one after earlier merges
       lowered nothing of its count);
-    - *count invariance* (r9, trigram-refined): a pair occurrence
-      (x,y) is destroyed by merging (a,b) ONLY through the specific
-      linking trigram the merge consumes — "x a b" when y==a (the y
-      gets absorbed rightward), "a b y" when x==b (the x gets absorbed
-      leftward); left-left / right-right sharing never destroys (the
-      shared symbol's consumed occurrences are the OTHER pair's), and
-      no merge creates an adjacency between two pre-existing symbols
-      (the fresh ``ab`` symbol sits between them — see collision rule
-      for the product-collision exception). So a candidate sharing a
-      symbol with a taken pair stops the batch only when its linking
-      trigram actually EXISTS in the current symbol table — existence
-      is pulled in the same candidate job (trigrams whose head/tail
-      equals a top-k pair and whose third symbol is a top-k
-      left/right: ≤ k² rows per side). Zero linking occurrences ⇒
-      zero destroyed occurrences ⇒ the candidate's count — and the
-      serial argmax order — is invariant. Stopping when the trigram
-      exists even where greedy overlap wouldn't actually consume it
-      is the conservative direction — equivalence holds. The refined
-      check is **opt-in** (``refine_conflicts=True``): on both
-      measured corpora (the 31-word documents lexicon and the
-      50k-word Zipfian probe) every top-candidate conflict was
-      genuinely linked — frequent pairs chain within the same
-      frequent words — so rounds did not drop while the link
-      subqueries cost ~2.4× per-round wall (SCALING.md r9). The
-      default keeps the r8 rule (any sharing stops); turn the
-      refinement on for corpora whose near-tied pairs come from
-      DISJOINT contexts (pinned to fire in
-      tests/test_vocab.py::test_batched_admits_provably_harmless_symbol_sharing);
+    - *symbol conflict*: a candidate sharing a symbol with a taken
+      pair in adjacent form (its right symbol is a taken pair's left,
+      or its left a taken pair's right) can lose occurrences to that
+      merge, so it stops the batch. Left-left / right-right sharing
+      never destroys an occurrence (the shared symbol's consumed
+      occurrences are the OTHER pair's), and no merge creates an
+      adjacency between two pre-existing symbols (the fresh ``ab``
+      symbol sits between them — see the collision rule for the
+      product-collision exception);
     - *new-pair bound*: merging (a,b) creates pairs only around the
       new ab symbol; any such pair's count is bounded by the max
       weighted trigram through (a,b) (an (x, ab) needs an "x a b"
@@ -308,6 +193,10 @@ def learn_bpe_batched(
       close the batch. The ever-seen symbol set is tracked driver-side
       (initial alphabet + products, a bounded superset).
 
+    The symbol table is localCheckpoint'ed once 8 merge folds have
+    accumulated (the apply_bpe discipline), which bounds the nested
+    fold expression without a checkpoint job on every small round.
+
     AQE is disabled for the learner's own queries (restored after):
     every frame past ``word_counts`` is vocab-sized, so adaptive
     re-planning buys nothing while materializing each tiny shuffle
@@ -316,121 +205,29 @@ def learn_bpe_batched(
     jobs-per-merge test pins.
 
     .. caveat:: the toggle is **session-wide for the duration of
-       learning** (ADVICE r8 item 2): a concurrent query planned on
-       the SAME SparkSession during that window — e.g. a streaming
-       micro-batch on another thread — is planned with AQE off.
-       ``spark.newSession()`` cannot isolate it because a DataFrame
-       plans under the session it was created from (``counts``'s), so
-       the conf write necessarily lands there. Callers sharing the
-       session with latency-sensitive concurrent work should learn on
-       a dedicated session: build ``counts`` via
-       ``spark.newSession().read...`` (or re-create it there) and pass
-       THAT frame in; the toggle then lives entirely in the clone.
-
-    ``select`` picks the batch-selection rule (r10, VERDICT r9
-    directive 4 — built after the 1k-merge Zipf decomposition showed
-    the per-ROUND candidate pull is 62 % of wall, i.e. cutting rounds
-    is the lever, while the conflict rule caps the serial-equivalent
-    prefix at ~4 merges/round):
-
-    - ``"prefix"`` (default): the rules above — the learned merge
-      list is EXACTLY ``learn_bpe``'s, order included (property-
-      tested). This is the only mode q144's DuckDB replay oracle can
-      attest.
-    - ``"independent"``: per round, take the GREEDY PAIRWISE-NON-
-      INTERACTING SET over the top-k in count order — a candidate
-      that interacts with any taken pair is SKIPPED instead of
-      closing the batch, where "interacts" means any adjacent-form
-      sharing (cand.b == taken.a or cand.a == taken.b — the orders-
-      matter fold cases) or any operand/product string equality
-      (operand == taken's product, product == taken's operand, or
-      equal products). Taken pairs therefore consume disjoint
-      occurrences and their greedy folds COMMUTE — the post-batch
-      symbol table is independent of application order (the
-      commutation lemma is property-tested directly on _merge_fold
-      with randomized fold orders; left-left / right-right operand
-      sharing is allowed because one symbol occurrence has exactly
-      one right neighbor, so two such merges can never contend for
-      the same occurrence). This is NOT serial-order-equivalent:
-      skipping a conflicted higher-count candidate and taking a
-      lower one reorders merges relative to ``learn_bpe`` (and can
-      change the learned set — the skipped pair's count may decay
-      before its turn), which no sound bound can prevent: the
-      skipped candidate's post-merge count is unknowable without
-      executing the merge. The artifact is still a deterministic,
-      reproducible, valid greedy-BPE vocabulary (ties and scan order
-      are total), matches serial exactly on conflict-free corpora
-      (property-tested), and is the standard trade parallel BPE
-      trainers make. The new-pair bound is deliberately NOT applied:
-      the mode makes no serial-argmax claim, and each taken pair's
-      count is its true pre-batch count — batch members are mutually
-      non-interacting, so every count is still exact at application
-      time; pairs created by this round's merges are simply counted
-      next round.
-
-      **Use this mode for production learn-at-scale** (r11 decision,
-      VERDICT r10 directive 5 — measured by an r11 probe in git history
-      on the 48k-word Zipf corpus at 8192 merges): the tokenizer the
-      two modes ship is QUALITY-EQUIVALENT — corpus-weighted
-      compression agrees to within ±0.06 % at every cut (1k/2k/4k/8k;
-      8k: 0.205045 independent vs 0.205094 prefix) even though the
-      merge-product sets overlap only ~0.70 Jaccard (0.82 containment
-      of serial) — while learning is 13.7× faster (342 s / 170 rounds
-      vs 4695 s / 1683 rounds, same box). The DEFAULT stays
-      ``"prefix"`` deliberately: it is the canonical serial BPE
-      artifact (reproducible against any reference implementation,
-      and the only mode an argmax-replay oracle can attest); the
-      choice between them is artifact-identity vs wall, not quality.
-
-    ``checkpoint_folds`` bounds the nested-fold expression depth: the
-    symbol table is localCheckpoint'ed after that many merge folds
-    accumulate (default 8 — the apply_bpe discipline). Measured A/B
-    (SCALING.md r10 follow-up, 256 independent merges): 8 vs 16 vs 4
-    are within noise (total fold evaluation is per-merge and
-    dominates), but a value EXCEEDING the typical per-round batch is
-    poisonous — unfinished chains then cross round boundaries into
-    the next CANDIDATE PULL, which re-evaluates them interpreted
-    (cf=32 under ~23-merge rounds: t_collect 3.3 → 101 s). Keep it at
-    or below the expected batch size; 8 is right.
+       learning**: a concurrent query planned on the SAME SparkSession
+       during that window — e.g. a streaming micro-batch on another
+       thread — is planned with AQE off. ``spark.newSession()`` cannot
+       isolate it because a DataFrame plans under the session it was
+       created from (``counts``'s), so the conf write necessarily
+       lands there. Callers sharing the session with latency-sensitive
+       concurrent work should learn on a dedicated session: build
+       ``counts`` via ``spark.newSession().read...`` (or re-create it
+       there) and pass THAT frame in; the toggle then lives entirely
+       in the clone.
 
     ``stats`` (optional dict) receives ``rounds``, ``merges``, and a
     ``stop_reasons`` histogram — which admissibility rule ended each
     round's batch (``k_exhausted`` / ``min_count`` /
     ``symbol_conflict`` / ``new_pair_bound`` / ``product_collision``)
-    — so callers can assert driver sync points per merge < 1 and see
-    which rule binds in practice (the r8 directive-3 measurement).
-    ``select="independent"`` additionally records
-    ``skipped_interacting`` (total candidates skipped). Equivalence
-    to ``learn_bpe`` (prefix mode) is property-tested against random
-    corpora in tests/test_vocab.py.
-
-    ``top_k_words`` (opt-in, r13 — the SCALING.md r12 measured
-    decision): learn from only the K most frequent words. The 100 TB
-    lever is pair-count shuffle volume ∝ word-table rows, not local
-    wall; ``None`` (default) keeps the artifact exactly equal to the
-    untruncated learner's."""
-    if select not in ("prefix", "independent"):
-        raise ValueError(f"select must be 'prefix' or 'independent', got {select!r}")
-    if select == "independent" and refine_conflicts:
-        # the link-refinement pass exists to rescue CONFLICTED prefix
-        # candidates; the independent branch skips every interacting
-        # candidate outright and never reads the link sets, so paying
-        # the trigram/link pull (~2.4x per-round wall, SCALING.md r9)
-        # buys nothing (ADVICE r10)
-        raise ValueError(
-            "refine_conflicts=True is meaningless with select='independent' "
-            "(the independent branch never reads the link sets); "
-            "use select='prefix' for conflict refinement"
-        )
-    counts = _truncate_counts(counts, top_k_words)
+    — so callers can assert driver sync points per merge < 1.
+    Equivalence to ``learn_bpe`` is property-tested against random
+    corpora in tests/test_vocab.py."""
     spark = counts.sparkSession
     aqe_before = spark.conf.get("spark.sql.adaptive.enabled", "true")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try:
-        return _learn_bpe_batched(
-            counts, num_merges, min_pair_count, max_batch, stats,
-            refine_conflicts, select, checkpoint_folds,
-        )
+        return _learn_bpe_batched(counts, num_merges, min_pair_count, max_batch, stats)
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", aqe_before)
 
@@ -441,9 +238,6 @@ def _learn_bpe_batched(
     min_pair_count: int,
     max_batch: int,
     stats: dict | None,
-    refine_conflicts: bool = False,
-    select: str = "prefix",
-    checkpoint_folds: int = 8,
 ) -> list[tuple[str, str]]:
     words = counts.select(
         _initial_symbols(F.col("word")).alias("syms"), F.col("n")
@@ -462,209 +256,72 @@ def _learn_bpe_batched(
     }
     symbols_ever.add(END)
     folds_since_ckpt = 0
-    import time as _time
-
-    t_collect = 0.0  # candidate pull: per-ROUND cost batching removes
-    t_checkpoint = 0.0  # fold checkpoints: per-MERGE cost it cannot
     while len(merges) < int(num_merges):
         pc = _pair_counts(words)
         rounds += 1
         k = min(int(max_batch), int(num_merges) - len(merges))
-        if select == "independent" and not refine_conflicts:
-            # the non-interacting set needs no new-pair bound and no
-            # link refinement — the candidate job is just the pair
-            # table's top-k (the trigram explode, ~3x the pair
-            # explode's width, is skipped entirely)
-            tri = None
-            tk = pc.orderBy(
-                F.col("total").desc(), F.col("a").asc(), F.col("b").asc()
-            ).limit(k)
-        else:
-            # max weighted trigram THROUGH each candidate: (x,a,b)
-            # bounds new pairs ending at the product, (a,b,y) ones
-            # starting at it — vocab-table-sized aggregates, joined
-            # onto the top-k
-            n = F.size("syms")
-            tri = (
-                words.filter(n >= 3)
-                .select(
-                    F.col("n").alias("w"),
-                    F.explode(
-                        F.arrays_zip(
-                            F.slice("syms", 1, n - 2).alias("t1"),
-                            F.slice("syms", 2, n - 2).alias("t2"),
-                            F.slice("syms", 3, n - 2).alias("t3"),
-                        )
-                    ).alias("t"),
-                )
-                .groupBy(
-                    F.col("t.t1").alias("t1"),
-                    F.col("t.t2").alias("t2"),
-                    F.col("t.t3").alias("t3"),
-                )
-                .agg(F.sum("w").alias("tw"))
+        # max weighted trigram THROUGH each candidate: (x,a,b) bounds
+        # new pairs ending at the product, (a,b,y) ones starting at it
+        # — vocab-table-sized aggregates, joined onto the top-k
+        n = F.size("syms")
+        tri = (
+            words.filter(n >= 3)
+            .select(
+                F.col("n").alias("w"),
+                F.explode(
+                    F.arrays_zip(
+                        F.slice("syms", 1, n - 2).alias("t1"),
+                        F.slice("syms", 2, n - 2).alias("t2"),
+                        F.slice("syms", 3, n - 2).alias("t3"),
+                    )
+                ).alias("t"),
             )
-            in_tri = tri.groupBy(F.col("t2").alias("_a"), F.col("t3").alias("_b")).agg(
-                F.max("tw").alias("in_tri")
+            .groupBy(
+                F.col("t.t1").alias("t1"),
+                F.col("t.t2").alias("t2"),
+                F.col("t.t3").alias("t3"),
             )
-            out_tri = tri.groupBy(F.col("t1").alias("_a"), F.col("t2").alias("_b")).agg(
-                F.max("tw").alias("out_tri")
-            )
-            # merge-join hints: a broadcast join would spawn a separate
-            # broadcast-build job per side; with AQE off, sort-merge
-            # joins of the (vocab-sized) pair and trigram-maxima tables
-            # plus the FINAL TakeOrderedAndProject keep the whole
-            # candidate pull at ONE job per round
-            tk = (
-                pc.join(
-                    in_tri.hint("merge"),
-                    (F.col("a") == F.col("_a")) & (F.col("b") == F.col("_b")),
-                    "left",
-                )
-                .drop("_a", "_b")
-                .join(
-                    out_tri.hint("merge"),
-                    (F.col("a") == F.col("_a")) & (F.col("b") == F.col("_b")),
-                    "left",
-                )
-                .drop("_a", "_b")
-                .orderBy(F.col("total").desc(), F.col("a").asc(), F.col("b").asc())
-                .limit(k)
-            )
-        if refine_conflicts:
-            # LINKING trigrams among the top-k pairs (r9 refinement,
-            # OPT-IN — the default path must not pay for it): candidate
-            # (x,y) actually loses count to a taken (a,b) ONLY through
-            # the specific trigram the merge consumes — (x,a,b) when
-            # y==a, (a,b,y) when x==b. Pull existence of those trigrams
-            # in the SAME job (unioned under a kind tag); only
-            # third-symbols that are themselves a top-k left/right can
-            # ever be checked, so each link set is <= k^2 rows —
-            # bounded. The limit(k) subtree re-executes per reference,
-            # but its sort key (total desc, a, b) is a TOTAL order, so
-            # every execution agrees.
-            tkp = tk.select(F.col("a").alias("_ta"), F.col("b").alias("_tb"))
-            tk_lefts = tk.select(F.col("a").alias("_s")).distinct()
-            tk_rights = tk.select(F.col("b").alias("_s")).distinct()
-            link_r = (
-                tri.join(
-                    tkp.hint("merge"),
-                    (F.col("t2") == F.col("_ta")) & (F.col("t3") == F.col("_tb")),
-                    "left_semi",
-                )
-                .join(tk_lefts.hint("merge"), F.col("t1") == F.col("_s"), "left_semi")
-                .select(
-                    F.col("t2").alias("a"),
-                    F.col("t3").alias("b"),
-                    F.col("t1").alias("x"),
-                    F.lit("R").alias("kind"),
-                )
-            )
-            link_l = (
-                tri.join(
-                    tkp.hint("merge"),
-                    (F.col("t1") == F.col("_ta")) & (F.col("t2") == F.col("_tb")),
-                    "left_semi",
-                )
-                .join(tk_rights.hint("merge"), F.col("t3") == F.col("_s"), "left_semi")
-                .select(
-                    F.col("t1").alias("a"),
-                    F.col("t2").alias("b"),
-                    F.col("t3").alias("x"),
-                    F.lit("L").alias("kind"),
-                )
-            )
-            _t0 = _time.time()
-            pulled = (
-                tk.withColumn("kind", F.lit("C"))
-                .unionByName(link_r, allowMissingColumns=True)
-                .unionByName(link_l, allowMissingColumns=True)
-                .collect()  # <= k + 2k^2 rows — bounded pull per ROUND
-            )
-            t_collect += _time.time() - _t0
-        else:
-            # default path: ONE job collecting just the top-k candidate
-            # table — no trigram link subqueries (SCALING.md r9:
-            # "Verdict: default OFF", ~2.4x per-round wall otherwise)
-            _t0 = _time.time()
-            rows = tk.collect()  # <= max_batch rows — bounded
-            t_collect += _time.time() - _t0
-            pulled = [{**r.asDict(), "kind": "C"} for r in rows]
-        top = sorted(
-            (r for r in pulled if r["kind"] == "C"),
-            key=lambda r: (-r["total"], r["a"], r["b"]),
+            .agg(F.sum("w").alias("tw"))
         )
-        # s_right[(a,b)] = {x : trigram (x,a,b) exists};
-        # s_left[(a,b)]  = {y : trigram (a,b,y) exists}
-        s_right: dict[tuple[str, str], set[str]] = {}
-        s_left: dict[tuple[str, str], set[str]] = {}
-        for r in pulled:
-            if r["kind"] == "R":
-                s_right.setdefault((r["a"], r["b"]), set()).add(r["x"])
-            elif r["kind"] == "L":
-                s_left.setdefault((r["a"], r["b"]), set()).add(r["x"])
+        in_tri = tri.groupBy(F.col("t2").alias("_a"), F.col("t3").alias("_b")).agg(
+            F.max("tw").alias("in_tri")
+        )
+        out_tri = tri.groupBy(F.col("t1").alias("_a"), F.col("t2").alias("_b")).agg(
+            F.max("tw").alias("out_tri")
+        )
+        # merge-join hints: a broadcast join would spawn a separate
+        # broadcast-build job per side; with AQE off, sort-merge joins
+        # of the (vocab-sized) pair and trigram-maxima tables plus the
+        # FINAL TakeOrderedAndProject keep the whole candidate pull at
+        # ONE job per round
+        top = (
+            pc.join(
+                in_tri.hint("merge"),
+                (F.col("a") == F.col("_a")) & (F.col("b") == F.col("_b")),
+                "left",
+            )
+            .drop("_a", "_b")
+            .join(
+                out_tri.hint("merge"),
+                (F.col("a") == F.col("_a")) & (F.col("b") == F.col("_b")),
+                "left",
+            )
+            .drop("_a", "_b")
+            .orderBy(F.col("total").desc(), F.col("a").asc(), F.col("b").asc())
+            .limit(k)
+            .collect()  # <= max_batch rows — bounded pull per ROUND
+        )
         if not top or top[0]["total"] < min_pair_count:
             break
         batch: list[tuple[str, str]] = []
         bound_max = -1
         stop_reason = "k_exhausted"  # took every candidate pulled
-        skipped = 0
         for r in top:
             c = r["total"]
             if c < min_pair_count:
                 stop_reason = "min_count"
                 break
-            if select == "independent":
-                # greedy non-interacting set (docstring): SKIP an
-                # interacting candidate instead of closing the batch.
-                # Interaction = adjacent-form sharing (the two fold
-                # cases where order matters) or operand/product
-                # string equality; left-left / right-right operand
-                # sharing commutes and is allowed.
-                prod = r["a"] + r["b"]
-                interacts = any(
-                    r["b"] == ta
-                    or r["a"] == tb
-                    or r["a"] == tp
-                    or r["b"] == tp
-                    or prod == ta
-                    or prod == tb
-                    or prod == tp
-                    for ta, tb, tp in (
-                        (ta, tb, ta + tb) for ta, tb in batch
-                    )
-                )
-                if interacts:
-                    skipped += 1
-                    continue
-                collides = prod in symbols_ever
-                batch.append((r["a"], r["b"]))
-                symbols_ever.add(prod)
-                if collides:
-                    # the product equals a pre-existing symbol: later
-                    # candidates this round were counted without the
-                    # new occurrences — close conservatively
-                    stop_reason = "product_collision"
-                    break
-                continue
-            # a shared symbol is a REAL conflict only when the linking
-            # trigram exists — zero linking occurrences means zero
-            # destroyed candidate occurrences, so the count is
-            # invariant and the serial argmax order is preserved.
-            # Without refine_conflicts (the default), any sharing is
-            # treated as linked — the r8 conservative rule
-            linked = any(
-                (
-                    r["b"] == ta
-                    and (not refine_conflicts or r["a"] in s_right.get((ta, tb), ()))
-                )
-                or (
-                    r["a"] == tb
-                    and (not refine_conflicts or r["b"] in s_left.get((ta, tb), ()))
-                )
-                for ta, tb in batch
-            )
-            if linked:
+            if any(r["b"] == ta or r["a"] == tb for ta, tb in batch):
                 stop_reason = "symbol_conflict"
                 break
             if batch and c <= bound_max:
@@ -682,41 +339,16 @@ def _learn_bpe_batched(
         if stats is not None:
             hist = stats.setdefault("stop_reasons", {})
             hist[stop_reason] = hist.get(stop_reason, 0) + 1
-            if select == "independent":
-                stats["skipped_interacting"] = (
-                    stats.get("skipped_interacting", 0) + skipped
-                )
         merges.extend(batch)
-        if select == "independent" and len(batch) > 1:
-            # non-interacting batch: ONE combined fold pass (see
-            # _merge_fold_batch) — one array rebuild per row per round
-            # instead of per merge
-            words = words.select(
-                _merge_fold_batch(F.col("syms"), batch).alias("syms"), "n"
-            )
-        else:
-            for a, b in batch:
-                words = words.select(
-                    _merge_fold(F.col("syms"), a, b).alias("syms"), "n"
-                )
+        for a, b in batch:
+            words = words.select(_merge_fold(F.col("syms"), a, b).alias("syms"), "n")
         folds_since_ckpt += len(batch)
-        if folds_since_ckpt >= int(checkpoint_folds):
-            # bound the nested-fold expression depth (the apply_bpe
-            # checkpoint_every=8 discipline) without paying a
-            # checkpoint job on every small-batch round
-            _t0 = _time.time()
+        if folds_since_ckpt >= _CHECKPOINT_FOLDS:
             words = words.localCheckpoint(eager=True)
-            t_checkpoint += _time.time() - _t0
             folds_since_ckpt = 0
     if stats is not None:
         stats["rounds"] = rounds
         stats["merges"] = len(merges)
-        # wall decomposition for the batching-lever decision
-        # (SCALING.md r10): t_collect scales with ROUNDS (what a
-        # smarter batch rule would cut), t_checkpoint with MERGES/8
-        # (invariant under any batching rule)
-        stats["t_collect_s"] = round(t_collect, 3)
-        stats["t_checkpoint_s"] = round(t_checkpoint, 3)
     return merges
 
 
@@ -725,11 +357,10 @@ def apply_bpe(
     merges: list[tuple[str, str]],
     text_col: str = "text",
     id_col: str = "doc_id",
-    lowercase: bool = True,
     checkpoint_every: int = 8,
 ) -> DataFrame:
-    """Tokenize ``docs`` with a learned merge list: (id, tokens
-    array<string>, n_tokens). The merges are applied to the batch's
+    """Tokenize ``docs`` (lowercased) with a learned merge list: (id,
+    tokens array<string>, n_tokens). The merges are applied to the batch's
     DISTINCT words only (vocab-sized work, localCheckpoint every
     ``checkpoint_every`` merges to bound the expression tree), then a
     broadcast word → tokens join maps the corpus — corpus-sized cost
@@ -740,36 +371,16 @@ def apply_bpe(
     Kept with no package caller: it is the distributed tokenizer that
     tests/test_vocab.py pins merge order and word order on; the suite
     tokenizes with ``bpe_tokens_expr``."""
-    t = F.col(text_col)
-    if lowercase:
-        t = F.lower(t)
     exploded = docs.select(
         F.col(id_col),
-        F.posexplode(F.split(t, r"\s+")).alias("pos", "word"),
+        F.posexplode(F.split(F.lower(F.col(text_col)), r"\s+")).alias("pos", "word"),
     ).filter(F.col("word") != "")
     vocab = exploded.select("word").distinct()
     vocab = vocab.select("word", _initial_symbols(F.col("word")).alias("syms"))
-    # consecutive non-interacting merges apply as ONE combined fold
-    # pass (r10, _merge_fold_batch contract — provably equal to the
-    # sequential list); checkpoint cadence counts MERGES, not passes,
-    # preserving the expression-depth bound
-    applied = 0
-    since_ckpt = 0
-    for grp in _noninteracting_prefix_groups(merges):
-        if len(grp) > 1:
-            vocab = vocab.select(
-                "word", _merge_fold_batch(F.col("syms"), grp).alias("syms")
-            )
-        else:
-            a, b = grp[0]
-            vocab = vocab.select(
-                "word", _merge_fold(F.col("syms"), a, b).alias("syms")
-            )
-        applied += len(grp)
-        since_ckpt += len(grp)
-        if since_ckpt >= max(1, checkpoint_every) and applied < len(merges):
+    for i, (a, b) in enumerate(merges, 1):
+        vocab = vocab.select("word", _merge_fold(F.col("syms"), a, b).alias("syms"))
+        if i % max(1, checkpoint_every) == 0 and i < len(merges):
             vocab = vocab.localCheckpoint(eager=True)
-            since_ckpt = 0
     tokenized = exploded.join(F.broadcast(vocab), "word")
     return (
         tokenized.groupBy(id_col)
@@ -789,18 +400,18 @@ def apply_bpe(
     )
 
 
-def bpe_tokens_expr(text, merges: list[tuple[str, str]], lowercase: bool = True):
+def bpe_tokens_expr(text, merges: list[tuple[str, str]]):
     """Per-document BPE tokens as a PURE COLUMN expression for a FIXED
     literal merge list — zero shuffle, composable into a one-scan
-    battery (q47): whitespace words → char symbols + end marker → the
+    battery (q47): lowercased whitespace words → char symbols + end
+    marker → the
     greedy merge fold per merge, all inside nested higher-order
     functions that reference only lambda variables and literals (the
     r3 HOF rule). For corpus-learned merges at production vocab sizes
     use ``apply_bpe`` (distinct-words + broadcast join); this form is
     for bounded literal vocabularies and oracle-checkable surfaces.
     ``bpe_tokens_sql`` builds the DuckDB mirror from the same list."""
-    t = F.lower(text) if lowercase else text
-    words = F.filter(F.split(t, r"\s+"), lambda w: w != F.lit(""))
+    words = F.filter(F.split(F.lower(text), r"\s+"), lambda w: w != F.lit(""))
 
     def _tok(w):
         syms = F.concat(F.split(w, ""), F.array(F.lit(END)))

@@ -34,7 +34,6 @@ def publish_catalog(
     spark: SparkSession,
     store,
     tables: list[str] | None = None,
-    with_views: bool = True,
 ) -> list[str]:
     """Publish TableStore tables (and the 15 gold views) into the Spark
     session catalog. Returns the qualified names published."""
@@ -63,15 +62,14 @@ def publish_catalog(
         # file-size heuristic (plan-asserted in test_catalog_plans)
         spark.sql(f"ANALYZE TABLE {name} COMPUTE STATISTICS")
         published.append(name)
-    if with_views:
-        spark.sql("CREATE DATABASE IF NOT EXISTS gold")
-        qualified = view_sql(
-            fact=C.FACT_RESULTS,
-            ath=C.DIM_ATHLETES,
-            cty=C.DIM_COUNTRIES,
-            div=C.DIM_DIVISIONS,
-        )
-        for vname, sql in qualified.items():
-            spark.sql(f"CREATE OR REPLACE VIEW gold.{vname} AS {sql}")
-            published.append(f"gold.{vname}")
+    spark.sql("CREATE DATABASE IF NOT EXISTS gold")
+    qualified = view_sql(
+        fact=C.FACT_RESULTS,
+        ath=C.DIM_ATHLETES,
+        cty=C.DIM_COUNTRIES,
+        div=C.DIM_DIVISIONS,
+    )
+    for vname, sql in qualified.items():
+        spark.sql(f"CREATE OR REPLACE VIEW gold.{vname} AS {sql}")
+        published.append(f"gold.{vname}")
     return published

@@ -86,13 +86,10 @@ def get_spark(
         .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
         # Local-mode scan parallelism: test-scale parquet files are a few
         # MB, so the 128 MB default split yields 1-3 partitions on 32
-        # cores. 16 MB keeps all cores busy locally; a real cluster run
-        # overrides back to 128m+ via env (files that small aren't the
+        # cores. 16 MB keeps all cores busy locally; a cluster profile
+        # sets 128m+ through ``extra_conf`` (files that small aren't the
         # 100 TB regime anyway).
-        .config(
-            "spark.sql.files.maxPartitionBytes",
-            os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", str(16 * 1024 * 1024)),
-        )
+        .config("spark.sql.files.maxPartitionBytes", str(16 * 1024 * 1024))
         .config("spark.sql.files.openCostInBytes", str(1 * 1024 * 1024))
     )
     if warehouse_dir:
@@ -158,15 +155,14 @@ def staging_dir(spark: SparkSession, label: str) -> str:
     return path
 
 
-# One scan task per this many document rows (tunable via env for
-# cluster profiles). MEASURED at sf0.1 (r15, alternating A/B x3): the
+# One scan task per this many document rows. MEASURED at sf0.1 (r15, alternating A/B x3): the
 # text stages are genuinely CPU-bound, so widths below the core count
 # cost wall — q83 3.6/3.8/3.6 s at 32 partitions vs 4.9/4.6/4.2 s at
 # 20 — hence 64 rows/task: the bench SF (5,000 docs) still saturates
 # the defaultParallelism cap (identical plans and fingerprints), and
 # only genuinely tiny inputs (the sf0.01/sf0.001 oracle gates: 500/50
 # docs) shed their near-empty scheduled tasks.
-_DOCS_ROWS_PER_TASK = int(os.environ.get("SPARK_GRAFT_DOCS_ROWS_PER_TASK", "64"))
+_DOCS_ROWS_PER_TASK = 64
 
 
 def _adaptive_width(parquet_path: str, cap: int) -> int:

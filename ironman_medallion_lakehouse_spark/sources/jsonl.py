@@ -73,13 +73,11 @@ def _validate_schema(schema: StructType) -> None:
         raise ValueError(f"schema field names collide with reserved columns: {sorted(clash)}")
 
 
-def _parse_lines(
-    lines: DataFrame, schema: StructType, drop_blank_lines: bool
-) -> DataFrame:
+def _parse_lines(lines: DataFrame, schema: StructType) -> DataFrame:
     """The shared batch/stream parse: (_source_file, value) lines →
-    schema fields + (_source_file, _malformed, _raw)."""
-    if drop_blank_lines:
-        lines = lines.filter(F.length(F.trim(F.col("value"))) > 0)
+    schema fields + (_source_file, _malformed, _raw). Blank
+    (whitespace-only) lines are dropped."""
+    lines = lines.filter(F.length(F.trim(F.col("value"))) > 0)
     # PERMISSIVE from_json signals every parse problem (garbage line,
     # truncation, type-drifted field) by filling this extra field with
     # the offending input; it never returns a NULL struct, so the
@@ -94,8 +92,8 @@ def _parse_lines(
             {"mode": "PERMISSIVE", "columnNameOfCorruptRecord": _CORRUPT},
         ).alias("_parsed"),
     )
-    # a whitespace-only line parses to a NULL struct (no corrupt field
-    # to inspect); everything else signals through the corrupt field
+    # a NULL struct has no corrupt field to inspect; everything else
+    # signals through the corrupt field
     malformed = F.col("_parsed").isNull() | F.col(f"_parsed.{_CORRUPT}").isNotNull()
     return parsed.select(
         *[
@@ -112,7 +110,6 @@ def read_jsonl(
     spark: SparkSession,
     path: str,
     schema: StructType,
-    drop_blank_lines: bool = True,
 ) -> DataFrame:
     """Parse a JSONL path (file, directory, or glob) against an
     explicit ``schema``. Output columns: every schema field, then
@@ -127,14 +124,13 @@ def read_jsonl(
         F.col("_metadata.file_path").alias("_source_file"),
         F.col("value"),
     )
-    return _parse_lines(lines, schema, drop_blank_lines)
+    return _parse_lines(lines, schema)
 
 
 def read_jsonl_stream(
     spark: SparkSession,
     path: str,
     schema: StructType,
-    drop_blank_lines: bool = True,
     max_files_per_trigger: int | None = None,
 ) -> DataFrame:
     """Streaming twin of ``read_jsonl`` — same parse, same output
@@ -155,7 +151,7 @@ def read_jsonl_stream(
         F.col("_metadata.file_path").alias("_source_file"),
         F.col("value"),
     )
-    return _parse_lines(lines, schema, drop_blank_lines)
+    return _parse_lines(lines, schema)
 
 
 def split_quarantine(df: DataFrame) -> tuple[DataFrame, DataFrame]:

@@ -548,9 +548,8 @@ class TableStore:
         an empty DataFrame, not an empty scan.
 
         The RECORDED schema is supplied explicitly (never inferred from
-        footers): files written before a column existed read it as NULL
-        — schema evolution without mergeSchema's every-footer scan — and
-        partition columns take their recorded types. The scan puts
+        footers), so no footer is read at planning time and partition
+        columns take their recorded types. The scan puts
         partition columns last; one projection by name restores the
         recorded column order (a per-column ``cast`` would add three
         driver→JVM calls per column to every read)."""
@@ -877,49 +876,29 @@ class TableStore:
         source: DataFrame,
         name: str,
         keys: list[str],
-        partition_by: list[str] | None,
-        merge_schema: bool | None,
         init: DataFrame | None = None,
         txn: tuple[str, object] | None = None,
-    ) -> tuple[Manifest, StructType, tuple[list[str], list[tuple]] | None] | None:
-        """Set-up shared by the merges. Creates the table from ``init``
-        (default ``source``) through ``save_overwrite``, with ``txn``,
-        when it does not exist yet and returns None: nothing is left to
-        merge.
-        Otherwise returns (manifest, merge schema, partition request
-        for ``_plan_files``), after:
-
-        - rejecting a ``partition_by`` that conflicts with the recorded
-          layout (it applies only when the merge creates the table);
-        - widening the schema with source-only columns
-          (``merge_schema=True``) or rejecting them (False); None
-          leaves the column contract to the verb;
-        - collecting the source's distinct partition values when every
-          partition column is a key — only then is partition pruning
-          sound: equal keys imply equal partition values, so a source
-          row can only match inside its own partition.
+    ) -> tuple[Manifest, tuple[list[str], list[tuple]] | None] | None:
+        """Set-up shared by the merges. Creates the table, unpartitioned,
+        from ``init`` (default ``source``) through ``save_overwrite``,
+        with ``txn``, when it does not exist yet and returns None:
+        nothing is left to merge.
+        Otherwise returns (manifest, partition request for
+        ``_plan_files``). The request holds the source's distinct
+        partition values when every partition column is a key — only
+        then is partition pruning sound: equal keys imply equal
+        partition values, so a source row can only match inside its own
+        partition.
         """
         manifest = self._latest_manifest(name)
         if manifest is None:
-            self.save_overwrite(
-                source if init is None else init, name, partition_by=partition_by, txn=txn
-            )
+            self.save_overwrite(source if init is None else init, name, txn=txn)
             return None
-        if partition_by is not None and partition_by != manifest.partition_by:
-            raise ValueError(
-                f"{name} is partitioned by {manifest.partition_by}; "
-                f"cannot merge with partition_by={partition_by}"
-            )
-        schema = manifest.schema
-        if merge_schema:
-            schema = self._evolved_schema(schema, source.schema)
-        elif merge_schema is not None:
-            self._reject_extra_columns(source, schema, name)
         partitions = None
         if manifest.partition_by and set(manifest.partition_by) <= set(keys):
             pvals = source.select(*manifest.partition_by).distinct().collect()
             partitions = (manifest.partition_by, [tuple(r) for r in pvals])
-        return manifest, schema, partitions
+        return manifest, partitions
 
     @staticmethod
     def _unique_keys(source: DataFrame, keys: list[str]) -> DataFrame:
@@ -948,56 +927,21 @@ class TableStore:
         return cond
 
     @staticmethod
-    def _evolved_schema(base: StructType, incoming: StructType) -> StructType:
-        """Delta ``mergeSchema``/``autoMerge`` widening: base fields in
-        order, then incoming-only fields appended (nullable). Never
-        drops or retypes an existing column."""
-        names = {f.name for f in base.fields}
-        from pyspark.sql.types import StructField
-
-        return StructType(
-            list(base.fields)
-            + [
-                StructField(f.name, f.dataType, True)
-                for f in incoming.fields
-                if f.name not in names
-            ]
-        )
-
-    @staticmethod
     def _reject_extra_columns(source: DataFrame, schema: StructType, name: str) -> None:
-        """Without merge_schema, a source column the table lacks is a
-        hard error — the old behavior silently DROPPED it (data loss);
-        Delta MERGE without autoMerge fails the same way."""
+        """A source column the table lacks is a hard error, as in Delta
+        MERGE without autoMerge: dropping it would lose data silently."""
         extra = [c for c in source.columns if c not in {f.name for f in schema.fields}]
         if extra:
             raise ValueError(
-                f"source carries columns {extra} that {name} lacks; pass "
-                "merge_schema=True to widen the table (Delta autoMerge) "
-                "or drop them upstream"
+                f"source carries columns {extra} that {name} lacks; drop them "
+                "upstream, or widen the table with save_overwrite"
             )
-
-    @staticmethod
-    def _project_to(df: DataFrame, schema: StructType) -> DataFrame:
-        """Project df to exactly ``schema``'s columns/order — present
-        columns cast, absent columns NULL."""
-        have = set(df.columns)
-        return df.select(
-            *[
-                F.col(f.name).cast(f.dataType).alias(f.name)
-                if f.name in have
-                else F.lit(None).cast(f.dataType).alias(f.name)
-                for f in schema.fields
-            ]
-        )
 
     def merge_insert_only(
         self,
         source: DataFrame,
         name: str,
         keys: list[str],
-        partition_by: list[str] | None = None,
-        merge_schema: bool = False,
         txn: tuple[str, object] | None = None,
     ) -> None:
         """whenNotMatchedInsertAll() merge (02_bronze.ipynb:311-318).
@@ -1009,36 +953,27 @@ class TableStore:
         partition set is tiny by construction: one year per incremental
         run).
 
-        ``partition_by`` applies only when the merge CREATES the table
-        (first micro-batch of a streaming merge, first incremental run):
-        without it the table is born unpartitioned and every later
-        batch inherits that layout (r2 ADVICE). For an existing table
-        the recorded layout wins; a conflicting request raises.
+        A merge that CREATES the table (first micro-batch of a streaming
+        merge) writes it unpartitioned; a table keeps the layout it was
+        created with.
 
-        ``merge_schema=True`` (Delta autoMerge analogue) lets the
-        source widen the table: source-only columns are appended to the
-        recorded schema and existing files read them as NULL (the read
-        path supplies the manifest schema explicitly, so no footer
-        rescans); source-missing columns insert as NULL. Earlier
-        versions keep their own schema_json, so time travel returns
-        the schema that version actually had. Without the flag, a
-        schema mismatch fails analysis — evolution must be opted into,
-        exactly as Delta requires.
+        The source must carry the table's columns and no others: a
+        source-only column raises ValueError, a missing one fails
+        analysis. Schema evolution is a full load (``save_overwrite``),
+        as in the reference.
 
         ``txn=(app_id, value)`` is committed with the merge, even one
         that inserts nothing (see ``_rewrite``).
         """
-        prep = self._merge_prologue(source, name, keys, partition_by, merge_schema, txn=txn)
+        prep = self._merge_prologue(source, name, keys, txn=txn)
         if prep is None:
             return
-        manifest, schema, partitions = prep
+        manifest, partitions = prep
+        schema = manifest.schema
+        self._reject_extra_columns(source, schema, name)
         touched, _ = self._plan_files(name, manifest, partitions)
         target = self._read_file_subset(name, manifest, touched)
-        src = (
-            self._project_to(source, schema)
-            if merge_schema
-            else source.select(*[f.name for f in schema.fields])
-        )
+        src = source.select(*[f.name for f in schema.fields])
         new_rows = src.join(target.select(*keys), on=keys, how="left_anti")
         # append-only: every existing file carries forward
         self._rewrite(name, manifest, new_rows, manifest.files, schema, txn=txn)
@@ -1049,8 +984,6 @@ class TableStore:
         name: str,
         keys: list[str],
         update_cols: list[str] | None = None,
-        partition_by: list[str] | None = None,
-        merge_schema: bool = False,
         txn: tuple[str, object] | None = None,
     ) -> None:
         """whenMatchedUpdate(set=update_cols).whenNotMatchedInsertAll()
@@ -1085,28 +1018,20 @@ class TableStore:
         duplicate key fails that job and raises ValueError; nothing is
         committed and no file is left behind.
 
-        ``partition_by`` applies only when the merge creates the table
-        (same contract as merge_insert_only). ``merge_schema=True``
-        widens the table with source-only columns (existing rows read
-        them as NULL); matched-row updates then assign only columns the
-        SOURCE carries — a target-only column keeps its value instead
-        of being clobbered to NULL, Delta's UPDATE SET * + autoMerge
-        semantics. ``txn`` as in ``merge_insert_only``.
+        Table creation, the column contract and ``txn`` are as in
+        ``merge_insert_only``.
         """
-        prep = self._merge_prologue(source, name, keys, partition_by, merge_schema, txn=txn)
+        prep = self._merge_prologue(source, name, keys, txn=txn)
         if prep is None:
             return
-        manifest, schema, partitions = prep
+        manifest, partitions = prep
+        schema = manifest.schema
+        self._reject_extra_columns(source, schema, name)
         touched, untouched = self._plan_files(name, manifest, partitions)
         target = self._read_file_subset(name, manifest, touched)
-        if merge_schema:
-            target = self._project_to(target, schema)
         cols = [f.name for f in schema.fields]
         update_cols = update_cols or [c for c in cols if c not in keys]
-        if merge_schema:
-            # UPDATE SET assigns only source-carried columns
-            update_cols = [c for c in update_cols if c in set(source.columns)]
-        src = self._project_to(source, schema) if merge_schema else source.select(*cols)
+        src = source.select(*cols)
 
         # One null-safe full outer join. Explicit side indicators, not
         # key nullness: a NULL-keyed source row that eqNullSafe-matched
@@ -1136,8 +1061,6 @@ class TableStore:
         name: str,
         keys: list[str],
         effective_ts: str,
-        track_cols: list[str] | None = None,
-        partition_by: list[str] | None = None,
     ) -> None:
         """SCD Type-2 history-tracking merge (the Kimball pattern Delta
         users build with a two-branch MERGE): the target carries
@@ -1156,8 +1079,9 @@ class TableStore:
         and replay-idempotent (re-running the same merge with the same
         source and timestamp is a no-op — nothing is tracked-changed).
 
-        ``track_cols`` defaults to every natural (non-key, non-SCD2)
-        column; change detection is null-safe per column. Duplicate
+        Every natural (non-key, non-SCD2) column is tracked; change
+        detection is null-safe per column. A merge that creates the
+        table writes it unpartitioned. Duplicate
         source keys raise, matching Delta MERGE. Rewrite scope follows
         ``merge_scd1``: partition ⊆ key layouts rewrite only
         source-touched partitions (all versions of a key share its
@@ -1174,12 +1098,11 @@ class TableStore:
                 .withColumn("is_current", F.lit(True))
             )
 
-        prep = self._merge_prologue(
-            source, name, keys, partition_by, None, init=opened(source)
-        )
+        prep = self._merge_prologue(source, name, keys, init=opened(source))
         if prep is None:
             return
-        manifest, schema, partitions = prep
+        manifest, partitions = prep
+        schema = manifest.schema
         cols = [f.name for f in schema.fields]
         missing = [c for c in meta if c not in cols]
         if missing:
@@ -1188,7 +1111,7 @@ class TableStore:
                 "through merge_scd2 (or add valid_from/valid_to/is_current)"
             )
         natural = [c for c in cols if c not in meta]
-        track_cols = track_cols or [c for c in natural if c not in keys]
+        tracked = [c for c in natural if c not in keys]
         src_extra = [c for c in source.columns if c not in natural]
         if src_extra:
             raise ValueError(
@@ -1206,7 +1129,7 @@ class TableStore:
         hist = target.filter(~F.col("is_current"))
         match_cond = self._key_match(keys)
         changed = None
-        for c in track_cols:
+        for c in tracked:
             e = ~F.col(f"t.{c}").eqNullSafe(F.col(f"s.{c}"))
             changed = e if changed is None else (changed | e)
         changed = F.coalesce(changed, F.lit(False)) if changed is not None else F.lit(False)
@@ -1303,39 +1226,25 @@ class TableStore:
         self,
         name: str,
         retain_versions: int = 0,
-        retain_hours: float | None = None,
     ) -> int:
         """Delete data files not referenced by any RETAINED manifest
-        version. Retained = the latest version, plus the last
-        ``retain_versions`` before it, plus every version whose commit
-        is younger than ``retain_hours`` (log-entry mtime — the
-        analogue of Delta's ``deletedFileRetentionDuration``).
+        version. Retained = the latest version plus the last
+        ``retain_versions`` before it (the analogue of Delta's
+        ``deletedFileRetentionDuration``, counted in versions).
 
         **Defaults keep only the latest version** — that invalidates
         time travel to all earlier versions AND any change-feed
         streaming checkpoint that has not yet consumed past them (a
         stream restarting from an old offset would try to read removed
-        files). Callers running streams over this table should pass a
-        horizon comfortably beyond their maximum stream downtime, just
-        as with Delta's retention duration."""
+        files). Callers running streams over this table should retain
+        enough versions to cover their maximum stream downtime, just as
+        with Delta's retention duration."""
         manifest = self._latest_manifest(name)
         if manifest is None:
             return 0
         live = set(manifest.files)
         versions = self._log_versions(name)
         keep_after: set[int] = set(versions[-(retain_versions + 1):])
-        if retain_hours is not None:
-            import time
-
-            horizon = time.time() - retain_hours * 3600.0
-            log_dir = self._log_dir(name)
-            for v in versions:
-                entry = os.path.join(log_dir, f"{v:08d}.json")
-                try:
-                    if os.path.getmtime(entry) >= horizon:
-                        keep_after.add(v)
-                except OSError:
-                    keep_after.add(v)
         for v in keep_after:
             m = self._manifest_at(name, v)
             if m is not None:

@@ -26,6 +26,9 @@ from pyspark.sql import functions as F
 from ironman_medallion_lakehouse_spark.sources.tablestore import ConcurrentCommitError
 
 
+_COMMIT_RETRIES = 5
+
+
 def streaming_dedup_ingest(
     spark,
     store,
@@ -40,16 +43,9 @@ def streaming_dedup_ingest(
     k: int = 128,
     bands: int = 16,
     threshold: float = 0.9,
-    commit_retries: int = 5,
-    benchmark=None,
-    decontaminate_n: int = 8,
     drift_reference=None,
-    drift_signal=None,
     drift_max_d: float = 0.2,
     drift_table: str = "corpus.refused_batches",
-    drift_test: str = "ks",
-    drift_psi_edges: list[float] | None = None,
-    drift_max_psi: float = 0.25,
 ):
     """The streaming crawl-ingest GATE — the training-data pipeline's
     front door, composed from this repo's own operators: every
@@ -74,178 +70,62 @@ def streaming_dedup_ingest(
     periodic retro-compaction — the gate's job is bounding per-batch
     work, the batch's own dups are one batch's worth by definition.
 
-    ``benchmark`` (optional) adds the DECONTAMINATION arm (q99's
-    8-gram collision test) in front of dedup: a static frame of
-    held-out eval documents whose distinct n-gram hashes are computed
-    ONCE at stream start (eval sets are static; re-shingling them per
-    batch would be corpus-independent but still wasteful) and
-    broadcast into each batch — any crawl doc sharing an n-gram with
-    the benchmark is rejected before it can enter the corpus. This is
-    the production ordering: leaking eval data into the corpus is
-    unrecoverable downstream, so the gate refuses it at the door.
-
     ``drift_reference`` (optional) adds the DISTRIBUTION-DRIFT arm
-    (q142's two-sample KS test) in front of everything: a static
-    reference frame of docs (e.g. a sample of the accepted corpus)
-    whose ``drift_signal`` values (default: document length — the
-    classic batch screen; pass any Column over the doc row, e.g. a
-    quality score) define the expected distribution. Each micro-batch's
-    signal distribution is KS-tested against it; if the exact D
-    statistic exceeds ``drift_max_d`` the WHOLE batch is refused and a
-    quarantine row (batch_id, d_stat, ks_stat, n rows) is merged into
-    ``drift_table`` for operator review — a scraper regression or a
-    source-mix flip shows up as a distribution jump long before any
-    per-document filter fires, and admitting such a batch silently
-    shifts the training mixture. Batch-idempotent like the other arms:
-    a replayed refused batch recomputes the same D and re-merges the
-    same keyed quarantine row. Cost: one groupBy over the batch +
-    reference signal values (the q142 pre-aggregated shape — the
+    (q142's two-sample KS test) in front of dedup: a static reference
+    frame of docs (e.g. a sample of the accepted corpus) whose
+    document lengths define the expected distribution. Each
+    micro-batch's length distribution is KS-tested against it; if the
+    exact D statistic exceeds ``drift_max_d`` the WHOLE batch is
+    refused and a quarantine row (batch_id, n_docs, d_stat, ks_stat)
+    is merged into ``drift_table`` for operator review — a scraper
+    regression or a source-mix flip shows up as a distribution jump
+    long before any per-document filter fires, and admitting such a
+    batch silently shifts the training mixture. Batch-idempotent like
+    the other arms: a replayed refused batch recomputes the same D and
+    re-merges the same keyed quarantine row. Cost: one groupBy over
+    the batch + reference lengths (the q142 pre-aggregated shape — the
     serial section is the distinct-value domain).
 
-    ``drift_test`` picks the screen: ``"ks"`` (exact two-sample KS,
-    above), ``"psi"`` (Population Stability Index over the fixed
-    ``drift_psi_edges`` literal bins, refusing when psi >
-    ``drift_max_psi`` — the q142 battery's binned arm; it has NO
-    serial section at all, the better fit when the signal is genuinely
-    high-cardinality continuous, at the price of choosing bins up
-    front), or ``"kll"`` (the fully sketched form: the reference side
-    is collapsed ONCE at stream start to a KLL quantile grid and its
-    raw values never touched again — per-batch cost is the batch's own
-    sketch aggregate, and the D̂ threshold is compared like KS's exact
-    D with the sketch's ~0.02 error band in mind). Quarantine rows:
-    PSI (batch_id, n_docs, psi); KLL (batch_id, n_docs, d_kll).
+    A merge that loses a commit race (``ConcurrentCommitError``) is
+    retried up to 5 times.
 
     Returns the streaming query; caller drives it."""
-    from ironman_medallion_lakehouse_spark.operators import contamination as CO
     from ironman_medallion_lakehouse_spark.operators import dedup as D
-    from ironman_medallion_lakehouse_spark.operators.experiment import (
-        kll_quantile_grid,
-        ks_kll_from_grids,
-        ks_two_sample,
-        psi_drift,
-    )
+    from ironman_medallion_lakehouse_spark.operators.experiment import ks_two_sample
 
-    if drift_test not in ("ks", "psi", "kll"):
-        raise ValueError(
-            f"drift_test must be 'ks', 'psi' or 'kll', got {drift_test!r}"
-        )
-    if drift_test == "psi" and drift_reference is not None and not drift_psi_edges:
-        raise ValueError("drift_test='psi' requires drift_psi_edges")
-
-    bench_grams = None
-    if benchmark is not None:
-        bench_grams = (
-            CO.positional_ngram_hashes(benchmark, decontaminate_n, text_col, id_col)
-            .select("gram")
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
-
-    signal = (
-        F.length(F.col(text_col)) if drift_signal is None else drift_signal
-    )
+    signal = F.length(F.col(text_col)).cast("double").alias("_sig")
     ref_vals = None
-    ref_grid = None
-    if drift_reference is not None and drift_test == "kll":
-        # the sketched reference: one grid row, values never re-read
-        ref_grid = kll_quantile_grid(
-            drift_reference.select(signal.cast("double").alias("_sig")), "_sig"
-        )
-    elif drift_reference is not None:
-        # reference signal values computed ONCE at stream start (the
-        # reference sample is static; the bench_grams precedent)
-        ref_vals = (
-            drift_reference.select(
-                signal.cast("double").alias("_sig"), F.lit("ref").alias("_side")
-            )
-            .localCheckpoint(eager=True)
-        )
+    if drift_reference is not None:
+        # reference lengths computed ONCE at stream start (the
+        # reference sample is static)
+        ref_vals = drift_reference.select(
+            signal, F.lit("ref").alias("_side")
+        ).localCheckpoint(eager=True)
 
     def _retrying(fn) -> None:
-        for attempt in range(commit_retries + 1):
+        for attempt in range(_COMMIT_RETRIES + 1):
             try:
                 fn()
                 return
             except ConcurrentCommitError:
-                if attempt == commit_retries:
+                if attempt == _COMMIT_RETRIES:
                     raise
 
     def _gate_batch(batch_df, batch_id: int) -> None:
         batch_df = batch_df.dropDuplicates([id_col])
-        if ref_grid is not None:
-            cur = kll_quantile_grid(
-                batch_df.select(signal.cast("double").alias("_sig")), "_sig"
-            )
-            rows = ks_kll_from_grids(ref_grid, cur).collect()
-            r = rows[0] if rows else None  # null d (empty batch) -> admit
-            if r is not None and r.d_kll is not None and r.d_kll > drift_max_d:
-                refused = batch_df.sparkSession.createDataFrame(
-                    [(int(batch_id), int(batch_df.count()), float(r.d_kll))],
-                    "batch_id long, n_docs long, d_kll double",
-                )
-                _retrying(
-                    lambda: store.merge_insert_only(
-                        refused, drift_table, keys=["batch_id"]
-                    )
-                )
-                return  # whole batch quarantined; nothing admitted
         if ref_vals is not None:
-            both = batch_df.select(
-                signal.cast("double").alias("_sig"), F.lit("new").alias("_side")
-            ).unionByName(ref_vals)
-            refused = None
-            if drift_test == "psi":
-                rows = psi_drift(
-                    both, "_sig", "_side", "new", "ref", bin_edges=drift_psi_edges
-                ).collect()
-                r = rows[0] if rows else None  # empty batch -> no test, admit
-                if (
-                    r is not None
-                    and r.n_a > 0
-                    and r.psi is not None
-                    and r.psi > drift_max_psi
-                ):
-                    refused = batch_df.sparkSession.createDataFrame(
-                        [(int(batch_id), int(r.n_a), float(r.psi))],
-                        "batch_id long, n_docs long, psi double",
-                    )
-            else:
-                rows = ks_two_sample(both, "_sig", "_side", "new", "ref").collect()
-                ks = rows[0] if rows else None  # empty batch -> no test, admit
-                if (
-                    ks is not None
-                    and ks.n_a > 0
-                    and ks.d_stat is not None
-                    and ks.d_stat > drift_max_d
-                ):
-                    refused = batch_df.sparkSession.createDataFrame(
-                        [
-                            (
-                                int(batch_id),
-                                int(ks.n_a),
-                                float(ks.d_stat),
-                                float(ks.ks_stat),
-                            )
-                        ],
-                        "batch_id long, n_docs long, d_stat double, ks_stat double",
-                    )
-            if refused is not None:
+            both = batch_df.select(signal, F.lit("new").alias("_side")).unionByName(ref_vals)
+            rows = ks_two_sample(both, "_sig", "_side", "new", "ref").collect()
+            ks = rows[0] if rows else None  # empty batch -> no test, admit
+            if ks is not None and ks.n_a > 0 and ks.d_stat is not None and ks.d_stat > drift_max_d:
+                refused = batch_df.sparkSession.createDataFrame(
+                    [(int(batch_id), int(ks.n_a), float(ks.d_stat), float(ks.ks_stat))],
+                    "batch_id long, n_docs long, d_stat double, ks_stat double",
+                )
                 _retrying(
-                    lambda: store.merge_insert_only(
-                        refused, drift_table, keys=["batch_id"]
-                    )
+                    lambda: store.merge_insert_only(refused, drift_table, keys=["batch_id"])
                 )
                 return  # whole batch quarantined; nothing admitted
-        if bench_grams is not None:
-            dirty = (
-                CO.positional_ngram_hashes(
-                    batch_df, decontaminate_n, text_col, id_col
-                )
-                .join(F.broadcast(bench_grams), "gram", "left_semi")
-                .select(id_col)
-                .distinct()
-            )
-            batch_df = batch_df.join(dirty, id_col, "left_anti")
         batch_df = batch_df.localCheckpoint(eager=True)
         if store.table_exists(corpus_table):
             corpus = store.read(corpus_table).select(id_col, text_col)

@@ -1,8 +1,7 @@
 """bigram_logprob_scores (operators/ranking): stupid-backoff bigram
 LM filter. Pins: equality with a pure-Python replay (counts, backoff,
 initial-token unigram, DECIMAL(18,4) per-token rounding), the
-word-salad separation the unigram filter is blind to, the
-reference-corpus form incl. the OOV count-1 floor, and empty-doc
+word-salad separation the unigram filter is blind to, and empty-doc
 exclusion."""
 
 from __future__ import annotations
@@ -21,8 +20,9 @@ from ironman_medallion_lakehouse_spark.operators.ranking import (
 ALPHA = 0.4
 
 
-def _py_scores(train_texts, score_texts, alpha=ALPHA):
-    toks = [t.split() for t in train_texts]
+def _py_scores(texts, alpha=ALPHA):
+    """Self-trained scores of ``texts``, as the operator computes them."""
+    toks = [t.split() for t in texts]
     uni, bi, n = {}, {}, 0
     for ws in toks:
         for w in ws:
@@ -35,14 +35,14 @@ def _py_scores(train_texts, score_texts, alpha=ALPHA):
         return Decimal(repr(x)).quantize(Decimal("0.0001"), rounding=ROUND_HALF_UP)
 
     out = []
-    for text in score_texts:
+    for text in texts:
         ws = text.split()
         if not ws:
             out.append(None)
             continue
         s = Decimal(0)
         for i, w in enumerate(ws):
-            cw = uni.get(w, 1)  # OOV floor
+            cw = uni[w]
             if i == 0:
                 lp = math.log(cw / n)
             elif (ws[i - 1], w) in bi:
@@ -73,7 +73,7 @@ def test_matches_python_replay_self_trained(spark):
         r.doc_id: (r.n_tokens, r.mean_logprob)
         for r in bigram_logprob_scores(_docs(spark, TRAIN)).collect()
     }
-    want = _py_scores(TRAIN, TRAIN)
+    want = _py_scores(TRAIN)
     assert len(got) == len(TRAIN)
     for i, t in enumerate(TRAIN):
         assert got[i][0] == len(t.split())
@@ -93,17 +93,9 @@ def test_word_salad_scores_below_fluent_where_unigram_is_blind(spark):
     ).collect()}
     assert u[100] == u[101]  # unigram blind to order
     b = {r.doc_id: r.mean_logprob for r in bigram_logprob_scores(
-        both, corpus=corpus
+        both.unionByName(corpus.select("doc_id", "text"))
     ).collect()}
     assert b[100] > b[101] + 0.3  # bigram separates decisively
-
-
-def test_reference_corpus_and_oov_floor(spark):
-    scored = _docs(spark, ["the quick zzzunseen fox"], start=50)
-    got = bigram_logprob_scores(scored, corpus=_docs(spark, TRAIN)).collect()[0]
-    want = _py_scores(TRAIN, ["the quick zzzunseen fox"])[0]
-    assert got.n_tokens == 4
-    assert got.mean_logprob == pytest.approx(want, abs=2e-4)
 
 
 def test_empty_docs_excluded(spark):

@@ -157,26 +157,16 @@ def test_ewma_closed_form_plan_is_linear_and_fallback_guards(spark):
     assert row2.alarm_t == alarm2
 
 
-def test_ewma_undersized_n_points_raises_not_inf(spark):
-    """ADVICE r10: an undersized n_points that wrongly selects the
-    closed form past the overflow cap must raise loudly at evaluation
-    time, never silently emit inf/NaN EWMA values."""
+def test_ewma_extreme_magnitude_raises_not_inf(spark):
+    """A series of extreme magnitude overflows the closed form's
+    d^(−j)·x terms below the length cap (T=400 at λ=0.2 selects the
+    closed form); the chart must raise at evaluation time, never
+    silently emit inf/NaN EWMA values."""
     from pyspark.errors import PySparkRuntimeError, SparkRuntimeException
 
-    xs = _seeded(5, n=120)
-    sdf = _series(spark, xs)
-    params = series_params(sdf, "t", "x", baseline_n=10)
-    # lam=0.999 at T=120 overflows the closed form (cap trips past
-    # T≈87); lying that the series has 10 points selects it anyway
-    out = ewma_control(sdf, "t", "x", params, lam=0.999, n_points=10)
+    sdf = _series(spark, [1e300] * 400)
+    params = spark.createDataFrame([(0.0, 1.0)], "mu double, sd double")
+    out = ewma_control(sdf, "t", "x", params)
     with pytest.raises((PySparkRuntimeError, SparkRuntimeException, Exception)) as ei:
         out.collect()
-    assert "overflow" in str(ei.value).lower() or "n_points" in str(ei.value)
-
-    # an EXACT n_points still selects the correct branch lazily and
-    # matches the recursion (the r9 contract is unchanged)
-    ok = ewma_control(sdf, "t", "x", params, lam=0.999, n_points=len(xs))
-    mu, sd, _, _ = _py_params(xs, 10)
-    e_last, alarm = _py_ewma(xs, mu, sd, lam=0.999)
-    row = ok.collect()[0]
-    assert row.ewma_last == pytest.approx(round(e_last, 6), abs=1e-6)
+    assert "overflow" in str(ei.value).lower()

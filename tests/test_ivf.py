@@ -136,8 +136,8 @@ def test_incremental_add_matches_frozen_codebook_assignment(spark, tmp_path):
 
 def test_rebuild_defaults_to_build_geometry(spark, tmp_path):
     """ADVICE r7 item 2: build() persists its geometry (n_cells,
-    n_iter, column names) in <name>_meta; a bare rebuild() keeps it
-    instead of silently reverting to the constructor defaults."""
+    n_iter, column names) in <name>_meta; rebuild() keeps it instead
+    of silently reverting to the constructor defaults."""
     emb = _emb(spark)
     store = TableStore(spark, str(tmp_path / "wh"))
     idx = IvfIndex(store, "ann.ivf")
@@ -148,13 +148,9 @@ def test_rebuild_defaults_to_build_geometry(spark, tmp_path):
         "id_col": "vec_id",
         "vec_col": "embedding",
     }
-    idx.rebuild()  # no kwargs — must keep the 5-cell geometry
+    idx.rebuild()  # must keep the 5-cell geometry
     assert store.read(idx.centroids_table).count() == 5
     assert idx.build_params()["n_cells"] == 5
-    # an explicit override still wins and is re-persisted
-    idx.rebuild(n_cells=3)
-    assert store.read(idx.centroids_table).count() == 3
-    assert idx.build_params()["n_cells"] == 3
 
 
 def test_rebuild_restores_pruning_under_drift_with_recall_floor(spark, tmp_path):

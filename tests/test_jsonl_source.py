@@ -64,12 +64,11 @@ def test_quarantine_boundary_and_verbatim_raw(spark, tmp_path):
     assert got_q == {TYPE_DRIFT, GARBAGE, TRUNCATED}  # verbatim, re-parseable
 
 
-def test_blank_lines_dropped_by_default_kept_on_request(spark, tmp_path):
+def test_blank_lines_dropped(spark, tmp_path):
     path = _write(tmp_path, "dump.jsonl", [GOOD[0], "", "   ", GOOD[1]])
-    assert read_jsonl(spark, path, SCHEMA).count() == 2
-    kept = read_jsonl(spark, path, SCHEMA, drop_blank_lines=False)
-    assert kept.count() == 4
-    assert kept.filter("_malformed").count() == 2  # blanks quarantine
+    df = read_jsonl(spark, path, SCHEMA)
+    assert df.count() == 2
+    assert df.filter("_malformed").count() == 0  # dropped, not quarantined
 
 
 def test_directory_of_files_keeps_per_file_lineage(spark, tmp_path):

@@ -453,7 +453,6 @@ def test_q47_battery_handles_wordless_docs(spark, tmp_path):
     battery must drop it too — never emit it with 0/md5('')."""
     import hashlib
     import os
-    import shutil
 
     from ironman_medallion_lakehouse_spark import suite
 

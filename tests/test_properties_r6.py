@@ -6,7 +6,6 @@ an independent pure-Python reference computation."""
 from __future__ import annotations
 
 import hashlib
-import math
 
 from hypothesis import given, settings
 from hypothesis import strategies as st

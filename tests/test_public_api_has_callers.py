@@ -1,5 +1,6 @@
 """Every public top-level function in the engine package has a caller
-outside the tests, or is on an allowlist that says why it stays.
+outside the tests, and every option that selects behaviour is set by
+one, or each is on an allowlist that says why it stays.
 
 A caller is an AST reference from non-test code: a ``Name``, an
 ``Attribute`` or an import alias, in the package, ``tools/``,
@@ -10,6 +11,11 @@ do not count: a text grep finds a name wherever prose cites it, so it
 over-counts callers and lets dead API live. Names are matched, not
 resolved: a local variable that shares a function's name counts as a
 caller.
+
+The option gate applies the same rule one level down: a defaulted
+parameter of a public function or method that selects behaviour (see
+``_selecting_options``) keeps a second code path alive, so some
+non-test call must pass it, by keyword or by position.
 """
 
 from __future__ import annotations
@@ -58,6 +64,43 @@ ALLOWED_WITHOUT_CALLER = {
     ("suite.py", "q13_topk"): "plan-regression fixture",
     ("suite_more.py", "q67_regional_volume"): "plan-regression fixture",
     ("suite_more.py", "q68_moving_average"): "plan-regression fixture",
+}
+
+# (module, function or Class.method, parameter) -> why no caller outside
+# the tests sets it
+ALLOWED_UNSET_OPTIONS = {
+    ("operators/dedup.py", "minhash_signatures", "tokens"): (
+        "ROADMAP direction 5 replaces the dedup family's per-call "
+        "tokenization with one shared token-hash frame"
+    ),
+    ("operators/dedup.py", "jaccard_refine", "tokens"): (
+        "ROADMAP direction 5 replaces the dedup family's per-call "
+        "tokenization with one shared token-hash frame"
+    ),
+    ("operators/dedup.py", "containment_refine", "hashed_tokens"): (
+        "ROADMAP direction 5 replaces the dedup family's per-call "
+        "tokenization with one shared token-hash frame"
+    ),
+    ("operators/cumulative.py", "partitioned_running_sum", "num_partitions"): (
+        "test fixture: forces 1 to 64 range partitions on small inputs, "
+        "so the per-partition offset math runs"
+    ),
+    ("operators/experiment.py", "ewma_control", "lam"): (
+        "test fixture: lam=0.999 reaches the O(T^2) fold branch at "
+        "T=100 instead of T > 2,700"
+    ),
+    ("operators/multimodal.py", "encode_jpeg", "subsampling"): (
+        "test fixture: the 4:2:0 arm writes the chroma-subsampled JPEGs "
+        "that pin jpeg_decode's upsampling path"
+    ),
+    ("sources/jsonl.py", "read_jsonl_stream", "max_files_per_trigger"): (
+        "test fixture: one file per micro-batch, so a test sees several "
+        "batches"
+    ),
+    ("streaming/cdc_source.py", "stream_changes", "max_files_per_trigger"): (
+        "test fixture: one file per micro-batch pins the change feed's "
+        "admission control"
+    ),
 }
 
 
@@ -115,6 +158,114 @@ def uncalled_functions() -> set[tuple[str, str]]:
     return {key for key in public_functions() if key[1] not in called}
 
 
+def _selecting_options(fn: ast.FunctionDef) -> set[str]:
+    """Defaulted parameters of ``fn`` that select behaviour: a bool
+    default, an operand of a comparison with a literal (None
+    included), or a truth test in an ``if``, ``while`` or conditional
+    expression (``not x`` and ``x and y`` test each name)."""
+    a = fn.args
+    pos = a.posonlyargs + a.args
+    defaults = dict(zip((p.arg for p in pos[len(pos) - len(a.defaults):]), a.defaults))
+    defaults.update((p.arg, d) for p, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None)
+    picked = {n for n, d in defaults.items() if isinstance(d, ast.Constant) and isinstance(d.value, bool)}
+
+    def tested(test: ast.AST):
+        if isinstance(test, ast.Name):
+            yield test.id
+        elif isinstance(test, ast.UnaryOp) and isinstance(test.op, ast.Not):
+            yield from tested(test.operand)
+        elif isinstance(test, ast.BoolOp):
+            for v in test.values:
+                yield from tested(v)
+
+    for node in ast.walk(fn):
+        if isinstance(node, ast.Compare):
+            operands = [node.left, *node.comparators]
+            if any(_is_literal(o) for o in operands):
+                picked.update(o.id for o in operands if isinstance(o, ast.Name))
+        elif isinstance(node, (ast.If, ast.IfExp, ast.While)):
+            picked.update(tested(node.test))
+    return picked & defaults.keys()
+
+
+def _is_literal(node: ast.AST) -> bool:
+    """A constant, or a tuple, list or set of constants."""
+    if isinstance(node, (ast.Tuple, ast.List, ast.Set)):
+        return all(isinstance(e, ast.Constant) for e in node.elts)
+    return isinstance(node, ast.Constant)
+
+
+def public_options() -> dict[tuple[str, str, str], int | None]:
+    """(module, function or Class.method, parameter) -> the parameter's
+    position in a call (None: keyword-only) for every behaviour-
+    selecting option of an undecorated public top-level function or a
+    public method of a public top-level class."""
+    out = {}
+    for path in sorted(PKG.rglob("*.py")):
+        mod = path.relative_to(PKG).as_posix()
+        for node in ast.parse(path.read_text()).body:
+            if isinstance(node, ast.FunctionDef) and not node.decorator_list:
+                fns = [(node.name, node, 0)]
+            elif isinstance(node, ast.ClassDef):
+                fns = [
+                    (f"{node.name}.{f.name}", f, 0 if _is_static(f) else 1)
+                    for f in node.body
+                    if isinstance(f, ast.FunctionDef) and not f.name.startswith("_")
+                ]
+            else:
+                continue
+            if node.name.startswith("_"):
+                continue
+            for qual, fn, skip in fns:
+                pos = [p.arg for p in fn.args.posonlyargs + fn.args.args][skip:]
+                for opt in _selecting_options(fn):
+                    out[(mod, qual, opt)] = pos.index(opt) if opt in pos else None
+    return out
+
+
+def _is_static(fn: ast.FunctionDef) -> bool:
+    return any(isinstance(d, ast.Name) and d.id == "staticmethod" for d in fn.decorator_list)
+
+
+def passed_arguments(tree: ast.Module) -> set[tuple[str, str | int]]:
+    """(called name, keyword or positional index) for every argument a
+    call in ``tree`` passes; a ``*args`` or ``**kwargs`` splat sets every
+    position or keyword ("*" / "**"). A call inside a function of the
+    same name (recursion) sets nothing."""
+    out: set[tuple[str, str | int]] = set()
+
+    def walk(node: ast.AST, own: str | None) -> None:
+        for child in ast.iter_child_nodes(node):
+            inner = child.name if isinstance(child, ast.FunctionDef) else own
+            if isinstance(child, ast.Call):
+                f = child.func
+                name = f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
+                if name is not None and name != own:
+                    for i, arg in enumerate(child.args):
+                        out.add((name, "*" if isinstance(arg, ast.Starred) else i))
+                    for kw in child.keywords:
+                        out.add((name, kw.arg or "**"))
+            walk(child, inner)
+
+    walk(tree, None)
+    return out
+
+
+def unset_options() -> set[tuple[str, str, str]]:
+    """The ``public_options`` no non-test call passes. Names are matched,
+    not resolved, as in ``uncalled_functions``: a call to any function
+    or method of the same name counts."""
+    passed: set[tuple[str, str | int]] = set()
+    for path in _caller_sources():
+        passed |= passed_arguments(ast.parse(path.read_text()))
+    unset = set()
+    for (mod, qual, opt), at in public_options().items():
+        name = qual.rsplit(".", 1)[-1]
+        if not {(name, opt), (name, "**"), (name, at), (name, "*")} & passed:
+            unset.add((mod, qual, opt))
+    return unset
+
+
 def test_text_mentions_are_not_callers():
     src = '''
 import os.path as osp
@@ -148,5 +299,44 @@ def test_allowlist_is_current():
     stale = sorted(k for k in ALLOWED_WITHOUT_CALLER if k not in uncalled)
     assert not stale, (
         f"ALLOWED_WITHOUT_CALLER entries that are gone or now have a "
+        f"caller: {stale} — delete those entries"
+    )
+
+
+def test_option_scan_sees_keywords_positions_and_splats():
+    src = '''
+def f(x, flag=False, mode="a", limit=None, *, kw=0):
+    if limit is not None and mode in ("b", "c") and kw:
+        return f(x, flag=True)  # recursion sets nothing
+    return x
+
+def g(x, n=3):
+    return x * n
+'''
+    tree = ast.parse(src)
+    fn, g = tree.body
+    assert _selecting_options(fn) == {"flag", "mode", "limit", "kw"}
+    assert _selecting_options(g) == set()
+    assert passed_arguments(tree) == set()
+    calls = ast.parse("f(1, mode='b')\nobj.g(1, 2)\nh(*a, **k)")
+    assert passed_arguments(calls) == {
+        ("f", 0), ("f", "mode"), ("g", 0), ("g", 1), ("h", "*"), ("h", "**")
+    }
+
+
+def test_every_option_has_a_caller():
+    missing = sorted(unset_options() - set(ALLOWED_UNSET_OPTIONS))
+    assert not missing, (
+        f"options no caller outside tests sets: {missing} — fix each at the "
+        "value its callers use and delete the code only the other values "
+        "reach, or add an ALLOWED_UNSET_OPTIONS entry that says why it stays"
+    )
+
+
+def test_option_allowlist_is_current():
+    unset = unset_options()
+    stale = sorted(k for k in ALLOWED_UNSET_OPTIONS if k not in unset)
+    assert not stale, (
+        f"ALLOWED_UNSET_OPTIONS entries that are gone or now set by a "
         f"caller: {stale} — delete those entries"
     )

@@ -3,7 +3,6 @@ duplicates from replication, key isolation."""
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
@@ -64,12 +63,3 @@ def test_range_join_matches_naive(spark):
     assert {(r.lid, r.rid) for r in naive.collect()} == {
         (r.lid, r.rid) for r in fast.collect()
     }
-
-
-def test_range_join_rejects_outer(spark):
-    left, right = _frames(spark)
-    with pytest.raises(ValueError):
-        range_join_within(
-            left, right, on=["k"], left_ts="lts", right_ts="rts",
-            window_seconds=10, how="left",
-        )

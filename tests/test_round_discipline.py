@@ -78,10 +78,6 @@ ALLOWED = {
         "NO-OP-adjacent: grid denominators (101) cannot terminate in "
         "binary, boundary unreachable",
     ),
-    ("operators/experiment.py", "ks_kll_from_grids"): (
-        1,
-        "NO-OP-adjacent: same grid-denominator argument",
-    ),
     ("operators/experiment.py", "cusum_changepoint"): (
         1,
         "KEEP: engines associate windowed running sums differently",

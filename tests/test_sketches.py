@@ -313,21 +313,6 @@ def test_bloom_join_filter_sits_before_join(spark):
     assert plan.index("md5") > join_pos  # big side is a child of the join
 
 
-def test_bloom_join_rejects_outer(spark):
-    from pyspark.sql import Row
-
-    import pytest as _pytest
-
-    from ironman_medallion_lakehouse_spark.operators.sketches import (
-        bloom_filtered_join,
-    )
-
-    big = spark.createDataFrame([Row(k=1, payload=1)])
-    small = spark.createDataFrame([Row(sk=1, name="x")])
-    with _pytest.raises(ValueError, match="inner/"):
-        bloom_filtered_join(big, small, "k", "sk", how="left")
-
-
 def test_pairwise_overlap_hand_computed(spark):
     """A={x,y,z}, B={y,z,w}, C={q}: AB inter=2 union=4 J=0.5; AC/BC
     inter=0. Zero-overlap pairs still appear (size cross join), and the

@@ -1,5 +1,5 @@
 """Streaming → TableStore ingest: the crawl-ingest gate's idempotent
-micro-batch merges, decontamination and drift arms."""
+micro-batch merges and its drift arm."""
 
 from __future__ import annotations
 
@@ -48,49 +48,9 @@ def test_streaming_dedup_ingest_gate(spark, tmp_path):
         query.stop()
 
 
-def test_streaming_gate_decontaminates_against_benchmark(spark, tmp_path):
-    """The decontamination arm: a crawl doc sharing an 8-gram with the
-    held-out benchmark is refused at the door — before dedup, before
-    the corpus ever sees it — while clean docs flow through."""
-    from ironman_medallion_lakehouse_spark.streaming.ingest import (
-        streaming_dedup_ingest,
-    )
-
-    src = str(tmp_path / "docs_src")
-    store = TableStore(spark, str(tmp_path / "wh"))
-    eval_text = "alpha beta gamma delta epsilon zeta eta theta"
-    benchmark = spark.createDataFrame(
-        [Row(doc_id=900, text="prefix " + eval_text + " suffix")]
-    )
-    b1 = spark.createDataFrame([
-        # embeds the benchmark 8-gram verbatim -> contaminated
-        Row(doc_id=1, text="leading words then " + eval_text + " trailing words"),
-        Row(doc_id=2, text="entirely clean content about spark shuffles and partitions here"),
-    ])
-    b1.coalesce(1).write.mode("append").parquet(src)
-    query = streaming_dedup_ingest(
-        spark, store, src, b1.schema, str(tmp_path / "ckpt"),
-        bands=16, threshold=0.8, benchmark=benchmark,
-    )
-    try:
-        query.processAllAvailable()
-        admitted = {r.doc_id for r in store.read("corpus.documents").collect()}
-        assert admitted == {2}
-        # later batch: another contaminated doc plus a clean novel one
-        spark.createDataFrame([
-            Row(doc_id=10, text=eval_text + " with extra tokens appended afterwards"),
-            Row(doc_id=11, text="totally novel text with no overlap whatsoever in any token plane"),
-        ]).coalesce(1).write.mode("append").parquet(src)
-        query.processAllAvailable()
-        admitted = {r.doc_id for r in store.read("corpus.documents").collect()}
-        assert admitted == {2, 11}
-    finally:
-        query.stop()
-
-
 def test_streaming_gate_refuses_drifted_batch(spark, tmp_path):
     """The drift arm (q142's KS test at the door): a batch whose
-    word-count distribution matches the reference flows through; a
+    document-length distribution matches the reference flows through; a
     batch of drastically shorter docs is refused WHOLE — quarantine
     row recorded, corpus untouched — and a later conforming batch is
     admitted again. The recorded D must equal ks_two_sample run
@@ -105,10 +65,11 @@ def test_streaming_gate_refuses_drifted_batch(spark, tmp_path):
 
     src = str(tmp_path / "docs_src")
     store = TableStore(spark, str(tmp_path / "wh"))
-    n_words = F.size(F.split(F.col("text"), " "))
+    length = F.length(F.col("text"))
 
     def doc(i, nw):
-        return Row(doc_id=i, text=" ".join(f"w{i}t{j}" for j in range(nw)))
+        # fixed-width words: a doc's length is 11·nw − 1 whatever its id
+        return Row(doc_id=i, text=" ".join(f"w{i:04d}t{j:03d}" for j in range(nw)))
 
     # reference distribution: 40-60-word docs
     reference = spark.createDataFrame([doc(900 + i, 40 + i % 21) for i in range(30)])
@@ -118,7 +79,7 @@ def test_streaming_gate_refuses_drifted_batch(spark, tmp_path):
     query = streaming_dedup_ingest(
         spark, store, src, b1.schema, str(tmp_path / "ckpt"),
         bands=16, threshold=0.8,
-        drift_reference=reference, drift_signal=n_words, drift_max_d=0.5,
+        drift_reference=reference, drift_max_d=0.5,
     )
     try:
         query.processAllAvailable()
@@ -135,10 +96,10 @@ def test_streaming_gate_refuses_drifted_batch(spark, tmp_path):
         assert len(refused) == 1 and refused[0].n_docs == 8
         # the gate's D is EXACTLY the operator's D on the same data
         both = b2.select(
-            n_words.cast("double").alias("_sig"), F.lit("new").alias("_side")
+            length.cast("double").alias("_sig"), F.lit("new").alias("_side")
         ).unionByName(
             reference.select(
-                n_words.cast("double").alias("_sig"), F.lit("ref").alias("_side")
+                length.cast("double").alias("_sig"), F.lit("ref").alias("_side")
             )
         )
         want = ks_two_sample(both, "_sig", "_side", "new", "ref").collect()[0]
@@ -161,139 +122,6 @@ def test_streaming_gate_refuses_drifted_batch(spark, tmp_path):
         query.stop()
 
 
-def test_streaming_gate_psi_drift_arm(spark, tmp_path):
-    """drift_test='psi': the binned drift screen refuses a shifted
-    batch whole (quarantine row records the PSI the operator itself
-    computes on the same frames), then admits a conforming batch."""
-    from pyspark.sql import functions as F
-
-    from ironman_medallion_lakehouse_spark.operators.experiment import psi_drift
-    from ironman_medallion_lakehouse_spark.streaming.ingest import (
-        streaming_dedup_ingest,
-    )
-
-    src = str(tmp_path / "docs_src")
-    store = TableStore(spark, str(tmp_path / "wh"))
-    n_words = F.size(F.split(F.col("text"), " "))
-    # bins chosen so the 40-60-word reference spans the [40,50)/[50,70)
-    # pair; a conforming batch lands in both, the 3-5-word drifted
-    # batch lands entirely in the first bin
-    edges = [10.0, 25.0, 40.0, 50.0, 70.0]
-
-    def doc(i, nw):
-        return Row(doc_id=i, text=" ".join(f"w{i}t{j}" for j in range(nw)))
-
-    reference = spark.createDataFrame([doc(900 + i, 40 + i % 21) for i in range(30)])
-    b1 = spark.createDataFrame([doc(i, 45 + i % 10) for i in range(1, 9)])
-    b1.coalesce(1).write.mode("append").parquet(src)
-    query = streaming_dedup_ingest(
-        spark, store, src, b1.schema, str(tmp_path / "ckpt"),
-        bands=16, threshold=0.8,
-        drift_reference=reference, drift_signal=n_words,
-        drift_test="psi", drift_psi_edges=edges, drift_max_psi=0.5,
-    )
-    try:
-        query.processAllAvailable()
-        assert store.read("corpus.documents").count() == 8
-        assert not store.table_exists("corpus.refused_batches")
-
-        b2 = spark.createDataFrame([doc(100 + i, 3 + i % 3) for i in range(8)])
-        b2.coalesce(1).write.mode("append").parquet(src)
-        query.processAllAvailable()
-        admitted = {r.doc_id for r in store.read("corpus.documents").collect()}
-        assert admitted == set(range(1, 9))
-        refused = store.read("corpus.refused_batches").collect()
-        assert len(refused) == 1 and refused[0].n_docs == 8
-        both = b2.select(
-            n_words.cast("double").alias("_sig"), F.lit("new").alias("_side")
-        ).unionByName(
-            reference.select(
-                n_words.cast("double").alias("_sig"), F.lit("ref").alias("_side")
-            )
-        )
-        want = psi_drift(both, "_sig", "_side", "new", "ref", bin_edges=edges).collect()[0]
-        assert refused[0].psi == want.psi and want.psi > 0.5
-
-        b3 = spark.createDataFrame([doc(200 + i, 40 + (3 * i) % 21) for i in range(8)])
-        b3.coalesce(1).write.mode("append").parquet(src)
-        query.processAllAvailable()
-        admitted = {r.doc_id for r in store.read("corpus.documents").collect()}
-        assert set(range(200, 208)) <= admitted
-        assert store.read("corpus.refused_batches").count() == 1
-    finally:
-        query.stop()
-
-
-def test_streaming_gate_psi_requires_edges(spark, tmp_path):
-    import pytest as _pytest
-
-    from ironman_medallion_lakehouse_spark.streaming.ingest import (
-        streaming_dedup_ingest,
-    )
-
-    store = TableStore(spark, str(tmp_path / "wh"))
-    ref = spark.createDataFrame([Row(doc_id=1, text="a b c")])
-    with _pytest.raises(ValueError, match="drift_psi_edges"):
-        streaming_dedup_ingest(
-            spark, store, str(tmp_path / "s"), ref.schema, str(tmp_path / "c"),
-            drift_reference=ref, drift_test="psi",
-        )
-
-
-def test_streaming_gate_kll_drift_arm(spark, tmp_path):
-    """drift_test='kll': the reference collapses to a sketch grid at
-    stream start; a conforming batch flows, a drifted batch is refused
-    with the recorded D matching ks_kll_from_grids on the same data."""
-    from pyspark.sql import functions as F
-
-    from ironman_medallion_lakehouse_spark.operators.experiment import (
-        kll_quantile_grid,
-        ks_kll_from_grids,
-    )
-    from ironman_medallion_lakehouse_spark.streaming.ingest import (
-        streaming_dedup_ingest,
-    )
-
-    src = str(tmp_path / "docs_src")
-    store = TableStore(spark, str(tmp_path / "wh"))
-    n_words = F.size(F.split(F.col("text"), " "))
-
-    def doc(i, nw):
-        return Row(doc_id=i, text=" ".join(f"w{i}t{j}" for j in range(nw)))
-
-    reference = spark.createDataFrame([doc(900 + i, 40 + i % 21) for i in range(30)])
-    b1 = spark.createDataFrame([doc(i, 40 + (3 * i) % 21) for i in range(1, 9)])
-    b1.coalesce(1).write.mode("append").parquet(src)
-    query = streaming_dedup_ingest(
-        spark, store, src, b1.schema, str(tmp_path / "ckpt"),
-        bands=16, threshold=0.8,
-        drift_reference=reference, drift_signal=n_words,
-        drift_test="kll", drift_max_d=0.6,
-    )
-    try:
-        query.processAllAvailable()
-        assert store.read("corpus.documents").count() == 8
-        assert not store.table_exists("corpus.refused_batches")
-
-        b2 = spark.createDataFrame([doc(100 + i, 3 + i % 3) for i in range(8)])
-        b2.coalesce(1).write.mode("append").parquet(src)
-        query.processAllAvailable()
-        assert store.read("corpus.documents").count() == 8
-        refused = store.read("corpus.refused_batches").collect()
-        assert len(refused) == 1 and refused[0].n_docs == 8
-        want = ks_kll_from_grids(
-            kll_quantile_grid(
-                reference.select(n_words.cast("double").alias("_sig")), "_sig"
-            ),
-            kll_quantile_grid(
-                b2.select(n_words.cast("double").alias("_sig")), "_sig"
-            ),
-        ).collect()[0]
-        assert refused[0].d_kll == want.d_kll and want.d_kll > 0.6
-    finally:
-        query.stop()
-
-
 def test_streaming_gate_drift_refusal_replay_idempotent(spark, tmp_path):
     """The refusal path's exactly-once story, exercised at the actual
     failure point: foreachBatch replays a batch when the process dies
@@ -305,8 +133,6 @@ def test_streaming_gate_drift_refusal_replay_idempotent(spark, tmp_path):
     conforming batch after the replay is admitted normally."""
     import os
 
-    from pyspark.sql import functions as F
-
     from ironman_medallion_lakehouse_spark.streaming.ingest import (
         streaming_dedup_ingest,
     )
@@ -314,16 +140,15 @@ def test_streaming_gate_drift_refusal_replay_idempotent(spark, tmp_path):
     src = str(tmp_path / "docs_src")
     ckpt = str(tmp_path / "ckpt")
     store = TableStore(spark, str(tmp_path / "wh"))
-    n_words = F.size(F.split(F.col("text"), " "))
 
     def doc(i, nw):
-        return Row(doc_id=i, text=" ".join(f"w{i}t{j}" for j in range(nw)))
+        return Row(doc_id=i, text=" ".join(f"w{i:04d}t{j:03d}" for j in range(nw)))
 
     def start():
         return streaming_dedup_ingest(
             spark, store, src, b1.schema, ckpt,
             bands=16, threshold=0.8,
-            drift_reference=reference, drift_signal=n_words, drift_max_d=0.5,
+            drift_reference=reference, drift_max_d=0.5,
         )
 
     reference = spark.createDataFrame([doc(900 + i, 40 + i % 21) for i in range(30)])

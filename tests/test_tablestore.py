@@ -177,18 +177,26 @@ _REWRITE_VERBS = {
 }
 
 
+def _opened(df, ts: str):
+    """``df`` as merge_scd2 creates a table from it: every row current
+    from ``ts``."""
+    return (
+        df.withColumn("valid_from", F.lit(ts).cast("timestamp"))
+        .withColumn("valid_to", F.lit(None).cast("timestamp"))
+        .withColumn("is_current", F.lit(True))
+    )
+
+
 def _two_versions(spark, st, verb):
     """Versions 1 and 2 of db.t, partitioned by y; built through
     merge_scd2 when the verb under test needs the SCD-2 columns."""
-    for i, rows in enumerate((_V_ROWS, _V_ROWS + _V_MORE)):
-        df = spark.createDataFrame(rows)
-        if verb == "merge_scd2":
-            st.merge_scd2(
-                df, "db.t", keys=["k", "y"], effective_ts=f"2024-0{i + 1}-01",
-                partition_by=["y"],
-            )
-        else:
-            st.save_overwrite(df, "db.t", partition_by=["y"])
+    v1, v2 = (spark.createDataFrame(rows) for rows in (_V_ROWS, _V_ROWS + _V_MORE))
+    if verb == "merge_scd2":
+        st.save_overwrite(_opened(v1, "2024-01-01"), "db.t", partition_by=["y"])
+        st.merge_scd2(v2, "db.t", keys=["k", "y"], effective_ts="2024-02-01")
+    else:
+        st.save_overwrite(v1, "db.t", partition_by=["y"])
+        st.save_overwrite(v2, "db.t", partition_by=["y"])
 
 
 @pytest.mark.parametrize("verb", sorted(_REWRITE_VERBS))
@@ -315,22 +323,6 @@ def test_rewrite_commit_invariants(spark, tmp_path, monkeypatch, verb):
     assert sorted(entry["remove"]) == sorted(prev_files - new_files)
 
 
-def test_table_changes_on_schema_evolved_table(spark, tmp_path):
-    """A change feed that reads only files written before merge_schema
-    widened the table reads the new column as NULL instead of failing
-    on the older files' footer schema."""
-    st = _store(spark, tmp_path)
-    st.save_overwrite(spark.createDataFrame([Row(k=1)]), "db.e")  # v1
-    st.merge_insert_only(
-        spark.createDataFrame([Row(k=5, extra=10)]), "db.e", keys=["k"], merge_schema=True
-    )  # v2
-    st.delete_where("db.e", "k = 5")  # v3
-    st.delete_where("db.e", "k = 1")  # v4
-    assert st.restore("db.e", 3) == 5
-    changes = st.table_changes("db.e", 4, 5).collect()
-    assert [(r.k, r.extra) for r in changes] == [(1, None)]
-
-
 def test_scd1_null_key_not_duplicated(spark, tmp_path):
     """A NULL-keyed source row eqNullSafe-matches a NULL-keyed target
     row: it must UPDATE it, not also insert a duplicate (r2 ADVICE)."""
@@ -441,22 +433,6 @@ def test_rerun_insert_only_merge_commits_nothing(spark, tmp_path, partition_by):
     assert _data_files(st, "db.t") == files
     assert st._latest_manifest("db.t").version == 2
     assert st.row_count("db.t") == 3
-
-
-def test_zero_row_widening_merge_commits_schema(spark, tmp_path):
-    """A merge_schema=True merge that inserts no row still widens the
-    table: the new schema is committed, with every file carried."""
-    st = _store(spark, tmp_path)
-    st.save_overwrite(spark.createDataFrame([Row(k=1)]), "db.w")
-    before = st._latest_manifest("db.w")
-    st.merge_insert_only(
-        spark.createDataFrame([Row(k=1, extra="x")]), "db.w", keys=["k"], merge_schema=True
-    )
-    after = st._latest_manifest("db.w")
-    assert after.version == before.version + 1
-    assert after.files == before.files
-    assert [f.name for f in after.schema.fields] == ["k", "extra"]
-    assert [(r.k, r.extra) for r in st.read("db.w").collect()] == [(1, None)]
 
 
 @pytest.mark.parametrize("verb", sorted(_REWRITE_VERBS))
@@ -574,13 +550,10 @@ def test_null_count_matches_scan(spark, tmp_path, verb):
     _assert_null_counts_match_scans(st, "db.t")
 
 
-def test_null_counts_survive_checkpoint_optimize_restore_and_widening(
-    spark, tmp_path, monkeypatch
-):
+def test_null_counts_survive_checkpoint_optimize_and_restore(spark, tmp_path, monkeypatch):
     """Every commit is also a checkpoint, so each manifest read back is
     a snapshot: the null counts survive it, an optimize that rewrites
-    every file, a schema-widening merge (older files lack the new
-    column: NULL in all their rows) and a restore."""
+    every file, a later merge and a restore."""
     from ironman_medallion_lakehouse_spark.sources import tablestore
 
     monkeypatch.setattr(tablestore, "CHECKPOINT_EVERY", 1)
@@ -590,17 +563,15 @@ def test_null_counts_survive_checkpoint_optimize_restore_and_widening(
     st.merge_insert_only(spark.createDataFrame([("d", 2, None)], _NULL_ROWS), "db.t",
                          keys=["k"])  # v2
     st.optimize("db.t", min_files=1)  # v3
-    st.merge_insert_only(
-        spark.createDataFrame([("e", 2, 4, "x")], _NULL_ROWS + ", w string"), "db.t",
-        keys=["k"], merge_schema=True,
-    )  # v4
+    st.merge_insert_only(spark.createDataFrame([("e", None, 4)], _NULL_ROWS), "db.t",
+                         keys=["k"])  # v4
     assert st.restore("db.t", 2) == 5
     assert st._checkpoint_versions("db.t") == [1, 2, 3, 4, 5]
     for v in st._log_versions("db.t"):
         m = st._manifest_at("db.t", v)
         assert set(m.null_counts) == set(m.files), v  # logged, not read from footers
     assert st.null_count("db.t", ["v", "y"]) == {"v": 2, "y": 1}
-    assert st.null_count("db.t", ["w"], version=4) == {"w": 4}
+    assert st.null_count("db.t", ["y"], version=4) == {"y": 2}
     _assert_null_counts_match_scans(st, "db.t")
     with pytest.raises(ValueError, match="no column"):
         st.null_count("db.t", ["nope"])
@@ -856,31 +827,6 @@ def test_scd1_full_rewrite_when_partition_not_in_keys(spark, tmp_path):
     assert rows["b"] == ("keep", 2)
 
 
-def test_merge_insert_only_partition_by_on_create(spark, tmp_path):
-    """r2 ADVICE: the table-creation path of merge_insert_only accepts
-    partition_by so a streaming merge's first micro-batch doesn't lock
-    in an unpartitioned layout; conflicting layout on an existing
-    table raises."""
-    import pytest as _pytest
-
-    st = _store(spark, tmp_path)
-    st.merge_insert_only(
-        spark.createDataFrame([Row(k="a", y=1, v=1)]), "db.t", keys=["k", "y"],
-        partition_by=["y"],
-    )
-    assert st._latest_manifest("db.t").partition_by == ["y"]
-    st.merge_insert_only(
-        spark.createDataFrame([Row(k="b", y=2, v=2)]), "db.t", keys=["k", "y"],
-        partition_by=["y"],
-    )
-    assert {r.k for r in st.read("db.t").collect()} == {"a", "b"}
-    with _pytest.raises(ValueError, match="partitioned by"):
-        st.merge_insert_only(
-            spark.createDataFrame([Row(k="c", y=3, v=3)]), "db.t", keys=["k", "y"],
-            partition_by=["k"],
-        )
-
-
 def test_read_partitions_float_timestamp_decimal(spark, tmp_path):
     """r2 VERDICT #5 / ADVICE: float, timestamp-with-microseconds, and
     decimal partition keys must match Spark's path rendering (Java
@@ -933,18 +879,15 @@ def test_read_partitions_float_timestamp_decimal(spark, tmp_path):
 
 
 def test_vacuum_retention_horizon(spark, tmp_path):
-    """r3 ADVICE (medium): vacuum with a retention horizon keeps files
-    of recent versions so time travel / stream replay inside the
-    horizon still works; default (retain nothing) keeps only latest."""
+    """r3 ADVICE (medium): vacuum with a retention horizon
+    (``retain_versions``) keeps files of recent versions so time travel
+    / stream replay inside the horizon still works; default (retain
+    nothing) keeps only latest."""
     st = _store(spark, tmp_path)
     st.save_overwrite(spark.createDataFrame([Row(k="a", v=1)]), "db.t")  # v1
     st.save_overwrite(spark.createDataFrame([Row(k="b", v=2)]), "db.t")  # v2
     st.save_overwrite(spark.createDataFrame([Row(k="c", v=3)]), "db.t")  # v3
 
-    # hours-based horizon: everything was committed seconds ago → no-op,
-    # all versions stay time-travelable
-    assert st.vacuum("db.t", retain_hours=1.0) == 0
-    assert {r.k for r in st.read("db.t", version=1).collect()} == {"a"}
     # retain one version back: v2 must stay readable, v1's files go
     removed = st.vacuum("db.t", retain_versions=1)
     assert removed > 0
@@ -1068,15 +1011,8 @@ def test_merge_scd2_partition_scoped_rewrite(spark, tmp_path):
     carries the other partition's files forward byte-identical and the
     change feed contains only touched-partition rows."""
     st = _store(spark, tmp_path)
-    st.merge_scd2(
-        spark.createDataFrame(
-            [Row(region="east", k=1, v="a"), Row(region="west", k=2, v="b")]
-        ),
-        "db.p",
-        keys=["region", "k"],
-        effective_ts="2024-01-01",
-        partition_by=["region"],
-    )  # v1
+    v1 = spark.createDataFrame([Row(region="east", k=1, v="a"), Row(region="west", k=2, v="b")])
+    st.save_overwrite(_opened(v1, "2024-01-01"), "db.p", partition_by=["region"])  # v1
     m1 = st._latest_manifest("db.p")
     west_files = [f for f in m1.files if "region=west" in f]
     st.merge_scd2(
@@ -1093,46 +1029,22 @@ def test_merge_scd2_partition_scoped_rewrite(spark, tmp_path):
     assert rows == {(1, "a", False), (1, "a2", True), (2, "b", True)}
 
 
-def test_merge_schema_evolution(spark, tmp_path):
-    """Delta autoMerge analogue: merge_schema=True appends source-only
-    columns (old files read them as NULL via the explicit-schema read
-    path), source-missing columns insert as NULL, SCD-1 updates never
-    clobber target-only columns, and time travel returns each
-    version's own schema."""
-    import pytest
-
+def test_merge_rejects_source_only_columns(spark, tmp_path):
+    """A merge source carrying a column the table lacks fails before
+    anything is committed (Delta MERGE without autoMerge); schema
+    evolution is a full load, and time travel keeps each version's own
+    schema."""
     st = _store(spark, tmp_path)
     st.save_overwrite(spark.createDataFrame([Row(k=1, v="a")]), "db.e")  # v1
-    # strict by default: widening without the flag fails analysis
-    with pytest.raises(Exception):
-        st.merge_insert_only(
-            spark.createDataFrame([Row(k=2, v="b", extra=10)]), "db.e", keys=["k"]
-        )
-    st.merge_insert_only(
-        spark.createDataFrame([Row(k=2, v="b", extra=10)]),
-        "db.e",
-        keys=["k"],
-        merge_schema=True,
-    )  # v2 widens
-    rows = {(r.k, r.v, r.extra) for r in st.read("db.e").collect()}
-    assert rows == {(1, "a", None), (2, "b", 10)}
-    # time travel: v1 keeps its own (narrow) schema
+    wide = spark.createDataFrame([Row(k=2, v="b", extra=10)])
+    with pytest.raises(ValueError, match="extra"):
+        st.merge_insert_only(wide, "db.e", keys=["k"])
+    with pytest.raises(ValueError, match="extra"):
+        st.merge_scd1(wide, "db.e", keys=["k"])
+    assert st.version("db.e") == 1
+    st.save_overwrite(wide, "db.e")  # v2 widens
+    assert st.read("db.e").columns == ["k", "v", "extra"]
     assert st.read("db.e", version=1).columns == ["k", "v"]
-    # SCD-1 with a source that widens AND lacks a target column: the
-    # update assigns only source-carried columns (v survives), the new
-    # column lands, inserts fill missing columns with NULL
-    st.merge_scd1(
-        spark.createDataFrame([Row(k=1, note="n1"), Row(k=3, note="n3")]),
-        "db.e",
-        keys=["k"],
-        merge_schema=True,
-    )  # v3
-    rows = {(r.k, r.v, r.extra, r.note) for r in st.read("db.e").collect()}
-    assert rows == {
-        (1, "a", None, "n1"),   # v kept (not clobbered), note updated
-        (2, "b", 10, None),
-        (3, None, None, "n3"),  # insert fills missing with NULL
-    }
 
 
 def test_version_changes_single_walk_matches_per_version(spark, tmp_path):

@@ -4,20 +4,13 @@ RRF fusion, PQ-ADC ANN, and temperature mixture resampling."""
 
 from __future__ import annotations
 
-import math
-
-import pytest
 from pyspark.sql import Row
-from pyspark.sql import functions as F
 
 from ironman_medallion_lakehouse_spark.operators import contamination as C
 from ironman_medallion_lakehouse_spark.operators import ranking as R
 from ironman_medallion_lakehouse_spark.operators import sampling as SA
 from ironman_medallion_lakehouse_spark.operators import similarity as S
-
-
-def _plan_of(df) -> str:
-    return df._jdf.queryExecution().executedPlan().toString()
+from tests.plan_text import formatted_plan
 
 
 # ------------------------------------------------------------ contamination
@@ -57,7 +50,7 @@ def test_benchmark_overlap_broadcasts_benchmark(spark):
         [Row(doc_id=i, text="a b c d e f g h i j") for i in range(20)]
     )
     bench = spark.createDataFrame([Row(doc_id=0, text="a b c d e f g h")])
-    plan = _plan_of(C.benchmark_overlap(docs, bench, n=8))
+    plan = formatted_plan(C.benchmark_overlap(docs, bench, n=8))
     assert "BroadcastHashJoin" in plan
 
 
@@ -159,7 +152,7 @@ def test_pq_assign_is_map_only(spark):
     emb = spark.createDataFrame(
         [Row(vec_id=i, embedding=[float(i), 1.0, 0.5, 2.0]) for i in range(8)]
     )
-    plan = _plan_of(S.pq_assign(emb, books))
+    plan = formatted_plan(S.pq_assign(emb, books))
     # zero shuffles: one Arrow-batched encode pass over the scan
     assert "Exchange" not in plan
     assert "MapInPandas" in plan

@@ -252,43 +252,10 @@ def test_learn_bpe_replay_sql_min_pair_count(spark):
     )
 
 
-def test_batched_admits_provably_harmless_symbol_sharing(spark):
-    """r9 trigram-refined count-invariance: taken (x,a), candidate
-    (a,b) share the symbol 'a' but the linking trigram "x a b" does
-    not exist (the pairs live in different words), so with
-    refine_conflicts=True the candidate's count is invariant and BOTH
-    merge in ONE round — the default (r8) rule stops the batch on any
-    sharing. A linked sharing ((b,</w>) vs taken (a,b) via the real
-    trigram "a b </w>") still stops it."""
-    from ironman_medallion_lakehouse_spark.operators.vocab import learn_bpe_batched
-
-    # xaxay x5: (x,a)=10, (a,x)=5, (a,y)=5, (y,</w>)=5
-    # qab   x6: (q,a)=6, (a,b)=6, (b,</w>)=6
-    vocab = {"xaxay": 5, "qab": 6}
-    df = spark.createDataFrame(list(vocab.items()), "word string, n long")
-    stats = {}
-    got = learn_bpe_batched(
-        df, 2, min_pair_count=1, max_batch=8, stats=stats, refine_conflicts=True
-    )
-    want = _py_serial_bpe(vocab, 2, min_pair_count=1)
-    assert got == want == [("x", "a"), ("a", "b")]
-    # both landed in one driver round: the refinement actually fired
-    assert stats["rounds"] == 1, stats
-    # the genuinely linked case still stops: 3rd merge needs round 2
-    stats3 = {}
-    got3 = learn_bpe_batched(
-        df, 3, min_pair_count=1, max_batch=8, stats=stats3, refine_conflicts=True
-    )
-    assert got3 == _py_serial_bpe(vocab, 3, min_pair_count=1)
-    assert stats3["rounds"] == 2, stats3
-    assert stats3["stop_reasons"].get("symbol_conflict", 0) >= 1
-
-
 def test_batched_equals_serial_on_more_random_corpora(spark):
     """Extended property sweep: more seeds and a two-letter alphabet
     (maximal sharing + product collisions) — the batched learner must
-    stay EXACTLY serial in BOTH conflict modes (the r8 conservative
-    default and the r9 trigram-refined opt-in)."""
+    stay EXACTLY serial."""
     import random
 
     from ironman_medallion_lakehouse_spark.operators.vocab import learn_bpe_batched
@@ -304,184 +271,18 @@ def test_batched_equals_serial_on_more_random_corpora(spark):
             [(w, n) for w, n in vocab.items()], "word string, n long"
         )
         want = _py_serial_bpe(vocab, 12, min_pair_count=1)
-        for refine in (False, True):
-            got = learn_bpe_batched(
-                df,
-                num_merges=12,
-                min_pair_count=1,
-                max_batch=6,
-                refine_conflicts=refine,
-            )
-            assert got == want, f"seed {seed} refine={refine}: {got} != {want}"
+        got = learn_bpe_batched(df, num_merges=12, min_pair_count=1, max_batch=6)
+        assert got == want, f"seed {seed}: {got} != {want}"
 
 
-def test_select_mode_validation(spark):
-    import pytest as _pytest
-
-    from ironman_medallion_lakehouse_spark.operators.vocab import learn_bpe_batched
-
-    df = spark.createDataFrame([("ab", 3)], "word string, n long")
-    with _pytest.raises(ValueError, match="select"):
-        learn_bpe_batched(df, 2, select="bogus")
-
-
-def test_independent_mode_deterministic_under_repartition(spark):
-    """select='independent' is deterministic: the candidate scan order
-    is a total order (count desc, a, b) and the interaction rule is
-    pure string comparison, so partitioning must not change the
-    learned list."""
+def test_apply_bpe_matches_sequential_semantics(spark):
+    """apply_bpe's output equals the plain sequential greedy
+    application of the ordered merge list (pure-Python reference) on
+    REAL learned lists, whose merges chain (es -> est) and cross the
+    checkpoint cadence."""
     import random
 
-    from ironman_medallion_lakehouse_spark.operators.vocab import learn_bpe_batched
-
-    rng = random.Random(42)
-    vocab = {}
-    for _ in range(30):
-        w = "".join(rng.choice("abcdef") for _ in range(rng.randint(2, 6)))
-        vocab[w] = vocab.get(w, 0) + rng.randint(1, 9)
-    rows = [(w, n) for w, n in vocab.items()]
-    a = learn_bpe_batched(
-        spark.createDataFrame(rows, "word string, n long"),
-        12, min_pair_count=1, max_batch=16, select="independent",
-    )
-    b = learn_bpe_batched(
-        spark.createDataFrame(rows, "word string, n long").repartition(7),
-        12, min_pair_count=1, max_batch=16, select="independent",
-    )
-    assert a == b and len(a) == 12
-
-
-def test_independent_mode_equals_serial_on_conflict_free_corpus(spark):
-    """On a corpus whose top pairs never interact (words over disjoint
-    alphabets), the greedy independent set IS the serial prefix, so
-    select='independent' must equal learn_bpe exactly — order
-    included."""
-    from ironman_medallion_lakehouse_spark.operators.vocab import (
-        learn_bpe,
-        learn_bpe_batched,
-    )
-
-    # single-char words: each candidate is (x, </w>) — right-right
-    # sharing of </w> commutes (allowed), products form no further
-    # pairs, and counts strictly order the serial sequence, so the
-    # greedy independent set IS the serial prefix
-    rows = [("a", 9), ("b", 7), ("c", 5), ("d", 3)]
-    df = spark.createDataFrame(rows, "word string, n long")
-    serial = learn_bpe(df, 4, min_pair_count=1)
-    indep = learn_bpe_batched(
-        df, 4, min_pair_count=1, max_batch=8, select="independent"
-    )
-    assert indep == serial and len(serial) == 4
-
-
-def test_independent_mode_packs_more_merges_per_round(spark):
-    """The mode's reason to exist: on a conflict-chained corpus the
-    prefix rule stops batches early while the independent rule skips
-    the interacting candidate and keeps packing — fewer driver
-    rounds for the same merge count."""
-    import random
-
-    from ironman_medallion_lakehouse_spark.operators.vocab import learn_bpe_batched
-
-    rng = random.Random(7)
-    vocab = {}
-    for _ in range(60):
-        w = "".join(rng.choice("abcdefgh") for _ in range(rng.randint(2, 7)))
-        vocab[w] = vocab.get(w, 0) + rng.randint(1, 9)
-    rows = [(w, n) for w, n in vocab.items()]
-    df = spark.createDataFrame(rows, "word string, n long")
-    st_p, st_i = {}, {}
-    learn_bpe_batched(df, 16, min_pair_count=1, max_batch=16, stats=st_p)
-    learn_bpe_batched(
-        df, 16, min_pair_count=1, max_batch=16, stats=st_i,
-        select="independent",
-    )
-    assert st_i["rounds"] < st_p["rounds"], (st_i, st_p)
-    assert st_i.get("skipped_interacting", 0) > 0
-
-
-def test_independent_batch_folds_commute(spark):
-    """The commutation lemma underpinning select='independent': folds
-    of a pairwise NON-INTERACTING pair set (no adjacent-form sharing,
-    no operand/product string equality — left-left and right-right
-    operand sharing allowed) produce the SAME symbol table in any
-    application order. Randomized: corpora over a small alphabet,
-    greedy non-interacting sets picked by the same rule, fold order
-    shuffled."""
-    import random
-
-    from pyspark.sql import functions as F
-
-    from ironman_medallion_lakehouse_spark.operators.vocab import (
-        _initial_symbols,
-        _merge_fold,
-        _merge_fold_batch,
-    )
-
-    def non_interacting(cands):
-        taken = []
-        for a, b in cands:
-            prod = a + b
-            if any(
-                b == ta or a == tb or a == tp or b == tp
-                or prod in (ta, tb, tp)
-                for ta, tb, tp in ((ta, tb, ta + tb) for ta, tb in taken)
-            ):
-                continue
-            taken.append((a, b))
-        return taken
-
-    for seed in range(8):
-        rng = random.Random(seed)
-        words = [
-            "".join(rng.choice("abcd") for _ in range(rng.randint(2, 6)))
-            for _ in range(12)
-        ]
-        # candidate pool: random adjacent pairs actually present
-        pool = set()
-        for w in words:
-            syms = list(w) + ["</w>"]
-            for i in range(len(syms) - 1):
-                pool.add((syms[i], syms[i + 1]))
-        batch = non_interacting(sorted(pool)[: rng.randint(2, 6)])
-        if len(batch) < 2:
-            continue
-        df = spark.createDataFrame([(w,) for w in words], "word string").select(
-            _initial_symbols(F.col("word")).alias("syms")
-        )
-        orders = [list(batch), list(batch)]
-        rng.shuffle(orders[1])
-        tables = []
-        for order in orders:
-            out = df
-            for a, b in order:
-                out = out.select(_merge_fold(F.col("syms"), a, b).alias("syms"))
-            tables.append([tuple(r.syms) for r in out.collect()])
-        assert tables[0] == tables[1], (seed, batch, orders)
-        # and the ONE-PASS combined fold (the round's actual
-        # application path) equals the sequential folds
-        combined = [
-            tuple(r.syms)
-            for r in df.select(
-                _merge_fold_batch(F.col("syms"), batch).alias("syms")
-            ).collect()
-        ]
-        assert combined == tables[0], (seed, batch)
-
-
-def test_apply_bpe_grouped_passes_match_sequential_semantics(spark):
-    """apply_bpe now applies consecutive NON-INTERACTING merges as one
-    combined fold pass (_noninteracting_prefix_groups) — the output
-    must equal the plain sequential greedy application of the ordered
-    merge list (pure-Python reference) on REAL learned lists, whose
-    chained merges (es -> est) force group breaks."""
-    import random
-
-    from ironman_medallion_lakehouse_spark.operators.vocab import (
-        END,
-        _noninteracting_prefix_groups,
-        learn_bpe,
-    )
+    from ironman_medallion_lakehouse_spark.operators.vocab import END, learn_bpe
 
     def py_apply(word, merges):
         syms = list(word) + [END]
@@ -505,80 +306,11 @@ def test_apply_bpe_grouped_passes_match_sequential_semantics(spark):
             [(w, n) for w, n in vocab.items()], "word string, n long"
         )
         merges = learn_bpe(counts, 12, min_pair_count=1)
-        # the grouping must actually engage on at least one seed
-        groups = _noninteracting_prefix_groups(merges)
         doc_words = rng.sample(list(vocab), min(8, len(vocab)))
         doc = spark.createDataFrame(
             [(1, " ".join(doc_words))], "doc_id long, text string"
         )
         got = apply_bpe(doc, merges).collect()[0]
         want = [t for w in doc_words for t in py_apply(w, merges)]
-        assert got.tokens == want, (seed, merges, groups)
+        assert got.tokens == want, (seed, merges)
         assert got.n_tokens == len(want)
-
-
-def test_independent_rejects_refine_conflicts(spark):
-    """select='independent' never reads the link sets, so paying the
-    trigram/link pull is meaningless — rejected loudly (ADVICE r10)."""
-    import pytest as _pytest
-
-    from ironman_medallion_lakehouse_spark.operators.vocab import learn_bpe_batched
-
-    df = spark.createDataFrame([("ab", 3)], "word string, n long")
-    with _pytest.raises(ValueError, match="refine_conflicts"):
-        learn_bpe_batched(
-            df, 2, min_pair_count=1, select="independent", refine_conflicts=True
-        )
-
-
-def test_top_k_words_truncation_semantics(spark):
-    """top_k_words=K learns from exactly the K most frequent words
-    (ties word-asc) — the artifact equals learning on a manually
-    truncated count table, and None is the identity (SCALING.md r12
-    decision row; semantics first pinned by the r12 top-K probe, now
-    in git history)."""
-    from pyspark.sql import functions as F
-
-    from ironman_medallion_lakehouse_spark.operators.vocab import (
-        learn_bpe_batched,
-    )
-
-    counts = word_counts(_corpus(spark))
-    # K=2 keeps newest(6) + low(5); widest(3)/lower(2) drop out
-    manual = counts.orderBy(F.col("n").desc(), F.col("word").asc()).limit(2)
-    want = learn_bpe(manual, num_merges=4, min_pair_count=1)
-    got = learn_bpe(counts, num_merges=4, min_pair_count=1, top_k_words=2)
-    assert got == want
-    # the truncated vocabulary no longer sees widest/lower pairs:
-    # (e,s) now counts 6 (newest only), and the l-o-w chain counts 5
-    assert ("e", "s") in got
-    # None is the identity on both learners
-    full = learn_bpe(counts, num_merges=3)
-    assert learn_bpe(counts, num_merges=3, top_k_words=None) == full
-    assert (
-        learn_bpe_batched(counts, 3, min_pair_count=2, top_k_words=None)
-        == full
-    )
-    # batched learner honors the dial the same way
-    got_b = learn_bpe_batched(
-        counts, 4, min_pair_count=1, top_k_words=2
-    )
-    assert got_b == want
-
-
-def test_top_k_words_tiebreak_and_validation(spark):
-    """Equal-count words truncate word-ASC (deterministic under
-    repartition); K<1 is rejected loudly."""
-    import pytest as _pytest
-
-    rows = [("bb", 3), ("aa", 3), ("cc", 3), ("dd", 1)]
-    df1 = spark.createDataFrame(rows, "word string, n long").repartition(1)
-    df2 = spark.createDataFrame(rows, "word string, n long").repartition(7)
-    m1 = learn_bpe(df1, num_merges=2, min_pair_count=1, top_k_words=2)
-    m2 = learn_bpe(df2, num_merges=2, min_pair_count=1, top_k_words=2)
-    # K=2 of the count-3 tier is {aa, bb} by word-asc regardless of
-    # physical layout; '</w>' sorts before 'a', so the count-3 pair
-    # tiebreak picks (a, </w>) first, then (a, a</w>)
-    assert m1 == m2 == [("a", END), ("a", "a" + END)]
-    with _pytest.raises(ValueError, match="top_k_words"):
-        learn_bpe(df1, num_merges=1, top_k_words=0)
