@@ -10,10 +10,16 @@ makes those patterns first-class and composable:
 - each Expectation evaluates to (name, violation_count, total) in ONE
   pass — expectations over the same DataFrame are fused into a single
   aggregate job, not one action per check;
+- ``violation_counts`` gives the same counts as named aggregates, so a
+  writer can observe them while it writes (``TableStore``'s
+  ``observe=``) instead of scanning afterwards: ``pipeline.run`` audits
+  silver that way and calls ``check`` only when the table's log holds
+  no observed totals;
 - ``quarantine`` splits pass/fail rows by a predicate (flag-don't-drop
   generalized to physically routing rows).
 
-The duplicate-key count is ``plans.bronze.duplicate_key_count``.
+The bronze duplicate-key audit is ``plans.bronze.duplicate_key_count``,
+a function of the NULL-name count the bronze commit logs.
 """
 
 from __future__ import annotations
@@ -34,24 +40,10 @@ class Expectation:
         return Expectation(f"non_null({col})", F.col(col).isNull())
 
     @staticmethod
-    def in_range(col: str, lo, hi) -> "Expectation":
-        c = F.col(col)
-        return Expectation(
-            f"in_range({col},{lo},{hi})", c.isNotNull() & ((c < lo) | (c > hi))
-        )
-
-    @staticmethod
     def in_set(col: str, values: list) -> "Expectation":
         c = F.col(col)
         return Expectation(
             f"in_set({col})", c.isNotNull() & ~c.isin(values)
-        )
-
-    @staticmethod
-    def matches(col: str, pattern: str) -> "Expectation":
-        c = F.col(col)
-        return Expectation(
-            f"matches({col})", c.isNotNull() & ~c.rlike(pattern)
         )
 
     @staticmethod
@@ -70,18 +62,24 @@ class QualityReport:
         return all(v == 0 for v in self.violations.values())
 
 
+def violation_counts(expectations: list[Expectation]) -> dict[str, Column]:
+    """Each expectation's name → an aggregate counting the rows that
+    violate it (a NULL verdict is no violation); 0 over no rows."""
+    return {e.name: F.count(F.when(e.violation, 1)) for e in expectations}
+
+
 def check(df: DataFrame, expectations: list[Expectation]) -> QualityReport:
     """Evaluate all expectations in ONE aggregate pass (the reference
     runs one count() action per audit — at 100 TB that's one full scan
     per check; fusing them is the difference)."""
-    aggs = [F.count(F.lit(1)).alias("__total")] + [
-        F.sum(F.when(e.violation, 1).otherwise(0)).alias(f"__v{i}")
-        for i, e in enumerate(expectations)
-    ]
-    row = df.agg(*aggs).collect()[0]
+    counts = violation_counts(expectations)
+    row = df.agg(
+        F.count(F.lit(1)).alias("__total"),
+        *[agg.alias(f"__v{i}") for i, agg in enumerate(counts.values())],
+    ).collect()[0]
     return QualityReport(
         total_rows=row["__total"],
-        violations={e.name: (row[f"__v{i}"] or 0) for i, e in enumerate(expectations)},
+        violations={name: row[f"__v{i}"] for i, name in enumerate(counts)},
     )
 
 

@@ -272,7 +272,18 @@ VIEW_SQL: dict[str, str] = view_sql()
 
 def create_views(spark: SparkSession) -> list[str]:
     """Register all dashboard views as temporary views. Requires the
-    gold tables to be registered first (TableStore.register_views)."""
+    gold tables to be registered first (TableStore.register_views).
+
+    A SQL temp view stores its SQL text and resolves the ``gold_*``
+    temp views it names when it is queried, so a view already in the
+    session follows a re-registered table by itself. DDL is issued
+    only for a view that is missing or whose stored text (Spark keeps
+    the query's trimmed text) differs from ``VIEW_SQL``'s: a second
+    pipeline run in a session issues none."""
+    catalog = spark._jsparkSession.sessionState().catalog()
     for name, sql in VIEW_SQL.items():
-        spark.sql(f"CREATE OR REPLACE TEMPORARY VIEW {name} AS {sql}")
+        view = catalog.getTempView(name)
+        text = view.get().desc().viewText() if view.isDefined() else None
+        if text is None or not text.isDefined() or text.get() != sql.strip():
+            spark.sql(f"CREATE OR REPLACE TEMPORARY VIEW {name} AS {sql}")
     return list(VIEW_SQL)

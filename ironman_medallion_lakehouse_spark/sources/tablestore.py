@@ -10,7 +10,7 @@ from the public protocol description):
 Layout per table::
 
     <root>/<db>/<table>/
-        _log/00000001.json             # delta: {"version","schema","partition_by","add","remove","num_records","null_counts"[,"txn"]}
+        _log/00000001.json             # delta: {"version","schema","partition_by","add","remove","num_records","null_counts"[,"txn"][,"metrics"]}
         _log/00000010.checkpoint.json  # full snapshot every CHECKPOINT_EVERY commits
         data/                          # immutable parquet files, shared partition dirs
             year=2023/<writeid>-part-....parquet
@@ -50,6 +50,16 @@ Layout per table::
   ``SetTransaction``. Every later commit carries the table's txns
   forward, and ``last_txn`` reads them back from the log without a
   Spark job, so a rerun can tell that its input was already written.
+- A writer may also have named row counts observed while its rows are
+  written: ``observe={name: count aggregate}`` on ``save_overwrite``
+  and ``merge_insert_only`` rides the write job as an ``Observation``
+  (no extra scan). The log keeps their running totals for the whole
+  table (``Manifest.metrics``, Delta's ``commitInfo.operationMetrics``
+  summed): an overwrite sets them, an insert-only merge adds its
+  inserted rows' counts, ``optimize`` carries them, ``restore`` copies
+  the restored version's, and any other write that changes rows, or
+  observes under other names, clears them. ``observed_totals`` reads
+  them without a Spark job.
 - Old versions remain readable (time travel) until `vacuum()`.
 
 Reference behaviors reproduced: 02_bronze.ipynb:300-318 (insert-only),
@@ -69,7 +79,7 @@ from urllib.parse import unquote, urlparse
 
 from py4j.protocol import Py4JJavaError
 from pyspark.errors import PySparkException
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
@@ -121,6 +131,7 @@ def manifest_at(log_dir: str, version: int) -> "Manifest | None":
     num_records: dict[str, int] = {}
     null_counts: dict[str, dict[str, int]] = {}
     txns: dict[str, object] = {}
+    metrics: dict[str, int] = {}
     schema_json, partition_by = "", []
     start = 0
     if ckpts:
@@ -128,7 +139,7 @@ def manifest_at(log_dir: str, version: int) -> "Manifest | None":
             snap = Manifest.from_json(fh.read())
         files = list(snap.files)
         num_records, null_counts = dict(snap.num_records), dict(snap.null_counts)
-        txns = dict(snap.txns)
+        txns, metrics = dict(snap.txns), dict(snap.metrics)
         schema_json, partition_by = snap.schema_json, snap.partition_by
         start = snap.version
     for v in range(start + 1, version + 1):
@@ -144,6 +155,7 @@ def manifest_at(log_dir: str, version: int) -> "Manifest | None":
         num_records.update(d.get("num_records", {}))
         null_counts.update(d.get("null_counts", {}))
         txns = d.get("txn", txns)
+        metrics = d.get("metrics", metrics)
     return Manifest(
         version=version,
         schema_json=schema_json,
@@ -152,6 +164,7 @@ def manifest_at(log_dir: str, version: int) -> "Manifest | None":
         num_records=num_records,
         null_counts=null_counts,
         txns=txns,
+        metrics=metrics,
     )
 
 
@@ -302,6 +315,9 @@ class Manifest:
     # app_id → the JSON value its writer last committed (Delta's
     # SetTransaction); see TableStore.last_txn
     txns: dict[str, object] = field(default_factory=dict)
+    # running totals of the counts writers observed (see _rewrite):
+    # name → rows; empty when the table has none
+    metrics: dict[str, int] = field(default_factory=dict)
 
     @property
     def schema(self) -> StructType:
@@ -317,6 +333,7 @@ class Manifest:
                 "num_records": self.num_records,
                 "null_counts": self.null_counts,
                 "txns": self.txns,
+                "metrics": self.metrics,
             },
             indent=None,
         )
@@ -332,6 +349,7 @@ class Manifest:
             num_records=d.get("num_records", {}),
             null_counts=d.get("null_counts", {}),
             txns=d.get("txns", {}),
+            metrics=d.get("metrics", {}),
         )
 
 
@@ -393,8 +411,9 @@ class TableStore:
         duplicate checkpoint+delta reads are the dominant metadata
         cost.
 
-        The entry holds the table's whole txn map under ``"txn"`` when
-        it differs from prev's; replay takes the latest map it meets."""
+        The entry holds the table's whole txn map under ``"txn"``, and
+        its observed totals under ``"metrics"``, each only when it
+        differs from prev's; replay takes the latest of each it meets."""
         log_dir = self._log_dir(name)
         os.makedirs(log_dir, exist_ok=True)
         prev_files = set(prev.files) if prev else set()
@@ -416,6 +435,8 @@ class TableStore:
         }
         if manifest.txns != (prev.txns if prev else {}):
             entry["txn"] = manifest.txns
+        if manifest.metrics != (prev.metrics if prev else {}):
+            entry["metrics"] = manifest.metrics
         tmp = os.path.join(log_dir, f".tmp-{uuid.uuid4().hex}")
         with open(tmp, "w") as fh:
             fh.write(json.dumps(entry))
@@ -520,6 +541,30 @@ class TableStore:
         manifest only: no Spark job."""
         manifest = self._latest_manifest(name)
         return manifest.txns.get(app_id) if manifest is not None else None
+
+    def txn_version(self, name: str, app_id: str) -> int | None:
+        """The version whose commit set the value ``last_txn`` returns,
+        or None when there is none. A delta entry holds the txn map
+        only when it changed, so this reads entries back from the
+        latest to the last one that held another value: no Spark job."""
+        value = self.last_txn(name, app_id)
+        if value is None:
+            return None
+        found = None
+        for v in reversed(self._log_versions(name)):
+            with open(os.path.join(self._log_dir(name), f"{v:08d}.json")) as fh:
+                entry = json.load(fh)
+            if "txn" in entry:
+                if entry["txn"].get(app_id) != value:
+                    break
+                found = v
+        return found
+
+    def observed_totals(self, name: str) -> dict[str, int]:
+        """The running totals of the counts observed by the writes of
+        ``name`` (see ``_rewrite``), read from the latest manifest: no
+        Spark job. Empty when the log holds none."""
+        return dict(self._require(name).metrics)
 
     def version(self, name: str) -> int:
         """The latest committed version of ``name``; raises
@@ -712,15 +757,37 @@ class TableStore:
         a footer records no null count for a column: the caller must
         then count with a scan. Raises ValueError for a column the
         table does not have."""
+        manifest = self._require(name, version)
+        return self._null_totals(name, manifest, manifest.files, columns)
+
+    def added_null_count(self, name: str, columns: list[str], version: int) -> dict[str, int]:
+        """NULLs in each of ``columns`` among the rows that ``version``'s
+        commit added to ``name``, summed like ``null_count`` over the
+        files its delta entry adds: no Spark job. Only when a footer
+        records no null count are the added files scanned, in one
+        aggregate job."""
+        manifest = self._require(name, version)
+        [(_v, _partition_by, added)] = version_changes(self._log_dir(name), version - 1, version)
+        totals = self._null_totals(name, manifest, added, columns)
+        if totals is not None:
+            return totals
+        row = self._read_file_subset(name, manifest, added).agg(
+            *[F.count(F.when(F.col(c).isNull(), 1)) for c in columns]
+        ).collect()[0]
+        return dict(zip(columns, row))
+
+    def _null_totals(
+        self, name: str, manifest: Manifest, files: list[str], columns: list[str]
+    ) -> dict[str, int] | None:
+        """``null_count`` over ``files`` of ``manifest``."""
         import pyarrow.parquet as pq
 
-        manifest = self._require(name, version)
         missing = [c for c in columns if c not in manifest.schema.fieldNames()]
         if missing:
             raise ValueError(f"table {name} has no column(s) {missing}")
         data_dir = self._data_dir(name)
         totals = dict.fromkeys(columns, 0)
-        for f in manifest.files:
+        for f in files:
             counts = dict(manifest.null_counts.get(f, {}))
             counts.update(
                 (c, 0) for c, v in partition_values(f, manifest.partition_by) if v is not None
@@ -779,6 +846,7 @@ class TableStore:
         name: str,
         partition_by: list[str] | None = None,
         txn: tuple[str, object] | None = None,
+        observe: dict[str, Column] | None = None,
     ) -> None:
         """Full load: format("delta").mode("overwrite")
         .option("overwriteSchema","true") equivalent (02_bronze.ipynb:301-310).
@@ -786,10 +854,12 @@ class TableStore:
         A partitioned write goes through ``_write_files``' rebalance
         hint, the write distribution shared by every write path.
         ``txn=(app_id, value)`` records what the write consumed in the
-        same commit (see ``_rewrite``)."""
+        same commit; ``observe`` counts the written rows and sets the
+        table's observed totals to those counts (see ``_rewrite``)."""
         self._rewrite(
             name, self._latest_manifest(name), df, [], df.schema,
             partition_by=partition_by or [], txn=txn,
+            observe=observe, totals=dict.fromkeys(observe or {}, 0),
         )
 
     def _rewrite(
@@ -802,6 +872,8 @@ class TableStore:
         partition_by: list[str] | None = None,
         distribute: bool = True,
         txn: tuple[str, object] | None = None,
+        observe: dict[str, Column] | None = None,
+        totals: dict[str, int] | None = None,
     ) -> int:
         """The one rewrite-and-commit path of every data-writing verb:
         write ``new_rows`` as new files, carry prev's ``untouched``
@@ -814,6 +886,17 @@ class TableStore:
         prev's txns carry forward; ``txn=(app_id, value)`` sets one
         (the value is stored as its JSON form, which ``last_txn``
         returns).
+
+        ``totals`` are the observed running totals the commit starts
+        from (None: it records none). ``observe`` names count
+        aggregates over ``new_rows``; they ride the write job as an
+        ``Observation`` and are added to ``totals`` when both hold the
+        same names, and otherwise the commit records no totals. A write
+        that committed no row records zeros without asking the
+        Observation: Spark may plan an empty write's observed node
+        away, and ``Observation.get`` then fails. A rewrite that adds
+        no row and carries every file keeps prev's totals: its rows are
+        prev's.
 
         A written file with zero rows is deleted (Spark writes one for
         an empty unpartitioned write; the recorded schema already says
@@ -832,6 +915,12 @@ class TableStore:
         if partition_by is None:
             partition_by = prev.partition_by
         data_dir = self._data_dir(name)
+        observation = None
+        if observe and totals is not None and totals.keys() == observe.keys():
+            observation = Observation()
+            new_rows = new_rows.observe(observation, *[c.alias(k) for k, c in observe.items()])
+        elif observe:
+            totals = None
         try:
             written = self._write_files(new_rows, name, partition_by, distribute=distribute)
         except (Py4JJavaError, PySparkException) as e:  # a failed Spark job
@@ -848,10 +937,13 @@ class TableStore:
         if txn is not None:
             app_id, value = txn
             txns[app_id] = json.loads(json.dumps(value))
+        if observation is not None:
+            observed = observation.get if files else dict.fromkeys(totals, 0)
+            totals = {k: n + int(observed[k]) for k, n in totals.items()}
+        unchanged = prev is not None and not files and set(untouched) == set(prev.files)
+        metrics = prev.metrics if unchanged else totals or {}
         if (
-            prev is not None
-            and not files
-            and set(untouched) == set(prev.files)
+            unchanged
             and schema.json() == prev.schema_json
             and partition_by == prev.partition_by
             and txns == prev.txns
@@ -866,6 +958,7 @@ class TableStore:
             name,
             Manifest(
                 version, schema.json(), partition_by, untouched + files, counts, nulls, txns,
+                metrics,
             ),
             prev=prev,
         )
@@ -878,11 +971,12 @@ class TableStore:
         keys: list[str],
         init: DataFrame | None = None,
         txn: tuple[str, object] | None = None,
+        observe: dict[str, Column] | None = None,
     ) -> tuple[Manifest, tuple[list[str], list[tuple]] | None] | None:
         """Set-up shared by the merges. Creates the table, unpartitioned,
         from ``init`` (default ``source``) through ``save_overwrite``,
-        with ``txn``, when it does not exist yet and returns None:
-        nothing is left to merge.
+        with ``txn`` and ``observe``, when it does not exist yet and
+        returns None: nothing is left to merge.
         Otherwise returns (manifest, partition request for
         ``_plan_files``). The request holds the source's distinct
         partition values when every partition column is a key — only
@@ -892,7 +986,7 @@ class TableStore:
         """
         manifest = self._latest_manifest(name)
         if manifest is None:
-            self.save_overwrite(source if init is None else init, name, txn=txn)
+            self.save_overwrite(source if init is None else init, name, txn=txn, observe=observe)
             return None
         partitions = None
         if manifest.partition_by and set(manifest.partition_by) <= set(keys):
@@ -943,6 +1037,7 @@ class TableStore:
         name: str,
         keys: list[str],
         txn: tuple[str, object] | None = None,
+        observe: dict[str, Column] | None = None,
     ) -> None:
         """whenNotMatchedInsertAll() merge (02_bronze.ipynb:311-318).
 
@@ -963,9 +1058,12 @@ class TableStore:
         as in the reference.
 
         ``txn=(app_id, value)`` is committed with the merge, even one
-        that inserts nothing (see ``_rewrite``).
+        that inserts nothing (see ``_rewrite``). ``observe`` counts the
+        rows the merge inserts, after the anti-join, and adds them to
+        the table's observed totals; without it the merge clears them
+        unless it inserts nothing.
         """
-        prep = self._merge_prologue(source, name, keys, txn=txn)
+        prep = self._merge_prologue(source, name, keys, txn=txn, observe=observe)
         if prep is None:
             return
         manifest, partitions = prep
@@ -976,7 +1074,10 @@ class TableStore:
         src = source.select(*[f.name for f in schema.fields])
         new_rows = src.join(target.select(*keys), on=keys, how="left_anti")
         # append-only: every existing file carries forward
-        self._rewrite(name, manifest, new_rows, manifest.files, schema, txn=txn)
+        self._rewrite(
+            name, manifest, new_rows, manifest.files, schema, txn=txn,
+            observe=observe, totals=manifest.metrics if observe else None,
+        )
 
     def merge_scd1(
         self,
@@ -1219,8 +1320,11 @@ class TableStore:
         df = self.read(name)
         df = df.repartition(*manifest.partition_by) if manifest.partition_by else df.coalesce(1)
         # the repartition above is the distribution — don't re-shuffle
-        # in the write layer
-        self._rewrite(name, manifest, df, [], manifest.schema, distribute=False)
+        # in the write layer; the rows, and so their observed totals,
+        # are unchanged
+        self._rewrite(
+            name, manifest, df, [], manifest.schema, distribute=False, totals=manifest.metrics
+        )
 
     def vacuum(
         self,
@@ -1263,8 +1367,9 @@ class TableStore:
         """Delta ``RESTORE TABLE ... TO VERSION AS OF`` analogue: make
         the CURRENT state equal the state at ``version`` by committing
         a NEW version whose manifest (files, schema, partitioning, row
-        and null counts, txns) is the target's. No data is copied — the
-        old files are simply referenced again — and history is preserved: the restore
+        and null counts, txns, observed totals) is the target's. No data
+        is copied — the old files are simply referenced again — and
+        history is preserved: the restore
         is itself a commit, so time travel to the pre-restore state
         still works and the change feed sees the restore as adds of
         the re-referenced files. Returns the new version number.
@@ -1299,6 +1404,7 @@ class TableStore:
                 num_records=dict(target.num_records),
                 null_counts=dict(target.null_counts),
                 txns=dict(target.txns),
+                metrics=dict(target.metrics),
             ),
             prev=latest,
         )

@@ -1,6 +1,6 @@
 """Bronze plan: the driver-side CSV header against Spark's own header
 inference, the one-scan-per-header read against per-file reads, and the
-key audit against its group-by definition."""
+key audit read from the bronze commit against its group-by definition."""
 
 from __future__ import annotations
 
@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 
 from ironman_medallion_lakehouse_spark.config import FileSpec
 from ironman_medallion_lakehouse_spark.plans import bronze as bronze_plan
+from ironman_medallion_lakehouse_spark.sources.tablestore import TableStore
 
 ADVERSARIAL_HEADERS = {
     "duplicate": "rank,athlete_name,rank,bib\n",
@@ -78,27 +79,55 @@ NAMES = st.sampled_from([
 ])
 
 
-@settings(max_examples=8, deadline=None)
-@example(files=[("M", ["", "-", "John Smith", "john smith"]), ("F", ["!!", "..."])])
-@given(
-    files=st.lists(
-        st.tuples(st.sampled_from(["M", "F"]), st.lists(NAMES, max_size=8)),
-        min_size=1, max_size=3,
-    )
+def _write_landing(root: str, year: int, files) -> list[FileSpec]:
+    """One CSV per (gender, names) entry of ``files`` under year=<year>/."""
+    specs = []
+    os.makedirs(os.path.join(root, f"year={year}"), exist_ok=True)
+    for i, (gender, names) in enumerate(files):
+        spec = FileSpec(year, gender, f"f{i}.csv")
+        with open(spec.path(root), "w", encoding="utf-8", newline="") as fh:
+            w = csv.writer(fh)
+            w.writerow(["rank", "athlete_name", "bib"])
+            w.writerows([str(r % 3), n, str(r)] for r, n in enumerate(names))
+        specs.append(spec)
+    return specs
+
+
+def _logged_audit(store, version: int) -> int:
+    """The audit as the pipeline takes it: from the NULL-name count of
+    the files that ``version``'s commit added to bronze."""
+    nulls = store.added_null_count("bronze.t", ["athlete_name"], version)
+    return bronze_plan.duplicate_key_count(nulls["athlete_name"])
+
+
+FILES = st.lists(
+    st.tuples(st.sampled_from(["M", "F"]), st.lists(NAMES, max_size=8)),
+    min_size=1, max_size=3,
 )
-def test_duplicate_key_count_matches_group_by(spark, files):
+
+
+@settings(max_examples=8, deadline=None)
+@example(files=[("M", ["", "-", "John Smith", "john smith"]), ("F", ["!!", "..."])],
+         history=[("M", ["-", "John Smith"])])
+@given(files=FILES, history=FILES)
+def test_duplicate_key_count_matches_group_by(spark, files, history):
+    """The audit read from the log equals the group-by over the ingested
+    bronze: for a full load, and for an insert-only append of the same
+    names onto a table that already holds ``history`` (and, on a second
+    append, those very names): a NULL row_key never matches in the
+    anti-join, so every NULL-named row of the source is inserted."""
     with tempfile.TemporaryDirectory() as root:
-        specs = []
-        for i, (gender, names) in enumerate(files):
-            os.makedirs(os.path.join(root, "year=2024"), exist_ok=True)
-            spec = FileSpec(2024, gender, f"f{i}.csv")
-            with open(spec.path(root), "w", encoding="utf-8", newline="") as fh:
-                w = csv.writer(fh)
-                w.writerow(["rank", "athlete_name", "bib"])
-                w.writerows([str(r % 3), n, str(r)] for r, n in enumerate(names))
-            specs.append(spec)
-        bronze = bronze_plan.build_bronze(spark, root, specs)
-        assert bronze_plan.duplicate_key_count(bronze) == _group_by_oracle(bronze)
+        store = TableStore(spark, os.path.join(root, "wh"))
+        bronze = bronze_plan.build_bronze(spark, root, _write_landing(root, 2024, files))
+        want = _group_by_oracle(bronze)
+        store.save_overwrite(bronze, "bronze.t", partition_by=["year"])
+        assert _logged_audit(store, store.version("bronze.t")) == want
+
+        old = bronze_plan.build_bronze(spark, root, _write_landing(root, 2023, history))
+        store.save_overwrite(old, "bronze.t", partition_by=["year"])
+        for _ in range(2):
+            store.merge_insert_only(bronze, "bronze.t", ["row_key"], txn=("app", _))
+            assert _logged_audit(store, store.version("bronze.t")) == want
 
 
 def _per_file_oracle(spark, source_dir, files):

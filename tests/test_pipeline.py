@@ -3,10 +3,13 @@ full run, incremental idempotency, layer semantics, and the 15 views."""
 
 from __future__ import annotations
 
+import csv
 import os
 import shutil
 
 import pytest
+from hypothesis import example, given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from ironman_medallion_lakehouse_spark import config as C
@@ -255,17 +258,15 @@ def test_run_killed_after_kth_commit_resumes_at_next_table(
     assert _digests(spark, wh) == want
 
 
-def test_noop_rerun_runs_no_spark_job(spark, landing_dir, tmp_path_factory, monkeypatch,
-                                      snapshot_2023):
-    """With the silver quality scan stubbed out, rerunning an appended
-    year runs no Spark job at all — none in the layers, none between
-    them and none in the rest of the audit: row counts and unmatched
-    FKs come from the tables' logs."""
+def test_noop_rerun_runs_no_spark_job(spark, landing_dir, tmp_path_factory, snapshot_2023):
+    """Rerunning an appended year runs no Spark job at all — none in
+    the layers, none between them and none in the audit: row counts,
+    unmatched FKs, the duplicate-key audit and silver quality all come
+    from the tables' logs, and the views already exist."""
     snapshot, _ = snapshot_2023
     wh = str(tmp_path_factory.mktemp("wh_noop") / "wh")
     shutil.copytree(snapshot, wh)
     first = pipeline.run(spark, _incremental_2024(landing_dir, wh))
-    monkeypatch.setattr(pipeline, "_silver_quality", lambda silver: {})
     sc = spark.sparkContext
     group = "pipeline-noop-rerun"
     sc.setJobGroup(group, "no-op incremental rerun")
@@ -276,6 +277,8 @@ def test_noop_rerun_runs_no_spark_job(spark, landing_dir, tmp_path_factory, monk
     sc._jsc.sc().listenerBus().waitUntilEmpty()
     assert rerun.skipped == pipeline.ALL_TABLES
     assert rerun.unmatched_fks == first.unmatched_fks
+    assert rerun.silver_quality == first.silver_quality
+    assert rerun.duplicate_row_keys == first.duplicate_row_keys
     assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
 
 
@@ -325,6 +328,139 @@ def test_silver_quality_reconciles_finish_time(full_run):
     ).count()
     assert direct >= 1  # the planted discrepancy row
     assert result.silver_quality["finish_time_matches_segments"] == direct
+
+
+def _scanned_quality(spark, wh: str) -> dict[str, int]:
+    """Silver quality by the fused check() scan over the table."""
+    from ironman_medallion_lakehouse_spark.operators.quality import check
+
+    silver = TableStore(spark, wh).read(C.SILVER_TABLE)
+    return dict(check(silver, pipeline._silver_rules()).violations)
+
+
+LANDING_ROW = st.fixed_dictionaries({
+    "athlete_name": st.sampled_from(["-", "Sam Laidlow", "sam laidlow", "Lucy Charles", "!!"]),
+    "designation": st.sampled_from(["Finisher", "DNF", "DNS", "DQ", "-"]),
+    "rank": st.sampled_from(["-", "1", "2", "10"]),
+    # the segments below sum to 9:00:00
+    "finish_time": st.sampled_from(["-", "9:00:00", "9:00:59", "9:05:00"]),
+    "run_time": st.sampled_from(["-", "2:50:00"]),
+})
+LANDING_FILE = st.tuples(st.sampled_from(["M", "F", "X"]), st.lists(LANDING_ROW, min_size=1,
+                                                                    max_size=5))
+
+
+def _write_year(root: str, year: int, files) -> list[FileSpec]:
+    from tests.conftest import RAW_COLUMNS
+
+    specs = []
+    os.makedirs(os.path.join(root, f"year={year}"), exist_ok=True)
+    for i, (gender, rows) in enumerate(files):
+        spec = FileSpec(year, gender, f"{year}_{i}.csv")
+        with open(spec.path(root), "w", newline="") as fh:
+            w = csv.DictWriter(fh, fieldnames=RAW_COLUMNS)
+            w.writeheader()
+            for bib, row in enumerate(rows):
+                w.writerow({**dict.fromkeys(RAW_COLUMNS, "-"), "bib": str(bib),
+                            "division": "M35-39", "country": "US", "swim_time": "1:00:00",
+                            "transition_1": "0:05:00", "bike_time": "5:00:00",
+                            "transition_2": "0:05:00", **row})
+        specs.append(spec)
+    return specs
+
+
+@settings(max_examples=2, deadline=None)
+@example(
+    history=[("M", [{"athlete_name": "Sam Laidlow", "designation": "Finisher", "rank": "-",
+                     "finish_time": "9:05:00", "run_time": "2:50:00"}])],
+    year=[("X", [{"athlete_name": "-", "designation": "Finisher", "rank": "1",
+                  "finish_time": "9:00:00", "run_time": "-"}]),
+          ("F", [{"athlete_name": "Lucy Charles", "designation": "DNF", "rank": "-",
+                  "finish_time": "-", "run_time": "-"}])],
+    change="merge_scd1",
+)
+@given(history=st.lists(LANDING_FILE, min_size=1, max_size=2),
+       year=st.lists(LANDING_FILE, min_size=1, max_size=2),
+       change=st.sampled_from(["merge_scd1", "delete_where"]))
+def test_observed_silver_quality_equals_scan(spark, history, year, change):
+    """The silver quality the audit reads from silver's log equals the
+    check() scan after a full load, an append, a no-op rerun, a
+    re-ingest of a touched landing file, optimize and restore; after a
+    merge_scd1 or delete_where the log holds no totals and the audit
+    falls back to the scan."""
+    import tempfile
+
+    with tempfile.TemporaryDirectory() as root:
+        wh = os.path.join(root, "wh")
+        old = _write_year(root, 2023, history)
+        new = _write_year(root, 2024, year)
+        store = TableStore(spark, wh)
+
+        def observed() -> dict[str, int]:
+            assert store.observed_totals(C.SILVER_TABLE) == _scanned_quality(spark, wh)
+            return store.observed_totals(C.SILVER_TABLE)
+
+        incr = PipelineConfig(source_dir=root, warehouse_dir=wh, run_mode="incremental",
+                              process_year=2024, files=old + new)
+        loaded = pipeline.run(spark, PipelineConfig(
+            source_dir=root, warehouse_dir=wh, run_mode="full", files=old))
+        assert loaded.silver_quality == observed()
+        full_version = store.version(C.SILVER_TABLE)
+        assert pipeline.run(spark, incr).silver_quality == observed()
+        rerun = pipeline.run(spark, incr)
+        assert rerun.skipped == pipeline.ALL_TABLES
+        assert rerun.silver_quality == observed()
+        path = new[0].path(root)
+        stat = os.stat(path)
+        os.utime(path, ns=(stat.st_atime_ns, stat.st_mtime_ns + 10**9))
+        assert pipeline.run(spark, incr).silver_quality == observed()
+        store.optimize(C.SILVER_TABLE, min_files=1)
+        observed()
+        store.restore(C.SILVER_TABLE, full_version)
+        observed()
+        # the restored txn is not this run's: silver merges the year again
+        assert pipeline.run(spark, incr).silver_quality == observed()
+
+        silver = store.read(C.SILVER_TABLE)
+        if change == "merge_scd1":
+            flipped = silver.filter(F.col("row_key").isNotNull()).withColumn(
+                "has_data_issue", ~F.col("has_data_issue"))
+            store.merge_scd1(flipped, C.SILVER_TABLE, keys=C.MERGE_KEYS)
+        else:
+            store.delete_where(C.SILVER_TABLE, "row_key IS NULL OR year = 2024")
+        assert store.observed_totals(C.SILVER_TABLE) == {}
+        fallback = pipeline.run(spark, incr)  # silver keeps its txn: skipped
+        assert C.SILVER_TABLE in fallback.skipped
+        assert fallback.silver_quality == _scanned_quality(spark, wh)
+
+
+def test_views_are_created_once_per_session(spark, landing_dir, tmp_path_factory, monkeypatch):
+    """A pipeline run in a session that already holds the views issues
+    no CREATE VIEW, and the views follow the re-registered tables; a
+    view whose text was replaced by other SQL is created again."""
+    wh = str(tmp_path_factory.mktemp("wh_views"))
+    pipeline.run(spark, PipelineConfig(
+        source_dir=landing_dir, warehouse_dir=wh, run_mode="full",
+        files=[s for s in SPECS if s.year == 2023],
+    ))
+    issued = []
+    sql = spark.sql
+    monkeypatch.setattr(spark, "sql", lambda q, *a, **k: (issued.append(q), sql(q, *a, **k))[1])
+
+    def creates() -> list[str]:
+        return [q.split(" AS ")[0] for q in issued if q.lstrip().upper().startswith("CREATE")]
+
+    pipeline.run(spark, _incremental_2024(landing_dir, wh))
+    assert creates() == []
+    kpi = sql("SELECT * FROM vw_kpi_metrics").collect()[0]
+    assert kpi.latest_year == 2024 and kpi.total_athletes == 20
+
+    sql("CREATE OR REPLACE TEMPORARY VIEW vw_kpi_metrics AS SELECT 1 AS total_athletes")
+    issued.clear()
+    pipeline.run(spark, _incremental_2024(landing_dir, wh))
+    assert creates() == ["CREATE OR REPLACE TEMPORARY VIEW vw_kpi_metrics"]
+    kpi = sql("SELECT * FROM vw_kpi_metrics").collect()[0]
+    assert kpi.latest_year == 2024 and kpi.total_athletes == 20
 
 
 def test_config_validation(landing_dir):

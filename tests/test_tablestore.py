@@ -580,7 +580,8 @@ def test_null_counts_survive_checkpoint_optimize_and_restore(spark, tmp_path, mo
 def test_null_count_without_recorded_counts_reads_footers(spark, tmp_path):
     """A log whose entries carry no null counts (an older log) is
     answered from the files' footers; a footer without null counts
-    gives None, the caller's cue to scan."""
+    gives None, the caller's cue to scan, and added_null_count scans
+    that commit's added files itself."""
     import json
 
     import pyarrow.parquet as pq
@@ -605,6 +606,9 @@ def test_null_count_without_recorded_counts_reads_footers(spark, tmp_path):
     pq.write_table(pq.read_table(path), path, write_statistics=False)
     assert st.null_count("db.t", ["v"]) is None
     assert st.null_count("db.t", ["y"]) == {"y": 1}  # a partition column needs no stats
+    # per commit: version 1 added the stripped file, so its count is scanned
+    assert st.added_null_count("db.t", ["v"], 1) == {"v": 1}
+    assert st.added_null_count("db.t", ["v"], 2) == {"v": 1}
 
 
 def test_scd1_preserves_genuine_null_payload(spark, tmp_path):
@@ -1197,3 +1201,83 @@ def test_restore_returns_the_versions_txns(spark, tmp_path):
     st.restore("db.t", 1)  # the work recorded after v1 is undone with its txn
     assert st.last_txn("db.t", "app") is None
     assert _log_entry(st, "db.t", st.version("db.t"))["txn"] == {}
+
+
+def _rules():
+    return {
+        "negative_v": F.count(F.when(F.col("v") < 0, 1)),
+        "null_v": F.count(F.when(F.col("v").isNull(), 1)),
+    }
+
+
+def _scanned(st, name) -> dict[str, int]:
+    df = st.read(name)
+    return dict(zip(_rules(), df.agg(*_rules().values()).collect()[0]))
+
+
+def test_merge_of_existing_keys_observes_zero_rows(spark, tmp_path):
+    """An insert-only merge whose every source key already exists
+    inserts nothing: its observed counts are zeros, taken without
+    asking the Observation of a write that committed no row, and the
+    totals stay those of the table."""
+    st = _store(spark, tmp_path)
+    base = spark.createDataFrame(
+        [Row(k="a", y=1, v=-1), Row(k="b", y=1, v=None), Row(k="c", y=2, v=3)]
+    )
+    st.save_overwrite(base, "db.t", partition_by=["y"], observe=_rules())
+    want = {"negative_v": 1, "null_v": 1}
+    assert st.observed_totals("db.t") == want
+    again = spark.createDataFrame([Row(k="a", y=1, v=-5), Row(k="c", y=2, v=None)])
+    st.merge_insert_only(again, "db.t", keys=["k", "y"], txn=("app", 1), observe=_rules())
+    assert st.version("db.t") == 2  # the txn alone was committed
+    assert st.observed_totals("db.t") == want == _scanned(st, "db.t")
+
+
+def test_observed_totals_follow_each_verb(spark, tmp_path, monkeypatch):
+    """An overwrite sets the observed totals, an insert-only merge adds
+    the counts of the rows it inserts, optimize carries them, restore
+    copies the restored version's, and they survive log replay through
+    checkpoints; a merge without the same rules, an SCD-1 merge and a
+    delete clear them."""
+    from ironman_medallion_lakehouse_spark.sources import tablestore
+
+    monkeypatch.setattr(tablestore, "CHECKPOINT_EVERY", 2)
+    st = _store(spark, tmp_path)
+    base = spark.createDataFrame(
+        [Row(k="a", y=1, v=-1), Row(k="b", y=1, v=None), Row(k="c", y=2, v=3)]
+    )
+    st.save_overwrite(base, "db.t", partition_by=["y"], observe=_rules())  # v1
+    first = st.observed_totals("db.t")
+    assert first == _scanned(st, "db.t") == {"negative_v": 1, "null_v": 1}
+    # "a" exists: its negative v is not inserted, so not counted
+    more = spark.createDataFrame(
+        [Row(k="a", y=1, v=-9), Row(k="d", y=1, v=-2), Row(k="e", y=2, v=None)]
+    )
+    st.merge_insert_only(more, "db.t", keys=["k"], observe=_rules())  # v2 + checkpoint
+    assert st.observed_totals("db.t") == _scanned(st, "db.t") == {"negative_v": 2, "null_v": 2}
+    st.optimize("db.t")  # v3: two files in y=1 and y=2
+    assert st.version("db.t") == 3
+    assert st.observed_totals("db.t") == _scanned(st, "db.t") == {"negative_v": 2, "null_v": 2}
+    # a fresh store replays the log, checkpoints included
+    replayed = TableStore(spark, st.root)
+    assert [replayed._manifest_at("db.t", v).metrics for v in (1, 2, 3)] == [
+        first, {"negative_v": 2, "null_v": 2}, {"negative_v": 2, "null_v": 2}]
+    assert st.restore("db.t", 1) == 4
+    assert st.observed_totals("db.t") == first == _scanned(st, "db.t")
+
+    st.merge_insert_only(spark.createDataFrame([Row(k="f", y=2, v=-3)]), "db.t", keys=["k"])
+    assert st.observed_totals("db.t") == {}
+    other = {"negative_v": _rules()["negative_v"]}
+    st.save_overwrite(base, "db.t", partition_by=["y"], observe=_rules())
+    st.merge_insert_only(
+        spark.createDataFrame([Row(k="g", y=2, v=1)]), "db.t", keys=["k"], observe=other
+    )
+    assert st.observed_totals("db.t") == {}
+    for change in (
+        lambda: st.merge_scd1(spark.createDataFrame([Row(k="a", y=1, v=7)]), "db.t", keys=["k"]),
+        lambda: st.delete_where("db.t", "k = 'b'"),
+    ):
+        st.save_overwrite(base, "db.t", partition_by=["y"], observe=_rules())
+        assert st.observed_totals("db.t") == first
+        change()
+        assert st.observed_totals("db.t") == {}
