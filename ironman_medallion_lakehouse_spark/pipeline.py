@@ -5,32 +5,47 @@ Replaces the reference's Airflow → Databricks multi-task job
 same DAG: config → bronze → silver → {dim_athletes, dim_countries,
 dim_divisions} → fact → views.
 
-Write semantics per run_mode (Readme.md:149-172):
+Steps. ``run`` declares the six tables as an ordered list of steps
+``(table, consumed, build)`` in ``ALL_TABLES`` order, which is the
+DAG's topological order, and runs them serially through one loop.
+``consumed()`` is evaluated just before its step, since the upstream
+versions it names move during the run; ``build()`` looks its plan
+function up when it runs. The loop skips a step whose table already
+records that input, and otherwise builds the table and writes it
+through the one write routine, whose policy follows from the table
+and the run_mode (Readme.md:149-172):
+
 - full: overwrite every table (reference S6);
 - incremental: bronze/silver/fact insert-only merge on row_key
   (S7) — re-running the same year is a no-op (idempotent); dims SCD-1
-  upsert on their natural keys (S8) so attributes refresh in place.
+  upsert on their natural keys (``DIM_MERGES``, S8) so attributes
+  refresh in place. A table that does not exist yet is overwritten.
+- bronze/silver/fact are partitioned by ``year`` and compacted after
+  the write (S10); the dims are unpartitioned and never compacted.
+  Silver's write also counts the quality rules (``observe=``).
 
 Watermarks. Each table's commit also records, as a TableStore txn
-(Delta's SetTransaction) under ``TXN_APP_ID``, the input its layer
+(Delta's SetTransaction) under ``TXN_APP_ID``, the input its step
 consumed: bronze the process year and the (path, size, mtime) of every
 ingested file, silver the bronze version it read, each dim the silver
 version, the fact the silver and the three dim versions. A txn holds
 the input and nothing else: the bronze txn no longer stores
 ``duplicate_row_keys``, which is read from the commit that set it. An
-incremental run skips a layer whose table already records its current
-input — no plan, write or optimize runs — and a run killed after any
-table's commit resumes at the next table. A full run never skips but
-records every txn. Deviation from the reference: a skipped table is
-not re-merged even if it was edited by hand since its txn was
-recorded (Delta txn semantics; the reference would re-merge).
+incremental run skips a step whose table already records its current
+input — no plan, write or optimize runs, and the table is listed in
+``RunResult.skipped`` — and a run killed after any table's commit
+resumes at the next table. A full run never skips but records every
+txn. Deviation from the reference: a skipped table is not re-merged
+even if it was edited by hand since its txn was recorded (Delta txn
+semantics; the reference would re-merge).
 
-The audit reads what the commits logged and runs no Spark job:
+The audit is one block after the views are created. It reads what the
+commits logged and runs no Spark job:
 
-- row counts and unmatched FKs are sums of the per-file footer counts
-  each table's log records;
 - ``duplicate_row_keys`` comes from the NULL ``athlete_name`` count of
   the files added by the bronze commit that set the current txn;
+- row counts and unmatched FKs are sums of the per-file footer counts
+  each table's log records;
 - the silver quality rules (``_silver_rules``) are counted while silver
   is written, as an ``Observation`` (TableStore's ``observe=``), and
   silver's log keeps their running totals; only when it holds none
@@ -113,7 +128,6 @@ class RunResult:
     fact_rows: int = 0
     duplicate_row_keys: int = 0
     unmatched_fks: dict[str, int] = field(default_factory=dict)
-    views_created: list[str] = field(default_factory=list)
     silver_quality: dict[str, int] = field(default_factory=dict)
     # tables an incremental run left alone: their recorded input
     # equalled this run's
@@ -125,75 +139,24 @@ def run(spark: SparkSession, cfg: C.PipelineConfig) -> RunResult:
     store = TableStore(spark, cfg.warehouse_dir)
     incremental = cfg.run_mode == "incremental"
     year = cfg.process_year
-    # Full loads compact whenever a partition has >1 file; incremental
-    # runs let small files accumulate to 8 per partition first, so a
-    # per-year append is O(new data) per run and the O(table) rewrite
-    # amortizes 1:8 (optimize() is a no-op below the threshold).
-    optimize_min_files = 2 if not incremental else 8
+    silver_rules = _silver_rules()
     result = RunResult()
 
-    def written(table: str, consumed) -> bool:
-        """Whether an incremental run finds ``table`` already written
-        from ``consumed``: the layer is then skipped and listed in
-        ``result.skipped``."""
-        if not incremental:
-            return False
-        # inputs are built of lists, ints and strings, so they equal
-        # their JSON round trip as the log returns it
-        value = store.last_txn(table, TXN_APP_ID)
-        if value is None or value["input"] != consumed:
-            return False
-        result.skipped.append(table)
-        return True
+    def merges(table: str) -> bool:
+        """Whether this run merges into ``table`` rather than
+        overwriting it."""
+        return incremental and store.table_exists(table)
 
-    def txn(consumed) -> tuple[str, dict]:
-        return TXN_APP_ID, {"input": consumed}
-
-    # ---- bronze (02_bronze): ingest selected files, merge or overwrite
-    bronze_in = [year, _fingerprints(cfg)]
-    if not written(C.BRONZE_TABLE, bronze_in):
-        bronze_df = bronze_plan.build_bronze(spark, cfg.source_dir, cfg.files_to_process)
-        if incremental and store.table_exists(C.BRONZE_TABLE):
-            store.merge_insert_only(
-                bronze_df, C.BRONZE_TABLE, C.MERGE_KEYS, txn=txn(bronze_in)
-            )
-        else:
-            store.save_overwrite(
-                bronze_df, C.BRONZE_TABLE, partition_by=["year"], txn=txn(bronze_in)
-            )
-        store.optimize(C.BRONZE_TABLE, min_files=optimize_min_files)  # S10 (02:354)
-    # the ingest is the commit that set bronze's txn: this run's, or,
-    # for a skipped bronze, the run's that consumed the same input
-    ingest = store.txn_version(C.BRONZE_TABLE, TXN_APP_ID)
-    null_names = store.added_null_count(C.BRONZE_TABLE, ["athlete_name"], ingest)
-    result.duplicate_row_keys = bronze_plan.duplicate_key_count(null_names["athlete_name"])
-
-    # ---- silver (03_silver): full layer recompute over the scoped slice.
-    # An incremental run that finds no silver table rebuilds it from
-    # every bronze year, not just the processed one.
-    merge = incremental and store.table_exists(C.SILVER_TABLE)
-    silver_in = [merge, year, store.version(C.BRONZE_TABLE)]
-    silver_rules = _silver_rules()
-    if not written(C.SILVER_TABLE, silver_in):
-        bronze_all = store.read(C.BRONZE_TABLE)
-        silver_df = silver_plan.build_silver(
-            bronze_all.filter(F.col("year") == year) if merge else bronze_all
+    def build_silver():
+        # 03_silver: full layer recompute over the scoped slice. An
+        # incremental run that finds no silver table rebuilds it from
+        # every bronze year, not just the processed one.
+        bronze = store.read(C.BRONZE_TABLE)
+        return silver_plan.build_silver(
+            bronze.filter(F.col("year") == year) if merges(C.SILVER_TABLE) else bronze
         )  # P4 year filter → partition pruning
-        # the quality rules ride the write: the merge counts the rows it
-        # inserts, the overwrite every row
-        quality = violation_counts(silver_rules)
-        if merge:
-            store.merge_insert_only(
-                silver_df, C.SILVER_TABLE, C.MERGE_KEYS, txn=txn(silver_in), observe=quality
-            )
-        else:
-            store.save_overwrite(
-                silver_df, C.SILVER_TABLE, partition_by=["year"], txn=txn(silver_in),
-                observe=quality,
-            )
-        store.optimize(C.SILVER_TABLE, min_files=optimize_min_files)
 
-    # ---- gold dims (04a/04b/04c): the reference builds dims from the
+    # gold (04a-04d): the reference builds dims and fact from the
     # YEAR-SCOPED silver slice (filter(year == process_year) in every
     # gold notebook — SURVEY §2.2 P4) and SCD-1-merges into the dim, so
     # an incremental run costs O(year), not O(history). Reproduced
@@ -204,57 +167,80 @@ def run(spark: SparkSession, cfg: C.PipelineConfig) -> RunResult:
         silver = store.read(C.SILVER_TABLE)
         return silver.filter(F.col("year") == year) if incremental else silver
 
-    build_dim = {
-        C.DIM_ATHLETES: lambda: gold_dims.build_dim_athletes(silver_scope()),
-        C.DIM_COUNTRIES: lambda: gold_dims.build_dim_countries(spark, silver_scope()),
-        C.DIM_DIVISIONS: lambda: gold_dims.build_dim_divisions(silver_scope()),
-    }
-    dims_in = [year, store.version(C.SILVER_TABLE)]
-    for dim in DIMS:
-        if written(dim, dims_in):
+    def dims_in() -> list:
+        return [year, store.version(C.SILVER_TABLE)]
+
+    # (table, the input it consumes, its plan), in ALL_TABLES order,
+    # which is the DAG's topological order. Each plan function is looked
+    # up when the step runs, not bound here. The fact reads the *merged*
+    # dims through read_hinted, which sizes each from its manifest's
+    # file sizes (no Spark job), so the join strategy follows the dims'
+    # real size: a dim that outgrows the broadcast threshold falls back
+    # to a shuffle join instead of being force-broadcast.
+    steps = [
+        (C.BRONZE_TABLE, lambda: [year, _fingerprints(cfg)],
+         lambda: bronze_plan.build_bronze(spark, cfg.source_dir, cfg.files_to_process)),
+        (C.SILVER_TABLE, lambda: [merges(C.SILVER_TABLE), year, store.version(C.BRONZE_TABLE)],
+         build_silver),
+        (C.DIM_ATHLETES, dims_in, lambda: gold_dims.build_dim_athletes(silver_scope())),
+        (C.DIM_COUNTRIES, dims_in, lambda: gold_dims.build_dim_countries(spark, silver_scope())),
+        (C.DIM_DIVISIONS, dims_in, lambda: gold_dims.build_dim_divisions(silver_scope())),
+        (C.FACT_RESULTS, lambda: dims_in() + [store.version(dim) for dim in DIMS],
+         lambda: gold_fact.build_fact(
+             silver_scope(),
+             store.read_hinted(C.DIM_ATHLETES),
+             store.read_hinted(C.DIM_DIVISIONS),
+             store.read_hinted(C.DIM_COUNTRIES),
+             explicit_broadcast=False,
+         )),
+    ]
+    for table, consumed, build in steps:
+        # evaluated now: upstream versions move during the run
+        value = consumed()
+        # inputs are built of lists, ints and strings, so they equal
+        # their JSON round trip as the log returns it
+        if incremental and (store.last_txn(table, TXN_APP_ID) or {}).get("input") == value:
+            result.skipped.append(table)
             continue
-        if incremental and store.table_exists(dim):
-            keys, update_cols = DIM_MERGES[dim]
-            store.merge_scd1(
-                build_dim[dim](), dim, keys=keys, update_cols=update_cols, txn=txn(dims_in)
-            )
-        else:
-            store.save_overwrite(build_dim[dim](), dim, txn=txn(dims_in))
-
-    # ---- fact (04d): scoped silver joined to the *merged* dims.
-    # The dims are read back through read_hinted, which sizes each
-    # from its manifest's file sizes (no Spark job), so the fact
-    # build's join strategy follows the dims' real size — a dim that
-    # outgrows the broadcast threshold falls back to a shuffle join
-    # instead of being force-broadcast (VERDICT r4 item 4).
-    fact_in = dims_in + [store.version(dim) for dim in DIMS]
-    if not written(C.FACT_RESULTS, fact_in):
-        fact = gold_fact.build_fact(
-            silver_scope(),
-            store.read_hinted(C.DIM_ATHLETES),
-            store.read_hinted(C.DIM_DIVISIONS),
-            store.read_hinted(C.DIM_COUNTRIES),
-            explicit_broadcast=False,
-        )
-        if incremental and store.table_exists(C.FACT_RESULTS):
-            store.merge_insert_only(fact, C.FACT_RESULTS, C.MERGE_KEYS, txn=txn(fact_in))
-        else:
+        df = build()
+        txn = (TXN_APP_ID, {"input": value})
+        # the quality rules ride silver's write: the merge counts the
+        # rows it inserts, the overwrite every row
+        observe = violation_counts(silver_rules) if table == C.SILVER_TABLE else None
+        dim = table in DIM_MERGES
+        if not merges(table):
             store.save_overwrite(
-                fact, C.FACT_RESULTS, partition_by=["year"], txn=txn(fact_in)
+                df, table, partition_by=None if dim else ["year"], txn=txn, observe=observe
             )
-        store.optimize(C.FACT_RESULTS, min_files=optimize_min_files)
+        elif dim:
+            keys, update_cols = DIM_MERGES[table]
+            store.merge_scd1(df, table, keys=keys, update_cols=update_cols, txn=txn)
+        else:
+            store.merge_insert_only(df, table, C.MERGE_KEYS, txn=txn, observe=observe)
+        if not dim:
+            # S10 (02:354). Full loads compact whenever a partition has
+            # >1 file; incremental runs let small files accumulate to 8
+            # per partition first, so a per-year append is O(new data)
+            # and the O(table) rewrite amortizes 1:8 (optimize() is a
+            # no-op below the threshold).
+            store.optimize(table, min_files=8 if incremental else 2)
 
-    # ---- serving layer (05): register tables + the 13 views
+    # ---- serving layer (05): register tables + the 15 views
     tables = store.register_views(*ALL_TABLES)
-    result.views_created = views.create_views(spark)
+    views.create_views(spark)
 
-    # The audit, from the tables' logs: no Spark job. Row counts and
+    # The audit, from the tables' logs: no Spark job. The ingest is the
+    # commit that set bronze's txn: this run's, or, for a skipped
+    # bronze, the run's that consumed the same input. Row counts and
     # unmatched FKs (a NULL key is an FK the dim join did not resolve)
     # are sums of the per-file footer counts recorded at commit;
     # fk_audit scans the fact only when a footer records no null
     # count. Silver quality is the running totals of the counts its
     # writes observed; check() scans silver only when the log holds
     # no totals for these rules.
+    ingest = store.txn_version(C.BRONZE_TABLE, TXN_APP_ID)
+    null_names = store.added_null_count(C.BRONZE_TABLE, ["athlete_name"], ingest)
+    result.duplicate_row_keys = bronze_plan.duplicate_key_count(null_names["athlete_name"])
     result.bronze_rows = store.row_count(C.BRONZE_TABLE)
     result.silver_rows = store.row_count(C.SILVER_TABLE)
     result.fact_rows = store.row_count(C.FACT_RESULTS)
@@ -359,7 +345,7 @@ def main(argv: list[str] | None = None) -> int:
                 "duplicate_row_keys": result.duplicate_row_keys,
                 "unmatched_fks": result.unmatched_fks,
                 "silver_quality": result.silver_quality,
-                "views": result.views_created,
+                "views": list(views.VIEW_SQL),
                 "skipped": result.skipped,
             }
         )

@@ -270,7 +270,7 @@ def view_sql(
 VIEW_SQL: dict[str, str] = view_sql()
 
 
-def create_views(spark: SparkSession) -> list[str]:
+def create_views(spark: SparkSession) -> None:
     """Register all dashboard views as temporary views. Requires the
     gold tables to be registered first (TableStore.register_views).
 
@@ -286,4 +286,3 @@ def create_views(spark: SparkSession) -> list[str]:
         text = view.get().desc().viewText() if view.isDefined() else None
         if text is None or not text.isDefined() or text.get() != sql.strip():
             spark.sql(f"CREATE OR REPLACE TEMPORARY VIEW {name} AS {sql}")
-    return list(VIEW_SQL)

@@ -823,19 +823,8 @@ class TableStore:
         broadcasting) reads exactly as ``read``."""
         manifest = self._require(name, version)
         df = self._read_file_subset(name, manifest, manifest.files)
-        raw = str(
-            self.spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760")
-        ).strip().lower()
-        mult = 1
-        for suf, m in (("kb", 1 << 10), ("mb", 1 << 20), ("gb", 1 << 30),
-                       ("k", 1 << 10), ("m", 1 << 20), ("g", 1 << 30), ("b", 1)):
-            if raw.endswith(suf):
-                raw, mult = raw[: -len(suf)], m
-                break
-        try:
-            threshold = int(raw) * mult
-        except ValueError:
-            return df
+        # the typed value: Spark parses the size suffixes itself
+        threshold = self.spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
         if threshold > 0 and self._size_bytes(name, manifest) <= threshold:
             return df.hint("broadcast")
         return df

@@ -2341,8 +2341,8 @@ def q152_stateful_running_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Jaccard/components, q93 hash sampling, q95 sliding windows, q84
 # cumulative packing) into ONE SQL pipeline over the same corpus, so
 # agreement proves the COMPOSITION — which rows each stage hands the
-# next — not just each stage alone. The DSIR arm is exercised
-# standalone by q107/q111 and stays off here (dsir_target=None).
+# next — not just each stage alone. The DSIR operators are exercised
+# standalone by q107/q111.
 _Q153_RATES = {"en": 0.5, "de": 1.0, "es": 0.5, "zh": 0.25, "fr": 0.75}
 _Q153_CASE = " ".join(
     f"WHEN '{lang}' THEN {int(rate * 1_000_000)}"

@@ -2,12 +2,11 @@
 into the pipeline a 100 TB corpus actually runs:
 
     quality gate → near-dup grouping (survivors) → mixture control
-    (explicit per-stratum rates, and/or the LEARNED arm: DSIR
-    importance weights → weighted sample without replacement) →
-    sliding-window chunking → sequence packing → TableStore
+    (explicit per-stratum rates) → sliding-window chunking →
+    sequence packing
 
 Each stage is the SAME operator the suite oracles individually (q89,
-q83, q93/q107/q111, q95, q84), so correctness of the composition reduces to
+q83, q93, q95, q84), so correctness of the composition reduces to
 correctness of the stages plus this module's glue — which the e2e test
 covers. Stage costs at scale (see SCALING.md): the gate is a map-only
 pass at scan speed, dedup is the contracted LSH pipeline, sampling is
@@ -58,19 +57,14 @@ def curate(
     dedup_bands: int = 16,
     sample_rates: dict[str, float] | None = None,
     strata_col: str = "lang",
-    dsir_target=None,
-    dsir_sample_n: int | None = None,
     chunk_size: int = 128,
     chunk_overlap: int = 32,
     pack_budget: int = 2048,
-    store=None,
-    table: str = "gold.training_chunks",
     counts: bool = True,
 ) -> CurationResult:
     """Run the full curation pipeline over a documents frame
     (doc_id, text, lang, ...). Returns per-stage counts and the packed
-    chunk table; writes it to ``store``/``table`` (full overwrite)
-    when a TableStore is given.
+    chunk table.
 
     ``counts=False`` (r15) skips the six per-stage count/collect
     actions (they become None in the result): the ``chunks`` frame is
@@ -99,39 +93,14 @@ def curate(
     survivors = survivors.localCheckpoint(eager=True)
     n_survivors = survivors.count() if counts else None
 
-    # 3. mixture control — two deterministic arms, composable:
-    #    (a) explicit per-stratum rates (the GIVEN mixture, q93);
-    #    (b) DSIR domain tilt (the LEARNED mixture, q107+q111):
-    #        importance weights against `dsir_target` (a boolean Column
-    #        over the docs), then a weighted sample without
-    #        replacement of `dsir_sample_n` docs — selection ∝ e^w via
-    #        A-ES priorities, reproducible across runs/partitionings
+    # 3. mixture control — explicit per-stratum rates (the GIVEN
+    #    mixture, q93), deterministic
     if sample_rates is not None:
         sampled = stratified_sample(
             survivors, strata_col, sample_rates, "doc_id"
         ).localCheckpoint(eager=True)
     else:
         sampled = survivors
-    if dsir_target is not None and dsir_sample_n is not None:
-        from ironman_medallion_lakehouse_spark.operators.sampling import (
-            dsir_logweights,
-            weighted_sample_topk_log,
-        )
-
-        lw = dsir_logweights(sampled, dsir_target)
-        # selection ∝ e^log_weight, drawn in the LOG domain (Gumbel-max
-        # A-ES): log_weight scales with document length and exp() of it
-        # overflows/underflows past ±709, collapsing or silently
-        # dropping long docs (ADVICE r5) — the log-domain draw is
-        # order-identical with no exp ever materialized
-        chosen = weighted_sample_topk_log(
-            sampled.join(lw.select("doc_id", "log_weight"), "doc_id"),
-            F.col("log_weight"),
-            dsir_sample_n,
-            "doc_id",
-            salt="dsir",
-        ).drop("log_weight", "priority")
-        sampled = chosen.localCheckpoint(eager=True)
     n_sampled = sampled.count() if counts else None
 
     # 4. sliding-window chunking (map-only)
@@ -161,8 +130,6 @@ def curate(
     else:
         n_chunks = n_packs = None
 
-    if store is not None:
-        store.save_overwrite(out, table)
     return CurationResult(
         n_input=n_input,
         n_quality_kept=n_quality,

@@ -219,6 +219,9 @@ def test_read_hinted_respects_threshold(spark, tmp_path):
         # threshold above the table's bytes → hint
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10m")
         assert _hinted(store.read_hinted("db.big"))
+        # any size string Spark accepts, read as Spark reads it
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "1t")
+        assert _hinted(store.read_hinted("db.big"))
         # threshold below the table's bytes → no hint
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "1024")
         assert not _hinted(store.read_hinted("db.big"))

@@ -282,6 +282,44 @@ def test_noop_rerun_runs_no_spark_job(spark, landing_dir, tmp_path_factory, snap
     assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
 
 
+def test_plans_run_at_call_time_in_dag_order(spark, landing_dir, tmp_path_factory, monkeypatch):
+    """Each step looks its plan function up when it runs, so a wrapper
+    swapped in after import (as perfbench's tracer does) sees every
+    call: a full load and an append call the six plans in the DAG's
+    order, then create_views; a no-op rerun calls create_views only."""
+    from ironman_medallion_lakehouse_spark.plans import bronze, gold_dims, silver, views
+
+    calls = []
+
+    def recording(name, fn):
+        def wrapper(*args, **kwargs):
+            calls.append(name)
+            return fn(*args, **kwargs)
+
+        return wrapper
+
+    dag = [(bronze, "build_bronze"), (silver, "build_silver"),
+           (gold_dims, "build_dim_athletes"), (gold_dims, "build_dim_countries"),
+           (gold_dims, "build_dim_divisions"), (gold_fact, "build_fact"),
+           (views, "create_views")]
+    for module, name in dag:
+        monkeypatch.setattr(module, name, recording(name, getattr(module, name)))
+    order = [name for _module, name in dag]
+
+    wh = str(tmp_path_factory.mktemp("wh_order") / "wh")
+    pipeline.run(spark, PipelineConfig(
+        source_dir=landing_dir, warehouse_dir=wh, run_mode="full",
+        files=[s for s in SPECS if s.year == 2023],
+    ))
+    assert calls == order
+    calls.clear()
+    pipeline.run(spark, _incremental_2024(landing_dir, wh))
+    assert calls == order
+    calls.clear()
+    assert pipeline.run(spark, _incremental_2024(landing_dir, wh)).skipped == pipeline.ALL_TABLES
+    assert calls == ["create_views"]
+
+
 def test_incremental_rebuilds_missing_silver_from_all_years(
     spark, landing_dir, tmp_path_factory
 ):

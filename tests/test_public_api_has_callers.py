@@ -261,12 +261,35 @@ def _is_static(fn: ast.FunctionDef) -> bool:
     return any(isinstance(d, ast.Name) and d.id == "staticmethod" for d in fn.decorator_list)
 
 
+def _module_dict_keys(tree: ast.Module) -> dict[str, list[str]]:
+    """Module-level ``NAME = dict(k=...)`` or ``NAME = {"k": ...}``
+    assignments: NAME -> the keys it holds. A dict built any other way
+    (a splat or a non-constant key inside it) is left out."""
+    out = {}
+    for node in tree.body:
+        if not (isinstance(node, ast.Assign) and len(node.targets) == 1
+                and isinstance(node.targets[0], ast.Name)):
+            continue
+        v = node.value
+        if (isinstance(v, ast.Call) and isinstance(v.func, ast.Name) and v.func.id == "dict"
+                and not v.args and all(kw.arg for kw in v.keywords)):
+            out[node.targets[0].id] = [kw.arg for kw in v.keywords]
+        elif isinstance(v, ast.Dict) and all(
+            isinstance(k, ast.Constant) and isinstance(k.value, str) for k in v.keys
+        ):
+            out[node.targets[0].id] = [k.value for k in v.keys]
+    return out
+
+
 def passed_arguments(tree: ast.Module) -> set[tuple[str, str | int]]:
     """(called name, keyword or positional index) for every argument a
-    call in ``tree`` passes; a ``*args`` or ``**kwargs`` splat sets every
-    position or keyword ("*" / "**"). A call inside a function of the
-    same name (recursion) sets nothing."""
+    call in ``tree`` passes. A ``**NAME`` splat of a module-level dict
+    literal (see ``_module_dict_keys``) passes that dict's keys; any
+    other ``*args`` or ``**kwargs`` splat sets every position or
+    keyword ("*" / "**"). A call inside a function of the same name
+    (recursion) sets nothing."""
     out: set[tuple[str, str | int]] = set()
+    dicts = _module_dict_keys(tree)
 
     def walk(node: ast.AST, own: str | None) -> None:
         for child in ast.iter_child_nodes(node):
@@ -278,7 +301,12 @@ def passed_arguments(tree: ast.Module) -> set[tuple[str, str | int]]:
                     for i, arg in enumerate(child.args):
                         out.add((name, "*" if isinstance(arg, ast.Starred) else i))
                     for kw in child.keywords:
-                        out.add((name, kw.arg or "**"))
+                        if kw.arg is not None:
+                            out.add((name, kw.arg))
+                        elif isinstance(kw.value, ast.Name) and kw.value.id in dicts:
+                            out.update((name, k) for k in dicts[kw.value.id])
+                        else:
+                            out.add((name, "**"))
             walk(child, inner)
 
     walk(tree, None)
@@ -355,6 +383,15 @@ def g(x, n=3):
     calls = ast.parse("f(1, mode='b')\nobj.g(1, 2)\nh(*a, **k)")
     assert passed_arguments(calls) == {
         ("f", 0), ("f", "mode"), ("g", 0), ("g", 1), ("h", "*"), ("h", "**")
+    }
+    # a splat of a module-level dict literal passes exactly its keys
+    splats = ast.parse(
+        "A = dict(mode='b', kw=1)\nB = {'flag': True}\nC = dict(A, limit=2)\n"
+        "def run():\n    f(**A)\n    f(**B)\n    g(**C)\n    h(**local)"
+    )
+    assert passed_arguments(splats) == {
+        ("f", "mode"), ("f", "kw"), ("f", "flag"), ("g", "**"), ("h", "**"), ("dict", 0),
+        ("dict", "mode"), ("dict", "kw"), ("dict", "limit")
     }
 
 

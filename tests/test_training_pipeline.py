@@ -1,7 +1,7 @@
 """End-to-end curation pipeline (training_pipeline.curate): the
 oracled stage operators composed — gate → dedup survivors → mixture
-sample → chunk → pack → TableStore. Runs on the real sf0.001
-documents fixture plus planted rows that each stage must act on."""
+sample → chunk → pack. Runs on the real sf0.001 documents fixture plus
+planted rows that each stage must act on."""
 
 from __future__ import annotations
 
@@ -9,13 +9,12 @@ from pyspark.sql import Row
 from pyspark.sql import functions as F
 
 from ironman_medallion_lakehouse_spark.session import load_tables
-from ironman_medallion_lakehouse_spark.sources.tablestore import TableStore
 from ironman_medallion_lakehouse_spark.training_pipeline import curate
 
 SF = "/root/testdata/sf0.001"
 
 
-def test_curate_end_to_end(spark, tmp_path):
+def test_curate_end_to_end(spark):
     docs = load_tables(spark, SF, "documents")["documents"].select(
         "doc_id", "text", "lang"
     )
@@ -32,14 +31,7 @@ def test_curate_end_to_end(spark, tmp_path):
                                     "stage testing purposes here", lang="en"),
         ]
     )
-    store = TableStore(spark, str(tmp_path / "wh"))
-    res = curate(
-        spark,
-        docs.unionByName(extra),
-        min_words=10,
-        store=store,
-        table="gold.training_chunks",
-    )
+    res = curate(spark, docs.unionByName(extra), min_words=10)
     # stage monotonicity + planted behaviors
     assert res.n_input == docs.count() + 3
     assert res.n_quality_kept < res.n_input  # the short doc (at least) dropped
@@ -48,7 +40,7 @@ def test_curate_end_to_end(spark, tmp_path):
     assert res.n_chunks >= res.n_sampled  # every kept doc yields >= 1 chunk
     assert res.n_packs >= 1
 
-    out = store.read("gold.training_chunks")
+    out = res.chunks
     assert out.count() == res.n_chunks
     # survivor of the planted pair is the min id; its twin is gone
     ids = {r.doc_id for r in out.select("doc_id").distinct().collect()}
@@ -56,7 +48,6 @@ def test_curate_end_to_end(spark, tmp_path):
     # pack coordinates are consistent: offsets within budget, packs contiguous
     assert out.filter(F.col("start_offset") >= 2048).count() == 0
     assert out.filter(F.col("end_pack") < F.col("start_pack")).count() == 0
-    assert store.row_count("gold.training_chunks") == res.n_chunks
 
 
 def test_curate_sample_rates_apply(spark):
@@ -68,33 +59,3 @@ def test_curate_sample_rates_apply(spark):
     # only English kept; everything else (de/es/zh/fr) dropped by the mixture
     assert 0 < sampled.n_sampled < full.n_sampled
 
-
-def test_curate_dsir_arm_tilts_selection(spark):
-    """The learned-mixture arm: DSIR weights against an en-target +
-    A-ES weighted sampling must (a) cut the corpus to exactly n, (b)
-    overrepresent the target slice vs its survivor-population share,
-    (c) reproduce exactly on a re-run (determinism)."""
-    docs = load_tables(spark, SF, "documents")["documents"].select(
-        "doc_id", "text", "lang"
-    )
-    n = 60
-    res1 = curate(
-        spark, docs, min_words=5,
-        dsir_target=F.col("lang") == "en", dsir_sample_n=n,
-    )
-    assert res1.n_sampled == n
-    base = curate(spark, docs, min_words=5)
-    # population en-share among survivors
-    chunks_ids = base.chunks.select("doc_id").distinct()
-    pop = docs.join(chunks_ids, "doc_id")
-    pop_en = pop.filter(F.col("lang") == "en").count() / pop.count()
-    sel = docs.join(res1.chunks.select("doc_id").distinct(), "doc_id")
-    sel_en = sel.filter(F.col("lang") == "en").count() / sel.count()
-    assert sel_en > pop_en  # the tilt is real
-    res2 = curate(
-        spark, docs, min_words=5,
-        dsir_target=F.col("lang") == "en", dsir_sample_n=n,
-    )
-    ids1 = sorted(r.doc_id for r in res1.chunks.select("doc_id").distinct().collect())
-    ids2 = sorted(r.doc_id for r in res2.chunks.select("doc_id").distinct().collect())
-    assert ids1 == ids2
