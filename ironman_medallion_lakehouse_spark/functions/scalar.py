@@ -14,20 +14,15 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def normalize_dash_to_null(df: DataFrame, columns: list[str] | None = None) -> DataFrame:
-    """Replace the literal ``"-"`` missing-value marker with NULL.
+def normalize_dash_to_null(df: DataFrame) -> DataFrame:
+    """Replace the literal ``"-"`` missing-value marker with NULL in
+    every column.
 
     Reference: 02_bronze.ipynb:139-143 (per-column when(col=="-", None)).
     Applied before any cast so downstream typing sees true NULLs.
     """
-    cols = columns or df.columns
     return df.select(
-        *[
-            F.when(F.col(c) == "-", F.lit(None)).otherwise(F.col(c)).alias(c)
-            if c in cols
-            else F.col(c)
-            for c in df.columns
-        ]
+        *[F.when(F.col(c) == "-", F.lit(None)).otherwise(F.col(c)).alias(c) for c in df.columns]
     )
 
 
@@ -55,17 +50,16 @@ def parse_time_to_seconds(c: Column | str) -> Column:
 def split_person_name(name: Column | str) -> tuple[Column, Column]:
     """Split a full name into (first_name, last_name).
 
-    Reference 03_silver.ipynb:298-305: first = token 0; last = last token
-    via element_at(arr, -1), but NULL when the name has a single token
-    (size == 1). Multi-word last names keep only the final token —
-    reference behavior reproduced as-is.
+    Reference 03_silver.ipynb:298-305: split on a single space, as is
+    (silver has already trimmed the name); first = token 0; last = last
+    token via element_at(arr, -1), but NULL when the name has a single
+    token (size == 1). Multi-word last names keep only the final token,
+    and a tab is not a separator — reference behavior reproduced as-is.
     """
     name = F.col(name) if isinstance(name, str) else name
-    parts = F.split(F.trim(name), r"\s+")
+    parts = F.split(name, " ")
     first = parts.getItem(0)
-    last = F.when(F.size(parts) > 1, F.element_at(parts, -1)).otherwise(
-        F.lit(None).cast("string")
-    )
+    last = F.when(F.size(parts) > 1, F.element_at(parts, -1)).otherwise(None)
     return first, last
 
 

@@ -459,7 +459,9 @@ class IvfIndex:
         itself in query-by-example) BEFORE the top-k, so the list
         never comes up short."""
         cells = self.probe_cells(query_vec, nprobe)
-        candidates = self.store.read_partitions(self.assign_table, "centroid_id", cells)
+        candidates = self.store.read_partitions(
+            self.assign_table, "centroid_id", [str(c) for c in cells]
+        )
         if exclude_ids:
             candidates = candidates.filter(~F.col(id_col).isin(list(exclude_ids)))
         qcol = F.array(*[F.lit(float(x)) for x in query_vec])

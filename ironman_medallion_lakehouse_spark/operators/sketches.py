@@ -214,13 +214,13 @@ def cms_rollup(sketch: DataFrame, rollup_cols: list[str]) -> DataFrame:
 def cms_estimate(
     sketch: DataFrame,
     items: list[str],
-    group_cols: list[str] | None = None,
     depth: int = CMS_DEPTH,
     width: int = CMS_WIDTH,
 ) -> DataFrame:
-    """Frequency estimates for a probe item list from a (rolled-up)
-    sketch: (group_cols..., item, est_count) with est = min over depth
-    rows of the item's hashed cell — the classic CMS point query;
+    """Frequency estimates for a probe item list from a sketch:
+    (item, est_count) with est = min over depth rows of the item's
+    hashed cell, its counters summed over any group columns the sketch
+    carries (the whole-corpus answer) — the classic CMS point query;
     always ≥ the true count, over by at most ~N/width in expectation.
     Probe cells are computed driver-side (items are literals), so the
     lookup is one filtered aggregation over counter rows."""
@@ -234,24 +234,16 @@ def cms_estimate(
     probe_df = sketch.sparkSession.createDataFrame(
         probes, "item string, depth int, cell bigint"
     )
-    gcols = group_cols or []
     joined = sketch.join(F.broadcast(probe_df), ["depth", "cell"])
     # a probe row missing from the sketch means its cell count is 0 →
     # the min is 0; re-attach absent (item, depth) pairs via the full
     # probe grid before taking the min
-    per_depth = joined.groupBy(*gcols, "item", "depth").agg(
-        F.sum("cnt").alias("c")
-    )
+    per_depth = joined.groupBy("item", "depth").agg(F.sum("cnt").alias("c"))
     grid = probe_df.select("item", "depth").distinct()
-    if gcols:
-        # group half of the grid comes from the SKETCH, not per_depth:
-        # a group whose counters match no probe cell at any depth must
-        # still report est_count=0 per item, not vanish (ADVICE r4)
-        grid = sketch.select(*gcols).distinct().crossJoin(grid)
-    full = grid.join(per_depth, [*gcols, "item", "depth"], "left").select(
-        *gcols, "item", "depth", F.coalesce(F.col("c"), F.lit(0)).alias("c")
+    full = grid.join(per_depth, ["item", "depth"], "left").select(
+        "item", "depth", F.coalesce(F.col("c"), F.lit(0)).alias("c")
     )
-    return full.groupBy(*gcols, "item").agg(F.min("c").alias("est_count"))
+    return full.groupBy("item").agg(F.min("c").alias("est_count"))
 
 
 # Membership — the fifth sketch family (HLL/Theta = distinct, KLL =

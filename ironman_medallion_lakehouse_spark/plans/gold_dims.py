@@ -11,20 +11,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ironman_medallion_lakehouse_spark.functions.scalar import literal_lookup, surrogate_key
+from ironman_medallion_lakehouse_spark.functions.scalar import (
+    athlete_natural_key,
+    literal_lookup,
+    parse_division,
+    surrogate_key,
+)
 from ironman_medallion_lakehouse_spark.plans.country_mapping import COUNTRY_MAPPING
-
-
-def _natural_key() -> F.Column:
-    """athlete_natural_key = lower(strip-non-alnum(name) + '_' +
-    coalesce(country, 'UNKNOWN')) — 04a:130-140, repeated at 04d:140-150."""
-    return F.lower(
-        F.concat_ws(
-            "_",
-            F.regexp_replace(F.col("athlete_name"), "[^a-zA-Z0-9]", ""),
-            F.coalesce(F.col("country"), F.lit("UNKNOWN")),
-        )
-    )
 
 
 def build_dim_athletes(silver_df: DataFrame) -> DataFrame:
@@ -42,7 +35,7 @@ def build_dim_athletes(silver_df: DataFrame) -> DataFrame:
     )
     latest = (
         silver_df.select(
-            _natural_key().alias("athlete_natural_key"),
+            athlete_natural_key("athlete_name", "country").alias("athlete_natural_key"),
             "athlete_name",
             "first_name",
             "last_name",
@@ -110,22 +103,17 @@ def build_dim_divisions(silver_df: DataFrame) -> DataFrame:
     then split-cast (:178-205); human description (:222-243);
     division_key = abs(hash(division)) (:260-270)."""
     division = F.col("division")
-    age_range = F.regexp_extract(division, r"(\d+\-\d+)", 1)
+    attrs = parse_division(division)
     d = (
         silver_df.select("division").filter(division.isNotNull()).distinct()
     ).select(
         "division",
-        F.when(division.startswith("M"), "M")
-        .when(division.startswith("F"), "F")
-        .otherwise("UNKNOWN")
-        .alias("gender"),
-        F.when(division.contains("PRO"), True).otherwise(False).alias("is_professional"),
-        F.when(age_range != "", F.split(age_range, "-").getItem(0).cast("integer"))
-        .otherwise(None)
-        .alias("age_group_start"),
-        F.when(age_range != "", F.split(age_range, "-").getItem(1).cast("integer"))
-        .otherwise(None)
-        .alias("age_group_end"),
+        attrs["gender"].alias("gender"),
+        # the flag is never NULL here (NULL divisions are filtered out);
+        # coalesce records the column as non-nullable
+        F.coalesce(attrs["is_professional"], F.lit(False)).alias("is_professional"),
+        attrs["age_group_start"].alias("age_group_start"),
+        attrs["age_group_end"].alias("age_group_end"),
     )
     gender_word = F.when(F.col("gender") == "M", F.lit("Male")).otherwise(F.lit("Female"))
     description = (

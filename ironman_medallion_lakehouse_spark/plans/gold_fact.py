@@ -17,8 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ironman_medallion_lakehouse_spark.functions.scalar import surrogate_key
-from ironman_medallion_lakehouse_spark.plans.gold_dims import _natural_key
+from ironman_medallion_lakehouse_spark.functions.scalar import athlete_natural_key, surrogate_key
 
 FACT_COLUMNS = [
     "fact_key",
@@ -81,7 +80,9 @@ def build_fact(
     instead of being force-broadcast into executor OOM.
     """
     maybe_b = F.broadcast if explicit_broadcast else (lambda df: df)
-    fact = silver_df.withColumn("athlete_natural_key", _natural_key())
+    fact = silver_df.withColumn(
+        "athlete_natural_key", athlete_natural_key("athlete_name", "country")
+    )
 
     athletes_keys = dim_athletes.select(
         F.col("athlete_key"), F.col("athlete_natural_key").alias("dim_athlete_natural_key")

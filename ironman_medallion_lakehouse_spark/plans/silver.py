@@ -12,7 +12,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType
 
-from ironman_medallion_lakehouse_spark.functions.scalar import parse_time_to_seconds
+from ironman_medallion_lakehouse_spark.functions.scalar import (
+    parse_time_to_seconds,
+    split_person_name,
+)
 
 INTEGER_COLUMNS = [
     "rank",
@@ -90,7 +93,7 @@ def build_silver(bronze_df: DataFrame) -> DataFrame:
     )
 
     d = F.upper(F.col("designation"))
-    name_parts = F.split(F.col("athlete_name"), " ")
+    first_name, last_name = split_person_name("athlete_name")
     df = df.withColumns(
         {
             "is_finisher": F.when(d == "FINISHER", True).otherwise(False),
@@ -102,10 +105,8 @@ def build_silver(bronze_df: DataFrame) -> DataFrame:
             + F.col("bike_time_seconds")
             + F.col("transition_2_seconds")
             + F.col("run_time_seconds"),
-            "first_name": name_parts.getItem(0),
-            "last_name": F.when(F.size(name_parts) > 1, F.element_at(name_parts, -1)).otherwise(
-                None
-            ),
+            "first_name": first_name,
+            "last_name": last_name,
         }
     )
 

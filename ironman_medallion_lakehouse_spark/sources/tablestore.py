@@ -32,7 +32,10 @@ Layout per table::
     1. *partition prune* — keep files whose hive partition values are
        wanted: the merges (``merge_insert_only``, ``merge_scd1``,
        ``merge_scd2``) when partition ⊆ keys, with the source's
-       distinct partition values; ``read_partitions``;
+       distinct partition values; ``read_partitions``. Wanted values
+       are Spark's own ``cast(v AS STRING)`` strings, the form its
+       writer puts in the path, compared with the decoded path
+       segments; nothing re-renders a value in Python;
     2. *discovery scan* — keep files holding a row that satisfies a
        predicate (one ``input_file_name()`` job): ``delete_where``.
   Insert-only merge appends: every existing file is carried forward, so
@@ -89,9 +92,6 @@ _CKPT_RE = re.compile(r"^(\d{8})\.checkpoint\.json$")
 # Every Nth commit also writes a full-snapshot checkpoint; readers
 # replay at most N-1 delta entries on top of the nearest checkpoint.
 CHECKPOINT_EVERY = 10
-
-# rendered form of a NULL partition value (never a real path value)
-_NULL = "\0null"
 
 # the duplicate-key failure a merge's write job raises (_unique_keys)
 _DUPLICATE_KEYS = "merge source has duplicate rows per key"
@@ -182,78 +182,6 @@ def partition_values(
         if eq and col in partition_by:
             values[col] = None if raw == "__HIVE_DEFAULT_PARTITION__" else unquote(raw)
     return [(c, values.get(c)) for c in partition_by]
-
-
-def _java_style_float_str(a: float, digits: str | None = None) -> str:
-    """Render a positive finite float the way Java's ``Double.toString``
-    does (Spark's partition-path renderer): decimal form for
-    10^-3 ≤ a < 10^7, otherwise ``d.dddEn`` scientific with one digit
-    before the point — '1.0E-7', '1.2345678E7', never Python's
-    '1e-07'. ``digits`` overrides the significant digits (used for
-    FloatType, whose shortest round-trip digits differ from the
-    double's)."""
-    from decimal import Decimal
-
-    d = Decimal(digits if digits is not None else repr(a))
-    _sign, digs, exp = d.as_tuple()
-    adjusted = exp + len(digs) - 1
-    digstr = "".join(map(str, digs)).rstrip("0") or "0"
-    if -3 <= adjusted <= 6:  # == 1e-3 <= a < 1e7
-        if adjusted >= 0:
-            intpart = digstr[: adjusted + 1].ljust(adjusted + 1, "0")
-            frac = digstr[adjusted + 1 :] or "0"
-            return f"{intpart}.{frac}"
-        return "0." + "0" * (-adjusted - 1) + digstr
-    mantissa = digstr[0] + "." + (digstr[1:] or "0")
-    return f"{mantissa}E{adjusted}"
-
-
-def _render_partition_value(v, dtype=None) -> str:
-    """Render a Python value the way Spark renders it in a hive-style
-    partition path (pre-escaping), so read_partitions can compare
-    against parsed segments. Spark writes booleans lowercase
-    ('true'/'false'), dates as ISO 'yyyy-MM-dd', timestamps as
-    'yyyy-MM-dd HH:mm:ss[.fraction]' with trailing fraction zeros
-    trimmed ('…:09.5', not '…:09.500000'), floats/doubles via Java
-    ``toString`` (scientific outside [1e-3, 1e7)), and decimals at the
-    column's declared scale ('5.0000' for DECIMAL(10,4)) — all
-    confirmed against Spark-written directories in
-    tests/test_tablestore.py. ``dtype`` (the column's Spark DataType,
-    when the caller has the schema) disambiguates decimal scale and
-    float-vs-double digit rendering."""
-    if v is None:
-        return _NULL
-    if isinstance(v, bool):
-        return "true" if v else "false"
-    import datetime as _dt
-    import decimal as _decimal
-    import math
-
-    if isinstance(v, float):
-        if math.isnan(v):
-            return "NaN"
-        if math.isinf(v):
-            return "Infinity" if v > 0 else "-Infinity"
-        import numpy as np
-        from pyspark.sql.types import FloatType
-
-        digits = repr(np.float32(abs(v))) if isinstance(dtype, FloatType) else None
-        s = _java_style_float_str(abs(v), digits)
-        return f"-{s}" if math.copysign(1.0, v) < 0 else s
-    if isinstance(v, _dt.datetime):  # before date: datetime subclasses date
-        base = v.strftime("%Y-%m-%d %H:%M:%S")
-        if v.microsecond:
-            base += "." + f"{v.microsecond:06d}".rstrip("0")
-        return base
-    if isinstance(v, _dt.date):
-        return v.isoformat()
-    if isinstance(v, _decimal.Decimal):
-        from pyspark.sql.types import DecimalType
-
-        if isinstance(dtype, DecimalType):
-            return f"{v:.{dtype.scale}f}"
-        return str(v)
-    return str(v)
 
 
 def version_changes(
@@ -624,9 +552,12 @@ class TableStore:
 
         1. *Partition prune* (``partitions`` = (columns, wanted value
            tuples)): keep files whose hive partition values are wanted.
-           Matching parses the path segments and renders the wanted
-           values type-aware, so escaped, NULL, float, date, timestamp
-           and decimal keys match Spark's path form. Manifest-only.
+           A wanted value is Spark's ``cast(v AS STRING)`` of the
+           column's value, the string Spark's writer puts in the path
+           (before escaping), so it is compared with the path's
+           decoded segment as is; ``""`` and None both mean the
+           default (NULL) partition, as in Spark's writer.
+           Manifest-only.
         2. *Discovery scan* (``cond``): read the surviving candidates
            projecting ONLY ``input_file_name()`` after the predicate and
            collect the distinct files holding a matching row (bounded by
@@ -637,16 +568,9 @@ class TableStore:
         files = manifest.files
         if partitions is not None:
             cols, values = partitions
-            dtypes = {f.name: f.dataType for f in manifest.schema.fields}
-            wanted = {
-                tuple(_render_partition_value(v, dtypes.get(c)) for c, v in zip(cols, pv))
-                for pv in values
-            }
+            wanted = {tuple(v or None for v in pv) for pv in values}
             files = [
-                f
-                for f in files
-                if tuple(_NULL if v is None else v for _c, v in partition_values(f, cols))
-                in wanted
+                f for f in files if tuple(v for _c, v in partition_values(f, cols)) in wanted
             ]
         if cond is not None and files:
             hit_uris = (
@@ -665,16 +589,25 @@ class TableStore:
         touched = set(files)
         return files, [f for f in manifest.files if f not in touched]
 
-    def read_partitions(self, name: str, column: str, values: list) -> DataFrame:
+    def read_partitions(self, name: str, column: str, values: list[str | None]) -> DataFrame:
         """Manifest-level partition pruning: read ONLY the files that
         live under ``column=<value>/`` partition directories for the
         requested values. Unlike a filter (which Catalyst also prunes),
         the non-matching files never even enter the scan's file index —
         at 100 TB a 2-of-64-cell IVF probe plans a 1/32-of-corpus read
-        before Spark sees a single path."""
+        before Spark sees a single path.
+
+        Each value is given as Spark's ``cast(v AS STRING)`` of the
+        partition value (``"3"``, ``"true"``, ``"2024-03-01"``,
+        ``"1.0E-7"``), or None for the NULL partition; any other type
+        raises TypeError rather than silently matching no file."""
         manifest = self._require(name)
         if column not in manifest.partition_by:
             raise ValueError(f"{column} is not a partition column of {name}")
+        if not all(v is None or isinstance(v, str) for v in values):
+            raise TypeError(
+                f"read_partitions takes values in Spark's cast(v AS STRING) form, got {values!r}"
+            )
         kept, _ = self._plan_files(name, manifest, partitions=([column], [(v,) for v in values]))
         return self._read_file_subset(name, manifest, kept)
 
@@ -971,7 +904,9 @@ class TableStore:
         partition values when every partition column is a key — only
         then is partition pruning sound: equal keys imply equal
         partition values, so a source row can only match inside its own
-        partition.
+        partition. Each value is cast to the column's recorded type and
+        then to string inside the distinct job, so it arrives in the
+        form Spark's writer put in the target's paths.
         """
         manifest = self._latest_manifest(name)
         if manifest is None:
@@ -979,7 +914,9 @@ class TableStore:
             return None
         partitions = None
         if manifest.partition_by and set(manifest.partition_by) <= set(keys):
-            pvals = source.select(*manifest.partition_by).distinct().collect()
+            types = {f.name: f.dataType for f in manifest.schema.fields}
+            as_str = [F.col(c).cast(types[c]).cast("string") for c in manifest.partition_by]
+            pvals = source.select(*as_str).distinct().collect()
             partitions = (manifest.partition_by, [tuple(r) for r in pvals])
         return manifest, partitions
 

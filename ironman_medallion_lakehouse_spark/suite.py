@@ -34,15 +34,14 @@ class SuiteQuery:
     name: str
     fn: Callable[[SparkSession, str], DataFrame]
     oracle: str | None
-    doc: str
 
 
 QUERIES: dict[str, SuiteQuery] = {}
 
 
-def register(name: str, oracle: str | None = None, doc: str = ""):
+def register(name: str, oracle: str | None = None):
     def deco(fn):
-        QUERIES[name] = SuiteQuery(name=name, fn=fn, oracle=oracle, doc=doc or (fn.__doc__ or ""))
+        QUERIES[name] = SuiteQuery(name=name, fn=fn, oracle=oracle)
         return fn
 
     return deco

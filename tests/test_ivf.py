@@ -44,7 +44,7 @@ def test_probe_reads_only_nprobe_partitions(spark, tmp_path):
     cells = idx.probe_cells(query, nprobe=2)
     assert len(cells) == 2
 
-    probed = store.read_partitions(idx.assign_table, "centroid_id", cells)
+    probed = store.read_partitions(idx.assign_table, "centroid_id", [str(c) for c in cells])
     scanned = probed.inputFiles()
     # only files under the two probed centroid_id=<c>/ dirs are scanned
     assert 0 < len(scanned) < total_files
@@ -213,7 +213,7 @@ def test_rebuild_restores_pruning_under_drift_with_recall_floor(spark, tmp_path)
             recalls.append(len(got & want) / k)
             cells = idx.probe_cells(q, nprobe=nprobe)
             members = store.read_partitions(
-                idx.assign_table, "centroid_id", cells
+                idx.assign_table, "centroid_id", [str(c) for c in cells]
             )
             cands.append(members.count())
             probed_ids |= {r.vec_id for r in members.select("vec_id").collect()}

@@ -3,9 +3,11 @@ class in the engine package has a caller outside the tests, and every
 option that selects behaviour is set by one, or each is on an
 allowlist that says why it stays.
 
-A caller is an AST reference from non-test code: a ``Name``, an
-``Attribute`` or an import alias, in the package, ``tools/``,
-``perfbench/``, ``bench.py`` or ``__spark_entry__.py``. A decorated
+A caller is an AST reference from non-test code: a ``Name`` or an
+``Attribute``, in the package, ``tools/``, ``perfbench/``, ``bench.py``
+or ``__spark_entry__.py``. An import is not a caller: an imported name
+counts only where it is used, under its ``as`` alias if it has one, so
+a re-export keeps nothing alive. A decorated
 function counts as called, because its decorator (``@register`` in
 the suite) receives it; so does a method under any decorator but
 ``staticmethod`` or ``classmethod`` (a property is read, not called). Mentions in docstrings, comments or strings
@@ -108,6 +110,10 @@ ALLOWED_UNSET_OPTIONS = {
         "test fixture: forces 1 to 64 range partitions on small inputs, "
         "so the per-partition offset math runs"
     ),
+    ("operators/packing.py", "pack_sequences", "num_ranges"): (
+        "test fixture: 1, 2, 6 or 8 range partitions on small inputs, so "
+        "the cross-range offsets run and are pinned to give one answer"
+    ),
     ("operators/experiment.py", "ewma_control", "lam"): (
         "test fixture: lam=0.999 reaches the O(T^2) fold branch at "
         "T=100 instead of T > 2,700"
@@ -136,8 +142,12 @@ def _caller_sources() -> list[Path]:
 
 def referenced_names(tree: ast.Module) -> set[str]:
     """Names a module references as code. A top-level function's
-    references to itself (recursion) are not callers."""
+    references to itself (recursion) are not callers. An import is not
+    a caller either: an imported name counts through its uses, and
+    ``import x as y`` or ``from m import x as y`` counts ``x`` when
+    ``y`` is used."""
     names: set[str] = set()
+    aliases: dict[str, str] = {}
 
     def walk(node: ast.AST, own: str | None) -> None:
         for child in ast.iter_child_nodes(node):
@@ -148,16 +158,16 @@ def referenced_names(tree: ast.Module) -> set[str]:
                 name = child.id
             elif isinstance(child, ast.Attribute):
                 name = child.attr
-            elif isinstance(child, ast.alias):
-                name = child.name.split(".")[-1]
             else:
                 name = None
+                if isinstance(child, ast.alias) and child.asname:
+                    aliases[child.asname] = child.name.split(".")[-1]
             if name is not None and name != inner:
                 names.add(name)
             walk(child, inner)
 
     walk(tree, None)
-    return names
+    return names | {real for alias, real in aliases.items() if alias in names}
 
 
 def public_functions() -> set[tuple[str, str]]:
@@ -196,7 +206,8 @@ def _selecting_options(fn: ast.FunctionDef) -> set[str]:
     """Defaulted parameters of ``fn`` that select behaviour: a bool
     default, an operand of a comparison with a literal (None
     included), or a truth test in an ``if``, ``while`` or conditional
-    expression (``not x`` and ``x and y`` test each name)."""
+    expression (``not x`` and ``x and y`` test each name), or an
+    operand of ``and`` or ``or`` anywhere (``x or default``)."""
     a = fn.args
     pos = a.posonlyargs + a.args
     defaults = dict(zip((p.arg for p in pos[len(pos) - len(a.defaults):]), a.defaults))
@@ -219,6 +230,8 @@ def _selecting_options(fn: ast.FunctionDef) -> set[str]:
                 picked.update(o.id for o in operands if isinstance(o, ast.Name))
         elif isinstance(node, (ast.If, ast.IfExp, ast.While)):
             picked.update(tested(node.test))
+        elif isinstance(node, ast.BoolOp):
+            picked.update(tested(node))
     return picked & defaults.keys()
 
 
@@ -331,20 +344,22 @@ def unset_options() -> set[tuple[str, str, str]]:
 def test_text_mentions_are_not_callers():
     src = '''
 import os.path as osp
-from m import imported
+from m import imported, reexported, orig as renamed, unused_orig as unused
 
 def used():
     """Calls dead() in prose only."""
     # dead() in a comment
-    return "dead()", helper(), obj.method, osp
+    return "dead()", helper(), obj.method, osp, imported(), renamed()
 
 def recursive(n):
     return recursive(n - 1)
 '''
     names = referenced_names(ast.parse(src))
-    assert {"helper", "method", "imported", "path", "osp"} <= names
+    assert {"helper", "method", "imported", "path", "osp", "orig", "renamed"} <= names
     assert "dead" not in names
     assert "recursive" not in names
+    # an import that nothing uses (a re-export) calls nothing
+    assert not {"reexported", "unused_orig", "unused"} & names
 
 
 def test_every_public_function_has_a_caller():

@@ -40,7 +40,7 @@ def test_dash_normalize(spark):
 
 def test_split_name(spark):
     first, last = split_person_name(F.col("n"))
-    rows = [("Lucy Charles-Barclay",), ("Ironman",), ("Jan Van Der Berg",)]
+    rows = [("Lucy Charles-Barclay",), ("Ironman",), ("Jan Van Der Berg",), ("Jan\tBerg",)]
     df = spark.createDataFrame(rows, "n string").select(
         first.alias("f"), last.alias("l")
     )
@@ -49,6 +49,8 @@ def test_split_name(spark):
     assert out[1] == ("Ironman", None)
     # reference keeps only the FINAL token as last name
     assert out[2] == ("Jan", "Berg")
+    # silver splits on a single space only, as the reference does
+    assert out[3] == ("Jan\tBerg", None)
 
 
 def test_natural_key(spark):

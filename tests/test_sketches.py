@@ -170,49 +170,6 @@ def test_cms_rollup_equals_direct_build(spark):
     assert via_rollup == direct
 
 
-def test_cms_grouped_estimates(spark):
-    """Per-group point queries via the group_cols path."""
-    from pyspark.sql import Row
-
-    from ironman_medallion_lakehouse_spark.operators import sketches as SK
-
-    df = spark.createDataFrame(
-        [Row(grp="x", item="a")] * 10 + [Row(grp="y", item="a")] * 3
-    )
-    fine = SK.cms_sketch(df, ["grp"], "item")
-    got = {
-        (r.grp, r.item): r.est_count
-        for r in SK.cms_estimate(fine, ["a"], group_cols=["grp"]).collect()
-    }
-    assert got[("x", "a")] >= 10 and got[("y", "a")] >= 3
-    assert got[("x", "a")] <= 10 + 1 and got[("y", "a")] <= 3 + 1
-
-
-def test_cms_grouped_estimate_reports_zero_for_unmatched_group(spark):
-    """ADVICE r4: a group whose counters hit NO probe cell at any depth
-    must still appear with est_count=0, not vanish from the output.
-    Group 'z' holds only items disjoint from the probe list; with a
-    narrow enough item set its cells can miss every probe cell — but
-    whether they collide or not, 'z' must be present for each probe
-    item, and if no collision occurred its estimate is exactly 0."""
-    from pyspark.sql import Row
-
-    from ironman_medallion_lakehouse_spark.operators import sketches as SK
-
-    df = spark.createDataFrame(
-        [Row(grp="x", item="a")] * 5 + [Row(grp="z", item="only_in_z")] * 4
-    )
-    fine = SK.cms_sketch(df, ["grp"], "item")
-    rows = SK.cms_estimate(fine, ["a"], group_cols=["grp"]).collect()
-    got = {(r.grp, r.item): r.est_count for r in rows}
-    assert ("x", "a") in got and got[("x", "a")] >= 5
-    assert ("z", "a") in got, "group z vanished instead of reporting an estimate"
-    # CMS may over-count on collision but never under-counts; with one
-    # distinct item in z the only possible values are 0 (no collision)
-    # or 4 (its single item collides with a's cell at every depth)
-    assert got[("z", "a")] in (0, 4)
-
-
 def test_bloom_no_false_negatives_and_rollup_merge(spark):
     """Every inserted item must probe true in its group (no false
     negatives — the bloom guarantee); OR-ing the per-group word masks

@@ -732,41 +732,108 @@ def test_rebalanced_write_bounds_files_per_partition(spark, tmp_path):
     assert max(raw_dirs.values()) > 1  # without it: one file per task per year
 
 
-def test_read_partitions_escaped_and_null_values(spark, tmp_path):
-    """Partition dirs use Spark's path escaping ('a b' → 'a%20b') and
-    __HIVE_DEFAULT_PARTITION__ for NULL; read_partitions must parse
-    them, not string-format the wanted values."""
-    st = _store(spark, tmp_path)
-    df = spark.createDataFrame(
-        [Row(cat="a b", v=1), Row(cat="plain", v=2), Row(cat=None, v=3),
-         Row(cat="x:y", v=4)]
-    )
-    st.save_overwrite(df, "db.esc", partition_by=["cat"])
-    assert [r.v for r in st.read_partitions("db.esc", "cat", ["a b"]).collect()] == [1]
-    assert [r.v for r in st.read_partitions("db.esc", "cat", ["x:y"]).collect()] == [4]
-    got = {r.v for r in st.read_partitions("db.esc", "cat", ["plain", None]).collect()}
-    assert got == {2, 3}
-
-
-def test_read_partitions_bool_and_date_values(spark, tmp_path):
-    """Spark renders partition values via Catalyst toString: booleans
-    LOWERCASE ('flag=true'), dates ISO ('d=2024-03-01'). Python
-    str(True) is 'True', so read_partitions must canonicalize bools
-    explicitly or silently return zero files."""
+def test_partition_path_values_are_sparks_cast_strings(spark, tmp_path):
+    """The partition prune (``_plan_files``, ``read_partitions``)
+    compares wanted values in Spark's ``cast(v AS STRING)`` form with
+    the values ``partition_values`` decodes from the written paths. Pin
+    that both are one string for every row, over the types a partition
+    column takes: doubles inside and outside Java's plain-decimal
+    range, -0.0, NaN and Infinity, a float, a decimal at its declared
+    scale, a timestamp with micros, a date, bools, a string that needs
+    escaping, and ``""`` and NULL, which both land in the default
+    partition and decode as None. A value of any other type raises."""
     import datetime
+    from decimal import Decimal
+
+    import pyarrow.parquet as pq
+
+    from ironman_medallion_lakehouse_spark.sources.tablestore import partition_values
 
     st = _store(spark, tmp_path)
-    df = spark.createDataFrame(
-        [Row(flag=True, d=datetime.date(2024, 3, 1), v=1),
-         Row(flag=False, d=datetime.date(2024, 3, 2), v=2)]
-    )
-    st.save_overwrite(df, "db.boolp", partition_by=["flag"])
-    assert [r.v for r in st.read_partitions("db.boolp", "flag", [True]).collect()] == [1]
-    assert [r.v for r in st.read_partitions("db.boolp", "flag", [False]).collect()] == [2]
+    cases = {
+        "double": [1e-7, 1.5e7, -0.0, float("nan"), float("inf"), 0.001, 2.0, None],
+        "float": [123456789.0, 0.1, None],
+        "decimal(10,4)": [Decimal("5"), Decimal("-0.0100"), Decimal("12.34")],
+        "timestamp": [
+            datetime.datetime(2023, 1, 5, 7, 8, 9, 123450),
+            datetime.datetime(2023, 1, 5, 7, 8, 9),
+        ],
+        "date": [datetime.date(2024, 3, 1)],
+        "boolean": [True, False, None],
+        "string": ["a b/c:d%e=f", "plain", "", None],
+    }
+    for i, (dtype, values) in enumerate(cases.items()):
+        name = f"db.pin{i}"
+        df = spark.createDataFrame(list(enumerate(values)), f"id int, v {dtype}")
+        st.save_overwrite(df, name, partition_by=["v"])
+        want = {
+            r.id: r.s or None
+            for r in df.select("id", F.col("v").cast("string").alias("s")).collect()
+        }
+        got = {}
+        for f in st._latest_manifest(name).files:
+            ((_col, value),) = partition_values(f, ["v"])
+            ids = pq.read_table(os.path.join(st._data_dir(name), f), columns=["id"])
+            got.update((row_id, value) for row_id in ids.column("id").to_pylist())
+        assert got == want, dtype
+        # read_partitions finds every row by those strings
+        found = st.read_partitions(name, "v", list(want.values())).collect()
+        assert sorted(r.id for r in found) == sorted(want), dtype
+    # a typed value would match no path string: it raises instead of
+    # silently reading nothing
+    with pytest.raises(TypeError, match="cast"):
+        st.read_partitions("db.pin0", "v", [2.0])
 
-    st.save_overwrite(df, "db.datep", partition_by=["d"])
-    got = st.read_partitions("db.datep", "d", [datetime.date(2024, 3, 1)]).collect()
-    assert [r.v for r in got] == [1]
+
+@pytest.mark.parametrize("merge", ["merge_insert_only", "merge_scd1"])
+def test_merge_on_float_partition_key_keeps_one_row_per_key(spark, tmp_path, merge):
+    """A FloatType partition key: Spark writes 123456789.0f as
+    '1.23456792E8'. The merge must find the target row in that
+    partition, so the key keeps one row."""
+    st = _store(spark, tmp_path)
+    schema = "k string, f float, v int"
+    st.save_overwrite(
+        spark.createDataFrame([("a", 123456789.0, 1), ("b", 0.5, 1)], schema),
+        "db.fk",
+        partition_by=["f"],
+    )
+    getattr(st, merge)(
+        spark.createDataFrame([("a", 123456789.0, 2)], schema), "db.fk", keys=["k", "f"]
+    )
+    got = sorted((r.k, r.v) for r in st.read("db.fk").collect())
+    assert got == [("a", 1 if merge == "merge_insert_only" else 2), ("b", 1)]
+
+
+@pytest.fixture
+def new_york_tz(monkeypatch):
+    """The driver's Python time zone set away from the session's UTC."""
+    import time
+
+    monkeypatch.setenv("TZ", "America/New_York")
+    time.tzset()
+    yield
+    monkeypatch.undo()
+    time.tzset()
+
+
+@pytest.mark.parametrize("merge", ["merge_insert_only", "merge_scd1"])
+def test_merge_on_timestamp_partition_key_ignores_driver_tz(
+    spark, tmp_path, new_york_tz, merge
+):
+    """A timestamp partition key is written in the session's time zone
+    (UTC). With the driver's Python time zone elsewhere, the merge must
+    still find the target partition, so the key keeps one row."""
+    st = _store(spark, tmp_path)
+
+    def rows(v: int):
+        return spark.sql(
+            f"SELECT 'a' AS k, TIMESTAMP'2023-01-05 07:08:09.5' AS t, {v} AS v"
+        )
+
+    st.save_overwrite(rows(1), "db.tk", partition_by=["t"])
+    getattr(st, merge)(rows(2), "db.tk", keys=["k", "t"])
+    got = [(r.k, r.v) for r in st.read("db.tk").collect()]
+    assert got == [("a", 1 if merge == "merge_insert_only" else 2)]
 
 
 def test_scd1_partition_scoped_rewrite(spark, tmp_path):
@@ -829,57 +896,6 @@ def test_scd1_full_rewrite_when_partition_not_in_keys(spark, tmp_path):
     rows = {r.k: (r.attr, r.y) for r in st.read("db.dim").collect()}
     assert rows["a"] == ("new", 1)  # attr updated, partition col kept (not an update_col)
     assert rows["b"] == ("keep", 2)
-
-
-def test_read_partitions_float_timestamp_decimal(spark, tmp_path):
-    """r2 VERDICT #5 / ADVICE: float, timestamp-with-microseconds, and
-    decimal partition keys must match Spark's path rendering (Java
-    Double.toString scientific form, trailing-zero-trimmed fractions,
-    declared decimal scale)."""
-    import datetime
-    from decimal import Decimal
-
-    st = _store(spark, tmp_path)
-
-    # doubles incl. the scientific-notation renderings Spark uses
-    st.save_overwrite(
-        spark.createDataFrame(
-            [(1, 1.5), (2, 1e-7), (3, 12345678.0), (4, 0.001), (5, 2.0)],
-            "id int, f double",
-        ),
-        "db.fp",
-        partition_by=["f"],
-    )
-    got = {r.id for r in st.read_partitions("db.fp", "f", [1e-7, 12345678.0, 2.0]).collect()}
-    assert got == {2, 3, 5}
-
-    ts = [
-        (1, datetime.datetime(2023, 1, 5, 7, 8, 9)),
-        (2, datetime.datetime(2023, 1, 5, 7, 8, 9, 500000)),
-        (3, datetime.datetime(2023, 1, 5, 7, 8, 9, 123456)),
-    ]
-    st.save_overwrite(
-        spark.createDataFrame(ts, "id int, t timestamp"), "db.ts", partition_by=["t"]
-    )
-    got = {
-        r.id
-        for r in st.read_partitions(
-            "db.ts", "t", [ts[1][1], ts[2][1]]
-        ).collect()
-    }
-    assert got == {2, 3}
-
-    st.save_overwrite(
-        spark.createDataFrame(
-            [(1, Decimal("12.3400")), (2, Decimal("5")), (3, Decimal("-0.0100"))],
-            "id int, d decimal(10,4)",
-        ),
-        "db.dec",
-        partition_by=["d"],
-    )
-    # note Decimal("5") — the renderer must expand to the column scale 5.0000
-    got = {r.id for r in st.read_partitions("db.dec", "d", [Decimal("5"), Decimal("-0.01")]).collect()}
-    assert got == {2, 3}
 
 
 def test_vacuum_retention_horizon(spark, tmp_path):
