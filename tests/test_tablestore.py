@@ -785,6 +785,90 @@ def test_partition_path_values_are_sparks_cast_strings(spark, tmp_path):
         st.read_partitions("db.pin0", "v", [2.0])
 
 
+def test_read_partitions_escaped_and_null_values(spark, tmp_path):
+    """Partition dirs use Spark's path escaping ('a b' → 'a%20b') and
+    __HIVE_DEFAULT_PARTITION__ for NULL; read_partitions must parse
+    them, not string-format the wanted values."""
+    st = _store(spark, tmp_path)
+    df = spark.createDataFrame(
+        [Row(cat="a b", v=1), Row(cat="plain", v=2), Row(cat=None, v=3),
+         Row(cat="x:y", v=4)]
+    )
+    st.save_overwrite(df, "db.esc", partition_by=["cat"])
+    assert [r.v for r in st.read_partitions("db.esc", "cat", ["a b"]).collect()] == [1]
+    assert [r.v for r in st.read_partitions("db.esc", "cat", ["x:y"]).collect()] == [4]
+    got = {r.v for r in st.read_partitions("db.esc", "cat", ["plain", None]).collect()}
+    assert got == {2, 3}
+
+
+def test_read_partitions_bool_and_date_values(spark, tmp_path):
+    """Spark renders partition values as ``cast(v AS STRING)``: booleans
+    lowercase ('flag=true'), dates ISO ('d=2024-03-01'). read_partitions
+    finds them by those strings."""
+    import datetime
+
+    st = _store(spark, tmp_path)
+    df = spark.createDataFrame(
+        [Row(flag=True, d=datetime.date(2024, 3, 1), v=1),
+         Row(flag=False, d=datetime.date(2024, 3, 2), v=2)]
+    )
+    st.save_overwrite(df, "db.boolp", partition_by=["flag"])
+    assert [r.v for r in st.read_partitions("db.boolp", "flag", ["true"]).collect()] == [1]
+    assert [r.v for r in st.read_partitions("db.boolp", "flag", ["false"]).collect()] == [2]
+
+    st.save_overwrite(df, "db.datep", partition_by=["d"])
+    got = st.read_partitions("db.datep", "d", ["2024-03-01"]).collect()
+    assert [r.v for r in got] == [1]
+
+
+def test_read_partitions_float_timestamp_decimal(spark, tmp_path):
+    """Float, timestamp-with-microseconds and decimal partition keys are
+    found by Spark's rendering of them: Java Double.toString scientific
+    form, trailing-zero-trimmed fractions, the declared decimal scale."""
+    import datetime
+    from decimal import Decimal
+
+    st = _store(spark, tmp_path)
+
+    # doubles incl. the scientific-notation renderings Spark uses
+    st.save_overwrite(
+        spark.createDataFrame(
+            [(1, 1.5), (2, 1e-7), (3, 12345678.0), (4, 0.001), (5, 2.0)],
+            "id int, f double",
+        ),
+        "db.fp",
+        partition_by=["f"],
+    )
+    got = {
+        r.id for r in st.read_partitions("db.fp", "f", ["1.0E-7", "1.2345678E7", "2.0"]).collect()
+    }
+    assert got == {2, 3, 5}
+
+    ts = [
+        (1, datetime.datetime(2023, 1, 5, 7, 8, 9)),
+        (2, datetime.datetime(2023, 1, 5, 7, 8, 9, 500000)),
+        (3, datetime.datetime(2023, 1, 5, 7, 8, 9, 123456)),
+    ]
+    st.save_overwrite(
+        spark.createDataFrame(ts, "id int, t timestamp"), "db.ts", partition_by=["t"]
+    )
+    wanted = ["2023-01-05 07:08:09.5", "2023-01-05 07:08:09.123456"]
+    got = {r.id for r in st.read_partitions("db.ts", "t", wanted).collect()}
+    assert got == {2, 3}
+
+    st.save_overwrite(
+        spark.createDataFrame(
+            [(1, Decimal("12.3400")), (2, Decimal("5")), (3, Decimal("-0.0100"))],
+            "id int, d decimal(10,4)",
+        ),
+        "db.dec",
+        partition_by=["d"],
+    )
+    # Decimal("5") is written at the column scale: 5.0000
+    got = {r.id for r in st.read_partitions("db.dec", "d", ["5.0000", "-0.0100"]).collect()}
+    assert got == {2, 3}
+
+
 @pytest.mark.parametrize("merge", ["merge_insert_only", "merge_scd1"])
 def test_merge_on_float_partition_key_keeps_one_row_per_key(spark, tmp_path, merge):
     """A FloatType partition key: Spark writes 123456789.0f as
