@@ -26,7 +26,9 @@ STOPWORDS: dict[str, list[str]] = {
 LANG_PRIORITY = ["en", "de", "fr", "es", "zh"]  # deterministic tiebreak order
 
 
-def word_array(text: Column | str) -> Column:
+def words(text: Column | str) -> Column:
+    """The whitespace tokenizer: lowercased text split on runs of
+    whitespace (a leading run yields one empty first token)."""
     t = F.col(text) if isinstance(text, str) else text
     return F.split(F.lower(t), r"\s+")
 
@@ -34,7 +36,7 @@ def word_array(text: Column | str) -> Column:
 def stopword_score(text: Column | str, lang: str) -> Column:
     """Distinct-overlap count between the document's word set and the
     language's stopword list. Integer, deterministic."""
-    ws = F.array_distinct(word_array(text))
+    ws = F.array_distinct(words(text))
     return F.size(
         F.array_intersect(ws, F.array(*[F.lit(w) for w in STOPWORDS[lang]]))
     )
@@ -54,11 +56,11 @@ def predicted_lang(text: Column | str) -> Column:
 
 
 def n_words(text: Column | str) -> Column:
-    return F.size(word_array(text))
+    return F.size(words(text))
 
 
 def n_distinct_words(text: Column | str) -> Column:
-    return F.size(F.array_distinct(word_array(text)))
+    return F.size(F.array_distinct(words(text)))
 
 
 def avg_word_len(text: Column | str) -> Column:
@@ -83,7 +85,7 @@ def type_token_ratio(text: Column | str) -> Column:
 
 
 def whitespace_token_count(text: Column | str) -> Column:
-    return F.size(word_array(text))
+    return F.size(words(text))
 
 
 def regex_token_count(text: Column | str) -> Column:
@@ -98,7 +100,7 @@ def bag_fingerprint(text: Column | str) -> Column:
     """Order-insensitive document fingerprint: md5 of the sorted
     distinct word set. Identical docs up to word order/repetition get
     identical fingerprints — a cheap near-dup key (one narrow pass)."""
-    ws = F.array_sort(F.array_distinct(word_array(text)))
+    ws = F.array_sort(F.array_distinct(words(text)))
     return F.md5(F.concat_ws(" ", ws))
 
 
@@ -106,7 +108,7 @@ def alpha_word_ratio(text: Column | str) -> Column:
     """Fraction of whitespace tokens containing at least one ASCII
     letter — the Gopher-rules alphabetic-word signal (documents of
     mostly numbers/symbols are low-quality training text)."""
-    ws = word_array(text)
+    ws = words(text)
     alpha = F.size(F.filter(ws, lambda w: w.rlike("[a-z]")))
     return alpha.cast("double") / F.greatest(F.size(ws), F.lit(1)).cast("double")
 
@@ -203,7 +205,7 @@ def bigram_array(text: Column | str) -> Column:
     array with its own shift. Both slice children and the zip lambda
     touch only direct children / lambda args, so cost is O(len) per row
     (the word split is evaluated a constant number of times)."""
-    ws = word_array(text)
+    ws = words(text)
     n1 = F.greatest(F.size(ws) - F.lit(1), F.lit(0))
     return F.zip_with(
         F.slice(ws, 1, n1),
@@ -228,7 +230,7 @@ def top_bigram_fraction(text: Column | str) -> Column:
     which at sf0.1 meant 394 s on one core. Stays one narrow scan with
     zero shuffle (an explode→groupBy rewrite would add one); at 100 TB
     this is a map-only column."""
-    n = F.size(word_array(text))
+    n = F.size(words(text))
     run = F.struct(
         F.lit(None).cast("string").alias("prev"),
         F.lit(0).alias("run"),

@@ -20,8 +20,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ironman_medallion_lakehouse_spark.functions.text import _let
-from ironman_medallion_lakehouse_spark.operators.dedup import words
+from ironman_medallion_lakehouse_spark.functions.text import _let, words
 
 
 def chunk_documents(

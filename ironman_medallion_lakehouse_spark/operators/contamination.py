@@ -42,7 +42,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ironman_medallion_lakehouse_spark.operators.dedup import token_hash_raw, words
+from ironman_medallion_lakehouse_spark.functions.text import words
+from ironman_medallion_lakehouse_spark.operators.dedup import token_hash_raw
 
 
 def _gram_hash_at(toks: Column, start: Column, n: int) -> Column:

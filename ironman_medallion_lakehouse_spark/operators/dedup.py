@@ -5,12 +5,17 @@ is designed for the 100 TB regime:
 
 - **exact_dedup**: content-hash groupBy — one shuffle on a 32-hex key,
   uniformly distributed by construction (no skew).
+- **token_sets**: the one token-set frame ``(id, toks)`` of the whole
+  near-dup family — each document is split and md5-hashed ONCE into a
+  sorted array of 60-bit token hashes (``token_hash_set``). MinHash,
+  both refines and the exact-set contraction all read it; a shingle
+  caller builds the same frame from its shingle array.
 - **minhash_signatures + lsh_candidate_pairs**: the scalable near-dup
   path. All-pairs Jaccard is O(n²); MinHash+LSH banding reduces it to
   one explode + k min-aggregations + b equi-joins on band keys. Only
   documents sharing a band bucket are ever paired.
-- **jaccard_refine**: exact token-set Jaccard over the LSH candidate
-  pairs only — never run all-pairs.
+- **jaccard_refine / containment_refine**: exact token-set scores over
+  the LSH candidate pairs only — never run all-pairs.
 - **simhash64**: vectorized Arrow/pandas UDF (the per-bit majority
   vote has no efficient Column-expression form); Hamming-adjacent
   buckets give another near-dup family.
@@ -26,14 +31,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructField, StructType
 
-
-def words(text: Column | str) -> Column:
-    t = F.col(text) if isinstance(text, str) else text
-    return F.split(F.lower(t), r"\s+")
-
-
-def word_set(text: Column | str) -> Column:
-    return F.array_distinct(words(text))
+from ironman_medallion_lakehouse_spark.functions.text import words
+from ironman_medallion_lakehouse_spark.session import shuffle_width
 
 
 def exact_dedup(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -83,53 +82,56 @@ def token_hash_raw(tok: Column) -> Column:
     return F.conv(F.substring(F.md5(tok), 1, 15), 16, 10).cast("bigint")
 
 
-def token_hash(tok: Column) -> Column:
-    """``token_hash_raw`` reduced mod p for the Carter-Wegman family.
-    One md5 per token TOTAL — the r3 form hashed md5(tok||'#j') per
-    permutation, 128× the string-hash work for the same Jaccard
-    estimator quality."""
-    return token_hash_raw(tok) % MINHASH_P
+def token_hash_set(tokens: Column) -> Column:
+    """The sorted ``token_hash_raw`` array of a token array's distinct
+    tokens — the one token-set form the signatures, both refines and
+    the exact-set contraction read. Each distinct token is md5'd once
+    per document; BIGINT sets intersect several× cheaper than strings
+    in the interpreted ``array_intersect``; and the sort makes equal
+    sets equal arrays, so the array itself is the contraction key. Two
+    distinct tokens of one document collide with probability ~2⁻⁶¹;
+    the oracles hash the same way, so results stay engine-exact."""
+    return F.sort_array(F.transform(F.array_distinct(tokens), token_hash_raw))
+
+
+def token_sets(
+    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
+) -> DataFrame:
+    """(id, toks): each document's word set as ``token_hash_set`` of
+    the whitespace tokenizer (``functions/text.words``) — the frame
+    every near-dup consumer below takes. Null text gives a null
+    ``toks``: no signature, never a pair. Another token family builds
+    the same frame from its own array, e.g. word 3-gram shingles:
+    ``docs.select(id, token_hash_set(shingles).alias("toks"))``."""
+    return docs.select(F.col(id_col), token_hash_set(words(text_col)).alias("toks"))
 
 
 def minhash_signatures(
-    docs: DataFrame,
-    text_col: str = "text",
+    sets: DataFrame,
     id_col: str = "doc_id",
     k: int = 128,
-    tokens: Column | None = None,
     with_size: bool = False,
 ) -> DataFrame:
-    """k-permutation MinHash over distinct tokens — word tokens by
-    default, or any caller-supplied distinct-token array expression via
-    ``tokens`` (e.g. distinct word 3-grams for shingle MinHash:
-    shingle Jaccard is order-sensitive, so reordered copies stop
-    looking like near-dups — the standard shingle→minhash→band
-    pipeline).
+    """k-permutation MinHash over a ``token_sets`` frame's ``toks``.
 
-    Signature element j = min over tokens of (a_j·h(tok) + b_j) mod p
-    (see ``minhash_coeffs``/``token_hash``): **zero shuffles** — all k
-    mins are computed map-side in one stage, as ONE aggregate fold
-    over the token hashes carrying a running-least k-vector (r15 —
-    measured faster than the k per-permutation transform+array_min
-    scans it replaces; see the kernel comment below). The token-hash
-    array is let-bound (functions/text._let) so the md5 pass runs ONCE
-    per row and the fold is pure BIGINT arithmetic over bound lambda
-    variables — interpreted HOFs re-evaluate outer *expressions* per
-    element (the r3 q47 lesson), which here would re-split and re-hash
-    the document k times. Documents with no tokens are excluded,
-    matching the explode/GROUP BY semantics the DuckDB oracle states.
+    Signature element j = min over tokens of (a_j·(h mod p) + b_j) mod
+    p (see ``minhash_coeffs``): **zero shuffles** — all k mins are
+    computed map-side in one stage, as ONE aggregate fold over the
+    token hashes carrying a running-least k-vector (r15 — measured
+    faster than the k per-permutation transform+array_min scans it
+    replaces; see the kernel comment below). The fold reads only
+    lambda variables — interpreted HOFs re-evaluate outer
+    *expressions* per element (the r3 q47 lesson). Documents with no
+    tokens are excluded, matching the explode/GROUP BY semantics the
+    DuckDB oracle states.
 
     The k=128 default matches ``lsh_candidate_pairs`` (32 bands × r=4),
     so the documented two-call pipeline works with defaults end-to-end.
 
     ``with_size`` (r14, opt-in — default schema unchanged) additionally
-    emits ``n_tok`` = the distinct-token count, read off the already-
-    materialized token-hash array for free; it feeds
+    emits ``n_tok`` = the distinct-token count; it feeds
     ``lsh_candidate_pairs``'s size-compatibility pre-filter.
     """
-    from ironman_medallion_lakehouse_spark.functions.text import _let
-
-    ws = word_set(text_col) if tokens is None else tokens
     coeffs = minhash_coeffs(k)
     # coefficient ARRAY LITERALS + a transform over permutation index,
     # not k per-coefficient subtrees: the unrolled form was a ~k·|doc
@@ -171,25 +173,22 @@ def minhash_signatures(
             ),
         )
 
-    if with_size:
-        with_sigs = docs.filter(F.size(ws) > 0).select(
-            F.col(id_col),
-            _let(
-                F.transform(ws, token_hash),
-                lambda h: F.struct(F.size(h).alias("n"), sigs(h).alias("s")),
-            ).alias("_x"),
-        )
-        return with_sigs.select(
-            F.col(id_col),
-            F.col("_x.n").alias("n_tok"),
-            *[F.col("_x.s")[j].alias(f"sig_{j}") for j in range(k)],
-        )
-    with_sigs = docs.filter(F.size(ws) > 0).select(
-        F.col(id_col),
-        _let(F.transform(ws, token_hash), sigs).alias("_sigs"),
+    toks = F.col("toks")
+    row = F.struct(
+        F.size(toks).alias("n_tok"),
+        sigs(F.transform(toks, lambda h: h % MINHASH_P)).alias("s"),
+    )
+    # token-less docs get no row. The guard sits inside an explode, not
+    # a Filter: Catalyst pushes a Filter on ``toks`` below the
+    # projection that builds a lazy frame's ``toks``, which then
+    # md5-hashes every token twice.
+    with_sigs = sets.select(
+        F.col(id_col), F.explode(F.when(F.size(toks) > 0, F.array(row))).alias("_x")
     )
     return with_sigs.select(
-        F.col(id_col), *[F.col("_sigs")[j].alias(f"sig_{j}") for j in range(k)]
+        F.col(id_col),
+        *([F.col("_x.n_tok").alias("n_tok")] if with_size else []),
+        *[F.col("_x.s")[j].alias(f"sig_{j}") for j in range(k)],
     )
 
 
@@ -270,8 +269,23 @@ def lsh_candidate_pairs(
     Requires signatures built ``with_size=True`` (the ``n_tok``
     column); callers consuming raw candidates (no refine) must leave
     it None — it changes the CANDIDATE set, not the refined one."""
+    return _band_pairs(
+        signatures, id_col, k, bands, max_bucket_size, size_threshold
+    ).distinct()
+
+
+def _band_pairs(
+    signatures: DataFrame,
+    id_col: str,
+    k: int | None,
+    bands: int,
+    max_bucket_size: int | None,
+    size_threshold: float | None,
+) -> DataFrame:
+    """``lsh_candidate_pairs`` before its distinct: one (id_a, id_b)
+    row per band bucket the two documents share."""
     if k is None:
-        k = sum(1 for f in signatures.schema.fields if f.name.startswith("sig_"))
+        k = _sig_width(signatures)
     r = k // bands
     if r < 1:
         raise ValueError(
@@ -328,12 +342,8 @@ def lsh_candidate_pairs(
             F.least(na, nb).cast("double")
             >= F.lit(float(size_threshold)) * F.greatest(na, nb).cast("double")
         )
-    return (
-        a.join(b, cond)
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b")
-        )
-        .distinct()
+    return a.join(b, cond).select(
+        F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b")
     )
 
 
@@ -381,37 +391,27 @@ def sig_agreement_filter(
     )
 
 
+def _paired_sets(candidates: DataFrame, sets: DataFrame, id_col: str) -> DataFrame:
+    """``candidates`` with each side's ``toks`` attached as ws_a/ws_b:
+    two broadcast-or-shuffle hash joins, O(candidates)."""
+    a = sets.select(F.col(id_col).alias("id_a"), F.col("toks").alias("ws_a"))
+    b = sets.select(F.col(id_col).alias("id_b"), F.col("toks").alias("ws_b"))
+    return candidates.join(a, "id_a").join(b, "id_b")
+
+
 def jaccard_refine(
     candidates: DataFrame,
-    docs: DataFrame,
-    text_col: str = "text",
+    sets: DataFrame,
     id_col: str = "doc_id",
     threshold: float = 0.5,
-    tokens: Column | None = None,
-    hashed_tokens: bool = False,
 ) -> DataFrame:
     """Exact token-set Jaccard over an LSH candidate-pair set — the
-    verify stage after ``lsh_candidate_pairs``. Two broadcast-or-shuffle
-    hash joins attach each side's token set to the (id_a, id_b) pairs;
-    cost is O(candidates), never all-pairs. Emits only pairs at or
-    above ``threshold`` with their exact score. ``tokens`` swaps the
-    default word set for any distinct-token expression (pass the SAME
-    expression used for the signatures — e.g. distinct word 3-grams
-    for the n-gram Jaccard family). For high thresholds put
-    ``sig_agreement_filter`` in front so the interpreted set
-    intersection only runs on near-certain pairs, and set
-    ``hashed_tokens`` to intersect 60-bit BIGINT token hashes
-    (``token_hash_raw``) instead of strings — the interpreted
-    ``array_intersect`` hash-set is several× cheaper on longs, and the
-    count is identical up to a ~2⁻⁶¹-probability hash collision (an
-    oracle replays the same hashes, so results stay engine-exact
-    either way)."""
-    tok_expr = word_set(text_col) if tokens is None else tokens
-    if hashed_tokens:
-        tok_expr = F.transform(tok_expr, token_hash_raw)
-    ws = docs.select(F.col(id_col), tok_expr.alias("ws"))
-    a = ws.select(F.col(id_col).alias("id_a"), F.col("ws").alias("ws_a"))
-    b = ws.select(F.col(id_col).alias("id_b"), F.col("ws").alias("ws_b"))
+    verify stage after ``lsh_candidate_pairs``, intersecting the
+    ``token_sets`` frame's BIGINT arrays (pass the SAME frame the
+    signatures came from). Cost is O(candidates), never all-pairs.
+    Emits only pairs at or above ``threshold`` with their exact score.
+    For loose banding put ``sig_agreement_filter`` in front so the
+    interpreted set intersection only runs on likely pairs."""
     sz_a, sz_b = F.size(F.col("ws_a")), F.size(F.col("ws_b"))
     # size-compatibility guard (r5): J = |∩|/|∪| ≤ min(|A|,|B|)/max(|A|,|B|),
     # so a pair whose sizes violate min ≥ t·max can NEVER reach the
@@ -429,30 +429,29 @@ def jaccard_refine(
     ).cast("double")
     guarded = F.when(size_ok, jac).otherwise(F.lit(-1.0))
     return (
-        candidates.join(a, "id_a")
-        .join(b, "id_b")
+        _paired_sets(candidates, sets, id_col)
         .select("id_a", "id_b", guarded.alias("jaccard"))
         .filter(F.col("jaccard") >= threshold)
     )
 
 
-def _set_rep_map(docs: DataFrame, text_col: str, id_col: str) -> DataFrame:
-    """(id, _rep): each document mapped to the min-id representative of
-    its exact distinct-token-set group — the contraction key shared by
-    near_dedup_groups and dedup_incoming. Token-less docs (null text)
-    never enter the signature stage, so the raw pipelines treat each
-    as a singleton — they get a per-doc sentinel key so contraction
-    can't merge them into one false group."""
+def _contracted(sets: DataFrame, id_col: str) -> DataFrame:
+    """``sets`` plus ``_rep``: each document's min-id representative of
+    its exact token-set group — the contraction shared by
+    near_dedup_groups and containment_pairs, keyed on ``toks`` itself.
+    Token-less docs (null text) never enter the signature stage, so the
+    raw pipelines treat each as a singleton; a per-doc sentinel key
+    keeps contraction from merging them into one false group.
+
+    The window's shuffle is an explicit-count repartition on ``toks``:
+    AQE would coalesce a plain window exchange over this small frame
+    onto 1-2 tasks, and the CPU-bound signature stage that reads its
+    checkpoint would run on those few tasks."""
     from pyspark.sql import Window
 
-    ws = word_set(text_col)
-    set_key = F.when(
-        F.size(ws) > 0, F.md5(F.concat_ws("|", F.array_sort(ws)))
-    ).otherwise(F.concat(F.lit("\0"), F.col(id_col).cast("string")))
-    return (
-        docs.select(F.col(id_col), set_key.alias("_sk"))
-        .withColumn("_rep", F.min(id_col).over(Window.partitionBy("_sk")))
-        .select(id_col, "_rep")
+    sentinel = F.when(F.size("toks") > 0, F.lit(None)).otherwise(F.col(id_col))
+    return sets.repartition(shuffle_width(sets), "toks").withColumn(
+        "_rep", F.min(id_col).over(Window.partitionBy("toks", sentinel))
     )
 
 
@@ -488,19 +487,19 @@ def near_dedup_groups(
     buckets, so collapsing d-fold duplicated sets divides their
     contribution by d² — and running exact dedup BEFORE near-dup is
     how a production pipeline sequences these stages anyway. One extra
-    skew-free shuffle on the uniform set-hash key buys it."""
+    skew-free shuffle on the token-set key buys it, and the one
+    tokenize-and-hash pass (``token_sets``) rides that checkpoint into
+    the signatures and the refine."""
     from pyspark.sql import Window
 
     from ironman_medallion_lakehouse_spark.operators.graph import (
         connected_components,
     )
 
-    doc_rep = _set_rep_map(docs, text_col, id_col).localCheckpoint(eager=True)
-    rep_docs = docs.join(
-        doc_rep.filter(F.col(id_col) == F.col("_rep")).select(id_col),
-        id_col,
-        "left_semi",
+    sets = _contracted(token_sets(docs, text_col, id_col), id_col).localCheckpoint(
+        eager=True
     )
+    reps = sets.filter(F.col(id_col) == F.col("_rep")).drop("_rep")
     # signatures materialize once: they feed both sides of the band
     # self-join, and an unmaterialized lineage recomputes per use.
     # with_size/size_threshold (r14): the refine keeps only J ≥ t and
@@ -509,17 +508,20 @@ def near_dedup_groups(
     # distinct and the refine's two joins — instead of only having
     # their intersect skipped inside the refine (provably
     # output-preserving; see lsh_candidate_pairs).
-    sigs = minhash_signatures(
-        rep_docs, text_col, id_col, k=k, with_size=True
-    ).localCheckpoint(eager=True)
-    cand = lsh_candidate_pairs(
-        sigs, id_col, k=k, bands=bands, size_threshold=threshold
+    sigs = minhash_signatures(reps, id_col, k=k, with_size=True).localCheckpoint(
+        eager=True
     )
-    pairs = jaccard_refine(
-        cand, rep_docs, text_col, id_col, threshold=threshold, hashed_tokens=True
+    # the candidate distinct is pinned to the session's width for the
+    # same reason as the contraction: the refine runs in its reduce
+    # stage, and AQE would coalesce that onto 1-2 tasks
+    cand = (
+        _band_pairs(sigs, id_col, k, bands, None, threshold)
+        .repartition(shuffle_width(docs), "id_a", "id_b")
+        .distinct()
     )
+    pairs = jaccard_refine(cand, reps, id_col, threshold=threshold)
     comp = connected_components(pairs)
-    assigned = doc_rep.join(comp, doc_rep["_rep"] == comp["node"], "left").select(
+    assigned = sets.join(comp, sets["_rep"] == comp["node"], "left").select(
         F.col(id_col),
         F.coalesce(F.col("component"), F.col("_rep")).alias("group_id"),
     )
@@ -711,7 +713,9 @@ def dedup_incoming(
     # exact wins the CASE priority either way, so pruning them from the
     # signature pass + band join is output-invariant and drops the
     # near-stage volume by exactly the batch's exact-dup rate
-    remaining = incoming.join(exact.select(id_col), id_col, "left_anti")
+    remaining = token_sets(
+        incoming.join(exact.select(id_col), id_col, "left_anti"), text_col, id_col
+    )
     # NOTE (r5, measured): the exact-set contraction that pays 3× in
     # near_dedup_groups was A/B-tested here and LOST — 5.7 s plain vs
     # 6.8 s contracted at sf0.1. The cross join already bounds work to
@@ -724,9 +728,11 @@ def dedup_incoming(
     # (provably output-preserving — the refine applies the same bound
     # per pair). Stored corpus_sigs built WITHOUT n_tok fall back to
     # the unsized path.
-    sig_new = minhash_signatures(remaining, text_col, id_col, k=k, with_size=True)
+    sig_new = minhash_signatures(remaining, id_col, k=k, with_size=True)
     if corpus_sigs is None:
-        corpus_sigs = minhash_signatures(corpus, text_col, id_col, k=k, with_size=True)
+        corpus_sigs = minhash_signatures(
+            token_sets(corpus, text_col, id_col), id_col, k=k, with_size=True
+        )
     sized = "n_tok" in corpus_sigs.columns
     cand = lsh_cross_candidates(
         sig_new if sized else sig_new.drop("n_tok"),
@@ -746,13 +752,15 @@ def dedup_incoming(
     # materialization costs ~1-2 s (q94 11.1 s vs 9.9 s, q94b 6.6 s vs
     # 4.2 s at sf0.1). Same family as the r5 contraction A/B above:
     # the band join bounds the work; don't pay to shrink its input.
-    lookup = incoming.select(id_col, text_col).unionByName(
-        corpus.select(id_col, text_col)
+    lookup = token_sets(
+        incoming.select(id_col, text_col).unionByName(corpus.select(id_col, text_col)),
+        text_col,
+        id_col,
     )
     # NOTE (r14, measured): materializing the tokenized union once
-    # (localCheckpoint of (id, hashed ws) fed to both refine sides via
-    # token_sets=) was A/B-tested and LOST — q94 9.5 → 11.9 s, q94b
-    # 4.8 → 7.4 s at sf0.1. Same family as the r5/r6 A/Bs above: the
+    # (localCheckpoint of the lookup frame fed to both refine sides)
+    # was A/B-tested and LOST — q94 9.5 → 11.9 s, q94b 4.8 → 7.4 s at
+    # sf0.1. Same family as the r5/r6 A/Bs above: the
     # two join sides' identical broadcast subtrees are exchange-reused
     # at runtime, so the "duplicate" tokenize is already computed only
     # once per broadcast, and the checkpoint just adds a blocking job.
@@ -760,10 +768,8 @@ def dedup_incoming(
         jaccard_refine(
             cand.withColumnsRenamed({"id_new": "id_a", "id_corpus": "id_b"}),
             lookup,
-            text_col,
             id_col,
             threshold=threshold,
-            hashed_tokens=True,
         )
         .select(F.col("id_a").alias(id_col))
         .distinct()
@@ -829,10 +835,12 @@ def update_dedup_groups(
     # band-join size pre-filter as near_dedup_groups/dedup_incoming —
     # the refine below keeps only J ≥ threshold
     sig_new = minhash_signatures(
-        new_docs, text_col, id_col, k=k, with_size=True
+        token_sets(new_docs, text_col, id_col), id_col, k=k, with_size=True
     ).localCheckpoint(eager=True)
     if corpus_sigs is None:
-        corpus_sigs = minhash_signatures(corpus, text_col, id_col, k=k, with_size=True)
+        corpus_sigs = minhash_signatures(
+            token_sets(corpus, text_col, id_col), id_col, k=k, with_size=True
+        )
     sized = "n_tok" in corpus_sigs.columns
     cross = lsh_cross_candidates(
         sig_new if sized else sig_new.drop("n_tok"),
@@ -853,12 +861,14 @@ def update_dedup_groups(
         )
         .distinct()
     )
-    lookup = new_docs.select(id_col, text_col).unionByName(
-        corpus.select(id_col, text_col)
+    lookup = token_sets(
+        new_docs.select(id_col, text_col).unionByName(corpus.select(id_col, text_col)),
+        text_col,
+        id_col,
     )
-    edges = jaccard_refine(
-        cand, lookup, text_col, id_col, threshold=threshold, hashed_tokens=True
-    ).select("id_a", "id_b")
+    edges = jaccard_refine(cand, lookup, id_col, threshold=threshold).select(
+        "id_a", "id_b"
+    )
     # contract corpus endpoints to their group labels (labels are each
     # group's min id, so component mins compose to the global min)
     m = groups.select(
@@ -1009,12 +1019,10 @@ def simhash64(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -
 
 def containment_refine(
     candidates: DataFrame,
-    docs: DataFrame,
-    text_col: str = "text",
+    sets: DataFrame,
     id_col: str = "doc_id",
     threshold: float = 0.95,
     jaccard_bar: float = 0.9,
-    hashed_tokens: bool = True,
 ) -> DataFrame:
     """Exact token-set CONTAINMENT over a candidate-pair set — Broder's
     asymmetric resemblance: C(A,B) = |A∩B| / |A|. Whole-document
@@ -1028,26 +1036,20 @@ def containment_refine(
     (id_a, id_b, containment, jaccard, subset_style) where
     ``subset_style`` marks the pairs Jaccard-based dedup (at
     ``jaccard_bar``) would NOT have caught — the operator's reason to
-    exist. Cost is O(candidates) — two hash joins, same shape as
-    ``jaccard_refine``; note the size-compatibility guard does NOT
-    apply here (small-in-large is the point, so no size ratio rules a
-    pair out). Candidate recall is the generator's: MinHash banding
-    recalls subset pairs down to J ≈ its s-curve floor, i.e. size
-    ratio ≥ θ for true subsets — pair it with loose banding (r=4), or
-    winnowing fingerprints for locality-based recall."""
-    tok_expr = word_set(text_col)
-    if hashed_tokens:
-        tok_expr = F.transform(tok_expr, token_hash_raw)
-    ws = docs.select(F.col(id_col), tok_expr.alias("ws"))
-    a = ws.select(F.col(id_col).alias("id_a"), F.col("ws").alias("ws_a"))
-    b = ws.select(F.col(id_col).alias("id_b"), F.col("ws").alias("ws_b"))
+    exist. It intersects the ``token_sets`` frame's arrays. Cost is
+    O(candidates) — two hash joins, same shape as ``jaccard_refine``;
+    note the size-compatibility guard does NOT apply here
+    (small-in-large is the point, so no size ratio rules a pair out).
+    Candidate recall is the generator's: MinHash banding recalls
+    subset pairs down to J ≈ its s-curve floor, i.e. size ratio ≥ θ
+    for true subsets — pair it with loose banding (r=4), or winnowing
+    fingerprints for locality-based recall."""
     sz_a, sz_b = F.size(F.col("ws_a")), F.size(F.col("ws_b"))
     inter = F.size(F.array_intersect(F.col("ws_a"), F.col("ws_b")))
     cont = inter.cast("double") / F.least(sz_a, sz_b).cast("double")
     jac = inter.cast("double") / (sz_a + sz_b - inter).cast("double")
     return (
-        candidates.join(a, "id_a")
-        .join(b, "id_b")
+        _paired_sets(candidates, sets, id_col)
         .select(
             "id_a",
             "id_b",
@@ -1060,7 +1062,6 @@ def containment_refine(
         .filter(F.col("containment") >= threshold)
         .withColumn("subset_style", F.col("jaccard") < F.lit(jaccard_bar))
     )
-
 
 
 def containment_pairs(
@@ -1094,7 +1095,7 @@ def containment_pairs(
       subset_style = (1 < jaccard_bar) = false — emitted directly as
       all C(d,2) ordered member pairs, no kernel evaluation needed.
     - token-less docs carry a per-doc sentinel key in
-      ``_set_rep_map`` (singleton groups), matching the raw
+      ``_contracted`` (singleton groups), matching the raw
       pipeline's behavior of never pairing them.
 
     Why it matters at scale: the refine kernel is the fattest stage
@@ -1103,8 +1104,8 @@ def containment_pairs(
     containment (small-in-large is the signal), so collapsing d-fold
     duplicated sets is the one lever that cuts candidate volume — by
     d² inside each duplicated set's bucket contribution — without
-    touching recall. One extra skew-free shuffle on the uniform
-    set-md5 key buys it; ``contract=False`` keeps the raw composition
+    touching recall. One extra skew-free shuffle on the token-set key
+    buys it; ``contract=False`` keeps the raw composition
     for A/B verification (both paths share one oracle)."""
     # the intra-group arm emits containment=1 pairs unconditionally,
     # which is only output-invariant vs the raw composition when 1
@@ -1116,25 +1117,20 @@ def containment_pairs(
             f"threshold={threshold} > 1 can match no pair; the contracted "
             "path would still emit intra-group containment=1 pairs — refusing"
         )
+    sets = token_sets(docs, text_col, id_col)
     if not contract:
-        sigs = minhash_signatures(docs, text_col, id_col, k=k)
+        sigs = minhash_signatures(sets, id_col, k=k)
         cand = lsh_candidate_pairs(sigs, id_col, k=k, bands=bands)
         return containment_refine(
-            cand, docs, text_col, id_col, threshold=threshold, jaccard_bar=jaccard_bar
+            cand, sets, id_col, threshold=threshold, jaccard_bar=jaccard_bar
         )
 
-    doc_rep = _set_rep_map(docs, text_col, id_col).localCheckpoint(eager=True)
-    rep_docs = docs.join(
-        doc_rep.filter(F.col(id_col) == F.col("_rep")).select(id_col),
-        id_col,
-        "left_semi",
-    )
-    sigs = minhash_signatures(rep_docs, text_col, id_col, k=k).localCheckpoint(
-        eager=True
-    )
+    doc_rep = _contracted(sets, id_col).localCheckpoint(eager=True)
+    reps = doc_rep.filter(F.col(id_col) == F.col("_rep")).drop("_rep")
+    sigs = minhash_signatures(reps, id_col, k=k).localCheckpoint(eager=True)
     cand = lsh_candidate_pairs(sigs, id_col, k=k, bands=bands)
     rep_pairs = containment_refine(
-        cand, rep_docs, text_col, id_col, threshold=threshold, jaccard_bar=jaccard_bar
+        cand, reps, id_col, threshold=threshold, jaccard_bar=jaccard_bar
     )
     # expand inter-group rep pairs to member pairs (min-id canonical)
     ma = doc_rep.select(F.col(id_col).alias("_ma"), F.col("_rep").alias("id_a"))

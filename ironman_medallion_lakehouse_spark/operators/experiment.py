@@ -29,6 +29,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ironman_medallion_lakehouse_spark.session import shuffle_width
+
 
 def cuped_adjusted_means(
     units: DataFrame,
@@ -803,17 +805,6 @@ def mann_whitney_from_value_counts(per_value: DataFrame) -> DataFrame:
 # Poisson(1) inverse-CDF thresholds on the [0, 1M) md5-uniform grid:
 # weight w = #{thresholds <= h}; integer literals shared verbatim with
 # every SQL oracle so both engines draw identical weights.
-def _shuffle_partitions_of(df) -> int:
-    """spark.sql.shuffle.partitions as an int, tolerating platforms
-    where the conf is non-numeric ('auto' under Databricks-managed AQE
-    — ADVICE r7 item 4): fall back to the input's own parallelism,
-    bounded below so a coalesced scan still fans out."""
-    try:
-        return int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200"))
-    except ValueError:
-        return max(df.rdd.getNumPartitions(), 32)
-
-
 POISSON1_THRESHOLDS = (367879, 735758, 919698, 981011, 996340, 999405, 999916, 999989)
 
 
@@ -878,7 +869,7 @@ def poisson_bootstrap_mean_diff(
     # handful of tasks (measured: 3 tasks -> 412 s vs 32 -> ~3 s at 8x
     # sf0.1). Shuffling the slim base costs 1/(R+2) of the expanded
     # volume and pins the expansion stage at the configured width.
-    base = base.repartition(_shuffle_partitions_of(df))
+    base = base.repartition(shuffle_width(df))
     reps = base.select(
         "_g",
         "_x",

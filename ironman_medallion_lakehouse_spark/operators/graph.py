@@ -79,6 +79,7 @@ def _union_find_local(edges: list[tuple], spark, id_type) -> DataFrame:
     contract to the distributed path. ``id_type`` pins the output
     schema to the input's id type (inference would widen int32 ids to
     bigint and break on an empty edge set)."""
+    import pandas as pd
     from pyspark.sql.types import StructField, StructType
 
     schema = StructType(
@@ -107,8 +108,13 @@ def _union_find_local(edges: list[tuple], spark, id_type) -> DataFrame:
         r = find(n)
         if r not in comp_min or n < comp_min[r]:
             comp_min[r] = n
-    rows = [(n, comp_min[find(n)]) for n in parent]
-    return spark.createDataFrame(rows, schema)
+    nodes = list(parent)
+    # a pandas frame goes through Arrow in one batch; a list of tuples
+    # is pickled row by row through a Python worker
+    labels = pd.DataFrame(
+        {"node": nodes, "component": [comp_min[find(n)] for n in nodes]}
+    )
+    return spark.createDataFrame(labels, schema)
 
 
 def connected_components(

@@ -71,13 +71,12 @@ def pack_sequences(
     from ironman_medallion_lakehouse_spark.functions.text import (
         whitespace_token_count,
     )
+    from ironman_medallion_lakehouse_spark.session import shuffle_width
 
     n_tok = (tokens if tokens is not None else whitespace_token_count(text_col)).cast(
         "bigint"
     )
-    nr = num_ranges or int(
-        docs.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
-    )
+    nr = num_ranges or shuffle_width(docs)
     d = (
         docs.select(F.col(id_col), n_tok.alias("n_tokens"))
         .repartitionByRange(nr, F.col(id_col))

@@ -149,7 +149,8 @@ def dsir_logweights(
     exact integer×decimal sum — order-free across partitions and
     engines (the q98 policy); ln's last-ulp wobble is absorbed by the
     6-decimal rounding."""
-    from ironman_medallion_lakehouse_spark.operators.dedup import token_hash_raw, words
+    from ironman_medallion_lakehouse_spark.functions.text import words
+    from ironman_medallion_lakehouse_spark.operators.dedup import token_hash_raw
 
     tf = docs.select(
         F.col(id_col),

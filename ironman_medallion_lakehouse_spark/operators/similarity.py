@@ -1189,10 +1189,8 @@ def feature_hash_vectors(
     (integer sums → one sqrt → one IEEE divide, no decimal absorb
     anywhere upstream — pre-gated bit-exact vs DuckDB at
     sf0.001/0.01/0.1 by the r13 rounds probe, now in git history)."""
-    from ironman_medallion_lakehouse_spark.operators.dedup import (
-        token_hash_raw,
-        words,
-    )
+    from ironman_medallion_lakehouse_spark.functions.text import words
+    from ironman_medallion_lakehouse_spark.operators.dedup import token_hash_raw
 
     tf = docs.select(
         F.col(id_col), F.explode(words(text_col)).alias("tok")

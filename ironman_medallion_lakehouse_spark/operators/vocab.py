@@ -45,6 +45,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from ironman_medallion_lakehouse_spark.functions.text import words
+
 END = "</w>"
 
 # learn_bpe_batched checkpoints the symbol table after this many merge
@@ -60,7 +62,7 @@ def word_counts(docs: DataFrame, text_col: str = "text") -> DataFrame:
 
     Kept with no package caller: it feeds ``learn_bpe`` in
     tests/test_vocab.py."""
-    w = F.explode(F.split(F.lower(F.col(text_col)), r"\s+")).alias("word")
+    w = F.explode(words(text_col)).alias("word")
     return (
         docs.select(w)
         .filter(F.col("word") != "")
@@ -373,7 +375,7 @@ def apply_bpe(
     tokenizes with ``bpe_tokens_expr``."""
     exploded = docs.select(
         F.col(id_col),
-        F.posexplode(F.split(F.lower(F.col(text_col)), r"\s+")).alias("pos", "word"),
+        F.posexplode(words(text_col)).alias("pos", "word"),
     ).filter(F.col("word") != "")
     vocab = exploded.select("word").distinct()
     vocab = vocab.select("word", _initial_symbols(F.col("word")).alias("syms"))
@@ -411,7 +413,7 @@ def bpe_tokens_expr(text, merges: list[tuple[str, str]]):
     use ``apply_bpe`` (distinct-words + broadcast join); this form is
     for bounded literal vocabularies and oracle-checkable surfaces.
     ``bpe_tokens_sql`` builds the DuckDB mirror from the same list."""
-    words = F.filter(F.split(F.lower(text), r"\s+"), lambda w: w != F.lit(""))
+    ws = F.filter(words(text), lambda w: w != F.lit(""))
 
     def _tok(w):
         syms = F.concat(F.split(w, ""), F.array(F.lit(END)))
@@ -419,7 +421,7 @@ def bpe_tokens_expr(text, merges: list[tuple[str, str]]):
             syms = _merge_fold(syms, a, b)
         return syms
 
-    return F.flatten(F.transform(words, _tok))
+    return F.flatten(F.transform(ws, _tok))
 
 
 def learn_bpe_replay_sql(

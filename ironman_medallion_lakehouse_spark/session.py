@@ -99,6 +99,18 @@ def get_spark(
     return builder.getOrCreate()
 
 
+def shuffle_width(df) -> int:
+    """spark.sql.shuffle.partitions of ``df``'s session as an int.
+
+    Some platforms set the conf to a non-numeric value ('auto' under
+    Databricks-managed AQE); then the width falls back to the input's
+    own parallelism, bounded below so a coalesced scan still fans out."""
+    try:
+        return int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200"))
+    except ValueError:
+        return max(df.rdd.getNumPartitions(), 32)
+
+
 def ensure_package_on_executors(spark: SparkSession) -> None:
     """Ship this package to executor Python workers via addPyFile.
 

@@ -154,7 +154,7 @@ def streaming_dedup_ingest(
             kept = batch_df  # bootstrap batch founds the corpus
         kept = kept.localCheckpoint(eager=True)  # read by both merges below
         _retrying(lambda: store.merge_insert_only(kept, corpus_table, keys=[id_col]))
-        sigs = D.minhash_signatures(kept, text_col, id_col, k=k)
+        sigs = D.minhash_signatures(D.token_sets(kept, text_col, id_col), id_col, k=k)
         _retrying(lambda: store.merge_insert_only(sigs, sig_table, keys=[id_col]))
         hashes = D.exact_hash_frame(kept, text_col, id_col)
         _retrying(lambda: store.merge_insert_only(hashes, hash_table, keys=[id_col]))

@@ -70,7 +70,7 @@ _LSH_K, _LSH_BANDS = 128, 32
 _LSH_R = _LSH_K // _LSH_BANDS
 
 # DuckDB replay of the Carter-Wegman MinHash family
-# (operators/dedup.minhash_coeffs / token_hash): one md5 per token →
+# (operators/dedup.minhash_coeffs / minhash_signatures): one md5 per token →
 # 60-bit hash → per-permutation (a_j·h + b_j) mod p, all exact integer
 # arithmetic on both engines. The coefficients come from the SAME
 # python helper the Spark operator uses — one source of truth.
@@ -140,9 +140,10 @@ def q43_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     r=4 banding + refine stage is what keeps the pair join bounded on a
     real corpus, where near-dup density is sparse."""
     t = load_tables(spark, sf_dir, "documents")
-    sigs = D.minhash_signatures(t["documents"], k=_LSH_K)
+    sets = D.token_sets(t["documents"])
+    sigs = D.minhash_signatures(sets, k=_LSH_K)
     cand = D.lsh_candidate_pairs(sigs, k=_LSH_K, bands=_LSH_BANDS)
-    return D.jaccard_refine(cand, t["documents"], threshold=0.5)
+    return D.jaccard_refine(cand, sets, threshold=0.5)
 
 
 # q83 closes the near-dup pipeline end-to-end: pairs are only EDGES —
@@ -174,9 +175,9 @@ _Q83_BANDS = 16
 # pair-for-pair identical) — the interpreted set intersection it was
 # shielding became cheap when refine moved to 60-bit token hashes, and
 # this corpus's candidate bulk is only 1.3× its survivor set. The
-# pattern still pays when tokens are long strings or banding is loose
-# (q43's 0.42-threshold regime) — that configuration is exactly what
-# q90 exercises and oracles.
+# pattern still pays when banding is loose (q43's 0.42-threshold
+# regime) — that configuration is exactly what q90 exercises and
+# oracles.
 _Q83_MIN_AGREE = 0.72
 _Q83_AGREE_COMPONENTS = 32
 # flat list_filter form — a long `+` chain is a deep binder recursion
@@ -300,7 +301,7 @@ def q147_incremental_group_maintenance(spark: SparkSession, sf_dir: str) -> Data
         batches[0], k=_LSH_K, bands=_Q83_BANDS, threshold=_Q83_THRESHOLD
     ).select("doc_id", "group_id")
     corpus = batches[0]
-    sigs = D.minhash_signatures(batches[0], k=_LSH_K).localCheckpoint()
+    sigs = D.minhash_signatures(D.token_sets(batches[0]), k=_LSH_K).localCheckpoint()
     for b in batches[1:]:
         groups = D.update_dedup_groups(
             groups,
@@ -312,7 +313,9 @@ def q147_incremental_group_maintenance(spark: SparkSession, sf_dir: str) -> Data
             corpus_sigs=sigs,
         ).localCheckpoint()  # bound lineage across maintenance steps
         corpus = corpus.unionByName(b).localCheckpoint()
-        sigs = sigs.unionByName(D.minhash_signatures(b, k=_LSH_K)).localCheckpoint()
+        sigs = sigs.unionByName(
+            D.minhash_signatures(D.token_sets(b), k=_LSH_K)
+        ).localCheckpoint()
     w = Window.partitionBy("group_id")
     return groups.select(
         "doc_id",
@@ -332,11 +335,11 @@ def q147_incremental_group_maintenance(spark: SparkSession, sf_dir: str) -> Data
 #   over-cap buckets at sf0.01, 733 at sf0.1 — the cap provably
 #   fires; the max bucket holds 317 resp. 3132 docs, i.e. a single
 #   uncapped bucket would contribute up to m² ≈ 10M join rows).
-# - STRING-token exact Jaccard is the expensive interpreted stage the
+# - the exact-Jaccard set intersection is the interpreted stage the
 #   signature-agreement prefilter (≥25% of 32 components, 2.9σ below
-#   the 0.5 refine bar) exists to shield — q83 dropped the prefilter
-#   because its hashed-BIGINT refine made it net-negative; HERE tokens
-#   stay strings, the shield pays.
+#   the 0.5 refine bar) shields; loose banding admits the
+#   mid-similarity candidate bulk it rejects (q83's 0.9 banding does
+#   not, so q83 dropped the prefilter).
 _Q90_CAP, _Q90_MIN_AGREE, _Q90_THRESHOLD = 16, 0.25, 0.5
 
 
@@ -390,19 +393,20 @@ def q90_lsh_capped_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     armed: MinHash (k=128) → LSH banding (32×r=4) with
     ``max_bucket_size=16`` dropping mega-buckets before the self-join
     → signature-agreement prefilter (≥8 of 32 components) shielding
-    the interpreted STRING-set intersection → exact Jaccard ≥ 0.5.
+    the interpreted set intersection → exact Jaccard ≥ 0.5.
     Semantics note: the cap trades recall inside mega-clusters for a
     bounded join (dropped docs usually still pair through their other
     31 bands) — deterministic, so the oracle replays it row-exactly."""
     t = load_tables(spark, sf_dir, "documents")
-    sigs = D.minhash_signatures(t["documents"], k=_LSH_K).localCheckpoint(eager=True)
+    sets = D.token_sets(t["documents"])
+    sigs = D.minhash_signatures(sets, k=_LSH_K).localCheckpoint(eager=True)
     cand = D.lsh_candidate_pairs(
         sigs, k=_LSH_K, bands=_LSH_BANDS, max_bucket_size=_Q90_CAP
     )
     cand = D.sig_agreement_filter(
         cand, sigs, min_fraction=_Q90_MIN_AGREE, components=_Q83_AGREE_COMPONENTS
     )
-    return D.jaccard_refine(cand, t["documents"], threshold=_Q90_THRESHOLD)
+    return D.jaccard_refine(cand, sets, threshold=_Q90_THRESHOLD)
 
 
 # q85 winnowing params: character-8-gram rolling hashes, window 4
@@ -601,12 +605,11 @@ def q88_cms_frequency(spark: SparkSession, sf_dir: str) -> DataFrame:
     — estimates hash-match exactly, alongside the exact counts they
     must dominate. At 100 TB: one explode+aggregation over tokens,
     ever; every coarser frequency question is counter-row algebra."""
-    from ironman_medallion_lakehouse_spark.functions.text import word_array
     from ironman_medallion_lakehouse_spark.operators import sketches as SK
 
     t = load_tables(spark, sf_dir, "documents")
     toks = t["documents"].select(
-        "lang", F.explode(word_array("text")).alias("tok")
+        "lang", F.explode(T.words("text")).alias("tok")
     )
     fine = SK.cms_sketch(toks, ["lang"], "tok")
     glob = SK.cms_rollup(fine, [])
@@ -1126,9 +1129,7 @@ def q47_text_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
     # identical and the oracle is untouched. Wordless docs fall out of
     # the explode and re-enter via the left join's coalesce (size 0,
     # md5 of the empty join).
-    words_arr = F.filter(
-        F.split(F.lower(F.col("text")), r"\s+"), lambda w: w != F.lit("")
-    )
+    words_arr = F.filter(T.words("text"), lambda w: w != F.lit(""))
     ex = d.select(F.col("doc_id"), F.posexplode(words_arr).alias("_pos", "_w"))
     word_toks = (
         ex.select(F.col("_w")).distinct().select(
@@ -1226,7 +1227,7 @@ def q144_bpe_learn(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("doc_id") % 3 == 0)
         .select(
             F.explode(
-                F.slice(F.split(F.lower(F.col("text")), r"\s+"), 1, 8)
+                F.slice(T.words("text"), 1, 8)
             ).alias("word")
         )
         .filter(F.col("word") != "")

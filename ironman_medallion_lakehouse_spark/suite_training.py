@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ironman_medallion_lakehouse_spark.functions import text as T
 from ironman_medallion_lakehouse_spark.operators import dedup as D
 from ironman_medallion_lakehouse_spark.operators import ranking as R
 from ironman_medallion_lakehouse_spark.operators import sampling as SA
@@ -580,9 +581,10 @@ def _q94_corpus_sigs_path(sf_dir: str, k: int = 128) -> str:
     by a fingerprint of (a) the source parquet (path+mtime+size — the
     driver rebuilds /root/testdata between rounds) and (b) the
     signature-generation CODE AND PARAMETERS: k plus the source text of
-    ``minhash_signatures`` and its coefficient table, so a change to
-    minhash width, tokenization, or hashing can never serve stale
-    cached signatures (ADVICE r6 item 3)."""
+    ``minhash_signatures``, its coefficient table and the token-set
+    frame it folds over (tokenizer, token hash, ``token_sets``), so a
+    change to minhash width, tokenization, or hashing can never serve
+    stale cached signatures (ADVICE r6 item 3)."""
     import hashlib
     import inspect
     import os
@@ -599,10 +601,17 @@ def _q94_corpus_sigs_path(sf_dir: str, k: int = 128) -> str:
         for p in parts
         if os.path.exists(p)
     )
-    code = (
-        inspect.getsource(D.minhash_signatures)
-        + inspect.getsource(D.minhash_coeffs)
-        + inspect.getsource(D.exact_hash_frame)
+    code = "".join(
+        inspect.getsource(f)
+        for f in (
+            D.minhash_signatures,
+            D.minhash_coeffs,
+            D.exact_hash_frame,
+            D.token_sets,
+            D.token_hash_set,
+            D.token_hash_raw,
+            T.words,
+        )
     )
     stamp += f";k={k};code={hashlib.md5(code.encode()).hexdigest()}"
     h = hashlib.md5(stamp.encode()).hexdigest()[:12]
@@ -665,7 +674,9 @@ def q94b_incremental_dedup_prepared(spark: SparkSession, sf_dir: str) -> DataFra
     # dedup_incoming's size-compatibility band-join pre-filter engages
     # on the prepared path too (the cache key hashes the signature
     # code, so the schema change self-invalidates old caches)
-    sigs = _cache("", lambda: D.minhash_signatures(corpus, with_size=True))
+    sigs = _cache(
+        "", lambda: D.minhash_signatures(D.token_sets(corpus), with_size=True)
+    )
     hashes = _cache("_h", lambda: D.exact_hash_frame(corpus))
     return D.dedup_incoming(
         incoming,
@@ -1632,7 +1643,7 @@ def q135_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     t = load_tables(spark, sf_dir, "documents")
     toks = t["documents"].select(
-        "source", F.explode(D.word_set("text")).alias("token")
+        "source", F.explode(F.array_distinct(T.words("text"))).alias("token")
     )
     return pairwise_overlap(toks, "source", "token")
 

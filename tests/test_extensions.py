@@ -48,25 +48,26 @@ def test_ngram_minhash_is_order_sensitive(spark):
     3-gram shingle MinHash + shingle-Jaccard refine rejects it while
     keeping the genuine one-word-edit near-dup."""
     docs = _docs(spark)
-    toks = _word_3grams()
-    sigs = D.minhash_signatures(docs, k=8, tokens=toks)
+    shingles = docs.select("doc_id", D.token_hash_set(_word_3grams()).alias("toks"))
+    sigs = D.minhash_signatures(shingles, k=8)
     # r=1 banding: the one-word-edit pair sits at shingle-Jaccard 0.4,
     # where r=2 band collision is a coin flip — recall-friendly banding
     # keeps the test about ORDER sensitivity, not banding probability
     cand = D.lsh_candidate_pairs(sigs, k=8, bands=8)
     refined = {
         (r.id_a, r.id_b): r.jaccard
-        for r in D.jaccard_refine(cand, docs, threshold=0.4, tokens=toks).collect()
+        for r in D.jaccard_refine(cand, shingles, threshold=0.4).collect()
     }
     assert refined[(1, 2)] == 1.0  # exact dup: all 3-grams shared
     assert (1, 3) in refined  # one-word edit keeps most 3-grams
     assert (1, 5) not in refined  # permuted doc shares NO 3-gram
     # contrast: word-set refine scores the permuted doc 1.0
+    word_sets = D.token_sets(docs)
     word_refined = {
         (r.id_a, r.id_b): r.jaccard
         for r in D.jaccard_refine(
-            D.lsh_candidate_pairs(D.minhash_signatures(docs, k=8), k=8, bands=4),
-            docs,
+            D.lsh_candidate_pairs(D.minhash_signatures(word_sets, k=8), k=8, bands=4),
+            word_sets,
             threshold=0.4,
         ).collect()
     }
@@ -75,7 +76,7 @@ def test_ngram_minhash_is_order_sensitive(spark):
 
 def test_minhash_lsh_finds_near_dups(spark):
     docs = _docs(spark)
-    sigs = D.minhash_signatures(docs, k=8)
+    sigs = D.minhash_signatures(D.token_sets(docs), k=8)
     assert len(sigs.columns) == 9  # doc_id + 8 signature elements
     pairs = {(r.id_a, r.id_b) for r in D.lsh_candidate_pairs(sigs, k=8, bands=4).collect()}
     # identical docs always collide in every band

@@ -161,7 +161,7 @@ def test_lsh_max_bucket_size_caps_hot_buckets(spark):
         Row(doc_id=201, text="rare pair one two three four five six seven"),
     ]
     docs = spark.createDataFrame(rows)
-    sigs = D.minhash_signatures(docs, k=8)
+    sigs = D.minhash_signatures(D.token_sets(docs), k=8)
     uncapped = D.lsh_candidate_pairs(sigs, k=8, bands=4).count()
     capped_df = D.lsh_candidate_pairs(sigs, k=8, bands=4, max_bucket_size=10)
     capped_pairs = {(r.id_a, r.id_b) for r in capped_df.collect()}
@@ -184,7 +184,9 @@ def test_q90_cap_provably_fires_on_driver_corpus(spark):
     from ironman_medallion_lakehouse_spark.session import load_tables
 
     docs = load_tables(spark, "/root/testdata/sf0.01", "documents")["documents"]
-    sigs = D.minhash_signatures(docs, k=SE._LSH_K).localCheckpoint(eager=True)
+    sigs = D.minhash_signatures(D.token_sets(docs), k=SE._LSH_K).localCheckpoint(
+        eager=True
+    )
     r = SE._LSH_K // SE._LSH_BANDS
     band_cols = [
         F.struct(
@@ -297,6 +299,7 @@ def test_bands_dial_recall_collision_ab(spark):
     from ironman_medallion_lakehouse_spark.operators.dedup import (
         lsh_cross_candidates,
         minhash_signatures,
+        token_sets,
     )
 
     theory = lambda j, r, b: 1.0 - (1.0 - j**r) ** b
@@ -315,8 +318,8 @@ def test_bands_dial_recall_collision_ab(spark):
         "hi": (new_hi, corp_hi),
         "lo": (new_lo, corp_lo),
     }.items():
-        sn = minhash_signatures(new, k=128)
-        sc = minhash_signatures(corp, k=128)
+        sn = minhash_signatures(token_sets(new), k=128)
+        sc = minhash_signatures(token_sets(corp), k=128)
         for bands in (16, 8):
             got = {
                 (r.id_new, r.id_corpus)
@@ -343,6 +346,7 @@ def test_dedup_incoming_bands_dial_on_stored_sigs(spark):
         dedup_incoming,
         exact_hash_frame,
         minhash_signatures,
+        token_sets,
     )
 
     corp_rows = [
@@ -358,7 +362,7 @@ def test_dedup_incoming_bands_dial_on_stored_sigs(spark):
     ]
     corpus = spark.createDataFrame(corp_rows, "doc_id long, text string")
     incoming = spark.createDataFrame(inc_rows, "doc_id long, text string")
-    sigs = minhash_signatures(corpus)  # stored once, k=128
+    sigs = minhash_signatures(token_sets(corpus))  # stored once, k=128
     hashes = exact_hash_frame(corpus)
     for bands in (16, 8):
         out = {
@@ -403,6 +407,7 @@ def test_cross_candidates_grouped_form_matches_row_join(spark):
         _sig_width,
         lsh_cross_candidates,
         minhash_signatures,
+        token_sets,
     )
 
     # overlapping token sets so several docs share several band buckets,
@@ -414,8 +419,8 @@ def test_cross_candidates_grouped_form_matches_row_join(spark):
                 for j in range(10)]
     corpus = spark.createDataFrame(corp_rows, "doc_id long, text string")
     incoming = spark.createDataFrame(inc_rows, "doc_id long, text string")
-    sig_c = minhash_signatures(corpus)
-    sig_n = minhash_signatures(incoming)
+    sig_c = minhash_signatures(token_sets(corpus))
+    sig_n = minhash_signatures(token_sets(incoming))
 
     def old_form(max_bucket_size):
         k = _sig_width(sig_n)
@@ -497,6 +502,7 @@ def test_size_threshold_prefilter_is_refine_invariant(spark):
         jaccard_refine,
         lsh_candidate_pairs,
         minhash_signatures,
+        token_sets,
     )
 
     rows = []
@@ -511,8 +517,9 @@ def test_size_threshold_prefilter_is_refine_invariant(spark):
     rows.append((50, " ".join(f"tok{t}" for t in range(20))))
     docs = spark.createDataFrame(rows, "doc_id long, text string")
 
-    sigs_plain = minhash_signatures(docs, k=8)
-    sigs_sized = minhash_signatures(docs, k=8, with_size=True)
+    sets = token_sets(docs)
+    sigs_plain = minhash_signatures(sets, k=8)
+    sigs_sized = minhash_signatures(sets, k=8, with_size=True)
     t = 0.9
     cand_plain = lsh_candidate_pairs(sigs_plain, k=8, bands=8)
     cand_sized = lsh_candidate_pairs(sigs_sized, k=8, bands=8, size_threshold=t)
@@ -522,11 +529,11 @@ def test_size_threshold_prefilter_is_refine_invariant(spark):
     assert len(sized_pairs) < len(plain_pairs)  # the fixture prunes something
     ref_plain = {
         (r.id_a, r.id_b, r.jaccard)
-        for r in jaccard_refine(cand_plain, docs, threshold=t, hashed_tokens=True).collect()
+        for r in jaccard_refine(cand_plain, sets, threshold=t).collect()
     }
     ref_sized = {
         (r.id_a, r.id_b, r.jaccard)
-        for r in jaccard_refine(cand_sized, docs, threshold=t, hashed_tokens=True).collect()
+        for r in jaccard_refine(cand_sized, sets, threshold=t).collect()
     }
     assert ref_plain == ref_sized
     assert len(ref_plain) > 0
@@ -538,20 +545,21 @@ def test_size_threshold_prefilter_is_refine_invariant(spark):
 
 
 def test_minhash_fold_kernel_matches_per_permutation_form(spark):
-    """r15 kernel pin: minhash_signatures now computes all k mins as
-    ONE aggregate fold with a running-least k-vector; this replays the
-    r14 per-permutation transform+array_min form inline and requires
+    """r15 kernel pin: minhash_signatures computes all k mins as ONE
+    aggregate fold with a running-least k-vector over the token_sets
+    frame; this replays the r14 per-permutation transform+array_min
+    form inline, straight from the distinct word strings, and requires
     bit-identical signatures (incl. single-token docs, where the fold's
     init sentinel must always lose to the first real value)."""
     from pyspark.sql import functions as F
 
-    from ironman_medallion_lakehouse_spark.functions.text import _let
+    from ironman_medallion_lakehouse_spark.functions.text import _let, words
     from ironman_medallion_lakehouse_spark.operators.dedup import (
         MINHASH_P,
         minhash_coeffs,
         minhash_signatures,
-        token_hash,
-        word_set,
+        token_hash_raw,
+        token_sets,
     )
 
     rows = [
@@ -563,12 +571,12 @@ def test_minhash_fold_kernel_matches_per_permutation_form(spark):
     ]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
     k = 32
-    got = minhash_signatures(docs, k=k).orderBy("doc_id").collect()
+    got = minhash_signatures(token_sets(docs), k=k).orderBy("doc_id").collect()
 
     coeffs = minhash_coeffs(k)
     a_arr = F.array(*[F.lit(a) for a, _ in coeffs])
     b_arr = F.array(*[F.lit(b) for _, b in coeffs])
-    ws = word_set("text")
+    ws = F.array_distinct(words("text"))
 
     def old_sigs(hashes):
         def one_sig(j):
@@ -586,7 +594,12 @@ def test_minhash_fold_kernel_matches_per_permutation_form(spark):
 
     want = (
         docs.filter(F.size(ws) > 0)
-        .select(F.col("doc_id"), _let(F.transform(ws, token_hash), old_sigs).alias("_s"))
+        .select(
+            F.col("doc_id"),
+            _let(
+                F.transform(ws, lambda t: token_hash_raw(t) % MINHASH_P), old_sigs
+            ).alias("_s"),
+        )
         .select(F.col("doc_id"), *[F.col("_s")[j].alias(f"sig_{j}") for j in range(k)])
         .orderBy("doc_id")
         .collect()
@@ -609,6 +622,7 @@ def test_cross_size_threshold_prefilter_is_refine_invariant(spark):
         jaccard_refine,
         lsh_cross_candidates,
         minhash_signatures,
+        token_sets,
     )
 
     corp_rows = []
@@ -630,10 +644,10 @@ def test_cross_size_threshold_prefilter_is_refine_invariant(spark):
     incoming = spark.createDataFrame(inc_rows, "doc_id long, text string")
 
     t = 0.9
-    sig_c_plain = minhash_signatures(corpus, k=8)
-    sig_n_plain = minhash_signatures(incoming, k=8)
-    sig_c_sized = minhash_signatures(corpus, k=8, with_size=True)
-    sig_n_sized = minhash_signatures(incoming, k=8, with_size=True)
+    sig_c_plain = minhash_signatures(token_sets(corpus), k=8)
+    sig_n_plain = minhash_signatures(token_sets(incoming), k=8)
+    sig_c_sized = minhash_signatures(token_sets(corpus), k=8, with_size=True)
+    sig_n_sized = minhash_signatures(token_sets(incoming), k=8, with_size=True)
     cand_plain = lsh_cross_candidates(sig_n_plain, sig_c_plain, bands=8)
     cand_sized = lsh_cross_candidates(
         sig_n_sized, sig_c_sized, bands=8, size_threshold=t
@@ -644,7 +658,7 @@ def test_cross_size_threshold_prefilter_is_refine_invariant(spark):
     # the fixture must exercise the filter: a size-incompatible cross
     # pair (long incoming vs short corpus doc or vice versa) is pruned
     assert len(sized_pairs) < len(plain_pairs)
-    lookup = incoming.unionByName(corpus)
+    lookup = token_sets(incoming.unionByName(corpus))
 
     def refined(cand):
         return {
@@ -653,7 +667,6 @@ def test_cross_size_threshold_prefilter_is_refine_invariant(spark):
                 cand.withColumnsRenamed({"id_new": "id_a", "id_corpus": "id_b"}),
                 lookup,
                 threshold=t,
-                hashed_tokens=True,
             ).collect()
         }
 

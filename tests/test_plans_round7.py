@@ -106,9 +106,7 @@ def test_poisson_bootstrap_tolerates_auto_shuffle_partitions(spark):
     — it falls back to the input's own parallelism. Open-source Spark
     refuses to SET a non-numeric value, so the vendor behavior is
     exercised through a duck-typed stub."""
-    from ironman_medallion_lakehouse_spark.operators.experiment import (
-        _shuffle_partitions_of,
-    )
+    from ironman_medallion_lakehouse_spark.session import shuffle_width
 
     class _Conf:
         def __init__(self, val):
@@ -124,11 +122,11 @@ def test_poisson_bootstrap_tolerates_auto_shuffle_partitions(spark):
             )()
             self.rdd = type("R", (), {"getNumPartitions": lambda s: nparts})()
 
-    assert _shuffle_partitions_of(_Stub("64", 4)) == 64
-    assert _shuffle_partitions_of(_Stub("auto", 4)) == 32  # floor kicks in
-    assert _shuffle_partitions_of(_Stub("auto", 96)) == 96
+    assert shuffle_width(_Stub("64", 4)) == 64
+    assert shuffle_width(_Stub("auto", 4)) == 32  # floor kicks in
+    assert shuffle_width(_Stub("auto", 96)) == 96
     # and the real session path still resolves numerically
     df = spark.range(10)
-    assert _shuffle_partitions_of(df) == int(
+    assert shuffle_width(df) == int(
         spark.conf.get("spark.sql.shuffle.partitions")
     )

@@ -94,18 +94,6 @@ ALLOWED_WITHOUT_CALLER = {
 # (module, function or Class.method, parameter) -> why no caller outside
 # the tests sets it
 ALLOWED_UNSET_OPTIONS = {
-    ("operators/dedup.py", "minhash_signatures", "tokens"): (
-        "ROADMAP direction 5 replaces the dedup family's per-call "
-        "tokenization with one shared token-hash frame"
-    ),
-    ("operators/dedup.py", "jaccard_refine", "tokens"): (
-        "ROADMAP direction 5 replaces the dedup family's per-call "
-        "tokenization with one shared token-hash frame"
-    ),
-    ("operators/dedup.py", "containment_refine", "hashed_tokens"): (
-        "ROADMAP direction 5 replaces the dedup family's per-call "
-        "tokenization with one shared token-hash frame"
-    ),
     ("operators/cumulative.py", "partitioned_running_sum", "num_partitions"): (
         "test fixture: forces 1 to 64 range partitions on small inputs, "
         "so the per-partition offset math runs"

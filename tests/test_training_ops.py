@@ -6,6 +6,7 @@ the scale-relevant plan shapes are asserted."""
 from __future__ import annotations
 
 import math
+import re
 
 import pytest
 from pyspark.sql import Row
@@ -323,9 +324,10 @@ def test_near_dedup_groups_contraction_is_output_invariant(spark):
         (4, 4, 1, True),
     }
     # and it matches the un-contracted pipeline end-to-end
-    sigs = D.minhash_signatures(docs, k=64)
+    sets = D.token_sets(docs)
+    sigs = D.minhash_signatures(sets, k=64)
     cand = D.lsh_candidate_pairs(sigs, k=64, bands=16)
-    pairs = D.jaccard_refine(cand, docs, threshold=0.7, hashed_tokens=True)
+    pairs = D.jaccard_refine(cand, sets, threshold=0.7)
     raw = {
         (r.doc_id, r.group_id, r.group_size, r.is_survivor)
         for r in dedup_groups_from_pairs(docs, pairs).collect()
@@ -349,6 +351,65 @@ def test_near_dedup_groups_null_text_stays_singleton(spark):
         for r in D.near_dedup_groups(docs, k=32, bands=8).collect()
     }
     assert got == {(1, 1, 1), (2, 2, 1), (3, 3, 1)}
+
+
+def _exchange_reads(plan: str, keys: str) -> list[tuple[str, str]]:
+    """(arguments, parent of its query stage) for every Exchange in a
+    formatted final AQE plan whose hash keys start with ``keys``."""
+    tree, _, details = plan.partition("\n\n")
+    args = dict(
+        re.findall(r"^\((\d+)\) Exchange\n(?:.*\n)*?Arguments: (.*)$", details, re.M)
+    )
+    lines = tree.splitlines()
+
+    def parent(i: int) -> int:
+        depth = len(lines[i]) - len(lines[i].lstrip(" +-:"))
+        while len(lines[i]) - len(lines[i].lstrip(" +-:")) >= depth:
+            i -= 1
+        return i
+
+    out = []
+    for i, line in enumerate(lines):
+        m = re.search(r"\bExchange \((\d+)\)", line)
+        if m and re.match(rf"hashpartitioning\({keys}", args[m.group(1)]):
+            out.append((args[m.group(1)], lines[parent(parent(i))].strip(" +-:")))
+    return out
+
+
+def test_near_dedup_groups_pins_contraction_and_candidate_widths(spark, monkeypatch):
+    """The contraction window's shuffle and the candidate distinct run
+    at the session's shuffle width: explicit-count exchanges that AQE
+    leaves uncoalesced. A coalesced read there puts the CPU-bound
+    signature, band-join and refine stages on 1-2 tasks."""
+    words = [f"w{i}" for i in range(40)]
+    rows = []
+    for i in range(24):
+        toks = list(words)
+        toks[i % 8] = f"alt{i % 8}"  # 8 token sets, 3 exact copies each
+        rows.append(Row(doc_id=i, text=" ".join(toks)))
+    docs = spark.createDataFrame(rows)
+    plans = []
+    cls = type(docs)
+    checkpoint = cls.localCheckpoint
+
+    def spy(self, *args, **kwargs):
+        out = checkpoint(self, *args, **kwargs)
+        plans.append(formatted_plan(self))
+        return out
+
+    monkeypatch.setattr(cls, "localCheckpoint", spy)
+    groups = D.near_dedup_groups(docs, k=64, bands=16, threshold=0.9).collect()
+    monkeypatch.undo()
+    assert {r.group_id for r in groups} == {0}  # J = 38/42 joins every set
+    width = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    for keys in (r"toks#\d+", r"id_a#\d+L?, id_b#\d+L?"):
+        reads = [r for p in plans for r in _exchange_reads(p, keys)]
+        assert reads, f"no exchange on {keys} in any checkpointed plan"
+        for exchange_args, reader in reads:
+            partitioning, origin = exchange_args.split("), ", 1)
+            assert partitioning.endswith(f", {width}"), exchange_args
+            assert origin.startswith("REPARTITION_BY_NUM"), exchange_args
+            assert not reader.startswith("AQEShuffleRead"), (exchange_args, reader)
 
 
 # ------------------------------------------------------- incremental dedup
@@ -393,7 +454,7 @@ def test_dedup_incoming_precomputed_corpus_sigs(spark):
             Row(doc_id=102, text="totally novel text with no overlap whatsoever in any token plane"),
         ]
     )
-    sigs = D.minhash_signatures(corpus, k=128).localCheckpoint(eager=True)
+    sigs = D.minhash_signatures(D.token_sets(corpus), k=128).localCheckpoint(eager=True)
     got = {r.doc_id: r.status for r in D.dedup_incoming(
         incoming, corpus, bands=16, threshold=0.8, corpus_sigs=sigs
     ).collect()}
@@ -407,7 +468,7 @@ def test_lsh_cross_candidates_never_pairs_within_a_side(spark):
     docs = spark.createDataFrame(
         [Row(doc_id=i, text="shared tokens everywhere in this corpus") for i in range(6)]
     )
-    sigs = D.minhash_signatures(docs, k=32)
+    sigs = D.minhash_signatures(D.token_sets(docs), k=32)
     new = sigs.filter(F.col("doc_id") < 3)
     corp = sigs.filter(F.col("doc_id") >= 3)
     pairs = D.lsh_cross_candidates(new, corp, bands=8).collect()
@@ -420,7 +481,8 @@ def test_lsh_cross_candidates_width_mismatch(spark):
     docs = spark.createDataFrame([Row(doc_id=1, text="a b c")])
     with pytest.raises(ValueError, match="widths differ"):
         D.lsh_cross_candidates(
-            D.minhash_signatures(docs, k=32), D.minhash_signatures(docs, k=16)
+            D.minhash_signatures(D.token_sets(docs), k=32),
+            D.minhash_signatures(D.token_sets(docs), k=16),
         )
 
 

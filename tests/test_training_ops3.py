@@ -13,7 +13,10 @@ import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
-from ironman_medallion_lakehouse_spark.operators.dedup import containment_refine
+from ironman_medallion_lakehouse_spark.operators.dedup import (
+    containment_refine,
+    token_sets,
+)
 from ironman_medallion_lakehouse_spark.operators.graph import pagerank
 from ironman_medallion_lakehouse_spark.operators.sampling import dsir_logweights
 from ironman_medallion_lakehouse_spark.operators.similarity import (
@@ -191,7 +194,7 @@ def test_containment_catches_subset_jaccard_misses(spark):
         ]
     )
     cand = spark.createDataFrame([Row(id_a=1, id_b=2), Row(id_a=1, id_b=3)])
-    out = containment_refine(cand, docs, threshold=0.95).collect()
+    out = containment_refine(cand, token_sets(docs), threshold=0.95).collect()
     assert len(out) == 1
     r = out[0]
     assert (r.id_a, r.id_b) == (1, 2)
@@ -210,34 +213,37 @@ def test_containment_symmetric_near_dup_not_subset_style(spark):
         ]
     )
     cand = spark.createDataFrame([Row(id_a=1, id_b=2)])
-    r = containment_refine(cand, docs, threshold=0.95).collect()[0]
+    r = containment_refine(cand, token_sets(docs), threshold=0.95).collect()[0]
     assert r.containment == 1.0 and r.jaccard == 1.0
     assert r.subset_style is False
 
 
 def test_containment_hashed_vs_string_tokens_agree(spark):
-    """hashed_tokens is a cost knob, not a semantics knob."""
+    """Intersecting the frame's token hashes scores every pair exactly
+    as the word-string sets do (a pure-Python replay)."""
     import random
 
     rng = random.Random(11)
     vocab = [f"tok{i}" for i in range(30)]
-    docs = spark.createDataFrame(
-        [
-            Row(doc_id=i, text=" ".join(rng.choices(vocab, k=25)))
-            for i in range(12)
-        ]
-    )
+    texts = {i: " ".join(rng.choices(vocab, k=25)) for i in range(12)}
+    docs = spark.createDataFrame([Row(doc_id=i, text=t) for i, t in texts.items()])
     cand = spark.createDataFrame(
         [Row(id_a=a, id_b=b) for a in range(12) for b in range(a + 1, 12)]
     )
-    h = sorted(map(tuple, containment_refine(cand, docs, threshold=0.5).collect()))
-    s = sorted(
-        map(
-            tuple,
-            containment_refine(cand, docs, threshold=0.5, hashed_tokens=False).collect(),
-        )
+    h = sorted(
+        map(tuple, containment_refine(cand, token_sets(docs), threshold=0.5).collect())
     )
-    assert h == s
+    s = []
+    for a in range(12):
+        for b in range(a + 1, 12):
+            wa, wb = set(texts[a].split()), set(texts[b].split())
+            inter = len(wa & wb)
+            cont = inter / min(len(wa), len(wb))
+            jac = inter / (len(wa) + len(wb) - inter)
+            if cont >= 0.5:
+                s.append((a, b, cont, jac, jac < 0.9))
+    assert h == sorted(s)
+    assert h
 
 
 # -------------------------------------------------------- JL projection
